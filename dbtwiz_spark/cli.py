@@ -242,6 +242,8 @@ def cmd_build(args) -> int:
                          full_refresh=getattr(args, "full_refresh", False),
                          fail_fast=getattr(args, "fail_fast", False))
     for r in results:
+        # rows= is the rows this run wrote (dbt's rows_affected), not the
+        # table's size: an incremental run reports only its partitions
         line = f"{r.status:8s} {r.model}" + (f"  rows={r.rows}" if r.rows is not None else "")
         print(line + (f"  {r.error}" if r.error else ""))
     # per-model statuses persist for `build --retry-failed` (dbt retry):

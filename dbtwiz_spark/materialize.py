@@ -108,6 +108,26 @@ def _pin_survivor(
     )
 
 
+def _read_back_schema(schema, partition_by: str | None):
+    """The schema a table written with ``schema`` reads back with.
+
+    Partition-column type inference is disabled engine-wide, so a hive
+    partition column always reads back as STRING regardless of the written
+    type. The schema sidecar and the write audit both read with this."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    if partition_by is None:
+        return schema
+    return StructType(
+        [
+            StructField(f.name, StringType(), f.nullable, f.metadata)
+            if f.name == partition_by
+            else f
+            for f in schema.fields
+        ]
+    )
+
+
 def _distribute_for_write(df: DataFrame, partition_by: str) -> DataFrame:
     """Choose the pre-write distribution for a partitioned write.
 
@@ -118,7 +138,12 @@ def _distribute_for_write(df: DataFrame, partition_by: str) -> DataFrame:
     ~0.6 s hash-distributed at sf0.1). So: below a generous size threshold,
     hash-distribute by the partition value (parallel writers, exactly one
     file per partition, and any skew is bounded by the threshold); above
-    it, REBALANCE. The optimizer's size estimate is free — no job."""
+    it, REBALANCE. The optimizer's size estimate is free — no job.
+
+    The small branch writes with at most one task per core: more tasks than
+    cores only queue (32 shuffle partitions ran 35 tasks for a 3-day chunk
+    on 4 cores), and each task still opens one writer per partition value
+    it holds."""
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — stats unavailable: assume big
@@ -127,7 +152,11 @@ def _distribute_for_write(df: DataFrame, partition_by: str) -> DataFrame:
         # the partition count must be EXPLICIT: without it AQE treats the
         # repartition as coalescible and merges the tiny shuffle back into
         # one task — the exact serial-writer shape this branch avoids
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+        spark = df.sparkSession
+        n = min(
+            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+            spark.sparkContext.defaultParallelism,
+        )
         return df.repartition(n, F.col(partition_by))
     return df.hint("rebalance", F.col(partition_by))
 
@@ -656,21 +685,9 @@ class Warehouse:
     # semantics: files missing newer columns null-fill them.
 
     def _store_schema(self, table: str, schema, partition_by: str | None = None) -> None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        if partition_by is not None:
-            # partition-column type inference is disabled engine-wide, so a
-            # hive partition column always reads back as STRING regardless of
-            # the written type — the sidecar must encode that same contract
-            schema = StructType(
-                [
-                    StructField(f.name, StringType(), f.nullable, f.metadata)
-                    if f.name == partition_by
-                    else f
-                    for f in schema.fields
-                ]
-            )
         from dbtwiz_spark.fsutil import atomic_write_text
+
+        schema = _read_back_schema(schema, partition_by)
 
         # atomic replace (pid-suffixed temp): a bare unlink+write_text
         # gave a concurrent reader two crash windows (no sidecar at all,
@@ -733,11 +750,12 @@ class Warehouse:
         partition_by: str | None = None,
         cluster_by: list[str] | None = None,
         snapshot: bool = True,
-    ) -> None:
+    ) -> int:
         """Full-table materialization with write-audit-publish. When
         overwriting, the previous table state becomes a snapshot by MOVING
         its files at publish time — zero-copy, unlike a pre-write copy which
-        would double-handle the whole table on every overwrite."""
+        would double-handle the whole table on every overwrite. Returns the
+        row count observed during the write (and audited before publish)."""
         self._recover(name)
         target = self.path(name)
         tmp = target.with_name(f"{name}__tmp_{int(time.time() * 1000)}")
@@ -765,8 +783,14 @@ class Warehouse:
         writer.parquet(str(tmp))
         expected = obs.get["n"]
         # audit: the write must be readable and row counts must match
-        # (count over parquet uses footer metadata — no data scan)
-        written = self.spark.read.parquet(str(tmp)).count()
+        # (count over parquet uses footer metadata — no data scan). The
+        # schema is the one the sidecar will store, so the read pays no
+        # schema-inference job
+        written = (
+            self.spark.read.schema(_read_back_schema(df.schema, partition_by))
+            .parquet(str(tmp))
+            .count()
+        )
         if written != expected:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(f"audit failed for {name}: {written} != {expected}")
@@ -825,6 +849,7 @@ class Warehouse:
         # live — retiring the registry entry first would destroy the only
         # copy of the view SQL on a failed write
         self._unview(name)
+        return expected
 
     # -- incremental insert_overwrite ------------------------------------
     def insert_overwrite(
@@ -834,10 +859,11 @@ class Warehouse:
         partition_by: str,
         cluster_by: list[str] | None = None,
         snapshot: bool = False,
-    ) -> None:
+    ) -> int:
         """Replace only the date partitions present in ``df``
         (dbtwiz/model/create.py:456-460 incremental_strategy). Idempotent:
-        re-running the same interval rewrites the same partitions.
+        re-running the same interval rewrites the same partitions. Returns
+        the number of rows written, observed during the write.
 
         ``snapshot=True`` gives incremental tables the same time-travel
         window full overwrites get — as a HARDLINK tree of the current
@@ -847,8 +873,7 @@ class Warehouse:
         the manifest-based table formats own this job."""
         target = self.path(name)
         if not self.exists(name):
-            self.write_table(name, df, partition_by, cluster_by, snapshot=False)
-            return
+            return self.write_table(name, df, partition_by, cluster_by, snapshot=False)
         if snapshot:
             self._snapshot_via_links(name)
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -871,12 +896,17 @@ class Warehouse:
             )
         else:
             out = _distribute_for_write(out, partition_by)
+        from pyspark.sql import Observation
+
+        obs = Observation(f"rows_{name}")
+        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
         out.write.mode("overwrite").partitionBy(partition_by).parquet(str(target))
         self._store_schema(name, out.schema, partition_by)
         # rewritten partitions replaced leaf files in place — drop any stale
         # cached listing (same hazard the write_table publish refresh covers)
         self.spark.catalog.refreshByPath(str(target))
         self._unview(name)  # after success, same rule as write_table
+        return obs.get["n"]
 
     # -- merge upsert ----------------------------------------------------
     def merge(
@@ -885,7 +915,7 @@ class Warehouse:
         updates: DataFrame,
         unique_key: str,
         partition_by: str | None = None,
-    ) -> None:
+    ) -> int:
         """MERGE by unique key on plain parquet: anti-join + union rewrite —
         existing rows not in ``updates`` survive, matched keys are replaced,
         new keys are inserted (dbtwiz/model/create.py:467-470). Collision
@@ -907,13 +937,15 @@ class Warehouse:
         Schema evolution matches insert_overwrite's append_new_columns:
         new columns in ``updates`` evolve the table (old rows null-fill),
         columns missing from ``updates`` are preserved as nulls.
+
+        Returns the number of rows the final write wrote: the whole table
+        without ``partition_by``, the rewritten partitions with it.
         """
         if not self.exists(name):
-            self.write_table(name, updates, partition_by, snapshot=False)
-            return
+            return self.write_table(name, updates, partition_by, snapshot=False)
         current = self.read(name)
         deduped = _pin_survivor(_align_types(updates, current), [unique_key])
-        self._apply_key_rewrite(
+        return self._apply_key_rewrite(
             name, current, deduped.select(unique_key), deduped, unique_key,
             partition_by,
         )
@@ -926,20 +958,20 @@ class Warehouse:
         additions: DataFrame,
         unique_key: str,
         partition_by: str | None,
-    ) -> None:
+    ) -> int:
         """Anti-join + union rewrite core shared by merge() and
         apply_changes(): rows whose key appears in ``touched_keys`` are
         dropped from ``current`` and ``additions`` are appended. With
         ``partition_by`` the rewrite is partition-scoped (dynamic
         overwrite of affected partitions only); ``touched_keys`` may name
         keys with NO addition row (apply_changes deletes), which is why it
-        is a separate input rather than additions' own key column."""
+        is a separate input rather than additions' own key column. Returns
+        the number of rows its write wrote."""
         if partition_by is None:
             survivors = current.join(touched_keys, on=unique_key, how="left_anti")
-            self.write_table(
+            return self.write_table(
                 name, survivors.unionByName(additions, allowMissingColumns=True)
             )
-            return
         # partitions holding a touched key must be rewritten — and so must
         # every partition the ADDITIONS land in: dynamic overwrite replaces
         # a destination partition wholesale, so an update moving (or a new
@@ -978,9 +1010,8 @@ class Warehouse:
                 full = current.join(
                     touched_keys, on=unique_key, how="left_anti"
                 ).unionByName(additions, allowMissingColumns=True)
-                self.write_table(name, full, partition_by, snapshot=False)
-                return
-            self.insert_overwrite(name, merged, partition_by)
+                return self.write_table(name, full, partition_by, snapshot=False)
+            return self.insert_overwrite(name, merged, partition_by)
         finally:
             merged.unpersist()
 
@@ -1034,7 +1065,7 @@ class Warehouse:
 
     def scd2_apply(
         self, name: str, updates: DataFrame, unique_key: str, date_column: str
-    ) -> None:
+    ) -> int:
         """SCD2: append new daily grain then rebuild validity intervals with
         lead() over the partition date (dbtwiz/model/create.py:418-429).
 
@@ -1043,7 +1074,8 @@ class Warehouse:
         and written back through the partition-scoped overwrite (the table is
         partitioned by ``date_column``). Unaffected keys' rows are never read
         past the semi-join nor rewritten; a daily SCD2 run costs
-        O(touched keys × their history), not O(table)."""
+        O(touched keys × their history), not O(table). Returns the number
+        of rows written: the rewritten partitions' rows."""
         from pyspark.sql.window import Window
 
         base_cols = [c for c in updates.columns if c not in ("valid_from", "valid_to", "is_current")]
@@ -1058,9 +1090,8 @@ class Warehouse:
 
         hist = updates.select(base_cols)
         if not self.exists(name):
-            self.write_table(name, rebuild(hist), partition_by=date_column,
-                             snapshot=False)
-            return
+            return self.write_table(name, rebuild(hist), partition_by=date_column,
+                                    snapshot=False)
         current = self.read(name)
         updates = _align_types(updates, current)
         hist = updates.select(base_cols)
@@ -1098,7 +1129,7 @@ class Warehouse:
             .join(affected_keys, on=unique_key, how="left_anti")
         )
         merged = survivors.unionByName(rebuilt, allowMissingColumns=True)
-        self.insert_overwrite(name, merged, partition_by=date_column)
+        return self.insert_overwrite(name, merged, partition_by=date_column)
 
     def scd2_invalidate_deletes(
         self,

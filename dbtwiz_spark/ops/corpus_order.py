@@ -31,8 +31,19 @@ OLDEST_DEFERRED (named, never dropped — the r12 precedent).
 * 24-25 — graph-hits, graph-k-core: round-17 builder plan-construction
   work (SQL-string expressions, the parallel_rank precedent) forces
   re-certification; both are also the r11 cohort's iterative heads.
-* 26-49 — the r10 remainder head, riskiest first per the r15
-  pre-ranking (multi-stage / sink / stateful before scalars):
+* 26-31 — the six riskiest of the r10 remainder (below).
+* 32-43 — the 12 green entries that certify through the warehouse plane
+  and are not already windowed, forced by the write-plane job-budget
+  edit to materialize.py (write_table/insert_overwrite/merge/scd2_apply
+  return their in-write row counts; the write audit reads with the
+  sidecar schema; small partitioned writes cap their task count at the
+  core count). They displace the 12 lowest-risk r10 remainder entries
+  into OLDEST_DEFERRED (ext-bm25-search through win-sliding-frame).
+* 44-49 — the six r10 entries forced by the _cosine_pairs and _by_cust
+  closure additions.
+
+The r10 remainder as planned before the write-plane edit, riskiest
+first per the r15 pre-ranking (multi-stage / sink / stateful before scalars):
   sink-scd2, sink-sharded-export, sort-global, ext-pack-sequences,
   ext-text-tfidf, ext-vocab-build, ext-bm25-search, ext-dedup-embedding,
   ext-sim-threshold-join, ext-knn-label, ext-pii-scrub,
@@ -54,9 +65,9 @@ cohort.
 
 Projected cohorts after a green r17 (r01-r16 history + this window,
 recomputed empirically via scripts/freshness_report.latest_green_rounds):
-r10 x 13 (the deferred scalars below — front them in round 18),
-r11 x 40, r12 x 26, r13 x 35, r14 x 44, r15 x 43, r16 x 35, r17 x 50
-(sums to 286). The round-18
+r10 x 25 (the deferrals below — front them in round 18),
+r11 x 40, r12 x 25, r13 x 32, r14 x 36, r15 x 43, r16 x 35, r17 x 50
+(sums to 286; with the warehouse-plane amendment). The round-18
 front is therefore OLDEST_DEFERRED in full plus the riskiest r11
 remainder (recompute against scripts/freshness_report.py when
 planning; the r16 riskiest-r11 pre-ranking head minus the four already
@@ -117,31 +128,34 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "ext-pack-sequences",
     "ext-text-tfidf",
     "ext-vocab-build",
-    "ext-bm25-search",
+    # green entries certifying through the warehouse plane, forced by
+    # the write-plane job-budget edit to materialize.py
+    "sink-table-create",
+    "sink-view-create",
+    "sink-insert-overwrite",
+    "sink-merge",
+    "sink-copy-table",
+    "sink-delete-table",
+    "sink-cdc-apply",
+    "sink-scd2-hard-delete",
+    "scan-time-travel",
+    "scan-snapshot-diff",
+    "source-declare",
+    "join-scd2-point-in-time",
+    # r10 entries forced by the _cosine_pairs closure addition
     "ext-dedup-embedding",
     "ext-sim-threshold-join",
     "ext-knn-label",
-    "ext-pii-scrub",
-    "ext-quality-gopher",
-    "ext-curriculum-order",
-    "ext-mix-domains",
-    "ext-mix-temperature",
-    "ext-host-token-budget",
-    "ext-sample-importance",
-    "ext-split-train-eval",
-    "ext-dup-span",
-    "ext-fingerprint",
-    # the r10 win-* scalars (three forced by the _by_cust closure
-    # addition, the fourth rides the free slot)
+    # the r10 win-* scalars forced by the _by_cust closure addition
     "win-first-last",
     "win-lag-lead",
     "win-running-agg",
-    "win-sliding-frame",
 )
 
-# The 13 lowest-risk r10-cohort members (single-stage scalar entries)
-# that the 32 forced re-certifications displaced from this round's
-# window — NAMED deferrals, front-loaded in round 18. Legal only while
+# The lowest-risk r10-cohort members that forced re-certifications
+# displaced from this round's window: 13 single-stage scalars displaced
+# by the 32 round-17 edits, then 12 more by the 12 warehouse-plane
+# entries — NAMED deferrals, front-loaded in round 18. Legal only while
 # every window slot is spoken for (the freshness test enforces both).
 OLDEST_DEFERRED: tuple[str, ...] = (
     "ext-dedup-url",
@@ -157,6 +171,20 @@ OLDEST_DEFERRED: tuple[str, ...] = (
     "ext-token-count",
     "ext-token-histogram",
     "func-url",
+    # the 12 lowest-risk r10 remainder entries displaced from the window
+    # by the warehouse-plane re-certifications
+    "ext-bm25-search",
+    "ext-pii-scrub",
+    "ext-quality-gopher",
+    "ext-curriculum-order",
+    "ext-mix-domains",
+    "ext-mix-temperature",
+    "ext-host-token-budget",
+    "ext-sample-importance",
+    "ext-split-train-eval",
+    "ext-dup-span",
+    "ext-fingerprint",
+    "win-sliding-frame",
 )
 
 

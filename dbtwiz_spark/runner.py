@@ -22,6 +22,12 @@ from dbtwiz_spark.plans import require_partition_filter
 
 @dataclass
 class RunResult:
+    """One model's outcome. ``rows`` is the number of rows this run wrote
+    (dbt's ``rows_affected``), counted during the write: the whole table
+    for a ``table`` build or an unpartitioned ``merge``, the rewritten
+    partitions for ``insert_overwrite``, a partitioned ``merge`` and
+    ``scd2``. None for views, ephemerals and models that did not succeed."""
+
     model: str
     status: str  # success | error | skipped
     rows: int | None = None
@@ -45,10 +51,43 @@ class Runner:
     # mid-run refresh their own temp views at build time
     _preregistered: set = field(default_factory=set)
 
-    def _resolve_map(self) -> dict[str, str]:
-        """ref()/source() name → readable relation (temp view or path scan)."""
+    def _sources_read(self, order: list[str]) -> list[str]:
+        """The sources a run of ``order`` reads: the upstream closure of the
+        selected models, walked through every parent whose SQL this run
+        parses — views and ephemerals, built or not, and views persisted in
+        either warehouse. A parent read back as a table stops the walk."""
+        selected = set(order)
+        whs = [w for w in (self.warehouse, self.defer_warehouse) if w is not None]
+        seen: set[str] = set()
+        stack = list(order)
+        while stack:
+            name = stack.pop()
+            if name in seen:
+                continue
+            seen.add(name)
+            model = self.manifest.models.get(name)
+            if model is None:
+                continue
+            if (
+                name in selected
+                or model.materialized in ("view", "ephemeral")
+                or any(name in w.views for w in whs)
+            ):
+                stack.extend(self.manifest.parent_map.get(name, ()))
+        return [n for n in self.manifest.sources if n in seen]
+
+    def _resolve_map(self, order: list[str] | None = None) -> dict[str, str]:
+        """ref()/source() name → readable relation (temp view or path scan).
+
+        Registers the sources ``order`` reads (every source when None). Each
+        registration infers the source's schema, one Spark job, so a run
+        skips the sources it never reads; the ones it does read are
+        registered afresh on every call, since their files may change
+        between runs."""
         out: dict[str, str] = {}
-        for name, src in self.manifest.sources.items():
+        names = self.manifest.sources if order is None else self._sources_read(order)
+        for name in names:
+            src = self.manifest.sources[name]
             self.spark.read.parquet(src.path).createOrReplaceTempView(name)
             out[name] = name
         for name, model in self.manifest.models.items():
@@ -134,7 +173,7 @@ class Runner:
         fail_fast: bool = False,
     ) -> list[RunResult]:
         order = self.manifest.select(selector, state=state, exclude=exclude)
-        self._resolve_cache = self._resolve_map()
+        self._resolve_cache = self._resolve_map(order)
         self._register_unbuilt(order)
         if threads > 1:
             return self._run_parallel(order, threads, full_refresh=full_refresh,
@@ -273,6 +312,8 @@ class Runner:
             return RunResult(model.name, "success")
         if model.require_partition_filter and model.partition_by:
             require_partition_filter(df, model.partition_by)
+        # every write returns the row count it observed while writing, so
+        # the published table is never counted again
         if model.materialized == "incremental" and full_refresh:
             # dbt --full-refresh (reference: dbtwiz/commands/build.py:116 →
             # dbt's full-refresh flag): drop-and-recreate the incremental
@@ -282,7 +323,7 @@ class Runner:
             # snapshot honors the model's own config, exactly like the
             # incremental path it replaces. Falls through to the shared
             # temp-view registration so downstream refs resolve.
-            self.warehouse.write_table(
+            rows = self.warehouse.write_table(
                 model.name,
                 df,
                 model.partition_by,
@@ -290,20 +331,20 @@ class Runner:
                 snapshot=model.snapshot,
             )
         elif model.materialized == "table":
-            self.warehouse.write_table(
+            rows = self.warehouse.write_table(
                 model.name, df, model.partition_by, model.cluster_by
             )
         elif model.materialized == "incremental":
             if model.incremental_strategy == "merge":
                 if not model.unique_key:
                     raise ValueError(f"{model.name}: merge requires unique_key")
-                self.warehouse.merge(
+                rows = self.warehouse.merge(
                     model.name, df, model.unique_key, model.partition_by
                 )
             else:  # insert_overwrite (default, dbtwiz/model/create.py:456)
                 if not model.partition_by:
                     raise ValueError(f"{model.name}: insert_overwrite requires partition_by")
-                self.warehouse.insert_overwrite(
+                rows = self.warehouse.insert_overwrite(
                     model.name,
                     df,
                     model.partition_by,
@@ -313,15 +354,14 @@ class Runner:
         elif model.materialized == "scd2":
             if not (model.unique_key and model.partition_by):
                 raise ValueError(f"{model.name}: scd2 requires unique_key and partition_by")
-            self.warehouse.scd2_apply(
+            rows = self.warehouse.scd2_apply(
                 model.name, df, model.unique_key, model.partition_by
             )
         else:
             raise ValueError(f"unknown materialization: {model.materialized}")
         # register the physical table as a view for downstream models
-        out = self.warehouse.read(model.name)
-        out.createOrReplaceTempView(model.name)
-        return RunResult(model.name, "success", rows=out.count())
+        self.warehouse.read(model.name).createOrReplaceTempView(model.name)
+        return RunResult(model.name, "success", rows=rows)
 
 
     # -- compile / explain (dry run) ------------------------------------

@@ -6,7 +6,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO_ROOT))
 
 from dbtwiz_spark.ops import CORPUS  # noqa: E402
 
@@ -72,7 +73,9 @@ def render() -> str:
     ]
     for i, (name, spec) in enumerate(CORPUS.items()):
         code = spec.fn.__code__
-        loc = f"{code.co_filename.split('/root/repo/')[-1]}:{code.co_firstlineno}"
+        # repo-relative, so the rendered doc is the same from any checkout
+        rel = Path(code.co_filename).resolve().relative_to(REPO_ROOT).as_posix()
+        loc = f"{rel}:{code.co_firstlineno}"
         doc = (spec.doc or "").strip().splitlines()
         summary = (doc[0] if doc else "").rstrip(".")[:90]
         if spec.oracle:
@@ -84,9 +87,7 @@ def render() -> str:
 
 
 def main() -> None:
-    Path(__file__).resolve().parent.parent.joinpath("CORPUS.md").write_text(
-        render()
-    )
+    REPO_ROOT.joinpath("CORPUS.md").write_text(render())
     print(f"wrote CORPUS.md with {len(CORPUS)} entries")
 
 

@@ -1281,3 +1281,107 @@ def test_parallel_build_of_views_persists_every_definition(spark, tmp_path):
     ser = Runner(spark, make_manifest(), wh_s).run("*", threads=1)
     assert {(r.model, r.status) for r in par} == {(r.model, r.status) for r in ser}
     assert wh.read("mart").first().total == wh_s.read("mart").first().total
+
+
+def test_runner_reads_swapped_source_files_on_every_run(spark, tmp_path):
+    """Sources register afresh on every run(): a loader that swaps a source
+    directory's files between runs (new file names, same directory) feeds
+    the second run the new rows, not the first run's listing."""
+    import os
+
+    src, batches = tmp_path / "src", tmp_path / "batches"
+    for version, n in (("v0", 5), ("v1", 8)):
+        spark.range(n).selectExpr("id", f"'{version}' AS batch").write.parquet(
+            str(batches / version)
+        )
+
+    def publish(version):
+        src.mkdir(exist_ok=True)
+        for f in src.iterdir():
+            f.unlink()
+        for f in (batches / version).glob("*.parquet"):
+            os.link(f, src / f"{version}-{f.name}")
+
+    man = Manifest()
+    man.add_source(Source("swapped_src", str(src)))
+    man.add_model(Model("swapped_t", "SELECT * FROM {{ source('swapped_src') }}",
+                        materialized="table"))
+    runner = Runner(spark, man, Warehouse(spark, str(tmp_path / "wh")))
+    publish("v0")
+    (first,) = runner.run("swapped_t")
+    publish("v1")
+    (second,) = runner.run("swapped_t")
+    assert (first.rows, second.rows) == (5, 8)
+    got = runner.warehouse.read("swapped_t").collect()
+    assert sorted(r.id for r in got) == list(range(8))
+    assert {r.batch for r in got} == {"v1"}
+
+
+def test_partial_selection_registers_source_behind_persisted_view(spark, tmp_path):
+    """A fresh Runner building only a child must still register the source
+    its unbuilt parents read: the closure walks through the ephemeral and
+    the view persisted by an earlier process, while an unrelated source is
+    left alone."""
+    man = Manifest()
+    for name in ("closure_src", "unrelated_src"):
+        path = str(tmp_path / name)
+        spark.range(6).selectExpr("id AS k").write.parquet(path)
+        man.add_source(Source(name, path))
+    man.add_model(Model("closure_v", "SELECT k FROM {{ source('closure_src') }} WHERE k < 4"))
+    man.add_model(Model("closure_e", "SELECT k * 10 AS k10 FROM {{ ref('closure_v') }}",
+                        materialized="ephemeral"))
+    man.add_model(Model("closure_child", "SELECT * FROM {{ ref('closure_e') }}",
+                        materialized="table"))
+    root = str(tmp_path / "wh")
+    (built,) = Runner(spark, man, Warehouse(spark, root)).run("closure_v")
+    assert built.status == "success"
+    # a fresh process starts without the previous run's temp views
+    for name in ("closure_v", "closure_src", "unrelated_src"):
+        spark.catalog.dropTempView(name)
+    fresh = Runner(spark, man, Warehouse(spark, root))
+    assert fresh._sources_read(["closure_child"]) == ["closure_src"]
+    (res,) = fresh.run("closure_child")
+    assert (res.model, res.status, res.rows) == ("closure_child", "success", 4)
+    got = sorted(r.k10 for r in fresh.warehouse.read("closure_child").collect())
+    assert got == [0, 10, 20, 30]
+    assert not spark.catalog.tableExists("unrelated_src")
+
+
+def test_run_result_rows_are_rows_written(spark, tmp_path):
+    """RunResult.rows is the rows a run wrote (dbt's rows_affected), taken
+    from the write itself: the whole table for a table build, only the
+    rewritten partitions for insert_overwrite, a partitioned merge and
+    scd2 — so an incremental rerun reports less than the table holds."""
+    src = str(tmp_path / "rows_src")
+    man = Manifest()
+    man.add_source(Source("rows_src", src))
+    body = "SELECT k, v, day FROM {{ source('rows_src') }}"
+    man.add_model(Model("rows_table", body, materialized="table"))
+    man.add_model(Model("rows_inc", body, materialized="incremental",
+                        incremental_strategy="insert_overwrite", partition_by="day"))
+    man.add_model(Model("rows_merge", body, materialized="incremental",
+                        incremental_strategy="merge", unique_key="k",
+                        partition_by="day"))
+    man.add_model(Model("rows_scd2", body, materialized="scd2", unique_key="k",
+                        partition_by="day"))
+    runner = Runner(spark, man, Warehouse(spark, str(tmp_path / "wh")))
+
+    def run(rows):
+        spark.createDataFrame(rows, "k INT, v STRING, day STRING").write.mode(
+            "overwrite"
+        ).parquet(src)
+        results = runner.run("*")
+        assert all(r.status == "success" for r in results)
+        return {r.model: r.rows for r in results}
+
+    first = run([(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d0")])
+    assert first == dict.fromkeys(("rows_table", "rows_inc", "rows_merge", "rows_scd2"), 3)
+    # key 1 moves to day d2. insert_overwrite rewrites d2 only; the merge
+    # rewrites d1 (held key 1) and d2 (receives it): (2,d1) and (1,d2); scd2
+    # rewrites key 1's history days d1 and d2: (1,d1), (1,d2) and (2,d1)
+    second = run([(1, "a2", "d2")])
+    assert second == {"rows_table": 1, "rows_inc": 1, "rows_merge": 2, "rows_scd2": 3}
+    read = runner.warehouse.read
+    totals = {n: read(n).count() for n in second}
+    assert totals == {"rows_table": 1, "rows_inc": 4, "rows_merge": 3, "rows_scd2": 4}
+    assert read("rows_scd2").filter("day IN ('d1', 'd2')").count() == second["rows_scd2"]

@@ -511,17 +511,154 @@ def test_schema_sidecar_written_and_used(spark, wh):
     assert got.filter(F.col("k") == 1).first().extra is None
 
 
-def test_small_partitioned_write_distributes_across_tasks(spark):
+def test_small_partitioned_write_distributes_across_tasks(spark, tmp_path):
     """_distribute_for_write: a small output must be hash-distributed by the
     partition value (parallel writers), not REBALANCEd — AQE coalesces a
     tiny rebalance into ONE task that opens every hive partition's writer
-    serially. Large outputs keep the REBALANCE shape."""
+    serially. Large outputs keep the REBALANCE shape. The explicit task
+    count is capped at the core count, and at any shuffle-partition count
+    every hive partition gets exactly one file and the table holds the
+    same rows."""
     from dbtwiz_spark.materialize import _distribute_for_write
 
     small = spark.range(100).withColumn("pd", (F.col("id") % 10).cast("string"))
     plan = _distribute_for_write(small, "pd")._jdf.queryExecution().toString()
     assert "RebalancePartitions" not in plan
     assert "RepartitionByExpression" in plan
+
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    tables = []
+    try:
+        for n in (1, 7, 64):
+            spark.conf.set(key, str(n))
+            logical = _distribute_for_write(small, "pd")._jdf.queryExecution().logical()
+            assert logical.numPartitions() == min(n, cores)
+            wh = Warehouse(spark, str(tmp_path / f"wh{n}"))
+            wh.write_table("t", small, partition_by="pd")
+            wh.insert_overwrite(
+                "t", small.filter("pd IN ('1', '2')").withColumn("id", -F.col("id")), "pd"
+            )
+            dirs = sorted(wh.path("t").glob("pd=*"))
+            assert len(dirs) == 10
+            assert [len(list(d.glob("*.parquet"))) for d in dirs] == [1] * 10
+            tables.append(sorted(tuple(r) for r in wh.read("t").collect()))
+    finally:
+        spark.conf.set(key, saved)
+    assert len(tables[0]) == 100
+    assert tables[0] == tables[1] == tables[2]
+
+
+class _JobTags:
+    """Tags the Spark jobs of each phase with their own job group and reads
+    them back from the status tracker. Every ``DataFrameReader.parquet``
+    call runs under a ``read:<path>`` group, so a schema-inference job is
+    charged to the path it inferred; the caller's phase resumes after."""
+
+    def __init__(self, spark, monkeypatch):
+        from pyspark.sql import DataFrameReader
+
+        self.sc = spark.sparkContext
+        self.prefix = f"jobtags:{time.time_ns()}"
+        self.phase = "start"
+        self.reads: list[str] = []
+        real = DataFrameReader.parquet
+
+        def parquet(reader, *paths, **kw):
+            outer = self.phase
+            self.reads.append(str(paths[0]))
+            self.set(f"read:{paths[0]}")
+            try:
+                return real(reader, *paths, **kw)
+            finally:
+                self.set(outer)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+
+    def set(self, phase: str) -> None:
+        self.phase = phase
+        self.sc.setJobGroup(f"{self.prefix}:{phase}", phase)
+
+    def jobs(self, phase: str) -> list[int]:
+        return list(self.sc.statusTracker().getJobIdsForGroup(f"{self.prefix}:{phase}"))
+
+    def clear(self) -> None:
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_table_model_run_job_budget(spark, tmp_path, monkeypatch):
+    """A table model's run pays for its own source's schema inference and
+    its write plus the audit's count, nothing more: the audit reads with the
+    sidecar's schema (no inference job), the published table is never
+    counted again, and sources outside the selection's closure are never
+    read."""
+    from dbtwiz_spark.manifest import Manifest, Model, Source
+    from dbtwiz_spark.runner import Runner
+
+    man = Manifest()
+    paths = {}
+    for s in ("a", "b", "c"):
+        paths[s] = str(tmp_path / f"src_{s}")
+        spark.range(20).selectExpr("id", f"'{s}' AS tag").write.parquet(paths[s])
+        man.add_source(Source(f"src_{s}", paths[s]))
+        man.add_model(Model(f"t_{s}", f"SELECT * FROM {{{{ source('src_{s}') }}}}",
+                            materialized="table"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    tags = _JobTags(spark, monkeypatch)
+    store = Warehouse._store_schema
+
+    def store_then_tag(self, *a, **k):
+        # write_table stores the sidecar right after the publish swap
+        store(self, *a, **k)
+        tags.set("published")
+
+    monkeypatch.setattr(Warehouse, "_store_schema", store_then_tag)
+    try:
+        tags.set("run")
+        (res,) = Runner(spark, man, wh).run("t_a")
+    finally:
+        tags.clear()
+    assert (res.status, res.rows) == ("success", 20)
+    # the tagging sees an inference job: the source the model reads has one
+    assert tags.jobs(f"read:{paths['a']}")
+    assert tags.jobs(f"read:{paths['b']}") == tags.jobs(f"read:{paths['c']}") == []
+    (audit,) = [p for p in tags.reads if "__tmp_" in p]
+    assert tags.jobs(f"read:{audit}") == []
+    # the write and the audit's count ran before publish, nothing after it
+    assert tags.jobs("run")
+    assert tags.jobs("published") == []
+    assert tags.jobs(f"read:{wh.path('t_a')}") == []
+
+
+def test_audit_rejects_write_missing_a_part_file(spark, wh, monkeypatch):
+    """Write-audit-publish: a part file lost between the write and the
+    publish makes the audit's count disagree with the in-write count; the
+    write is refused and the live table and its snapshots are untouched."""
+    from pathlib import Path
+
+    from pyspark.sql import DataFrameWriter
+
+    wh.write_table("aud", spark.range(100).repartition(4))
+    wh.write_table("aud", spark.range(50).repartition(4))
+    live = sorted(r.id for r in wh.read("aud").collect())
+    snaps = wh.snapshots("aud")
+    assert len(snaps) == 1
+    real = DataFrameWriter.parquet
+
+    def lossy(writer, path, *a, **k):
+        real(writer, path, *a, **k)
+        if "__tmp_" in str(path):
+            next(Path(path).glob("part-*.parquet")).unlink()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lossy)
+    with pytest.raises(RuntimeError, match="audit failed"):
+        wh.write_table("aud", spark.range(200).repartition(4))
+    monkeypatch.undo()
+    assert sorted(r.id for r in wh.read("aud").collect()) == live
+    assert wh.snapshots("aud") == snaps
+    assert sorted(r.id for r in wh.read_snapshot("aud", snaps[0]).collect()) == list(range(100))
+    assert not list(wh.path("aud").parent.glob("aud__tmp_*"))
 
 
 def test_compact_partitioned_merges_small_files(spark, wh):
