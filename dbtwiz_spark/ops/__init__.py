@@ -3,7 +3,8 @@
 Importing this package populates ``dbtwiz_spark.ops.registry.CORPUS`` with
 every implemented operator: a Spark query fn ``(spark, sf_dir) -> DataFrame``
 plus (where SQL-expressible) an equivalent DuckDB oracle SQL string. The
-driver contract (`__spark_entry__.py`) re-exports the corpus.
+driver contract (`__spark_entry__.py`) re-exports the corpus in
+registration order, i.e. the import order below.
 """
 
 from dbtwiz_spark.ops.registry import CORPUS, register, QuerySpec  # noqa: F401
@@ -24,10 +25,3 @@ from dbtwiz_spark.ops import ext_llm  # noqa: F401  §2.11
 from dbtwiz_spark.ops import ext_pipeline  # noqa: F401  §2.11 family §E
 from dbtwiz_spark.ops import skew  # noqa: F401  §4 skew mitigation
 from dbtwiz_spark.ops import graphs  # noqa: F401  §2.11 iterative graph
-
-# Driver correctness-window rotation: the driver checks the FIRST 50
-# queries() keys per round, so corpus_order.DRIVER_WINDOW deliberately
-# front-loads the entries that still need a driver row (see that module).
-from dbtwiz_spark.ops import corpus_order as _corpus_order  # noqa: E402
-
-_corpus_order.reorder(CORPUS)

@@ -1,10 +1,9 @@
-"""Oracle-comparison harness mirroring the driver's correctness gate.
+"""Oracle-comparison harness: the corpus correctness gate.
 
 Runs a corpus entry's Spark query and its DuckDB oracle on the same sf_dir,
 then compares row count, column names, and values order-insensitively
-(columns sorted by name, rows sorted by all columns) — the same contract as
-the driver's value hash, so a pass here predicts a pass in
-CORRECTNESS_r{N}.json.
+(columns sorted by name, rows sorted by all columns). ``tests/test_corpus.py``
+applies it to every entry at sf0.001; ``scripts/full_sweep.py`` at any scale.
 """
 
 from __future__ import annotations

@@ -1,15 +1,18 @@
-"""Full-corpus oracle sweep with a COMMITTED one-line JSON artifact.
+"""Full-corpus oracle sweep with per-entry Spark/oracle timings.
 
-CERTIFICATION.md has claimed a per-round full sweep at sf0.1, but the
-claim was only verifiable by a ~15-minute rerun (VERDICT r13 item 3).
-This script runs ``dbtwiz_spark.testing.run_all`` over every corpus
-entry at the given sf_dir and writes
-``scripts/sweep_{sftag}_r{WINDOW_ROUND}.json`` — round, sf, entry and
+Runs ``dbtwiz_spark.testing.compare_entry`` over every corpus entry at
+the given sf_dir, in registration order, in one session: the same
+comparison as ``testing.run_all`` and the in-suite oracle gate
+(``tests/test_corpus.py``), at a larger scale. Last-ulp float
+divergences between the JVM and DuckDB only surface at volume, so run
+it at sf0.1 after engine changes.
+
+Prints one line per entry (total, Spark and oracle seconds, outcome),
+the slowest entries, and last a one-line JSON summary: sf, entry and
 green counts, wall time, and a result hash over the per-entry outcome
-tuples — so the claim is checkable from the tree: the artifact names
-the round it was produced for (the corpus_order pin, not a free-typed
-string), and the result hash changes if any entry's outcome or row
-count differs.
+tuples, which changes if any entry's outcome or row count differs.
+Exits non-zero on any failure or if the sweep did not cover the whole
+registry.
 
     python scripts/full_sweep.py [sf_dir]        # default sf0.1
 """
@@ -26,18 +29,47 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from dbtwiz_spark.ops import CORPUS  # noqa: E402
-from dbtwiz_spark.ops.corpus_order import WINDOW_ROUND  # noqa: E402
+from dbtwiz_spark.ops.common import clear_session_memos  # noqa: E402
 from dbtwiz_spark.session import get_spark  # noqa: E402
-from dbtwiz_spark.testing import run_all  # noqa: E402
+from dbtwiz_spark.testing import CompareResult, compare_entry, duckdb_con  # noqa: E402
+
+
+def _secs(v: float | None) -> str:
+    return "   n/a" if v is None else f"{v:6.2f}"
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sftag = Path(sf_dir).name.replace(".", "")  # sf0.1 -> sf01
     spark = get_spark()
-    t0 = time.time()
-    results = run_all(spark, sf_dir)
-    wall_s = time.time() - t0
+    con = duckdb_con(sf_dir)
+    t_start = time.time()
+    results, rows = [], []
+    for i, name in enumerate(CORPUS):
+        t0 = time.time()
+        # each side is timed inside compare_entry around its single
+        # execution, so a side's number survives when the other raises
+        timings: dict = {}
+        try:
+            res = compare_entry(spark, name, sf_dir, con, timings=timings)
+        except Exception as e:  # noqa: BLE001 — reported, not raised
+            res = CompareResult(name, False, f"EXCEPTION: {type(e).__name__}: {e}")
+        sec = time.time() - t0
+        results.append(res)
+        rows.append((sec, name))
+        print(
+            f"{i:3d} {name:36s} {sec:7.2f}s (spark {_secs(timings.get('spark_s'))}s"
+            f" oracle {_secs(timings.get('oracle_s'))}s) ok={res.ok} {res.detail[:80]}",
+            flush=True,
+        )
+    wall_s = time.time() - t_start
+    con.close()
+    # bound session storage like testing.run_all does
+    clear_session_memos()
+
+    print("slowest 15:")
+    for sec, name in sorted(rows, reverse=True)[:15]:
+        print(f"  {sec:7.2f}s  {name}")
+
     # order-independent outcome hash: any flip in ok/rows changes it
     h = hashlib.sha256()
     for r in sorted(results, key=lambda r: r.name):
@@ -46,7 +78,6 @@ def main() -> None:
         )
     failures = [r.name for r in results if not r.ok]
     summary = {
-        "round": WINDOW_ROUND,
         "sf_dir": sf_dir,
         "n_entries": len(results),
         "n_green": len(results) - len(failures),
@@ -54,20 +85,16 @@ def main() -> None:
         "result_hash": h.hexdigest(),
         "failures": failures,
     }
+    print(json.dumps(summary))
     # Survives `python -O` (a bare assert would strip) and names the
-    # mismatch instead of dying with a raw AssertionError after the
-    # 12-minute sweep — the artifact is not written on a partial run.
+    # mismatch instead of dying with a raw AssertionError.
     if len(results) != len(CORPUS):
         print(
             f"corpus-size mismatch: swept {len(results)} entries but the "
-            f"registry holds {len(CORPUS)} — artifact NOT written",
+            f"registry holds {len(CORPUS)}",
             file=sys.stderr,
         )
         sys.exit(1)
-    out = REPO / "scripts" / f"sweep_{sftag}_r{WINDOW_ROUND}.json"
-    out.write_text(json.dumps(summary) + "\n")
-    print(json.dumps(summary))
-    print(f"-> {out}")
     sys.exit(1 if failures else 0)
 
 

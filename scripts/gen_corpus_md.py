@@ -13,10 +13,9 @@ from dbtwiz_spark.ops import CORPUS  # noqa: E402
 
 # rows-only entries (no DuckDB oracle by design: engine-specific hashes)
 # and the oracle-carrying CERTIFICATE entry that quality-gates each one.
-# A certificate is a driver-checkable hard oracle over the rows-only
-# op's OUTPUT (recall floor vs an exact baseline, sortedness proof), so
-# a green certificate row certifies the rows-only op — the judge reads
-# this column instead of re-deriving the linkage from git history.
+# A certificate is a hard oracle over the rows-only op's OUTPUT (recall
+# floor vs an exact baseline, sortedness proof), so a green certificate
+# certifies the rows-only op. This is the only op -> certificate map.
 CERTIFICATES = {
     "sort-within-partitions": "sort-within-partitions-cert",
     "stream-dedup-near": "stream-dedup-near-cert",
@@ -62,8 +61,8 @@ def render() -> str:
         "entries intentionally have no DuckDB oracle (engine-specific hashes or",
         "sketches) — each is instead certified by the oracle-carrying",
         "*certificate* entry named in its `check` column (a recall floor or",
-        "quality proof over the rows-only op's own output, driver-checkable and",
-        "doubling as a production monitor), plus recall/quality tests in `tests/`.",
+        "quality proof over the rows-only op's own output, oracle-checked like",
+        "any other entry), plus recall/quality tests in `tests/`.",
         "",
         f"**{len(CORPUS)} entries, "
         f"{sum(1 for s in CORPUS.values() if s.oracle)} with DuckDB value-hash oracles.**",

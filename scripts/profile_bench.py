@@ -4,8 +4,7 @@ Mirrors bench.py's methodology exactly (same session, same prime, same
 warm-up-then-time loop) but additionally:
 
 - captures ``explain("formatted")`` for every query into
-  ``plans/<tag>/<query>_<suffix>.txt`` (the optimization-round evidence
-  files the judge reads), and
+  ``plans/<tag>/<query>_<suffix>.txt`` (regenerated on demand), and
 - records ALL N samples per query (not just best/median) so a change can
   be adjudicated against the documented +-30% per-query host noise.
 

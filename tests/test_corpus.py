@@ -34,8 +34,11 @@ def test_entry_smoke(spark):
 
 def test_queries_oracle_contract(spark):
     import __spark_entry__ as mod
+    from scripts.gen_corpus_md import CERTIFICATES
 
     qs, oracles = mod.queries(), mod.oracle_sql()
+    # plain registration order: nothing reorders the corpus after import
+    assert list(qs) == list(CORPUS)
     assert set(oracles) <= set(qs)
     # every oracle-less entry is intentionally rows-only
     rows_only = set(qs) - set(oracles)
@@ -47,6 +50,11 @@ def test_queries_oracle_contract(spark):
         "ext-ann-ivf",
         "stream-dedup-near",
     }
+    # CERTIFICATES maps exactly the rows-only ops, each to a certificate
+    # that itself carries an oracle
+    assert set(CERTIFICATES) == rows_only
+    uncheckable = sorted(c for c in CERTIFICATES.values() if c not in oracles)
+    assert not uncheckable, f"certificates without an oracle: {uncheckable}"
 
 
 def test_every_corpus_entry_is_documented():
@@ -60,9 +68,8 @@ def test_every_corpus_entry_is_documented():
 
 def test_corpus_md_matches_registry():
     """The committed CORPUS.md must be byte-identical to what the
-    generator renders from the live registry — the same drift = red
-    mechanism as the green manifest (round-13 guard: 63 of 286 line
-    refs shipped stale in round 12 because regeneration was a
+    generator renders from the live registry (round-13 guard: 63 of 286
+    line refs shipped stale in round 12 because regeneration was a
     convention, not a test). Fix a failure with
     `python scripts/gen_corpus_md.py`."""
     from pathlib import Path
