@@ -45,6 +45,27 @@ class Catalog:
         self.sf_dir = sf_dir
         self._cache: dict[str, DataFrame] = {}
         self._primed = False
+        self._artifacts: dict[str, object] = {}
+        self._generation = self._stat_tables()
+
+    def _stat_tables(self) -> tuple:
+        """Each table file's (size, mtime_ns), None where it is missing:
+        the input GENERATION every cached table and artifact derives from.
+        A parquet table that is a directory is stamped by the directory's
+        own stat, which sees files added or removed, not rewritten."""
+        stamps = []
+        for name in TABLES:
+            try:
+                st = os.stat(os.path.join(self.sf_dir, f"{name}.parquet"))
+                stamps.append((st.st_size, st.st_mtime_ns))
+            except OSError:
+                stamps.append(None)
+        return tuple(stamps)
+
+    def is_current(self) -> bool:
+        """False once any table file was created, removed or rewritten
+        since this catalog was built."""
+        return self._stat_tables() == self._generation
 
     def table(self, name: str) -> DataFrame:
         if name not in self._cache:
@@ -117,18 +138,66 @@ class Catalog:
             self._cache[name] = df.persist()
             self._cache[name].count()  # materialize eagerly
 
-    @staticmethod
-    def clear_memos() -> int:
-        """Evict every session-lifetime operator memo (parallel-rank
-        tables, graph edge artifacts, ANN indexes, pipeline derived
-        tables): unpersists and drops all entries, returning the count.
-        Call between sweeps in a long-lived service to bound executor
-        storage at one sweep's working set; the next query transparently
-        rebuilds what it needs. (Primed base tables are NOT touched —
-        they are bounded by the table count and managed by `prime`.)"""
-        from dbtwiz_spark.ops.common import clear_session_memos
+    def artifact(self, kind: str, build):
+        """The engine's artifact memo: ``build()``'s result, built once per
+        catalog and served under ``kind`` until the catalog is replaced or
+        its memos are cleared. Builders that want a cached table call
+        ``persist()`` (or ``_truncate``) themselves. A key needs to name
+        only the call site and its parameters: the catalog already fixes
+        the session, the scale dir and the input generation."""
+        if kind not in self._artifacts:
+            self._artifacts[kind] = build()
+        return self._artifacts[kind]
 
-        return clear_session_memos()
+    def clear_memos(self) -> int:
+        """Unpersist and drop every artifact, returning how many there
+        were. Call between sweeps in a long-lived service to bound
+        executor storage at one sweep's working set; the next query
+        rebuilds what it needs. Primed base tables are NOT touched —
+        they are bounded by the table count and managed by `prime`.
+
+        A LAZY DataFrame built before the clear stays correct if executed
+        after it, only slower. The sharp edge is parallel_rank /
+        parallel_prefix_sum, whose offset join needs both consuming
+        branches to see the same physical range boundaries: with the
+        persist gone, Spark's ReuseExchange dedupes the two identical
+        range-partitioning subtrees into one shuffle, so the boundaries
+        still agree. That holds only while spark.sql.exchange.reuse is
+        on, so eviction re-pins it on this catalog's session (sessions
+        not created by get_spark never had it pinned)."""
+        try:
+            self.spark.conf.set("spark.sql.exchange.reuse", "true")
+        except Exception:
+            pass  # stopped session — nothing left to protect
+        dropped = len(self._artifacts)
+        for val in self._artifacts.values():
+            # unpersist EVERY element of tuple artifacts (the IVF index is
+            # (assignments, centroids, cents_row)): freeing only one leaks
+            # the others for the session lifetime
+            for item in val if isinstance(val, tuple) else (val,):
+                unpersist = getattr(item, "unpersist", None)
+                if unpersist is not None:
+                    try:
+                        unpersist(False)
+                    except Exception:
+                        pass  # stopped session — nothing to free
+        self._artifacts.clear()
+        return dropped
+
+    def release(self) -> None:
+        """Free everything this catalog cached: its artifacts and primed
+        tables. Required before a catalog over rewritten files replaces
+        it — Spark's CacheManager matches cached data by plan, and a new
+        read of the same path would otherwise be served the old rows."""
+        self.clear_memos()
+        if self._primed:
+            for df in self._cache.values():
+                try:
+                    df.unpersist(False)
+                except Exception:
+                    pass  # stopped session — nothing to free
+        self._cache.clear()
+        self._primed = False
 
     def tables(self) -> dict[str, DataFrame]:
         return {name: self.table(name) for name in TABLES}

@@ -1848,9 +1848,9 @@ def agg_gini_concentration(spark, sf_dir):
     from dbtwiz_spark.ops.common import parallel_rank
 
     keys = [F.col("r"), F.col("o_custkey")]
-    ranked = parallel_rank(rev, keys).select(
-        "r", F.col("_rank").alias("i"), "_n"
-    )
+    ranked = cat.artifact(
+        "agg-gini-concentration:r,o_custkey", lambda: parallel_rank(rev, keys)
+    ).select("r", F.col("_rank").alias("i"), "_n")
     s = ranked.agg(
         F.max("_n").cast("bigint").alias("n_customers"),
         # exact-DECIMAL sum exits through a x1e6 BIGINT (integral by
@@ -2292,7 +2292,8 @@ def agg_ks_test(spark, sf_dir):
     elements. The same shape handles any two-cohort CDF comparison."""
     from dbtwiz_spark.ops.common import parallel_prefix_sum
 
-    e = views(spark, sf_dir).table("events")
+    cat = views(spark, sf_dir)
+    e = cat.table("events")
     g = (
         # NULL values are excluded on BOTH sides: Spark sorts NULLS FIRST,
         # DuckDB NULLS LAST, so a NULL group would shift every prefix count
@@ -2306,7 +2307,10 @@ def agg_ks_test(spark, sf_dir):
             F.count(F.when(F.col("event_type") == "view", 1)).alias("c2"),
         )
     )
-    ps = parallel_prefix_sum(g, [F.col("value")], ["c1", "c2"])
+    ps = cat.artifact(
+        "agg-ks-test:value",
+        lambda: parallel_prefix_sum(g, [F.col("value")], ["c1", "c2"]),
+    )
     # sample sizes = the FINAL prefix values (prefix sums of nonnegative
     # counts are nondecreasing, so max = last = total): one tiny agg over
     # the persisted prefix table instead of a second full events-scan +
@@ -2457,7 +2461,8 @@ def agg_survival_km(spark, sf_dir):
     broadcast row anyway."""
     from dbtwiz_spark.ops.common import parallel_prefix_sum
 
-    o = views(spark, sf_dir).table("orders")
+    cat = views(spark, sf_dir)
+    o = cat.table("orders")
     le = o.groupBy("o_custkey").agg(
         F.min(F.col("o_orderdate").cast("date")).alias("f"),
         F.max(F.col("o_orderdate").cast("date")).alias("l"),
@@ -2470,7 +2475,9 @@ def agg_survival_km(spark, sf_dir):
     tbl = lt.groupBy("t").agg(
         F.count("*").alias("a"), F.sum("death").cast("long").alias("d")
     )
-    cum = parallel_prefix_sum(tbl, [F.col("t")], ["a"])
+    cum = cat.artifact(
+        "agg-survival-km:t", lambda: parallel_prefix_sum(tbl, [F.col("t")], ["a"])
+    )
     n_total = cum.agg(F.max("_cum_a").cast("long").alias("total"))
     dth = (
         cum.crossJoin(F.broadcast(n_total))
@@ -2918,13 +2925,17 @@ def agg_spearman_corr(spark, sf_dir):
     int64 products would overflow past ~2e9 rows."""
     from dbtwiz_spark.ops.common import parallel_prefix_sum
 
-    li = views(spark, sf_dir).table("lineitem").select(
+    cat = views(spark, sf_dir)
+    li = cat.table("lineitem").select(
         F.col("l_quantity").alias("x"), F.col("l_extendedprice").alias("y")
     )
 
     def ranks(col):
         g = li.groupBy(col).agg(F.count("*").alias("c"))
-        cum = parallel_prefix_sum(g, [F.col(col)], ["c"])
+        cum = cat.artifact(
+            f"agg-spearman-corr:{col}",
+            lambda: parallel_prefix_sum(g, [F.col(col)], ["c"]),
+        )
         return cum.select(
             col,
             (2 * F.col("_cum_c") - F.col("c") + 1).alias(f"dr{col}"),
@@ -3307,7 +3318,8 @@ def agg_rfm_segmentation(spark, sf_dir):
     partial-aggregated on a <=125-key space."""
     from dbtwiz_spark.ops.common import parallel_rank
 
-    o = views(spark, sf_dir).table("orders")
+    cat = views(spark, sf_dir)
+    o = cat.table("orders")
     cust = o.groupBy("o_custkey").agg(
         F.datediff(F.max("o_orderdate"), F.lit("1990-01-01").cast("date"))
         .cast("long")
@@ -3316,13 +3328,14 @@ def agg_rfm_segmentation(spark, sf_dir):
         (F.sum(F.col("o_totalprice").cast(DEC)) * 100).cast("long").alias("monc"),
     )
 
-    # each axis ranks the FILE-BACKED base aggregate independently (the
-    # three rank tables then join back on the key): chaining rank calls
-    # would feed a persisted plan into _plan_sig, whose InMemoryRelation
-    # canonicalizes scale-independently with no input files — the
-    # cross-scale memo collision class (see _plan_sig)
+    # each axis ranks the per-customer aggregate independently (one
+    # artifact per dimension); the three quintile tables join back on
+    # the key
     def quint(dim, out):
-        r = parallel_rank(cust, [F.col(dim), F.col("o_custkey")])
+        r = cat.artifact(
+            f"agg-rfm-segmentation:{dim},o_custkey",
+            lambda: parallel_rank(cust, [F.col(dim), F.col("o_custkey")]),
+        )
         return r.select(
             "o_custkey",
             (F.expr("div((_rank - 1) * 5, _n)") + 1).cast("long").alias(out),
@@ -3622,14 +3635,18 @@ def agg_pareto_share(spark, sf_dir):
     per threshold."""
     from dbtwiz_spark.ops.common import parallel_rank
 
-    o = views(spark, sf_dir).table("orders")
+    cat = views(spark, sf_dir)
+    o = cat.table("orders")
     cust = o.groupBy("o_custkey").agg(
         (F.sum(F.col("o_totalprice").cast(DEC)) * 100)
         .cast("long")
         .alias("revc")
     )
-    rk = parallel_rank(
-        cust.withColumn("_neg", -F.col("revc")), ["_neg", "o_custkey"]
+    rk = cat.artifact(
+        "agg-pareto-share:_neg,o_custkey",
+        lambda: parallel_rank(
+            cust.withColumn("_neg", -F.col("revc")), ["_neg", "o_custkey"]
+        ),
     )
     tot = rk.agg(F.sum("revc").cast("long").alias("tot"))
     th = F.explode(F.array(*[F.lit(p) for p in (1, 5, 10, 20, 50)])).alias("p")

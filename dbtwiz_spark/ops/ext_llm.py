@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 from dbtwiz_spark.ops.common import (
     views, davg, davg_sql, hkey_sql, dsum_q8, dsum_q8_sql,
-    register_memo_store,
 )
 from dbtwiz_spark.ops.registry import register
 
@@ -396,12 +395,6 @@ def ext_ngram_jaccard(spark, sf_dir):
 NUM_PERM = 32
 BANDS = 8  # 8 bands x 4 rows: catches jaccard >~0.5 candidates w.h.p.
 
-# Built artifacts (persisted signature tables / ANN indexes), memoized per
-# (session id, sf_dir[, kind]) — the long-lived-session analog of a
-# materialized index table: build once, serve every query.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
-
 
 def minhash_signatures(sh: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     """(doc_id, mh_0..mh_{n-1}): min of seeded xxhash64 per permutation.
@@ -473,18 +466,18 @@ def ext_dedup_near(spark, sf_dir):
     pinned by tests/test_ext_llm.py); crossover is roughly where
     avg_set_bytes x candidate_fanout exceeds the two shingle-level
     joins. See SCALING.md "Near-dedup" for the full trade."""
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
+
     # One aggregation produces the whole per-doc record: minhash signature +
     # the shingle set itself. The signature table is doc-granular (bounded by
     # the corpus text size) and is persisted because three downstream plans
     # consume it — recomputing the shingle pipeline per consumer would triple
     # the dominant cost. Persist is MEMORY_AND_DISK: spills, never OOMs.
-    # Memoized per (session, sf_dir): it is a built artifact (at scale, a
-    # materialized table), so repeat calls in a long-lived session reuse the
-    # SAME persisted DataFrame instead of re-persisting an identical plan.
-    key = (spark, sf_dir, "lsh_per_doc_capped")
-    per_doc = _ARTIFACTS.get(key)
-    if per_doc is None:
+    # A catalog artifact: at scale a materialized table, so repeat calls in
+    # a long-lived session reuse the SAME persisted DataFrame instead of
+    # re-persisting an identical plan.
+    def _build_per_doc():
         # the DF cap runs BEFORE MinHash so signatures, banding, and the
         # verification Jaccard all live in the same shingle universe as the
         # exact baseline (ext-ngram-jaccard) — without it a pair's capped
@@ -493,7 +486,7 @@ def ext_dedup_near(spark, sf_dir):
         # recall miss. Hot shingles also carry no discriminative signal and
         # are exactly the band-bucket hot keys the LSH join must avoid.
         sh = cap_shingle_df(shingles(d, 3), d)
-        per_doc = (
+        return (
             sh.groupBy("doc_id")
             .agg(
                 *[
@@ -504,18 +497,17 @@ def ext_dedup_near(spark, sf_dir):
             )
             .persist()
         )
-        _ARTIFACTS[key] = per_doc
-    # The band-signature table is ALSO a session artifact (round-16): the
-    # candidate self-join consumes it on BOTH sides, so un-persisted it
-    # re-ran the band explode + xxhash twice per execution. Doc-granular
-    # (bands x docs rows of three narrow columns), so the extra storage
-    # is bounded like per_doc itself; at scale this is the materialized
-    # signature store the streaming path (band_signatures) writes anyway.
-    skey = (spark, sf_dir, "lsh_band_stack")
-    stacked = _ARTIFACTS.get(skey)
-    if stacked is None:
-        stacked = band_stack(per_doc).persist()
-        _ARTIFACTS[skey] = stacked
+
+    per_doc = cat.artifact("lsh_per_doc_capped", _build_per_doc)
+    # The band-signature table is ALSO an artifact: the candidate
+    # self-join consumes it on BOTH sides, so un-persisted it re-ran the
+    # band explode + xxhash twice per execution. Doc-granular (bands x
+    # docs rows of three narrow columns), so the extra storage is bounded
+    # like per_doc itself; at scale this is the materialized signature
+    # store the streaming path (band_signatures) writes anyway.
+    stacked = cat.artifact(
+        "lsh_band_stack", lambda: band_stack(per_doc).persist()
+    )
     a, b = stacked.alias("a"), stacked.alias("b")
     candidates = (
         a.join(
@@ -1227,9 +1219,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_index(
-    emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 1, cache_key: tuple | None = None
-):
+def ivf_index(emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 1):
     """IVF coarse quantizer: deterministic seeds (the K smallest vec_ids)
     refined by Lloyd iterations, all as DataFrame ops.
 
@@ -1237,10 +1227,8 @@ def ivf_index(
     precomputed candidate norm, and cents_row is the ONE-ROW collapsed
     centroid array the probe selectors consume (round 16). The Lloyd
     recompute is a groupBy(cell, dim) mean — one shuffle per iteration
-    bounded by K × dims rows out. With ``cache_key`` the built 3-tuple is
-    memoized (build once per session, like a materialized index table)."""
-    if cache_key is not None and cache_key in _ARTIFACTS:
-        return _ARTIFACTS[cache_key]
+    bounded by K × dims rows out. Callers that serve many queries from
+    one index memoize the 3-tuple with ``Catalog.artifact``."""
     # seed numbering is window-free: collect the K seed ids into one sorted
     # array and number each seed by its array position (a global-order window
     # here would run single-partition and trip the WindowExec warning; K rows
@@ -1274,25 +1262,18 @@ def ivf_index(
     # cache entry.
     centroids = centroids.persist()
     cents_row = _centroids_as_array(centroids).persist()
-    out = (ivf_assign(emb, centroids).persist(), centroids, cents_row)
-    if cache_key is not None:
-        _ARTIFACTS[cache_key] = out
-    return out
+    return (ivf_assign(emb, centroids).persist(), centroids, cents_row)
 
 
 def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    cache_key: tuple | None = None,
+    ivf: tuple, queries: DataFrame, k: int = 10, nprobe: int = 4
 ) -> DataFrame:
-    """IVF search: probe the ``nprobe`` nearest cells per query, exact cosine
-    only against those cells' members. At 100 TB the index is built once and
-    persisted partitioned by cell; a query touches nprobe/n_cells of the
-    corpus instead of all of it."""
-    index, centroids, cents_row = ivf_index(emb, n_cells, cache_key=cache_key)
+    """IVF search over an ``ivf_index`` 3-tuple: probe the ``nprobe``
+    nearest cells per query, exact cosine only against those cells'
+    members. At 100 TB the index is built once and persisted partitioned
+    by cell; a query touches nprobe/n_cells of the corpus instead of all
+    of it."""
+    index, _centroids, cents_row = ivf
     # probe selection is map-side too: sort the per-query (score, neg_cell)
     # array descending (ascending sort + reverse ⇒ score desc, cell asc on
     # ties) and slice the first nprobe cells — no window, no shuffle; ONE
@@ -1408,18 +1389,13 @@ def ext_ann_ivf(spark, sf_dir):
     quantizer (deterministic seeds + Lloyd refinement), nprobe-cell search.
     Complements ext-ann-lsh-bucket; tests assert recall against the exact
     brute-force top-k. Rows-only: centroids are engine-specific."""
-    emb = views(spark, sf_dir).table("embeddings")
+    cat = views(spark, sf_dir)
+    emb = cat.table("embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_embedding")
     )
-    return ivf_topk(
-        emb,
-        queries,
-        k=10,
-        n_cells=16,
-        nprobe=4,
-        cache_key=(spark, sf_dir, "ivf16"),
-    )
+    ivf = cat.artifact("ivf16", lambda: ivf_index(emb, 16))
+    return ivf_topk(ivf, queries, k=10, nprobe=4)
 
 
 def _exact_topk(spark, emb, query_pred, k: int = 10):
@@ -1496,13 +1472,13 @@ def ext_ann_ivf_recall(spark, sf_dir):
     probing a quarter of the cells finds half the true neighbors on this
     weakly-clustered synthetic corpus; real embedding corpora cluster
     far more sharply). Same certificate shape as ext-ann-lsh-recall."""
-    emb = views(spark, sf_dir).table("embeddings")
+    cat = views(spark, sf_dir)
+    emb = cat.table("embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_embedding")
     )
-    approx = ivf_topk(
-        emb, q, k=10, n_cells=16, nprobe=4, cache_key=(spark, sf_dir, "ivf16")
-    ).select("q_vec_id", "c_vec_id")
+    ivf = cat.artifact("ivf16", lambda: ivf_index(emb, 16))
+    approx = ivf_topk(ivf, q, k=10, nprobe=4).select("q_vec_id", "c_vec_id")
     return _recall_entry(spark, sf_dir, approx, floor=0.40)
 
 
@@ -1885,10 +1861,14 @@ def ext_contrastive_pairs(spark, sf_dir):
     equi-join on rank."""
     from dbtwiz_spark.ops.common import hkey, parallel_rank
 
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
     pos = ext_ngram_jaccard(spark, sf_dir)
-    ranked = parallel_rank(
-        d.select("doc_id"), [hkey(F.col("doc_id")), F.col("doc_id")]
+    ranked = cat.artifact(
+        "ext-contrastive-pairs:hkey(doc_id),doc_id",
+        lambda: parallel_rank(
+            d.select("doc_id"), [hkey(F.col("doc_id")), F.col("doc_id")]
+        ),
     ).select("doc_id", "_rank", "_n")
     h1 = ranked.select(
         F.col("doc_id").alias("doc_a"),

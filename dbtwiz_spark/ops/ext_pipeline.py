@@ -28,31 +28,7 @@ from dbtwiz_spark.ops.common import (
 )
 from dbtwiz_spark.ops.common import hkey as _hkey
 from dbtwiz_spark.ops.common import hkey_sql as _hkey_sql
-from dbtwiz_spark.ops.common import (
-    memo_artifact,
-    memo_artifact_raw,
-    register_memo_store,
-)
 from dbtwiz_spark.ops.registry import register
-
-# Persisted derived tables memoized per (session, sf_dir, kind) — the
-# graphs._ARTIFACTS pattern. Enrolled in the common memo registry so
-# clear_session_memos() evicts these too.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
-
-
-def _pipe_artifact(spark, sf_dir: str, kind: str, build):
-    # store-bound alias of common.memo_artifact (round-12 consolidation
-    # of the graphs/ext_pipeline twins); semantics documented there
-    return memo_artifact(_ARTIFACTS, spark, sf_dir, kind, build)
-
-
-def _pipe_artifact_raw(spark, sf_dir: str, kind: str, build):
-    # memo-only variant for already-checkpointed builders — stacking
-    # persist() on checkpoint blocks would double-store; see
-    # common.memo_artifact_raw
-    return memo_artifact_raw(_ARTIFACTS, spark, sf_dir, kind, build)
 
 
 @register(
@@ -937,13 +913,13 @@ def ext_dedup_cluster(spark, sf_dir):
                 break
         return labels
 
-    # memoize the CONVERGED label table per (session x scale) — the CC
+    # memoize the CONVERGED label table as a catalog artifact — the CC
     # label-table pattern: repeat sweeps pay only the keep rollup, and
     # under SPARK_GRAFT_CHECKPOINT_DIR the per-call checkpoint files
     # (Spark never deletes them) stop accumulating across repeat
     # invocations in one session (round-10 review find)
-    labels = _pipe_artifact_raw(
-        spark, sf_dir, "dedup_cluster_labels", _build_converged_labels
+    labels = views(spark, sf_dir).artifact(
+        "dedup_cluster_labels", _build_converged_labels
     )
     return labels.select(
         "doc_id",
@@ -1834,7 +1810,8 @@ def _bpe_reps(spark, sf_dir):
     representation and tops is the per-round merge list. Shared by
     ext-bpe-train (emits the merges) and ext-tokenize-apply (applies the
     trained representation to documents)."""
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
 
     def _build_words():
         toks = d.select(
@@ -1850,11 +1827,11 @@ def _bpe_reps(spark, sf_dir):
 
     # The word vocabulary IS the one corpus-sized shuffle of BPE training
     # (the docstring's scale device 1) and every merge round's pair count
-    # chains back to it — a session artifact (round-16) so the corpus
-    # explode + aggregation runs once per (session, scale), not once per
-    # training/encode invocation; vocabulary-sized storage, evicted with
-    # the other memo stores.
-    words = _pipe_artifact(spark, sf_dir, "bpe_words", _build_words)
+    # chains back to it — a catalog artifact so the corpus explode +
+    # aggregation runs once per catalog, not once per training/encode
+    # invocation; vocabulary-sized storage, evicted with the other
+    # artifacts.
+    words = cat.artifact("bpe_words", lambda: _build_words().persist())
     rep = words.select(
         "word",
         "cnt",
@@ -2198,7 +2175,8 @@ def ext_vocab_growth(spark, sf_dir):
     rand(), and any chunk count K works unchanged."""
     from dbtwiz_spark.ops.common import hkey, parallel_prefix_sum
 
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
     dt = d.select(
         (hkey(F.col("doc_id")) % 10 + 1).alias("bucket"),
         F.explode(F.split("text", " ")).alias("tok"),
@@ -2216,7 +2194,10 @@ def ext_vocab_growth(spark, sf_dir):
             F.coalesce("n_new", F.lit(0)).alias("n_new"),
         )
     )
-    cum = parallel_prefix_sum(j, [F.col("bucket")], ["n_tokens", "n_new"])
+    cum = cat.artifact(
+        "ext-vocab-growth:bucket",
+        lambda: parallel_prefix_sum(j, [F.col("bucket")], ["n_tokens", "n_new"]),
+    )
     return cum.select(
         "bucket",
         F.col("_cum_n_tokens").cast("long").alias("cum_tokens"),
@@ -2401,10 +2382,12 @@ def ext_length_decile_mix(spark, sf_dir):
     grid."""
     from dbtwiz_spark.ops.common import parallel_rank
 
-    d = views(spark, sf_dir).table("documents").select(
-        "doc_id", "lang", "n_chars"
+    cat = views(spark, sf_dir)
+    d = cat.table("documents").select("doc_id", "lang", "n_chars")
+    r = cat.artifact(
+        "ext-length-decile-mix:n_chars,doc_id",
+        lambda: parallel_rank(d, [F.col("n_chars"), F.col("doc_id")]),
     )
-    r = parallel_rank(d, [F.col("n_chars"), F.col("doc_id")])
     dec = r.select(
         "lang",
         (
@@ -2580,7 +2563,8 @@ def ext_perplexity_filter(spark, sf_dir):
     threshold on a rank -- no per-decile self-joins."""
     from dbtwiz_spark.ops.common import parallel_rank
 
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = toks.agg(F.count("*").cast("double").alias("total"))
@@ -2593,7 +2577,10 @@ def ext_perplexity_filter(spark, sf_dir):
             .alias("score")
         )
     )
-    rk = parallel_rank(scored, ["score", "doc_id"])
+    rk = cat.artifact(
+        "ext-perplexity-filter:score,doc_id",
+        lambda: parallel_rank(scored, ["score", "doc_id"]),
+    )
     gated = d.join(
         rk.select(
             "doc_id",
@@ -2829,9 +2816,14 @@ def agg_calibration_ece(spark, sf_dir):
     never funnels through one partition."""
     from dbtwiz_spark.ops.common import parallel_rank
 
-    d = views(spark, sf_dir).table("documents")
-    rk = parallel_rank(
-        d.select("doc_id", "lang", "n_chars"), ["n_chars", "doc_id"]
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
+    # the same input and order as ext-length-decile-mix: one shared table
+    rk = cat.artifact(
+        "ext-length-decile-mix:n_chars,doc_id",
+        lambda: parallel_rank(
+            d.select("doc_id", "lang", "n_chars"), ["n_chars", "doc_id"]
+        ),
     )
     b = rk.select(
         (F.expr("div((_rank - 1) * 10, _n)") + 1).alias("bin"),
@@ -2901,20 +2893,19 @@ def ext_source_similarity_matrix(spark, sf_dir):
     token by #sources-containing, quadratic only in the TINY dimension;
     the `<` guard halves it). Never doc-pairs, never a cross join of
     corpora."""
-    d = views(spark, sf_dir).table("documents")
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
     # persisted + memoized: BOTH self-join sides and the size branch
     # consume st — the tokenize+distinct is the expensive stage and would
-    # run 3x. Session-keyed memo, not a bare .cache(): every invocation
+    # run 3x. A catalog artifact, not a bare .cache(): every invocation
     # (oracle sweeps, bench best-of-3, multi-scale runs) would otherwise
     # leak a fresh persisted copy for the session lifetime (round-8
     # ADVICE — the parallel_rank leak pattern).
-    st = _pipe_artifact(
-        spark,
-        sf_dir,
+    st = cat.artifact(
         "srcsim_st",
-        lambda: d.select(
-            "source", F.explode(F.split("text", " ")).alias("tok")
-        ).distinct(),
+        lambda: d.select("source", F.explode(F.split("text", " ")).alias("tok"))
+        .distinct()
+        .persist(),
     )
     sz = st.groupBy("source").agg(F.count("*").alias("n"))
     a = st.select(F.col("source").alias("src_a"), "tok")

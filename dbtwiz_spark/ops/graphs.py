@@ -20,41 +20,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbtwiz_spark.ops.common import (
-    _truncate,
-    memo_artifact,
-    memo_artifact_raw,
-    register_memo_store,
-    views,
-)
+from dbtwiz_spark.ops.common import _truncate, views
 from dbtwiz_spark.ops.registry import register
 
 _SCALE = 1_000_000_000_000_000  # 10^15 fixed-point scale
 _ITER = 3
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 
-# Derived graph tables (edge lists, degree tables), persisted and memoized
-# per (session, sf_dir, kind) — the ext_llm._ARTIFACTS pattern. Without
-# this, every iteration of an iterative op RE-DERIVES the edge list from
-# the base tables (the rank lineage references edges once per hop), which
-# measured 13 s for 3-hop PageRank at sf0.1 vs ~2 s with the edge artifact
-# cached. On a cluster the same role is played by a checkpointed/
-# materialized edge table.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
-
-
-def _artifact(spark, sf_dir: str, kind: str, build):
-    # store-bound alias of common.memo_artifact (round-12 consolidation
-    # of the graphs/ext_pipeline twins); semantics documented there
-    return memo_artifact(_ARTIFACTS, spark, sf_dir, kind, build)
-
-
-def _artifact_raw(spark, sf_dir: str, kind: str, build):
-    # memo-only variant for already-checkpointed builders — stacking
-    # persist() on checkpoint blocks would double-store; see
-    # common.memo_artifact_raw
-    return memo_artifact_raw(_ARTIFACTS, spark, sf_dir, kind, build)
+# Derived graph tables (edge lists, degree tables, converged state) are
+# catalog artifacts (`Catalog.artifact`). Without them every iteration of
+# an iterative op RE-DERIVES the edge list from the base tables (the rank
+# lineage references edges once per hop), which measured 13 s for 3-hop
+# PageRank at sf0.1 vs ~2 s with the edge artifact cached. On a cluster
+# the same role is played by a checkpointed/materialized edge table.
+# Builders that end in `_truncate` store the checkpoint as is: stacking
+# persist() on checkpoint blocks would store every table twice.
 
 
 def _pagerank_oracle() -> str:
@@ -94,7 +74,7 @@ def _pagerank_oracle() -> str:
     return sql
 
 
-def _pr_edges(spark, sf_dir, cat):
+def _pr_edges(cat):
     """Undirected customer-supplier edge list (both directions), the
     shared base graph of graph-pagerank, graph-personalized-pagerank and
     graph-degree-assortativity -- one artifact, built once per
@@ -104,8 +84,8 @@ def _pr_edges(spark, sf_dir, cat):
     join twice (exchange reuse does not fire across union branches; the
     cc_edges builder verified 0 ReusedExchange on the executed plan).
     The mirrored union over the truncated table is two local scans, so
-    the memo is ``_artifact_raw`` (no extra persist — the checkpoint
-    blocks ARE the storage; stacking persist would double-store)."""
+    the artifact is not persisted again (the checkpoint blocks ARE the
+    storage; stacking persist would double-store)."""
 
     def _build_edges():
         o, li = cat.table("orders"), cat.table("lineitem")
@@ -121,17 +101,16 @@ def _pr_edges(spark, sf_dir, cat):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    return _artifact_raw(spark, sf_dir, "pr_edges", _build_edges)
+    return cat.artifact("pr_edges", _build_edges)
 
 
-def _pr_deg(spark, sf_dir, edges):
-    return _artifact(
-        spark,
-        sf_dir,
+def _pr_deg(cat, edges):
+    return cat.artifact(
         "pr_deg",
         lambda: edges.groupBy("src")
         .agg(F.count("*").alias("degree"))
-        .withColumnRenamed("src", "node"),
+        .withColumnRenamed("src", "node")
+        .persist(),
     )
 
 
@@ -153,24 +132,24 @@ def graph_pagerank(spark, sf_dir):
     Scale: per iteration one equi-join (ranks joined to edges on src —
     both hash-partitioned on the join key, partitioning reused across
     iterations) and one partial-aggregated groupBy(dst). The edge and
-    degree tables are built ONCE and memoized per session (edges as a
+    degree tables are built ONCE as catalog artifacts (edges as a
     mirrored union over a checkpointed pair table, degrees persisted —
     the rank lineage references edges every hop, and without the
     artifact each hop re-derives it from the base join: measured 13 s →
     ~2 s at sf0.1). The edge list never moves through the driver;
     production loops additionally checkpoint ranks every ~5 iterations
-    to cut lineage — not needed at 3. The CONVERGED rank table is
-    memoized per (session × scale) like the connected-components label
-    table — repeat sweeps pay only the top-20 sort — and the
-    materialization behind the memo is ``_truncate`` (NOT per-round:
+    to cut lineage — not needed at 3. The CONVERGED rank table is an
+    artifact too, like the connected-components label table — repeat
+    sweeps pay only the top-20 sort — and the
+    materialization behind it is ``_truncate`` (NOT per-round:
     ranks feed ONE branch per hop, so the plan grows linearly and
     per-round truncation measured SLOWER, 2.27 s → 3.55 s at sf0.1;
-    one truncation of the final table costs nothing and gives the memo
-    a flat lineage-free plan — and switches to reliable checkpoint()
+    one truncation of the final table costs nothing and gives the
+    artifact a flat lineage-free plan — and switches to reliable checkpoint()
     under SPARK_GRAFT_CHECKPOINT_DIR like every iterative op)."""
     cat = views(spark, sf_dir)
-    edges = _pr_edges(spark, sf_dir, cat)
-    deg = _pr_deg(spark, sf_dir, edges)
+    edges = _pr_edges(cat)
+    deg = _pr_deg(cat, edges)
 
     def _build_final_ranks():
         nn = deg.agg(F.count("*").alias("n"))
@@ -200,7 +179,7 @@ def graph_pagerank(spark, sf_dir):
             )
         return _truncate(ranks)
 
-    final = _artifact_raw(spark, sf_dir, "pr_ranks_final", _build_final_ranks)
+    final = cat.artifact("pr_ranks_final", _build_final_ranks)
     return (
         final.select("node", F.col("rank").alias("pagerank_fp"))
         .orderBy(F.desc("pagerank_fp"), "node")
@@ -213,7 +192,7 @@ def graph_pagerank(spark, sf_dir):
 def _copurchase_cs(cat):
     """Distinct (customer, supplier) purchase pairs for the bounded
     (supplier key <= 100) co-purchase graph — shared by triangle count
-    and neighbourhood Jaccard, persisted once per session."""
+    and neighbourhood Jaccard, persisted once per catalog."""
     o, li = cat.table("orders"), cat.table("lineitem")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
@@ -263,7 +242,7 @@ def graph_triangle_count(spark, sf_dir):
     device this bounded demo graph (supplier key <= 100 at any SF)
     doesn't need."""
     cat = views(spark, sf_dir)
-    cs = _artifact(spark, sf_dir, "cs100", lambda: _copurchase_cs(cat))
+    cs = cat.artifact("cs100", lambda: _copurchase_cs(cat).persist())
     a = cs.select(F.col("c"), F.col("s").alias("sa"))
     b = cs.select(F.col("c"), F.col("s").alias("sb"))
     p = (
@@ -278,13 +257,12 @@ def graph_triangle_count(spark, sf_dir):
     # the thresholded edge set feeds FOUR consumers (three wedge-join
     # aliases + the edge count): persist so the customer self-join that
     # produces it runs once
-    e = _artifact(
-        spark,
-        sf_dir,
+    e = cat.artifact(
         "tri_edges",
         lambda: p.crossJoin(F.broadcast(thr))
         .filter(F.col("shared") > F.col("t"))
-        .select("sa", "sb"),
+        .select("sa", "sb")
+        .persist(),
     )
     e1 = e.select(F.col("sa").alias("a"), F.col("sb").alias("b"))
     e2 = e.select(F.col("sa").alias("a"), F.col("sb").alias("c"))
@@ -333,7 +311,7 @@ def graph_jaccard_neighbors(spark, sf_dir):
     shingles (drop or sample customers whose supplier list exceeds a
     bound -- they contribute near-zero Jaccard signal)."""
     cat = views(spark, sf_dir)
-    cs = _artifact(spark, sf_dir, "cs100", lambda: _copurchase_cs(cat))
+    cs = cat.artifact("cs100", lambda: _copurchase_cs(cat).persist())
     deg = cs.groupBy("s").agg(F.count("*").alias("d"))
     a = cs.select("c", F.col("s").alias("sa"))
     b = cs.select("c", F.col("s").alias("sb"))
@@ -430,8 +408,8 @@ def graph_bfs_hops(spark, sf_dir):
 
     # referenced once per hop by the distance lineage; the mirrored
     # union over the truncated pair table is two local scans, so the
-    # memo is raw (no persist on top of the checkpoint blocks)
-    edges = _artifact_raw(spark, sf_dir, "bfs_edges", _build_bfs_edges)
+    # artifact is not persisted on top of the checkpoint blocks
+    edges = cat.artifact("bfs_edges", _build_bfs_edges)
 
     def _build_dist():
         dist = spark.createDataFrame([("s1", 0)], "node STRING, dist INT")
@@ -450,9 +428,9 @@ def graph_bfs_hops(spark, sf_dir):
             )
         return dist
 
-    # converged distance table memoized per (session, scale) — the CC
-    # label-table pattern; repeat sweeps pay only the summary rollup
-    dist = _artifact_raw(spark, sf_dir, "bfs_dist", _build_dist)
+    # converged distance table as an artifact — the CC label-table
+    # pattern; repeat sweeps pay only the summary rollup
+    dist = cat.artifact("bfs_dist", _build_dist)
     return (
         dist.groupBy("dist")
         .agg(
@@ -534,7 +512,7 @@ def graph_minplus_distance(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst"), "w"
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
 
-    edges = _artifact_raw(spark, sf_dir, "minplus_edges", _build_weighted_edges)
+    edges = cat.artifact("minplus_edges", _build_weighted_edges)
 
     def _build_dist():
         dist = spark.createDataFrame([("s1", 0)], "node STRING, dist LONG")
@@ -552,9 +530,9 @@ def graph_minplus_distance(spark, sf_dir):
             )
         return dist
 
-    # converged distance table memoized per (session, scale) — the CC
-    # label-table pattern; repeat sweeps return the flat scan directly
-    return _artifact_raw(spark, sf_dir, "minplus_dist", _build_dist)
+    # converged distance table as an artifact — the CC label-table
+    # pattern; repeat sweeps return the flat scan directly
+    return cat.artifact("minplus_dist", _build_dist)
 
 
 _CC_ROUNDS = 8
@@ -671,8 +649,8 @@ def graph_connected_components(spark, sf_dir):
         # projections differ and Spark's exchange reuse does not fire
         # (verified on the executed plan: 0 ReusedExchange, 2 joins).
         # The mirrored union over the truncated table is two local
-        # scans, so the memo (_artifact_raw, no extra persist — the
-        # checkpoint blocks ARE the storage) holds a flat cheap plan.
+        # scans, so the artifact (no extra persist — the checkpoint
+        # blocks ARE the storage) holds a flat cheap plan.
         pairs = _truncate(
             o.join(li, o.o_orderkey == li.l_orderkey)
             .filter(
@@ -691,10 +669,8 @@ def graph_connected_components(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    edges = _artifact_raw(spark, sf_dir, "cc_edges", _build_cc_edges)
-    lbl = _artifact_raw(
-        spark, sf_dir, "cc_labels", lambda: _cc_propagate(edges, _CC_ROUNDS)
-    )
+    edges = cat.artifact("cc_edges", _build_cc_edges)
+    lbl = cat.artifact("cc_labels", lambda: _cc_propagate(edges, _CC_ROUNDS))
     return lbl.groupBy(F.col("lbl").alias("component")).agg(
         F.count("*").alias("n_nodes"),
         F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0))
@@ -762,8 +738,8 @@ def graph_degree_assortativity(spark, sf_dir):
     partial-aggregated moment reduce -- no window, no pair explosion
     beyond the edge list itself."""
     cat = views(spark, sf_dir)
-    edges = _pr_edges(spark, sf_dir, cat)
-    deg = _pr_deg(spark, sf_dir, edges)
+    edges = _pr_edges(cat)
+    deg = _pr_deg(cat, edges)
     ds = deg.select(F.col("node").alias("sn"), F.col("degree").alias("xd"))
     dd = deg.select(F.col("node").alias("dn"), F.col("degree").alias("yd"))
     xy = (
@@ -859,7 +835,7 @@ def graph_k_core(spark, sf_dir):
     Scale: each round is one degree aggregation plus two equi-joins of
     the edge list against the shrinking survivor set -- the same
     shuffle shape as graph-pagerank's hop, over its own persisted edge
-    artifact (built once per session x scale). Rounds are a Python
+    artifact (built once per catalog). Rounds are a Python
     loop over lazy plans: 4 fixed iterations keep the lineage shallow;
     production-depth peeling would checkpoint every ~5 rounds like the
     pagerank docstring notes. The survivor join is a broadcast when the
@@ -889,7 +865,7 @@ def graph_k_core(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    edges = _artifact_raw(spark, sf_dir, "kcore_edges", _build_edges)
+    edges = cat.artifact("kcore_edges", _build_edges)
     per_round = []
     # Per-round frames are (re)constructed on EVERY invocation (the
     # edge artifacts are memoized, the count frames are not) — round 17
@@ -918,9 +894,7 @@ def graph_k_core(spark, sf_dir):
         # (and switches to reliable checkpoint() under
         # SPARK_GRAFT_CHECKPOINT_DIR). Bind loop state via defaults — a
         # bare closure would capture the final round's variables.
-        edges = _artifact_raw(
-            spark, sf_dir, f"kcore_e{i}", lambda p=_peel: _truncate(p())
-        )
+        edges = cat.artifact(f"kcore_e{i}", lambda p=_peel: _truncate(p()))
         nodes_row = keep.selectExpr(
             "sum(CAST(startswith(node, 'c') AS BIGINT)) AS n_customers",
             "sum(CAST(startswith(node, 's') AS BIGINT)) AS n_suppliers",
@@ -1006,8 +980,8 @@ def graph_personalized_pagerank(spark, sf_dir):
     1000-seed production restart vector would join a broadcast seed
     table instead of inlining literals."""
     cat = views(spark, sf_dir)
-    edges = _pr_edges(spark, sf_dir, cat)
-    deg = _pr_deg(spark, sf_dir, edges)
+    edges = _pr_edges(cat)
+    deg = _pr_deg(cat, edges)
     seeds = list(_PPR_SEEDS)
     seed_init = _SCALE // len(seeds)
     seed_base = (_SCALE * 15 // 100) // len(seeds)
@@ -1129,7 +1103,7 @@ def graph_hits(spark, sf_dir):
             .distinct()
         )
 
-    pairs = _artifact(spark, sf_dir, "hits_pairs", _build_pairs)
+    pairs = cat.artifact("hits_pairs", lambda: _build_pairs().persist())
     # Plan construction from parsed SQL strings (round 17, the
     # parallel_rank precedent): these frames are rebuilt on every
     # invocation while the half-step artifacts are memoized, so the
@@ -1151,9 +1125,7 @@ def graph_hits(spark, sf_dir):
         # ~1 s. _truncate switches to reliable checkpoint() when
         # SPARK_GRAFT_CHECKPOINT_DIR is set — the cluster-grade form of
         # the same plan-growth bound.
-        ar = _artifact_raw(
-            spark,
-            sf_dir,
+        ar = cat.artifact(
             f"hits_ar{i}",
             lambda p=pairs, hh=h: _truncate(
                 p.join(hh, p.c == hh.node)
@@ -1165,9 +1137,7 @@ def graph_hits(spark, sf_dir):
         a_norm = ar.crossJoin(F.broadcast(asum)).selectExpr(
             "anode AS node", f"a div (t div {_HSCALE}) AS a"
         )
-        hr = _artifact_raw(
-            spark,
-            sf_dir,
+        hr = cat.artifact(
             f"hits_hr{i}",
             lambda p=pairs, an=a_norm: _truncate(
                 p.join(an, p.s == an.node)

@@ -260,19 +260,14 @@ def stream_dedup_near(spark, sf_dir):
     otherwise each recompute the full shingle->minhash pipeline), and the
     collision test is an equi-join of the band stream against its
     per-bucket minimum — never a pair join."""
-    from dbtwiz_spark.ops.ext_llm import (
-        _ARTIFACTS,
-        band_stack,
-        minhash_signatures,
-        shingles,
-    )
+    from dbtwiz_spark.ops.ext_llm import band_stack, minhash_signatures, shingles
 
-    d = views(spark, sf_dir).table("documents")
-    key = (spark, sf_dir, "stream_band_sigs")
-    sigs = _ARTIFACTS.get(key)
-    if sigs is None:
-        sigs = band_stack(minhash_signatures(shingles(d, 3))).persist()
-        _ARTIFACTS[key] = sigs
+    cat = views(spark, sf_dir)
+    d = cat.table("documents")
+    sigs = cat.artifact(
+        "stream_band_sigs",
+        lambda: band_stack(minhash_signatures(shingles(d, 3))).persist(),
+    )
     firsts = sigs.groupBy("band", "sig").agg(F.min("doc_id").alias("first_doc"))
     dups = (
         sigs.join(firsts, ["band", "sig"])

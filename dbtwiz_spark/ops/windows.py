@@ -208,11 +208,13 @@ def win_percent(spark, sf_dir):
     """
     from dbtwiz_spark.ops.common import parallel_rank
 
-    c = views(spark, sf_dir).table("customer")
+    cat = views(spark, sf_dir)
+    c = cat.table("customer")
     keys = [F.col("c_acctbal"), F.col("c_custkey")]
-    ranked = parallel_rank(c.select("c_custkey", "c_acctbal"), keys).select(
-        "c_custkey", "_rank", "_n"
-    )
+    ranked = cat.artifact(
+        "win-percent:c_acctbal,c_custkey",
+        lambda: parallel_rank(c.select("c_custkey", "c_acctbal"), keys),
+    ).select("c_custkey", "_rank", "_n")
     return ranked.select(
         "c_custkey",
         F.when(F.col("_n") > 1, (F.col("_rank") - 1) / (F.col("_n") - 1))

@@ -128,13 +128,15 @@ def _apply_runtime_confs(spark: SparkSession, shuffle_partitions: int | None) ->
     # sessions keep whatever their own builder chose (Spark's default is
     # on). Deployments that create the session themselves opt out at
     # their builder to get the same ~8x plan-construction saving.
-    # Exchange reuse is a CORRECTNESS pin, not a tuning choice: after
-    # clear_session_memos() evicts the parallel_rank/parallel_prefix_sum
-    # persist, a lazy pre-eviction DataFrame's offset join is only valid
+    # Exchange reuse is a CORRECTNESS pin, not a tuning choice: once
+    # Catalog.clear_memos() (or a catalog replaced after a file rewrite)
+    # unpersists a parallel_rank/parallel_prefix_sum output, a lazy
+    # DataFrame built on it recomputes the offset join, which is valid only
     # because ReuseExchange dedupes its two identical repartitionByRange
     # subtrees into ONE shuffle (same physical range boundaries for both
     # consumers). With reuse disabled, two independent boundary samplings
-    # could silently produce duplicate/missing ranks (round-9 ADVICE).
+    # could silently produce duplicate/missing ranks. clear_memos re-pins
+    # it for sessions that did not come from this factory.
     spark.conf.set("spark.sql.exchange.reuse", "true")
     # Partition columns keep their written type on read-back: a model that
     # writes partitiondate as STRING must not see it come back as DATE after

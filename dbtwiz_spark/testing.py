@@ -153,10 +153,7 @@ def _cell_eq(a, b) -> bool:
 
 
 def run_all(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
-    clear_memos_after: bool = True,
+    spark, sf_dir: str, names: list[str] | None = None
 ) -> list[CompareResult]:
     con = duckdb_con(sf_dir)
     out = []
@@ -166,14 +163,12 @@ def run_all(
         except Exception as e:  # noqa: BLE001 — harness reports, caller decides
             out.append(CompareResult(name, False, f"EXCEPTION: {type(e).__name__}: {e}"))
     con.close()
-    if clear_memos_after:
-        # evict the session-lifetime artifact memos (rank tables, graph
-        # edge lists, ANN indexes) built during the sweep: a multi-scale
-        # or repeated sweep in ONE session otherwise accumulates persisted
-        # copies without bound (OOM'd a 1 GiB-driver judge session in r7).
-        # Within-sweep reuse is unaffected — eviction happens after the
-        # last entry.
-        from dbtwiz_spark.ops.common import clear_session_memos
+    # evict the catalogs' artifacts (rank tables, graph edge lists, ANN
+    # indexes) built during the sweep: a multi-scale or repeated sweep in
+    # ONE session otherwise accumulates persisted copies without bound.
+    # Within-sweep reuse is unaffected — eviction happens after the last
+    # entry.
+    from dbtwiz_spark.ops.common import clear_session_memos
 
-        clear_session_memos()
+    clear_session_memos()
     return out

@@ -298,8 +298,9 @@ def test_round7_block2_invariants(spark):
     # — same _cc_propagate the entry runs, so the test can never verify
     # a different algorithm
     from dbtwiz_spark.ops import graphs as G
+    from dbtwiz_spark.ops.common import views
 
-    edges = G._ARTIFACTS[(spark, SF_DIR, "cc_edges")]
+    edges = views(spark, SF_DIR)._artifacts["cc_edges"]
     lbl = G._cc_propagate(edges, G._CC_ROUNDS + 1)
     extra = {
         (r.component, r.n_nodes)
@@ -1021,24 +1022,26 @@ def test_round8_source_similarity_memoizes_token_table(spark):
     """Round-8 ADVICE: ext-source-similarity-matrix used a bare .cache()
     on its (source, token) distinct table — every invocation (oracle
     sweeps, bench best-of-3) leaked a fresh persisted copy for the
-    session lifetime. Now routed through the session-keyed _pipe_artifact
-    memo: repeated invocations share ONE persisted table."""
-    from dbtwiz_spark.ops import CORPUS, ext_pipeline
+    session lifetime. Now a catalog artifact: repeated invocations share
+    ONE persisted table."""
+    from dbtwiz_spark.ops import CORPUS
+    from dbtwiz_spark.ops.common import clear_session_memos, views
     from tests.conftest import SF_DIR
 
-    ext_pipeline._ARTIFACTS.clear()
+    cat = views(spark, SF_DIR)
+    cat.clear_memos()
     fn = CORPUS["ext-source-similarity-matrix"].fn
     n1 = fn(spark, SF_DIR).count()
-    assert len(ext_pipeline._ARTIFACTS) == 1
+    assert list(cat._artifacts) == ["srcsim_st"]
+    st = cat._artifacts["srcsim_st"]
     n2 = fn(spark, SF_DIR).count()
     assert n1 == n2
-    assert len(ext_pipeline._ARTIFACTS) == 1, "second call must hit the memo"
-    (st,) = ext_pipeline._ARTIFACTS.values()
+    assert list(cat._artifacts) == ["srcsim_st"], "second call must hit the memo"
+    assert cat._artifacts["srcsim_st"] is st
     assert st.storageLevel.useMemory or st.storageLevel.useDisk
-    from dbtwiz_spark.ops.common import clear_session_memos
-
     clear_session_memos()
-    assert not ext_pipeline._ARTIFACTS
+    assert not cat._artifacts
+    assert not (st.storageLevel.useMemory or st.storageLevel.useDisk)
 
 
 def test_truncate_reliable_matches_local(spark, tmp_path, monkeypatch):
@@ -1079,12 +1082,14 @@ def test_round10_invariants(spark):
     from dbtwiz_spark.ops.registry import CORPUS
 
     # --- pagerank memo: a second invocation returns identical rows and
-    # hits the session x scale memo (same underlying artifact object)
+    # hits the catalog's memo (same underlying artifact object)
+    from dbtwiz_spark.ops.common import views
+
     pr1 = {tuple(r) for r in CORPUS["graph-pagerank"].fn(spark, SF_DIR).collect()}
-    memo_obj = G._ARTIFACTS[(spark, SF_DIR, "pr_ranks_final")]
+    memo_obj = views(spark, SF_DIR)._artifacts["pr_ranks_final"]
     pr2 = {tuple(r) for r in CORPUS["graph-pagerank"].fn(spark, SF_DIR).collect()}
     assert pr1 == pr2
-    assert G._ARTIFACTS[(spark, SF_DIR, "pr_ranks_final")] is memo_obj, (
+    assert views(spark, SF_DIR)._artifacts["pr_ranks_final"] is memo_obj, (
         "second call must hit the memo, not rebuild the iteration"
     )
     # total mass conservation within integer-floor loss: every node holds

@@ -673,346 +673,307 @@ def test_partition_filter_guard_follows_alias_chain(spark, tmp_path):
     assert not has_partition_filter(other, "partitiondate")
 
 
-def test_parallel_rank_memoizes_persisted_input(spark):
-    """Repeated parallel_rank calls on the same input plan must reuse ONE
-    persisted DataFrame (keyed on session + analyzed plan + keys), not
-    leak a fresh cached copy per invocation — corpus sweeps and bench
-    best-of-3 call win-percent / agg-gini-concentration dozens of times
-    per session."""
-    from dbtwiz_spark.ops.common import _RANK_CACHE, parallel_rank
+def _cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
 
-    df = spark.range(100).withColumn("k", F.col("id") % 7)
-    keys = [F.col("k"), F.col("id")]
-    before = len(_RANK_CACHE)
-    r1 = parallel_rank(df, keys)
-    assert r1.count() == 100
-    n_after_first = len(_RANK_CACHE)
-    # round-16: TWO memo slots per unique input — the boundary-pinning
-    # range-partitioned stage ("local") and the full ranked output
-    # ("out") so consumer executions are one cached scan
-    assert n_after_first == before + 2
-    r2 = parallel_rank(
-        spark.range(100).withColumn("k", F.col("id") % 7),
-        [F.col("k"), F.col("id")],
-    )
-    assert len(_RANK_CACHE) == n_after_first, "second call must hit the memo"
-    # ranks are a unique total order 1..n either way
-    got = sorted(row._rank for row in r2.collect())
-    assert got == list(range(1, 101))
+
+def test_parallel_rank_memoizes_persisted_input(spark):
+    """A parallel_rank output memoized with ``Catalog.artifact`` is built
+    once and then served as the SAME persisted DataFrame — corpus sweeps
+    and bench passes call win-percent / agg-gini-concentration dozens of
+    times per session, and a rebuild per call would persist a fresh copy
+    each time."""
+    from dbtwiz_spark.catalog import Catalog
+    from dbtwiz_spark.ops.common import parallel_rank
+
+    cat = Catalog(spark, SF_DIR)
+    builds = []
+
+    def build():
+        builds.append(1)
+        df = spark.range(100).withColumn("k", F.col("id") % 7)
+        return parallel_rank(df, [F.col("k"), F.col("id")])
+
+    r1 = cat.artifact("test-rank:k,id", build)
+    r2 = cat.artifact("test-rank:k,id", build)
+    assert r2 is r1 and len(builds) == 1, "second call must hit the memo"
+    assert _cached(r1)
+    # ranks are a unique total order 1..n
+    assert sorted(row._rank for row in r2.collect()) == list(range(1, 101))
+    assert cat.clear_memos() == 1
+    assert not _cached(r1)
 
 
 def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
-    """Plan canonicalization erases file-source paths, so two scale dirs
-    running the same query must NOT share a memo slot — a cross-scale
-    sweep would otherwise serve the wrong scale's cached ranks (caught
-    live: an sf0.1 run leaked 1462 rows into the sf0.01 oracle sweep)."""
-    from dbtwiz_spark.ops.common import _plan_sig, parallel_rank
+    """Two scale dirs running the same entry must NOT share a memo slot —
+    a cross-scale sweep would otherwise serve the wrong scale's cached
+    ranks (caught live: an sf0.1 run leaked 1462 rows into the sf0.01
+    oracle sweep). Each scale dir has its own catalog, and the same kind
+    misses across catalogs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    from dbtwiz_spark.catalog import Catalog
+    from dbtwiz_spark.ops.common import parallel_rank
+
+    cats = []
     for i, n in enumerate((7, 19)):
-        spark.range(n).write.mode("overwrite").parquet(str(tmp_path / f"d{i}"))
-    a = spark.read.parquet(str(tmp_path / "d0"))
-    b = spark.read.parquet(str(tmp_path / "d1"))
-    keys = [F.col("id")]
-    assert _plan_sig(a, keys, 8) != _plan_sig(b, keys, 8)
-    assert parallel_rank(a, keys).count() == 7
-    assert parallel_rank(b, keys).count() == 19
+        d = tmp_path / f"d{i}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({"c_custkey": list(range(n))}), str(d / "customer.parquet")
+        )
+        cats.append(Catalog(spark, str(d)))
+    keys = [F.col("c_custkey")]
+    got = [
+        c.artifact(
+            "test-rank:c_custkey",
+            lambda c=c: parallel_rank(c.table("customer"), keys),
+        ).count()
+        for c in cats
+    ]
+    assert got == [7, 19]
+    for c in cats:
+        assert c.clear_memos() == 1
 
 
 def test_plan_sig_changes_on_in_place_file_overwrite(spark, tmp_path):
-    """Round-12 hardening (deferred since r9): a backing file OVERWRITTEN
-    IN PLACE — same uri, new rows, the standard re-run-writer rewrite —
-    keeps the uri set identical, so a uri-only memo key would keep
-    serving the superseded artifact for the session lifetime. The key
-    folds in (size, mtime_ns) per file; end-to-end, parallel_rank must
-    serve the NEW rows after the rewrite, not the memoized old ranks."""
+    """A backing file OVERWRITTEN IN PLACE — same path, new rows, the
+    standard re-run-writer rewrite — keeps the path set identical, so a
+    path-only key would keep serving the superseded artifact. The
+    catalog's generation stamp folds in (size, mtime_ns) per table file:
+    the rewrite must flip it, and a catalog built on the new generation
+    must serve the NEW rows, not the old catalog's memoized ranks."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbtwiz_spark.ops.common import _plan_sig, parallel_rank
+    from dbtwiz_spark.catalog import Catalog
+    from dbtwiz_spark.ops.common import parallel_rank
 
-    path = str(tmp_path / "fixed-name.parquet")
-    pq.write_table(pa.table({"id": list(range(5))}), path)
-    keys = [F.col("id")]
-    df1 = spark.read.parquet(path)
-    base1, stats1 = _plan_sig(df1, keys, 8)
-    assert parallel_rank(df1, keys).count() == 5
+    path = str(tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"c_custkey": list(range(5))}), path)
+    keys = [F.col("c_custkey")]
+
+    def ranked(cat):
+        return cat.artifact(
+            "test-rank:c_custkey",
+            lambda: parallel_rank(cat.table("customer"), keys),
+        )
+
+    old = Catalog(spark, str(tmp_path))
+    assert ranked(old).count() == 5
+    assert old.is_current()
     # rewrite IN PLACE: same filename, different contents
-    pq.write_table(pa.table({"id": list(range(9))}), path)
-    df2 = spark.read.parquet(path)
-    base2, stats2 = _plan_sig(df2, keys, 8)
-    # same base (identical uri set and canonical plan) — this is exactly
-    # the collision a uri-only key can't see; the stats must separate it
-    assert base1 == base2
-    assert stats1 != stats2
-    got = parallel_rank(df2, keys)
+    pq.write_table(pa.table({"c_custkey": list(range(9))}), path)
+    assert not old.is_current(), "in-place rewrite must flip the stamp"
+    old.release()
+    assert old.clear_memos() == 0
+
+    new = Catalog(spark, str(tmp_path))
+    assert new._generation != old._generation
+    got = ranked(new)
     assert got.count() == 9
     assert sorted(r._rank for r in got.collect()) == list(range(1, 10))
+    new.release()
 
 
 def test_plan_sig_stats_survive_percent_encoded_paths(spark, tmp_path):
-    """Spark's inputFiles() percent-encodes spaces and specials in file
-    URIs; un-decoded, os.stat fails and every such file degrades to the
-    (None, None) unstattable mode — two GENERATIONS of a
-    space-in-the-name parquet then compare equal, silently reopening
-    the in-place-overwrite hole the r12 hardening closed (round-12
-    ADVICE). The stats must be real for such paths, and an in-place
-    rewrite must flip them."""
+    """Spark percent-encodes spaces and specials in file URIs; a stamp
+    taken from those URIs fails to stat and degrades every such file to
+    "missing", so two GENERATIONS of a table in a space-named scale dir
+    would compare equal and reopen the in-place-overwrite hole. The
+    catalog stamps the plain paths: the stats must be real for such a
+    dir, and an in-place rewrite must flip them."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbtwiz_spark.ops.common import _plan_sig
+    from dbtwiz_spark.catalog import TABLES, Catalog
 
     d = tmp_path / "scale dir 0.01"
     d.mkdir()
-    path = str(d / "part one.parquet")
-    pq.write_table(pa.table({"id": list(range(5))}), path)
-    keys = [F.col("id")]
-    df1 = spark.read.parquet(path)
-    assert any("%20" in u for u in df1.inputFiles()), (
+    path = str(d / "customer.parquet")
+    pq.write_table(pa.table({"c_custkey": list(range(5))}), path)
+    cat = Catalog(spark, str(d))
+    assert any("%20" in u for u in cat.table("customer").inputFiles()), (
         "fixture no longer exercises percent-encoding"
     )
-    base1, stats1 = _plan_sig(df1, keys, 8)
-    assert all(s != (None, None) for s in stats1), (
-        f"percent-encoded uri stat-failed: {stats1}"
-    )
-    pq.write_table(pa.table({"id": list(range(9))}), path)
-    base2, stats2 = _plan_sig(spark.read.parquet(path), keys, 8)
-    assert base1 == base2 and stats1 != stats2
+    stamp = cat._generation[TABLES.index("customer")]
+    assert stamp is not None, "space-named path failed to stat"
+    assert cat.is_current()
+    pq.write_table(pa.table({"c_custkey": list(range(9))}), path)
+    assert not cat.is_current()
+    assert Catalog(spark, str(d))._generation[TABLES.index("customer")] != stamp
 
 
-def test_parallel_rank_memo_separates_persisted_inputs(spark, tmp_path):
-    """A parallel_rank whose INPUT contains a persisted subtree: the
-    InMemoryRelation swallows the file scan and canonicalizes
-    scale-independently, so two scale dirs' chained-rank plans collide
-    on the canonical JSON alone (caught live: an sf0.01 RFM sweep
-    served sf0.001's 150-row rank table). The signature must recover
-    the file provenance from the cached build subtree — separating
-    scales while staying STABLE for the same plan (a primed Catalog
-    puts an InMemoryRelation under every bench plan, so refusing
-    memoization wholesale re-leaked a persisted copy per call and cost
-    5x on win-rolling-corr)."""
-    from dbtwiz_spark.ops.common import _plan_sig
+def test_catalog_replaced_after_in_place_table_rewrite(spark, tmp_path):
+    """A table file rewritten IN PLACE (same path, new rows — the standard
+    re-run-writer rewrite) must never be served from anything cached on
+    the old file: views() re-stats the tables, releases the old catalog's
+    primed tables and artifacts, and returns a new catalog whose
+    artifacts and primed tables are built from the new rows. Spark's
+    CacheManager matches cached data by plan, so a still-cached old
+    generation would be served to a brand-new read of the same path; the
+    scale dir's name has a space, which Spark percent-encodes in file
+    URIs, so the stamp must come from the plain paths."""
+    import shutil
 
-    for i, n in enumerate((7, 19)):
-        spark.range(n).write.mode("overwrite").parquet(str(tmp_path / f"d{i}"))
-    keys = [F.col("id")]
-    a = spark.read.parquet(str(tmp_path / "d0")).persist()
-    b = spark.read.parquet(str(tmp_path / "d1")).persist()
-    try:
-        a.count(), b.count()  # materialize the InMemoryRelations
-        da = a.select((F.col("id") + 1).alias("id"))
-        db = b.select((F.col("id") + 1).alias("id"))
-        # without the provenance recovery these two sigs are EQUAL (no
-        # files, canonical InMemoryRelation) — they must separate
-        assert _plan_sig(da, keys, 8) != _plan_sig(db, keys, 8)
-        # and the SAME plan must hit the same slot (memo reuse under a
-        # primed catalog / persisted artifacts)
-        assert _plan_sig(da, keys, 8) == _plan_sig(da, keys, 8)
-    finally:
-        a.unpersist(), b.unpersist()
+    import pyarrow.parquet as pq
 
+    from dbtwiz_spark.ops.common import _truncate, views
+    from dbtwiz_spark.ops.windows import win_percent
 
-def test_plan_sig_refuses_memo_without_file_provenance(spark):
-    """A cached plan with NO recoverable file provenance (persisted
-    local data — nothing in the cached build subtree names a source)
-    cannot be distinguished from another same-schema cached input, so
-    it must fall back to a never-matching token: correctness over
-    reuse."""
-    from dbtwiz_spark.ops.common import _plan_sig
+    d = tmp_path / "scale dir 0.01"
+    shutil.copytree("/root/testdata/sf0.01", d)
+    sf = str(d)
 
-    a = spark.createDataFrame([(i,) for i in range(7)], "id long").persist()
-    try:
-        a.count()
-        da = a.select((F.col("id") + 1).alias("id"))
-        if "InMemoryRelation" not in (
-            da._jdf.queryExecution().optimizedPlan().toString()
-        ):  # pragma: no cover - plan shape drifted; guard is moot then
-            return
-        assert _plan_sig(da, [F.col("id")], 8) != _plan_sig(
-            da, [F.col("id")], 8
+    def customer_keys(cat):
+        return cat.artifact(
+            "test-graph:customer_keys",
+            lambda: _truncate(cat.table("customer").select("c_custkey")),
         )
-    finally:
-        a.unpersist()
+
+    old = views(spark, sf)
+    old.prime(("customer",))
+    primed = old.table("customer")
+    n_old = primed.count()
+    assert customer_keys(old).count() == n_old
+    assert win_percent(spark, sf).count() == n_old
+    assert _cached(primed)
+
+    path = str(d / "customer.parquet")
+    table = pq.read_table(path)
+    pq.write_table(table.slice(n_old // 3, n_old // 2), path)
+    n_new = n_old // 2
+
+    new = views(spark, sf)
+    assert new is not old, "rewritten table must replace the catalog"
+    assert not _cached(primed), "old primed table must be unpersisted"
+    assert old.clear_memos() == 0, "old artifacts must be released"
+    assert views(spark, sf) is new, "an unchanged generation keeps its catalog"
+
+    ranked = win_percent(spark, sf)
+    assert ranked.count() == n_new
+    assert customer_keys(new).count() == n_new
+    new.prime(("customer",))
+    assert new.table("customer").count() == n_new
+    assert {r.c_custkey for r in new.table("customer").collect()} == {
+        r.c_custkey for r in customer_keys(new).collect()
+    }
+    new.release()
 
 
-def test_rank_local_stage_released_after_output_artifact(spark):
-    """Round-17 storage fix (r16 verdict §5 watch): the rank/prefix
-    device used to hold TWO corpus-sized persisted artifacts per input —
-    the range-partitioned local stage and the full output — doubling
-    every consumer's steady-state executor storage. The local stage is
-    only needed to pin one boundary sample while the output is built;
-    after the output artifact is materialized, local's storage must be
-    released while the output stays cached (and ranks stay correct)."""
-    from dbtwiz_spark.ops.common import (
-        _RANK_CACHE,
-        clear_session_memos,
-        parallel_rank,
-    )
+def test_rank_local_stage_released_after_output_artifact(spark, monkeypatch):
+    """The rank/prefix device used to hold TWO corpus-sized persisted
+    tables per input — the range-partitioned local stage and the full
+    output — doubling every consumer's steady-state executor storage.
+    The local stage is only needed to pin one boundary sample while the
+    output is built; after the output is materialized, local's storage
+    must be released while the output stays cached (and ranks stay
+    correct)."""
+    from dbtwiz_spark.ops import common
 
-    clear_session_memos()
+    stages = []
+    release = common._materialize_and_release_local
+
+    def spy(out, local):
+        stages.append((out, local))
+        release(out, local)
+
+    monkeypatch.setattr(common, "_materialize_and_release_local", spy)
     df = spark.range(100).selectExpr("id", "id % 7 AS k")
-    ranked = parallel_rank(df, [F.col("k"), F.col("id")])
+    ranked = common.parallel_rank(df, [F.col("k"), F.col("id")])
     rows = ranked.select("_rank").collect()
     assert sorted(r["_rank"] for r in rows) == list(range(1, 101))
-    local_dfs = [v[1] for k, v in _RANK_CACHE.items() if k[1] == "local"]
-    out_dfs = [v[1] for k, v in _RANK_CACHE.items() if k[1] == "out"]
-    assert local_dfs and out_dfs
-    for d in local_dfs:
-        assert not (d.storageLevel.useMemory or d.storageLevel.useDisk)
-    for d in out_dfs:
-        assert d.storageLevel.useMemory or d.storageLevel.useDisk
-    clear_session_memos()
-
-
-def test_plan_sig_mixed_file_and_opaque_leaf_falls_through(spark, tmp_path):
-    """Round-16 ADVICE: the analyzed-leaves fast path returned early when
-    ANY leaf yielded file URIs, silently dropping leaves whose provenance
-    recovery failed for a reason other than being self-describing
-    (LogicalRDD from localCheckpoint, InMemoryRelation-rooted inputs) —
-    a signature missing that leaf loses the node-name-sequence
-    disambiguation and two such plans can collide (the round-9 failure
-    mode). A plan mixing a primed file leaf with a LogicalRDD leaf must
-    fall through to the optimized-plan string recovery, whose files
-    component carries the node-name sequence."""
-    from dbtwiz_spark.ops.common import _plan_sig
-
-    p = str(tmp_path / "t.parquet")
-    spark.range(10).selectExpr("id", "id % 3 AS k").write.parquet(p)
-    base = spark.read.parquet(p).persist()
-    try:
-        base.count()  # primed: cache substitution empties inputFiles()
-        ck = spark.range(5).selectExpr("id AS k2").localCheckpoint()
-        df = base.join(ck, base.id == ck.k2)
-        if df.inputFiles():  # pragma: no cover - priming shape drifted
-            return
-        (sig_base, _stats) = _plan_sig(df, ["id"])
-        files = sig_base[2]
-        # fallback shape: (uris, node-name sequence), not a bare uri tuple
-        assert isinstance(files, tuple) and len(files) == 2
-        uris, nodes = files
-        assert any(u.startswith("file:") for u in uris)
-        assert any("LogicalRDD" in n for n in nodes)
-    finally:
-        base.unpersist()
+    ((out, local),) = stages
+    assert out is ranked
+    assert not _cached(local)
+    assert _cached(out)
+    out.unpersist()
 
 
 def test_clear_session_memos_evicts_every_registered_store(spark):
-    """The eviction hook (round-8 ADVICE / VERDICT r7 item 5): one call
-    unpersists and drops everything in every enrolled memo store — rank
-    tables, graph edge artifacts, ANN indexes, pipeline derived tables —
-    so a long-lived session sweeping many scales is bounded by one
-    sweep's working set, not session lifetime."""
-    from dbtwiz_spark.catalog import Catalog
-    from dbtwiz_spark.ops import ext_llm, ext_pipeline, graphs
-    from dbtwiz_spark.ops.common import (
-        _RANK_CACHE,
-        clear_session_memos,
-        parallel_rank,
-    )
+    """The eviction hook: one call unpersists and drops every artifact of
+    every live catalog — rank tables, graph edge artifacts, ANN indexes,
+    pipeline derived tables — so a long-lived session sweeping many
+    scales is bounded by one sweep's working set, not session lifetime."""
+    from dbtwiz_spark.ops.common import clear_session_memos, parallel_rank, views
 
+    small = views(spark, SF_DIR)
+    other = views(spark, "/root/testdata/sf0.01")
     df = spark.range(50).withColumn("k", F.col("id") % 3)
-    ranked = parallel_rank(df, [F.col("k"), F.col("id")])
+    ranked = small.artifact(
+        "test-rank:k,id", lambda: parallel_rank(df, [F.col("k"), F.col("id")])
+    )
     assert ranked.count() == 50
-    built = graphs._artifact(
-        spark, "memo-test", "edges", lambda: spark.range(5).withColumn("d", F.lit(1))
-    )
-    assert built.count() == 5
-    piped = ext_pipeline._pipe_artifact(
-        spark, "memo-test", "st", lambda: spark.range(7)
-    )
-    assert piped.count() == 7
-    ext_llm._ARTIFACTS[(spark, "memo-test", "sig")] = spark.range(3).persist()
-    assert len(_RANK_CACHE) >= 1
-    assert built.storageLevel.useMemory or built.storageLevel.useDisk
 
-    dropped = clear_session_memos()
-    assert dropped >= 4
-    assert not _RANK_CACHE
-    assert not graphs._ARTIFACTS
-    assert not ext_pipeline._ARTIFACTS
-    assert not ext_llm._ARTIFACTS
-    assert not (built.storageLevel.useMemory or built.storageLevel.useDisk)
+    def edges():
+        return spark.range(5).withColumn("d", F.lit(1)).persist()
+
+    built = other.artifact("test-edges", edges)
+    assert built.count() == 5
+    assert _cached(built) and _cached(ranked)
+
+    assert clear_session_memos() >= 2
+    assert not small._artifacts and not other._artifacts
+    assert not _cached(built) and not _cached(ranked)
     # next call transparently rebuilds
-    rebuilt = graphs._artifact(
-        spark, "memo-test", "edges", lambda: spark.range(5).withColumn("d", F.lit(1))
-    )
-    assert rebuilt.count() == 5
-    # Catalog surface returns the drop count too
-    assert Catalog.clear_memos() >= 1
-    assert not graphs._ARTIFACTS
+    assert other.artifact("test-edges", edges).count() == 5
+    # the catalog surface returns the drop count too
+    assert other.clear_memos() == 1
+    assert not other._artifacts
 
 
 def test_clear_session_memos_unpersists_every_tuple_element(spark):
-    """Round-16 ADVICE: ivf_index stores a (assignments, centroids,
-    cents_row) 3-tuple; eviction that unpersists only the LAST element
-    leaks the corpus-sized assignments and the centroid table per sweep
-    — the exact cross-sweep accumulation the hook exists to prevent.
-    Every tuple element with an unpersist method must be freed."""
-    from dbtwiz_spark.ops import ext_llm
-    from dbtwiz_spark.ops.common import clear_session_memos
+    """ivf_index's artifact is an (assignments, centroids, cents_row)
+    3-tuple; eviction that unpersists only the LAST element leaks the
+    corpus-sized assignments and the centroid table per sweep — the
+    exact cross-sweep accumulation the hook exists to prevent. Every
+    tuple element with an unpersist method must be freed."""
+    from dbtwiz_spark.ops.common import clear_session_memos, views
 
     a = spark.range(11).persist()
     b = spark.range(12).persist()
     c = spark.range(13).persist()
     for df in (a, b, c):
         df.count()  # materialize so storageLevel reflects a real cache
-    ext_llm._ARTIFACTS[(spark, "memo-tuple-test", "ivf")] = (a, b, c)
+    cat = views(spark, SF_DIR)
+    cat.artifact("test-ivf", lambda: (a, b, c))
     clear_session_memos()
     for df in (a, b, c):
-        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    assert not ext_llm._ARTIFACTS
-
-
-def test_register_memo_store_enrolls_by_identity(spark):
-    """Two EMPTY dicts compare ==; enrollment must be identity-based or
-    the second module's store is silently skipped and never evicted."""
-    from dbtwiz_spark.ops.common import (
-        _MEMO_STORES,
-        clear_session_memos,
-        register_memo_store,
-    )
-
-    a: dict = {}
-    b: dict = {}
-    register_memo_store(a)
-    register_memo_store(b)
-    register_memo_store(a)  # idempotent
-    try:
-        assert sum(1 for s in _MEMO_STORES if s is a) == 1
-        assert sum(1 for s in _MEMO_STORES if s is b) == 1
-        a["x"] = spark.range(2).persist()
-        b["y"] = spark.range(2).persist()
-        assert clear_session_memos() >= 2
-        assert not a and not b
-    finally:
-        _MEMO_STORES.remove(a)
-        _MEMO_STORES.remove(b)
+        assert not _cached(df)
+    assert not cat._artifacts
 
 
 def test_rank_output_correct_after_memo_eviction(spark):
-    """Review fix (round 8): a lazy parallel_rank output retained across
-    clear_session_memos() must stay CORRECT when executed afterwards.
-    The offset join is only valid if the counts branch and the output
-    branch see identical physical range boundaries — the persist
-    guaranteed that; post-eviction, ReuseExchange dedupes the two
+    """A lazy DataFrame built on a parallel_rank artifact and retained
+    across clear_session_memos() must stay CORRECT when executed
+    afterwards. The offset join is only valid if the counts branch and
+    the output branch see identical physical range boundaries — the
+    persist guaranteed that; post-eviction, ReuseExchange dedupes the two
     identical rangepartitioning subtrees into one shuffle, so the
     boundaries still agree. Pinned as the output invariant (dense,
     unique 1..n) rather than the plan detail."""
-    from dbtwiz_spark.ops.common import clear_session_memos, parallel_rank
+    from dbtwiz_spark.ops.common import clear_session_memos, parallel_rank, views
 
+    cat = views(spark, SF_DIR)
     for trial in range(3):
         df = spark.range(50_000).withColumn(
             "k", (F.col("id") * 2654435761 + trial) % 999983
         )
-        ranked = parallel_rank(df, [F.col("k"), F.col("id")], n_parts=8)
-        clear_session_memos()  # evict BEFORE the first execution
+        ranked = cat.artifact(
+            f"test-rank-evict{trial}:k,id",
+            lambda df=df: parallel_rank(df, [F.col("k"), F.col("id")]),
+        )
         got = ranked.agg(
             F.count("*").alias("n"),
             F.min("_rank").alias("lo"),
             F.max("_rank").alias("hi"),
             F.countDistinct("_rank").alias("d"),
             F.max("_n").alias("ntot"),
-        ).first()
+        )
+        clear_session_memos()  # evict BEFORE the consumer executes
+        assert not _cached(ranked)
+        got = got.first()
         assert (got.n, got.lo, got.hi, got.d, got.ntot) == (
             50_000, 1, 50_000, 50_000, 50_000,
         ), got

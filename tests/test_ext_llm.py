@@ -93,7 +93,7 @@ def test_cosine_topk_fast_path_matches_exact(spark):
 def test_ivf_recall_vs_exact_topk(spark):
     """IVF (16 cells, nprobe=4) must recover most of the exact top-10
     neighbors; measured deterministically (fixed seeds, no RNG)."""
-    from dbtwiz_spark.ops.ext_llm import cosine_topk, ivf_topk
+    from dbtwiz_spark.ops.ext_llm import cosine_topk, ivf_index, ivf_topk
     from dbtwiz_spark.ops.common import views
 
     emb = views(spark, SF_DIR).table("embeddings")
@@ -105,7 +105,7 @@ def test_ivf_recall_vs_exact_topk(spark):
     }
     ivf = {
         (r.q_vec_id, r.c_vec_id)
-        for r in ivf_topk(emb, queries, k=10, n_cells=16, nprobe=4).collect()
+        for r in ivf_topk(ivf_index(emb, 16), queries, k=10, nprobe=4).collect()
     }
     assert exact
     recall = len(exact & ivf) / len(exact)
@@ -120,6 +120,7 @@ def test_ivf_materialized_index_matches_in_memory(spark, tmp_path):
 
     from dbtwiz_spark.materialize import Warehouse
     from dbtwiz_spark.ops.ext_llm import (
+        ivf_index,
         ivf_index_write,
         ivf_topk,
         ivf_topk_from_table,
@@ -143,7 +144,7 @@ def test_ivf_materialized_index_matches_in_memory(spark, tmp_path):
         )
     )
     assert "dynamicpruningexpression(cast(cell" in plan
-    want = ivf_topk(emb, queries, k=5, nprobe=3, n_cells=8)
+    want = ivf_topk(ivf_index(emb, 8), queries, k=5, nprobe=3)
     g = sorted((r.q_vec_id, r.rnk, r.c_vec_id) for r in got.collect())
     w = sorted((r.q_vec_id, r.rnk, r.c_vec_id) for r in want.collect())
     assert g == w and len(g) > 0

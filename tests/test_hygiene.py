@@ -81,3 +81,38 @@ def test_shipped_surface_names_no_nonpublic_system():
         "win-gaps-islands failure mode) — restate the reason inline and "
         "drop the pointer:\n" + "\n".join(hits)
     )
+
+
+_MEMO_STORE_NAMES = {"_ARTIFACTS", "_RANK_CACHE", "_BUCKETED", "_MEMO_STORES"}
+
+
+def test_ops_modules_define_no_memo_store():
+    """Derived artifacts live in one memo, ``Catalog.artifact``, which is
+    keyed on the catalog's input generation and released with it. A
+    module-level store under ``dbtwiz_spark/ops`` would be keyed on
+    something else and keep serving tables built from rewritten files."""
+    import ast
+
+    hits: list[str] = []
+    for f in sorted((REPO / "dbtwiz_spark" / "ops").glob("*.py")):
+        tree = ast.parse(f.read_text())
+        for node in tree.body:
+            targets = []
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id in _MEMO_STORE_NAMES:
+                    hits.append(f"{f.name}:{node.lineno}: {t.id}")
+        for node in ast.walk(tree):
+            name = None
+            if isinstance(node, ast.FunctionDef):
+                name = node.name
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            if name == "register_memo_store":
+                hits.append(f"{f.name}:{node.lineno}: register_memo_store")
+    assert not hits, "module-level memo store under ops:\n" + "\n".join(hits)

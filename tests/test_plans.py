@@ -864,9 +864,10 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
 
     bfs = CORPUS["graph-bfs-hops"].fn(spark, SF_DIR)
     mp = CORPUS["graph-minplus-distance"].fn(spark, SF_DIR)
-    G._pr_edges(spark, SF_DIR, views(spark, SF_DIR))
+    cat = views(spark, SF_DIR)
+    G._pr_edges(cat)
     for kind in ("bfs_edges", "minplus_edges", "pr_edges"):
-        eplan = _formatted(G._ARTIFACTS[(spark, SF_DIR, kind)])
+        eplan = _formatted(cat._artifacts[kind])
         assert "Join" not in eplan, f"{kind} re-embeds the pair join"
         assert "Union" in eplan, f"{kind} lost the mirror union"
 
@@ -874,10 +875,10 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
         plan = _formatted(df)
         assert "Join" not in plan, f"{name} plan re-embeds the hop joins"
 
-    dist_obj = G._ARTIFACTS[(spark, SF_DIR, "minplus_dist")]
+    dist_obj = cat._artifacts["minplus_dist"]
     rows1 = {tuple(r) for r in mp.collect()}
     mp2 = CORPUS["graph-minplus-distance"].fn(spark, SF_DIR)
-    assert G._ARTIFACTS[(spark, SF_DIR, "minplus_dist")] is dist_obj, (
+    assert cat._artifacts["minplus_dist"] is dist_obj, (
         "second call must hit the converged-distance memo"
     )
     assert {tuple(r) for r in mp2.collect()} == rows1
