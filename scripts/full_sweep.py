@@ -10,7 +10,8 @@ it at sf0.1 after engine changes.
 Prints one line per entry (total, Spark and oracle seconds, outcome),
 the slowest entries, and last a one-line JSON summary: sf, entry and
 green counts, wall time, and a result hash over the per-entry outcome
-tuples, which changes if any entry's outcome or row count differs.
+tuples, which changes if any entry's outcome or row count differs, and
+the number of generated classes Janino compiled during the sweep.
 Exits non-zero on any failure or if the sweep did not cover the whole
 registry.
 
@@ -30,7 +31,7 @@ sys.path.insert(0, str(REPO))
 
 from dbtwiz_spark.ops import CORPUS  # noqa: E402
 from dbtwiz_spark.ops.common import clear_session_memos  # noqa: E402
-from dbtwiz_spark.session import get_spark  # noqa: E402
+from dbtwiz_spark.session import codegen_compile_count, get_spark  # noqa: E402
 from dbtwiz_spark.testing import CompareResult, compare_entry, duckdb_con  # noqa: E402
 
 
@@ -42,6 +43,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark()
     con = duckdb_con(sf_dir)
+    compiles_start = codegen_compile_count(spark)
     t_start = time.time()
     results, rows = [], []
     for i, name in enumerate(CORPUS):
@@ -62,6 +64,7 @@ def main() -> None:
             flush=True,
         )
     wall_s = time.time() - t_start
+    compiles = codegen_compile_count(spark) - compiles_start
     con.close()
     # bound session storage like testing.run_all does
     clear_session_memos()
@@ -83,6 +86,7 @@ def main() -> None:
         "n_green": len(results) - len(failures),
         "wall_s": round(wall_s, 1),
         "result_hash": h.hexdigest(),
+        "codegen_compiles": compiles,
         "failures": failures,
     }
     print(json.dumps(summary))

@@ -1080,6 +1080,73 @@ def test_bench_probe_pins_and_restores_confs(spark):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
+def test_get_spark_keeps_a_reused_sessions_shuffle_partitions(spark):
+    """Fetching the shared session without a count must not reset the one
+    its creator chose (a CLI call used to switch the whole suite from
+    conftest's 4 to the 32 default); an explicit count still applies."""
+    from dbtwiz_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        assert get_spark().conf.get(key) == "7"
+        assert get_spark(shuffle_partitions=5).conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_warm_replay_compiles_no_generated_classes(spark):
+    """The session's codegen class cache holds the bench's read working
+    set: replaying the same 21 reads (bench.py's 15 read builders and the
+    six non-iterative extras) a second time serves every stage's generated
+    classes from the cache. At Spark's default of 100 entries the cache
+    thrashes and the second replay recompiles ~300 classes."""
+    import random
+    from pathlib import Path
+
+    import bench
+
+    from dbtwiz_spark.ops.common import views
+    from dbtwiz_spark.session import CODEGEN_CACHE_ENTRIES, codegen_compile_count, get_spark
+
+    assert get_spark().conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    reads = [n for n in bench.QUERIES if n != "q_insert_overwrite"] + [
+        "q_sliding_distinct",
+        "q_rolling_corr",
+        "q_ks_test",
+        "q_survival_km",
+        "q_holt_winters",
+        "q_bootstrap_ci",
+    ]
+    builders = {**bench.QUERIES, **bench.EXTRA_QUERIES}
+    cat = views(spark, str(Path(SF_DIR).with_name("sf0.01")))
+
+    def replay() -> int:
+        before = codegen_compile_count(spark)
+        for name in reads:
+            df, action = builders[name](cat)
+            if action == "collect":
+                df.collect()
+            else:
+                df.write.format("noop").mode("overwrite").save()
+        return codegen_compile_count(spark) - before
+
+    # the counter sees a compile: an int literal is inlined into the
+    # generated code, so an unseen one needs a new class
+    before = codegen_compile_count(spark)
+    spark.range(3).select(F.col("id") * random.randrange(1 << 30)).collect()
+    assert codegen_compile_count(spark) > before
+    try:
+        first = replay()
+        second = replay()
+    finally:
+        cat.clear_memos()
+    assert second <= 10, f"second replay recompiled {second} classes (first: {first})"
+
+
 def _hand_bmp(width, height, topdown_rgb_rows, bpp=24, topdown=False):
     """Reference BMP builder, independent of multimodal.encode_bmp: BGR
     channel order, 4-byte row padding, bottom-up unless topdown."""
