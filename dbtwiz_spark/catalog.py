@@ -98,7 +98,7 @@ class Catalog:
         for name in names:
             self.table(name).createOrReplaceTempView(name)
 
-    def prime(self, names: tuple[str, ...] = TABLES, cpus: int | None = None) -> None:
+    def prime(self, names: tuple[str, ...] = TABLES) -> None:
         """Pin hot tables into Spark's in-memory columnar cache.
 
         The engine's deployment model is one long-lived session (BASELINE.md);
@@ -117,10 +117,7 @@ class Catalog:
         if self._primed:
             return  # idempotent: re-priming would re-persist identical plans
         self._primed = True
-        if cpus is None:
-            cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
-                os.cpu_count() or 8
-            )
+        cpus = self.spark.sparkContext.defaultParallelism
         for name in names:
             path = os.path.join(self.sf_dir, f"{name}.parquet")
             try:

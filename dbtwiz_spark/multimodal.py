@@ -23,16 +23,16 @@ types normalized to the same RGB(A) contract) plus GIF first
 frames (`_gif_lzw` table reconstruction; interlace and transparency
 honored) and baseline + progressive JPEG (`_decode_jpeg`: Huffman,
 spectral-selection/successive-approximation scans, matrix-multiply
-IDCT + JFIF color math — a reference decoder; an opportunistic PIL
-fast path takes over where Pillow is installed, see `_pil`).
+IDCT + JFIF color math — a reference decoder). These pure decoders
+are the only decoders, so decoded pixels never depend on which imaging
+libraries an executor happens to have installed.
 `decode_image` normalizes row order/channel order/padding so
 callers never see container quirks; `resize_images` does a vectorized
 nearest-neighbor resample and re-encodes (BMP, or alpha-preserving PNG
 via `encode_png`). MP4 containers DEMUX for real too (`parse_mp4`:
 box-tree walk, track geometry, stts/stsz sample tables — no codec
 involved). Only the compressed SAMPLE decodes (H.264/mp3) raise
-`NotImplementedError` — on a real cluster
-those branches swap in PIL/ffmpeg inside the same batch loop. The
+`NotImplementedError`. The
 Spark plumbing — schemas, batch iteration, partition-preserving UDF
 shape — is real and tested for every modality.
 """
@@ -116,13 +116,7 @@ FEATURE_SCHEMA = StructType(
 #: (134 M pixels, ~512 MB of RGBA) is far above any real crawl image;
 #: larger claims raise the codec-guard NotImplementedError in BOTH
 #: decode modes, so header-only and full decode keep agreeing on what
-#: is decodable. The PIL fast path enforces the SAME budget from PIL's
-#: lazy header parse (round 14), so no path ever materializes an
-#: over-budget raster; within budget, PIL-present clusters decode a
-#: WIDER format set than the pure decoders (e.g. CMYK/arithmetic JPEG,
-#: sub-8-bit PNG) — for those variants header-only geometry (which
-#: always stays pure) reports not-decodable while the full decode
-#: succeeds, a documented PIL-only coverage extension.
+#: is decodable.
 _MAX_PIXELS = 1 << 27
 
 
@@ -149,218 +143,19 @@ def _require_binary_payload(df: DataFrame, op: str) -> None:
         )
 
 
-#: tri-state PIL probe: False = not probed yet, None = absent/disabled
-_PIL_IMAGE: object = False
-
-#: 16-bit-PNG parity verdict for the active PIL module: None = not
-#: probed yet, True = verified against the pure decoder, False =
-#: mismatch/probe error → deep payloads are gated to the pure path
-_PIL_DEEP_OK: bool | None = None
-
-
-def _pil():
-    """Opportunistic PIL import, probed once per process (round 13 —
-    the in-code production note made real): executors that ship Pillow
-    get libjpeg/libpng-speed decodes through the SAME decode_image
-    contract; this container has no PIL, so the pure decoders are what
-    the tests exercise. SPARK_GRAFT_NO_PIL=1 forces the pure path even
-    where PIL exists (the parity test uses it to compare both)."""
-    global _PIL_IMAGE
-    if _PIL_IMAGE is False:
-        import os
-
-        if os.environ.get("SPARK_GRAFT_NO_PIL"):
-            _PIL_IMAGE = None
-        else:
-            try:
-                from PIL import Image as _img
-
-                _PIL_IMAGE = _img
-            except Exception:
-                _PIL_IMAGE = None
-    return _PIL_IMAGE
-
-
-def _deep_probe_payloads() -> list[bytes]:
-    """Tiny 16-bit PNGs (filter-0 rows) covering exactly the
-    ``_decode_pil`` branches that only the fake-module harness pins
-    where Pillow is absent (r14/r15 standing item): I/I;16 high-byte
-    strip with a source-precision tRNS key, the keyless 16-bit
-    grayscale form, and a 16-bit RGB raster whose tRNS key must compare
-    by HIGH bytes. Samples deliberately share high bytes with the key
-    (0x0102 vs 0x0103) so a low-byte, clipped-convert, or
-    full-precision key comparison flips a pixel's alpha or gray level
-    and fails parity."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    def png(color_type: int, arr: "np.ndarray", trns=None) -> bytes:
-        be = np.ascontiguousarray(arr.astype(">u2"))
-        h, w = be.shape[0], be.shape[1]
-        raw = b"".join(b"\x00" + be[y].tobytes() for y in range(h))
-        out = b"\x89PNG\r\n\x1a\n" + chunk(
-            b"IHDR", struct.pack(">IIBBBBB", w, h, 16, color_type, 0, 0, 0)
-        )
-        if trns is not None:
-            out += chunk(
-                b"tRNS", struct.pack(">" + "H" * len(trns), *trns)
-            )
-        return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-    gray = np.array(
-        [[0x0102, 0x0103], [0x0203, 0x7FFF], [0x0000, 0xFFFF]], np.uint16
-    )
-    # RGB pixels either ARE the key or differ in at least one HIGH
-    # byte: _decode_pil's key compare is high-byte (its documented
-    # over-match precision loss vs the pure decoder's full-precision
-    # compare), so a shares-high-bytes-but-not-exact pixel would fail
-    # parity even under a CORRECT Pillow — the probe must not test the
-    # known loss, only the strip/key-byte-order logic
-    rgb = np.array(
-        [
-            [[0x0102, 0x0304, 0x0506], [0x0102, 0x0404, 0x0507]],
-            [[0x0203, 0x0405, 0x0607], [0xFFFF, 0x0000, 0x8001]],
-        ],
-        np.uint16,
-    )
-    return [
-        png(0, gray, trns=(0x0102,)),  # I/I;16 + source-precision key
-        png(0, gray),  # keyless 16-bit grayscale (mode-I strip)
-        png(2, rgb, trns=(0x0102, 0x0304, 0x0506)),  # RGB high-byte key
-    ]
-
-
-def _pil_deep_verified(image_mod) -> bool:
-    """Once-per-process parity probe self-gating the 16-bit PIL fast
-    path (r15 VERDICT standing item: those branches were validated only
-    against a fake-module harness because this container ships no
-    Pillow). Before the FIRST deep (bit-depth-16) PNG is handed to
-    ``_decode_pil``, decode the synthetic 16-bit probes with both the
-    installed PIL and ``_decode_png`` and require bit-identical output;
-    any mismatch or probe error routes every deep payload to the pure
-    decoder for the life of the process. A verified-wrong Pillow build
-    therefore degrades to pure-decoder speed, never to wrong pixels —
-    and a real-Pillow run of test_pil_parity_with_pure_decoders remains
-    the definitive validation when an equipped environment exists."""
-    global _PIL_DEEP_OK
-    if _PIL_DEEP_OK is None:
-        try:
-            _PIL_DEEP_OK = all(
-                _decode_pil(image_mod, p) == _decode_png(p, True)
-                for p in _deep_probe_payloads()
-            )
-        except Exception:
-            _PIL_DEEP_OK = False
-    return _PIL_DEEP_OK
-
-
-def _decode_pil(image_mod, payload: bytes) -> dict:
-    """PIL-backed decode normalized to decode_image's exact contract:
-    top-down row-major RGB bytes, RGBA when the source carries
-    transparency (an alpha band, a palette transparency index, or a
-    PNG tRNS color key — PIL's convert() does not apply the key form
-    for gray/RGB modes, so that case is normalized here the same way
-    the pure decoder does it). 16-bit grayscale PNGs open as mode
-    I/I;16 (round 14): the raster is stripped to its high byte — the
-    libpng strip_16 convention the pure decoder uses; im.convert('RGB')
-    would clip >255 to white — and a tRNS key compares at SOURCE
-    precision against the full-depth samples, exactly like _decode_png.
-    The pixel budget is enforced on this path too, from PIL's lazy
-    header parse BEFORE im.load() touches pixel data. Pinned against
-    the pure decoders by test_pil_parity_with_pure_decoders wherever
-    PIL is installed, and by the fake-module harness here."""
-    import io
-
-    import numpy as np
-
-    # tRNS keys on 16-bit PNGs are reported at source precision while
-    # PIL's RGB raster is high-byte-downconverted — the bit depth lives
-    # at a fixed IHDR offset, so read it from the payload, not the mode
-    deep_png = (
-        payload[:8] == b"\x89PNG\r\n\x1a\n"
-        and len(payload) > 24
-        and payload[24] == 16
-    )
-    with image_mod.open(io.BytesIO(payload)) as im:
-        _check_pixels(im.width, im.height)
-        im.load()
-        transparency = im.info.get("transparency")
-        if im.mode in ("I", "I;16"):
-            # 16-bit grayscale: full-precision samples are available, so
-            # the key comparison matches _decode_png exactly
-            arr = np.asarray(im)
-            gray = (arr >> 8).astype(np.uint8)
-            px = np.repeat(gray[:, :, None], 3, axis=2)
-            n_channels = 3
-            if transparency is not None:
-                alpha = np.where(
-                    arr == int(transparency), 0, 255
-                ).astype(np.uint8)
-                px = np.concatenate([px, alpha[:, :, None]], axis=2)
-                n_channels = 4
-            return {
-                "width": im.width,
-                "height": im.height,
-                "n_channels": n_channels,
-                "pixels": np.ascontiguousarray(px).tobytes(),
-            }
-        if im.mode in ("L", "RGB") and transparency is not None:
-            rgb = np.asarray(im.convert("RGB"))
-            keys = (
-                [transparency] * 3 if im.mode == "L" else list(transparency)
-            )
-            # 16-bit RGB: samples hold high bytes, so compare the key's
-            # high bytes too (v & 0xFF took the LOW byte — wrong color);
-            # the over-match when a non-key pixel shares the key's high
-            # bytes is this path's documented precision loss
-            key = np.array(
-                [(v >> 8) & 0xFF if deep_png else v & 0xFF for v in keys],
-                np.uint8,
-            )
-            alpha = np.where(
-                (rgb == key).all(axis=2), 0, 255
-            ).astype(np.uint8)
-            px = np.concatenate([rgb, alpha[:, :, None]], axis=2)
-            return {
-                "width": im.width,
-                "height": im.height,
-                "n_channels": 4,
-                "pixels": np.ascontiguousarray(px).tobytes(),
-            }
-        has_alpha = "A" in im.getbands() or (
-            im.mode == "P" and transparency is not None
-        )
-        conv = im.convert("RGBA" if has_alpha else "RGB")
-        return {
-            "width": conv.width,
-            "height": conv.height,
-            "n_channels": 4 if has_alpha else 3,
-            "pixels": conv.tobytes(),
-        }
-
-
 def decode_image(payload: bytes, with_pixels: bool = True) -> dict:
     """Decode an image payload — REAL, with no codec library, for:
     uncompressed BMP (BITMAPINFOHEADER, BI_RGB, 24/32 bpp), binary PPM
-    (P6, maxval ≤ 255), 8-bit non-interlaced PNG (_decode_png: stdlib
-    zlib + per-row filter math), GIF first frames (_decode_gif:
-    pure-Python LZW), and baseline AND progressive JPEG (_decode_jpeg:
-    Huffman + successive approximation + matrix-multiply IDCT). Returns
-    ``{"width", "height", "n_channels",
-    "pixels"}`` with pixels as top-down row-major RGB(A) bytes —
+    (P6, maxval ≤ 255), 8/16-bit PNG, non-interlaced or Adam7
+    (_decode_png: stdlib zlib + per-row filter math), GIF first frames
+    (_decode_gif: pure-Python LZW), and baseline AND progressive JPEG
+    (_decode_jpeg: Huffman + successive approximation + matrix-multiply
+    IDCT). Returns ``{"width", "height", "n_channels", "pixels"}`` with
+    pixels as top-down row-major RGB(A) bytes —
     container quirks (BMP's bottom-up BGR padded rows, PNG/GIF palette
     and gray forms, JPEG subsampling) are normalized here, so callers
-    see one contract.
+    see one contract. These pure decoders are the only path, so the
+    same payload decodes to the same pixels on every host.
 
     ``with_pixels=False`` is the header-only parse (the
     ``decode_audio``/``with_pcm`` convention): structural validation
@@ -368,48 +163,21 @@ def decode_image(payload: bytes, with_pixels: bool = True) -> dict:
     callers that need geometry only (``extract_features``' width/height
     columns must not decode every image just to read two header ints).
 
-    When Pillow is installed (cluster deployments), full decodes of
-    PNG/GIF/JPEG payloads take the PIL fast path (_decode_pil — same
-    output contract, libjpeg speed, and coverage of the variants the
-    pure decoders guard on, e.g. Adam7 PNG); any PIL failure falls back
-    to the pure decoders, and header-only parses always stay pure (two
-    header ints never justify a full pixel decode). BMP/PPM stay pure
-    everywhere — they are already trivial byte math.
-
     Anything else raises NotImplementedError like the other codec
     guards. One failure mode ('not decodable here') either way."""
     if payload[:2] == b"BM":
         return _decode_bmp(payload, with_pixels)
     if payload[:2] == b"P6":
         return _decode_ppm(payload, with_pixels)
-    is_png = payload[:8] == b"\x89PNG\r\n\x1a\n"
-    is_gif = payload[:6] in (b"GIF87a", b"GIF89a")
-    is_jpeg = payload[:2] == b"\xff\xd8"
-    if with_pixels and (is_png or is_gif or is_jpeg):
-        image_mod = _pil()
-        # deep (bit-depth-16) PNGs take the PIL path only after the
-        # once-per-process parity probe verifies the installed Pillow
-        # against the pure decoder (_pil_deep_verified — the 16-bit
-        # branches' only validation in PIL-less build environments is a
-        # fake-module harness, so an unverified Pillow is gated to the
-        # pure path: slower, never wrong)
-        deep = is_png and len(payload) > 24 and payload[24] == 16
-        if image_mod is not None and (
-            not deep or _pil_deep_verified(image_mod)
-        ):
-            try:
-                return _decode_pil(image_mod, payload)
-            except Exception:
-                pass  # fall back to the pure decoders below
-    if is_png:
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return _decode_png(payload, with_pixels)
-    if is_gif:
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif(payload, with_pixels)
-    if is_jpeg:
+    if payload[:2] == b"\xff\xd8":
         return _decode_jpeg(payload, with_pixels)
     raise NotImplementedError(
         "image payload is not decodable here (uncompressed BMP, binary "
-        "PPM, 8-bit non-interlaced PNG, GIF, baseline+progressive "
+        "PPM, 8/16-bit PNG, GIF, baseline+progressive "
         "JPEG); remaining codecs are not available in this environment"
     )
 
@@ -496,9 +264,7 @@ def _png_unfilter(raw, bpp: int):
     add of the prior reconstructed row; Average (3) and Paeth (4) are
     sequential in x by definition (each pixel needs the just-
     reconstructed left neighbor through a nonlinear predictor), so they
-    fall back to a per-pixel loop — at cluster scale that branch is
-    where PIL/libpng replaces this reference implementation, inside the
-    same batch loop."""
+    fall back to a per-pixel loop."""
     import numpy as np
 
     height, w1 = raw.shape
@@ -1089,9 +855,8 @@ def _decode_jpeg(payload: bytes, with_pixels: bool = True) -> dict:
     intervals honored in both forms; arithmetic coding, lossless and
     hierarchical frames (SOF3/5..15 except 2), and 12-bit precision
     raise NotImplementedError — the codec-guard failure mode. A
-    reference decoder, not a fast one (the entropy decode is a
-    per-symbol Python loop): at cluster scale PIL/libjpeg-turbo replaces
-    it inside the same batch loop (see decode_image's PIL fast path)."""
+    reference decoder, not a fast one: the entropy decode is a
+    per-symbol Python loop."""
     import struct
 
     import numpy as np
@@ -1600,9 +1365,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     index arrays, re-encoded as 24-bit BMP — or as RGBA PNG when the
     decoded image carries an alpha plane, so transparency survives the
     resize. Payloads needing an absent
-    codec pass through unchanged with only the meta rewrite —
-    a real cluster swaps that branch for PIL `Image.resize` in the same
-    batch loop. The Spark-side plumbing — struct column through Arrow,
+    codec pass through unchanged with only the meta rewrite. The Spark-side plumbing — struct column through Arrow,
     schema-stable output, partition-preserving map — is identical on
     both branches."""
     _require_binary_payload(df, "resize_images")

@@ -139,30 +139,6 @@ def hkey_sql(expr: str) -> str:
     return f"((({expr}) % {M31}) * {KNUTH}) % {M32}"
 
 
-# Reliable-checkpoint switch for the iterative ops. localCheckpoint is
-# the right default for local/test sessions (zero I/O; lineage truncation
-# is all we need to stop per-round logical-plan doubling), but its blocks
-# live only in executor memory/disk — on a real cluster an executor loss
-# mid-iteration kills the job. Deployments set SPARK_GRAFT_CHECKPOINT_DIR
-# (env) or spark.graft.checkpointDir (session conf; env wins) to a
-# shared-filesystem path and every _truncate call becomes a reliable
-# checkpoint() there instead.
-_CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
-_CHECKPOINT_DIR_CONF = "spark.graft.checkpointDir"
-
-
-def _checkpoint_dir(spark) -> str | None:
-    import os as _os
-
-    d = _os.environ.get(_CHECKPOINT_DIR_ENV)
-    if d:
-        return d
-    try:
-        return spark.conf.get(_CHECKPOINT_DIR_CONF, None) or None
-    except Exception:
-        return None
-
-
 def _truncate(df):
     """Eagerly materialize ``df`` and TRUNCATE its lineage, returning a
     DataFrame whose logical plan is a flat scan of the materialized
@@ -173,20 +149,16 @@ def _truncate(df):
     embeds the full build subtree (measured on connected components:
     46 s of driver-side planning → 3.2 s truncated, at sf0.1).
 
-    Local/test sessions get ``localCheckpoint`` (eager, zero I/O).
-    When SPARK_GRAFT_CHECKPOINT_DIR / spark.graft.checkpointDir is set,
-    the same call is a RELIABLE ``checkpoint()`` to that directory —
-    identical results (pinned by test_truncate_reliable_matches_local),
-    executor-loss-safe, the cluster-grade form. The Spark checkpoint dir
-    is set lazily once per session; a caller-set checkpoint dir is
-    respected."""
-    spark = df.sparkSession
-    ckdir = _checkpoint_dir(spark)
-    if ckdir is None:
+    One rule picks the form. With no SparkContext checkpoint dir (local
+    and test sessions) it is ``localCheckpoint`` — eager, zero I/O, but
+    its blocks live only in executor memory/disk, so an executor loss
+    mid-iteration kills the job. Deployments set Spark's own
+    ``spark.checkpoint.dir`` (or call ``sc.setCheckpointDir``) to a
+    shared-filesystem path, and the same call becomes a RELIABLE eager
+    ``checkpoint()`` there — identical results (pinned by
+    test_truncate_reliable_matches_local), executor-loss-safe."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint()
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(ckdir)
     return df.checkpoint(eager=True)
 
 

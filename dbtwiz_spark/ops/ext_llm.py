@@ -449,23 +449,15 @@ def ext_dedup_near(spark, sf_dir):
     never corrupt. Engine-specific hashes make this rows-only for the
     oracle; tests/test_ext_llm.py checks recall against ext-ngram-jaccard.
 
-    At-scale switch (100 TB): the band join itself carries ONLY doc ids
-    (the explode is (doc_id, band, sig)); the heavyweight is the
-    VERIFICATION, which by default joins each side's full shingle set —
-    a wide array column — onto every candidate pair and intersects
-    locally (array_intersect). Each doc's set is shuffled once per
-    candidate pair touching it: optimal while sets are small (bench
-    corpus: tens of shingles/doc) and candidate fan-out is low, but at
-    web scale a hub document's multi-KB set rides every one of its
-    pairs. The switch — spark.graft.dedupVerify=rejoin (or
-    SPARK_GRAFT_DEDUP_VERIFY=rejoin) — verifies at SHINGLE level
-    instead: candidates equi-join the capped (doc_id, shingle) table on
-    both sides and a partial-aggregated count computes the intersection
-    (the _NGRAM_JACCARD shape), so the shuffle is narrow shingle rows,
-    never wide arrays. Both paths produce IDENTICAL pairs (parity-
-    pinned by tests/test_ext_llm.py); crossover is roughly where
-    avg_set_bytes x candidate_fanout exceeds the two shingle-level
-    joins. See SCALING.md "Near-dedup" for the full trade."""
+    Verification: the band join carries ONLY doc ids (the explode is
+    (doc_id, band, sig)); each candidate pair then joins both sides'
+    capped shingle sets from the persisted per-doc artifact and
+    intersects them locally (array_intersect) — no shingle-level join
+    and no second pass over the corpus. Known at-scale limit: each
+    doc's set is shuffled once per candidate pair touching it, so a hub
+    document with many candidates ships its whole set with every one of
+    them. Cheap while sets are small and fan-out is low (the bench
+    corpus: tens of shingles/doc); see SCALING.md "Near-dedup"."""
     cat = views(spark, sf_dir)
     d = cat.table("documents")
 
@@ -519,64 +511,9 @@ def ext_dedup_near(spark, sf_dir):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    import os as _os
-
-    mode = _os.environ.get("SPARK_GRAFT_DEDUP_VERIFY") or spark.conf.get(
-        "spark.graft.dedupVerify", "carry"
-    )
-    if mode not in ("carry", "rejoin"):
-        # fail loudly: silently falling back to the carry path would run
-        # the wide-array verification on exactly the job whose operator
-        # tried to switch it off — the OOM the setting exists to prevent
-        raise ValueError(
-            f"spark.graft.dedupVerify/SPARK_GRAFT_DEDUP_VERIFY must be "
-            f"'carry' or 'rejoin', got {mode!r}"
-        )
-    if mode == "rejoin":
-        # shingle-level verification (the 100 TB switch): candidates
-        # equi-join the capped (doc_id, shingle) table on both sides and
-        # a partial-aggregated count computes the intersection — narrow
-        # shingle rows through the shuffle, never wide set arrays. The
-        # shingle table explodes from the SAME persisted per-doc
-        # artifact, so both paths verify in the identical (capped)
-        # shingle universe and no second corpus pass runs. Candidates
-        # with an empty intersection drop out of the inner join; they
-        # fail the jaccard >= 0.4 filter either way.
-        sh_rows = per_doc.select("doc_id", F.explode("shset").alias("shingle"))
-        inter_tbl = (
-            candidates.join(
-                sh_rows.select(
-                    F.col("doc_id").alias("doc_a"), "shingle"
-                ),
-                "doc_a",
-            )
-            .join(
-                sh_rows.select(
-                    F.col("doc_id").alias("doc_b"), "shingle"
-                ),
-                ["doc_b", "shingle"],
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        na = per_doc.select(
-            F.col("doc_id").alias("doc_a"), F.size("shset").alias("na")
-        )
-        nb = per_doc.select(
-            F.col("doc_id").alias("doc_b"), F.size("shset").alias("nb")
-        )
-        jac = F.col("inter").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("inter")
-        )
-        return (
-            inter_tbl.join(na, "doc_a")
-            .join(nb, "doc_b")
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= 0.4)
-        )
-    # default: exact verification on the carried shingle sets — set
-    # intersection is local to each joined pair (no shingle-level join,
-    # no second pass over the corpus); optimal for small sets
+    # exact verification on the carried shingle sets — set intersection
+    # is local to each joined pair (no shingle-level join, no second
+    # pass over the corpus)
     sets_a = per_doc.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sa"))
     sets_b = per_doc.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sb"))
     inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
@@ -604,7 +541,7 @@ def ext_dedup_near_recall(spark, sf_dir):
     0.998 at j=0.7). The slack-1 absolute term keeps the certificate
     meaningful when the true-pair set is small.
 
-    This is the driver-checkable companion to rows-only ext-dedup-near
+    This is the oracle-checked companion to rows-only ext-dedup-near
     (same device as ext-ann-lsh-recall: the oracle can't recompute seeded
     xxhash64 signatures, but it CAN count the exact high-similarity pairs
     and demand the quality bound hold). n_true_pairs is recomputed by
@@ -1449,7 +1386,7 @@ def ext_ann_lsh_recall(spark, sf_dir):
     synthetic corpus is 0.79-0.89 across sf0.001/0.01/0.1; the floor holds
     0.09 of margin.
 
-    This is the driver-checkable companion to ext-ann-lsh-bucket (whose
+    This is the oracle-checked companion to ext-ann-lsh-bucket (whose
     bucket histogram is engine-specific, hence rows-only): the oracle
     can't recompute hyperplane signatures, but it CAN demand the quality
     bound hold — the same bound a production ANN service monitors. Both

@@ -875,7 +875,7 @@ def ext_dedup_cluster(spark, sf_dir):
             )
         ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         # per-round lineage truncation (_truncate: localCheckpoint
-        # locally, reliable checkpoint() under SPARK_GRAFT_CHECKPOINT_DIR):
+        # locally, reliable checkpoint() under spark.checkpoint.dir):
         # the label table feeds TWO branches of every round (the least()
         # update and the convergence-count join), so a persist-only loop
         # doubles the LOGICAL plan per round and the driver's analyzer
@@ -915,7 +915,7 @@ def ext_dedup_cluster(spark, sf_dir):
 
     # memoize the CONVERGED label table as a catalog artifact — the CC
     # label-table pattern: repeat sweeps pay only the keep rollup, and
-    # under SPARK_GRAFT_CHECKPOINT_DIR the per-call checkpoint files
+    # under spark.checkpoint.dir the per-call checkpoint files
     # (Spark never deletes them) stop accumulating across repeat
     # invocations in one session (round-10 review find)
     labels = views(spark, sf_dir).artifact(

@@ -146,7 +146,7 @@ def graph_pagerank(spark, sf_dir):
     per-round truncation measured SLOWER, 2.27 s → 3.55 s at sf0.1;
     one truncation of the final table costs nothing and gives the
     artifact a flat lineage-free plan — and switches to reliable checkpoint()
-    under SPARK_GRAFT_CHECKPOINT_DIR like every iterative op)."""
+    under spark.checkpoint.dir like every iterative op)."""
     cat = views(spark, sf_dir)
     edges = _pr_edges(cat)
     deg = _pr_deg(cat, edges)
@@ -591,10 +591,10 @@ def _cc_propagate(edges, rounds: int):
     InMemoryRelation still embeds the full build subtree). The
     truncation is ``common._truncate``: localCheckpoint by default
     (zero I/O — right for a per-session derived table that is cheap to
-    rebuild), reliable ``checkpoint()`` when
-    SPARK_GRAFT_CHECKPOINT_DIR / spark.graft.checkpointDir points at
-    shared storage (executor-loss-safe, the cluster-grade form; both
-    paths pinned identical by test_truncate_reliable_matches_local)."""
+    rebuild), reliable ``checkpoint()`` when Spark's
+    ``spark.checkpoint.dir`` points at shared storage (executor-loss-
+    safe, the cluster-grade form; both paths pinned identical by
+    test_truncate_reliable_matches_local)."""
     lbl = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -892,7 +892,7 @@ def graph_k_core(spark, sf_dir):
         # InMemoryRelation embeds every prior round's subtree in the
         # plan — truncation measured 2.3-4.9 s → 1.2-1.4 s at sf0.1
         # (and switches to reliable checkpoint() under
-        # SPARK_GRAFT_CHECKPOINT_DIR). Bind loop state via defaults — a
+        # spark.checkpoint.dir). Bind loop state via defaults — a
         # bare closure would capture the final round's variables.
         edges = cat.artifact(f"kcore_e{i}", lambda p=_peel: _truncate(p()))
         nodes_row = keep.selectExpr(
@@ -1123,7 +1123,7 @@ def graph_hits(spark, sf_dir):
         # build subtree, so the driver still spent ~16 s/run PLANNING a
         # 163 MB physical plan at sf0.1; truncation cut the warm run to
         # ~1 s. _truncate switches to reliable checkpoint() when
-        # SPARK_GRAFT_CHECKPOINT_DIR is set — the cluster-grade form of
+        # spark.checkpoint.dir is set — the cluster-grade form of
         # the same plan-growth bound.
         ar = cat.artifact(
             f"hits_ar{i}",

@@ -1044,33 +1044,57 @@ def test_round8_source_similarity_memoizes_token_table(spark):
     assert not (st.storageLevel.useMemory or st.storageLevel.useDisk)
 
 
-def test_truncate_reliable_matches_local(spark, tmp_path, monkeypatch):
+def test_truncate_reliable_matches_local(spark, tmp_path):
     """The lineage-truncation device behind every iterative op
     (common._truncate) must produce IDENTICAL results on both of its
-    paths: localCheckpoint (the zero-I/O local default) and reliable
-    checkpoint() to SPARK_GRAFT_CHECKPOINT_DIR (the executor-loss-safe
-    cluster form — VERDICT r9 item 3). Run _cc_propagate both ways on
-    the same graph and compare the full label tables; also pin that the
-    reliable path actually WRITES checkpoint data (the switch must not
-    silently stay local)."""
+    forms: localCheckpoint when the SparkContext has no checkpoint dir
+    (the zero-I/O local default) and a reliable checkpoint() when Spark's
+    own checkpoint dir is set (the executor-loss-safe cluster form). Run
+    _cc_propagate both ways on the same graph and compare the full label
+    tables; also pin that the reliable form actually WRITES checkpoint
+    data and that, with the dir cleared again, nothing more is written.
+    The context's dir is restored afterwards: left set, it would turn
+    every later iterative op in the session into reliable checkpoints."""
     from dbtwiz_spark.ops import graphs as G
+
+    sc = spark.sparkContext
+    prior = sc.getCheckpointDir()
+
+    def set_checkpoint_dir(path):  # None clears it
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(path)
+        )
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2), (10, 11), (11, 10), (12, 12)],
         "src LONG, dst LONG",
     )
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    local = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
-    assert local == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 12)}
-
     ckdir = tmp_path / "ck"
-    spark.sparkContext.setCheckpointDir(str(ckdir))
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckdir))
-    reliable = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
-    assert reliable == local
-    assert any(p.is_file() for p in ckdir.rglob("*")), (
-        "reliable mode must write checkpoint blocks to the configured dir"
-    )
+
+    def written():
+        return {p for p in ckdir.rglob("*") if p.is_file()}
+
+    try:
+        set_checkpoint_dir(None)
+        local = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
+        assert local == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 12)}
+
+        sc.setCheckpointDir(str(ckdir))
+        reliable = {
+            (r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()
+        }
+        assert reliable == local
+        files = written()
+        assert files, "reliable mode must write checkpoint blocks to the dir"
+
+        set_checkpoint_dir(None)
+        again = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
+        assert again == local
+        assert written() == files, (
+            "with no checkpoint dir set, _truncate must write no checkpoints"
+        )
+    finally:
+        set_checkpoint_dir(prior)
 
 
 def test_round10_invariants(spark):

@@ -169,434 +169,6 @@ def test_extract_features_duration_for_media_payloads(spark):
     assert [r.doc_id for r in gated.collect()] == [1]
 
 
-def test_decode_pil_normalization_with_fake_module():
-    """_decode_pil's normalization logic exercised WITHOUT Pillow (this
-    container has none, so the parity test skips): a minimal fake
-    module drives the three branches — the L/RGB transparency-KEY path
-    (PIL's convert() does not apply color keys for those modes, so
-    _decode_pil builds the alpha itself), the alpha-band path, and the
-    palette-transparency path."""
-    import numpy as np
-
-    import dbtwiz_spark.multimodal as mm
-
-    class _Img:
-        def __init__(self, mode, arr, info):
-            self.mode, self._arr, self.info = mode, arr, info
-            self.height, self.width = arr.shape[0], arr.shape[1]
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def load(self):
-            pass
-
-        def getbands(self):
-            return tuple(self.mode)
-
-        def __array__(self, dtype=None, copy=None):
-            return self._arr
-
-        def tobytes(self):
-            return self._arr.tobytes()
-
-        def convert(self, target):
-            a = self._arr
-            if a.ndim == 2:  # L -> replicate channels
-                a = np.repeat(a[:, :, None], 3, axis=2)
-            if target == "RGBA" and a.shape[2] == 3:
-                a = np.concatenate(
-                    [a, np.full(a.shape[:2] + (1,), 255, np.uint8)], axis=2
-                )
-            if target == "RGB":
-                a = a[:, :, :3]
-            return _Img(target, np.ascontiguousarray(a), {})
-
-    class _Mod:
-        _next = None
-
-        @staticmethod
-        def open(fp):
-            return _Mod._next
-
-    # L + transparency key: matching gray pixels become alpha 0
-    _Mod._next = _Img(
-        "L", np.array([[10, 20], [10, 30]], np.uint8), {"transparency": 10}
-    )
-    out = mm._decode_pil(_Mod, b"ignored")
-    assert (out["width"], out["height"], out["n_channels"]) == (2, 2, 4)
-    px = np.frombuffer(out["pixels"], np.uint8).reshape(2, 2, 4)
-    assert list(px[0, 0]) == [10, 10, 10, 0]
-    assert list(px[0, 1]) == [20, 20, 20, 255]
-    assert list(px[1, 0]) == [10, 10, 10, 0]
-    # RGB + color-key tuple: only the exact triple is transparent
-    _Mod._next = _Img(
-        "RGB",
-        np.array([[[9, 9, 9], [9, 9, 8]]], np.uint8),
-        {"transparency": (9, 9, 9)},
-    )
-    out = mm._decode_pil(_Mod, b"ignored")
-    px = np.frombuffer(out["pixels"], np.uint8).reshape(1, 2, 4)
-    assert list(px[0, 0]) == [9, 9, 9, 0] and list(px[0, 1]) == [9, 9, 8, 255]
-    # alpha band: passes through as RGBA
-    _Mod._next = _Img(
-        "RGBA", np.arange(8, dtype=np.uint8).reshape(1, 2, 4), {}
-    )
-    out = mm._decode_pil(_Mod, b"ignored")
-    assert out["n_channels"] == 4
-    assert out["pixels"] == bytes(range(8))
-    # palette transparency flag (no key logic): upgraded via convert
-    _Mod._next = _Img(
-        "P", np.zeros((1, 2, 3), np.uint8), {"transparency": 1}
-    )
-    out = mm._decode_pil(_Mod, b"ignored")
-    assert out["n_channels"] == 4
-    # the pixel budget applies to the PIL path too, from the lazy
-    # header parse — before load() touches pixel data (round 14)
-    big = _Img("RGB", np.zeros((1, 1, 3), np.uint8), {})
-    big.width = big.height = 1 << 14  # 2^28 px > the 2^27 budget
-    _Mod._next = big
-    with pytest.raises(ValueError):
-        mm._decode_pil(_Mod, b"ignored")
-
-
-def test_decode_pil_16bit_modes_with_fake_module():
-    """Round-14 _decode_pil branches for 16-bit PNGs, driven by a fake
-    module: mode I/I;16 grayscale strips to the HIGH byte (convert('RGB')
-    would clip >255 to white) with the tRNS key compared at SOURCE
-    precision like _decode_png, and a 16-bit RGB tRNS key — reported by
-    PIL at source precision over a high-byte-downconverted raster —
-    compares by its high bytes, not ``v & 0xFF`` (the low byte matched
-    the wrong color)."""
-    import numpy as np
-
-    import dbtwiz_spark.multimodal as mm
-
-    class _Img:
-        def __init__(self, mode, arr, info):
-            self.mode, self._arr, self.info = mode, arr, info
-            self.height, self.width = arr.shape[0], arr.shape[1]
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def load(self):
-            pass
-
-        def getbands(self):
-            return tuple(self.mode)
-
-        def __array__(self, dtype=None, copy=None):
-            return self._arr
-
-        def convert(self, target):
-            a = self._arr
-            if target == "RGB":
-                a = a[:, :, :3]
-            return _Img(target, np.ascontiguousarray(a), {})
-
-    class _Mod:
-        _next = None
-
-        @staticmethod
-        def open(fp):
-            return _Mod._next
-
-    # I;16 grayscale + tRNS: high-byte strip, source-precision key.
-    # 0x0102 and 0x0103 share high byte 1 — only the EXACT key sample
-    # becomes transparent
-    arr = np.array([[0x0102, 0x0103], [0x0203, 0x7FFF]], np.uint16)
-    _Mod._next = _Img("I;16", arr, {"transparency": 0x0102})
-    out = mm._decode_pil(_Mod, b"ignored")
-    assert (out["width"], out["height"], out["n_channels"]) == (2, 2, 4)
-    px = np.frombuffer(out["pixels"], np.uint8).reshape(2, 2, 4)
-    assert list(px[0, 0]) == [1, 1, 1, 0]
-    assert list(px[0, 1]) == [1, 1, 1, 255]  # same high byte, not key
-    assert list(px[1, 0]) == [2, 2, 2, 255]
-    assert list(px[1, 1]) == [127, 127, 127, 255]
-    # mode I (int32), no transparency: 3 channels, high byte
-    _Mod._next = _Img("I", np.array([[256, 511]], np.int32), {})
-    out = mm._decode_pil(_Mod, b"ignored")
-    assert out["n_channels"] == 3
-    assert out["pixels"] == bytes([1, 1, 1, 1, 1, 1])
-    # 16-bit RGB tRNS key: the payload's IHDR bit depth (offset 24)
-    # flags the deep form; key high bytes (1, 3, 5) match the raster
-    deep_payload = b"\x89PNG\r\n\x1a\n" + bytes(16) + b"\x10"
-    assert deep_payload[24] == 16
-    _Mod._next = _Img(
-        "RGB",
-        np.array([[[1, 3, 5], [1, 3, 6]]], np.uint8),
-        {"transparency": (0x0102, 0x0304, 0x0506)},
-    )
-    out = mm._decode_pil(_Mod, deep_payload)
-    px = np.frombuffer(out["pixels"], np.uint8).reshape(1, 2, 4)
-    assert list(px[0, 0]) == [1, 3, 5, 0]
-    assert list(px[0, 1]) == [1, 3, 6, 255]
-    # same image under an 8-bit payload: the key's LOW bytes apply
-    # (8-bit keys are 0..255; v & 0xFF is the identity there)
-    _Mod._next = _Img(
-        "RGB",
-        np.array([[[2, 4, 6], [1, 3, 5]]], np.uint8),
-        {"transparency": (2, 4, 6)},
-    )
-    out = mm._decode_pil(_Mod, b"ignored")
-    px = np.frombuffer(out["pixels"], np.uint8).reshape(1, 2, 4)
-    assert list(px[0, 0]) == [2, 4, 6, 0]
-    assert list(px[0, 1]) == [1, 3, 5, 255]
-
-
-def _fake_pil_16bit(low_byte_rgb: bool = False):
-    """A fake PIL module that REALLY parses the filter-0 16-bit PNGs the
-    deep-parity probe synthesizes, mimicking real Pillow's observable
-    contract: 16-bit grayscale opens as mode I;16 with full-precision
-    samples and the tRNS key as an int in ``info``; 16-bit RGB opens as
-    mode RGB with a HIGH-byte-downconverted raster and the key at source
-    precision as a tuple. ``low_byte_rgb=True`` produces the classic
-    wrong build (raster downconverted to the LOW byte) the probe must
-    catch. ``open`` calls are counted so tests can assert which path
-    decode_image actually took."""
-    import io
-    import struct
-    import zlib
-
-    import numpy as np
-
-    class _Img:
-        def __init__(self, mode, arr, info, width, height):
-            self.mode, self._arr, self.info = mode, arr, info
-            self.width, self.height = width, height
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def load(self):
-            pass
-
-        def getbands(self):
-            return ("R", "G", "B") if self.mode == "RGB" else (self.mode,)
-
-        def __array__(self, dtype=None, copy=None):
-            return self._arr
-
-        def tobytes(self):
-            return self._arr.tobytes()
-
-        def convert(self, target):
-            a = self._arr
-            if a.ndim == 2:
-                a = np.repeat(a[:, :, None], 3, axis=2).astype(np.uint8)
-            if target == "RGBA" and a.shape[2] == 3:
-                a = np.concatenate(
-                    [a, np.full(a.shape[:2] + (1,), 255, np.uint8)], axis=2
-                )
-            if target == "RGB":
-                a = a[:, :, :3]
-            return _Img(
-                target,
-                np.ascontiguousarray(a),
-                {},
-                self.width,
-                self.height,
-            )
-
-    class _Mod:
-        opens = 0
-
-        @staticmethod
-        def open(fp):
-            _Mod.opens += 1
-            payload = fp.read() if isinstance(fp, io.IOBase) else bytes(fp)
-            w, h = struct.unpack(">II", payload[16:24])
-            depth, ctype = payload[24], payload[25]
-            assert depth == 16, "fake PIL parses only the deep probes"
-            pos, trns, idat = 33, None, b""
-            while pos + 8 <= len(payload):
-                (ln,) = struct.unpack(">I", payload[pos : pos + 4])
-                tag = payload[pos + 4 : pos + 8]
-                if tag == b"tRNS":
-                    trns = payload[pos + 8 : pos + 8 + ln]
-                elif tag == b"IDAT":
-                    idat += payload[pos + 8 : pos + 8 + ln]
-                pos += 12 + ln
-            raw = zlib.decompress(idat)
-            nch = 3 if ctype == 2 else 1
-            stride = w * nch * 2
-            rows = b"".join(
-                raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-                for y in range(h)
-            )
-            arr = (
-                np.frombuffer(rows, ">u2")
-                .reshape(h, w, nch)
-                .astype(np.uint16)
-            )
-            if ctype == 0:
-                info = (
-                    {"transparency": struct.unpack(">H", trns[:2])[0]}
-                    if trns
-                    else {}
-                )
-                return _Img("I;16", arr[:, :, 0], info, w, h)
-            info = (
-                {"transparency": struct.unpack(">HHH", trns[:6])}
-                if trns
-                else {}
-            )
-            byte = (arr & 0xFF) if low_byte_rgb else (arr >> 8)
-            return _Img("RGB", byte.astype(np.uint8), info, w, h)
-
-    return _Mod
-
-
-def test_pil_deep_fast_path_self_gates_on_parity_probe():
-    """The 16-bit PIL fast path self-gates (r15 VERDICT standing item):
-    before the first deep PNG is handed to _decode_pil, decode_image
-    runs a once-per-process parity probe of the installed PIL against
-    the pure decoder. A conforming module passes and keeps the fast
-    path; a module with the classic low-byte-downconversion bug fails
-    the probe and every deep payload is routed to the pure decoder —
-    degraded to pure speed, never to wrong pixels."""
-    import dbtwiz_spark.multimodal as mm
-
-    deep_gray, _, deep_rgb = mm._deep_probe_payloads()
-    expect_gray = mm._decode_png(deep_gray, True)
-    expect_rgb = mm._decode_png(deep_rgb, True)
-
-    old_mod, old_ok = mm._PIL_IMAGE, mm._PIL_DEEP_OK
-    try:
-        # conforming fake: probe passes, deep decodes take the PIL path
-        good = _fake_pil_16bit()
-        mm._PIL_IMAGE, mm._PIL_DEEP_OK = good, None
-        assert mm.decode_image(deep_gray) == expect_gray
-        assert mm._PIL_DEEP_OK is True
-        assert good.opens > 0
-        n = good.opens
-        assert mm.decode_image(deep_rgb) == expect_rgb
-        assert good.opens == n + 1  # verified: PIL path, no re-probe
-
-        # low-byte-wrong fake: probe fails once, gate holds after
-        bad = _fake_pil_16bit(low_byte_rgb=True)
-        mm._PIL_IMAGE, mm._PIL_DEEP_OK = bad, None
-        assert mm.decode_image(deep_rgb) == expect_rgb  # pure fallback
-        assert mm._PIL_DEEP_OK is False
-        n = bad.opens
-        assert mm.decode_image(deep_gray) == expect_gray
-        assert bad.opens == n  # gated: PIL never touched again
-    finally:
-        mm._PIL_IMAGE, mm._PIL_DEEP_OK = old_mod, old_ok
-
-
-def test_pil_parity_with_pure_decoders():
-    """Where Pillow IS installed (cluster deployments), the PIL fast
-    path must agree with the pure decoders: exactly for the lossless
-    formats (PNG including tRNS forms, GIF including transparency), and
-    on geometry/channel-count with a small pixel tolerance for JPEG
-    (libjpeg's fixed-point IDCT vs our float matrix IDCT). Skips
-    cleanly when PIL is absent — this container exercises the pure
-    fallback everywhere else. STANDING ITEM (r14 ADVICE), de-risked in
-    r16: the 16-bit branches (I/I;16 high-byte strip, deep-PNG tRNS
-    keys) are pinned by the fake-module harness here AND self-gated at
-    runtime (decode_image probes the installed Pillow against the pure
-    decoder before the first deep PNG takes the fast path —
-    test_pil_deep_fast_path_self_gates_on_parity_probe), so an
-    unverified Pillow can cost speed but not correctness. Running this
-    test once in a Pillow-equipped environment remains the definitive
-    end-to-end validation."""
-    import pytest as _pytest
-
-    image_mod = _pytest.importorskip("PIL.Image")
-
-    import numpy as np
-
-    import dbtwiz_spark.multimodal as mm
-
-    def pure(payload):
-        old = mm._PIL_IMAGE
-        mm._PIL_IMAGE = None
-        try:
-            return mm.decode_image(payload)
-        finally:
-            mm._PIL_IMAGE = old
-
-    pal = [255, 0, 0, 0, 255, 0, 0, 0, 255]
-    lossless = [
-        _hand_png(
-            4,
-            5,
-            bytes(
-                (x * 37 + y * 11 + c * 5) & 0xFF
-                for y in range(5)
-                for x in range(4)
-                for c in range(3)
-            ),
-            filters=[0, 1, 2, 3, 4],
-        ),
-        _hand_png(2, 2, bytes([2, 0, 1, 2]), color_type=3, palette=pal,
-                  trns=[0, 128]),
-        _hand_png(2, 2, bytes(range(16)), color_type=6),
-        _hand_gif(2, 2, [0, 1, 1, 0], pal[:6]),
-        _hand_gif(2, 2, [0, 1, 1, 0], pal[:6], transparent=1),
-        # round-13 forms: Adam7 interlace (PIL deinterlaces identically)
-        _np_png(
-            np.arange(9 * 5 * 3, dtype=np.uint8).reshape(5, 9, 3) * 3 % 256,
-            interlace=1,
-        ),
-    ]
-    # round-14 forms: 16-bit gray (PIL mode I/I;16 — high-byte strip +
-    # source-precision tRNS key) and 16-bit RGB with a tRNS key whose
-    # high-byte triple is unique in the raster (the PIL path compares
-    # high bytes; a collision is that path's documented precision loss)
-    import struct as _struct
-
-    g16 = ((np.arange(12, dtype=np.uint32) * 4097) % 65536).astype(
-        np.uint16
-    ).reshape(4, 3, 1)
-    rgb16 = ((np.arange(12, dtype=np.uint32) * 0x1111) % 65536).astype(
-        np.uint16
-    ).reshape(2, 2, 3)
-    lossless += [
-        _np_png(g16, color_type=0),
-        _np_png(
-            g16, color_type=0, trns=_struct.pack(">H", int(g16[1, 1, 0]))
-        ),
-        _np_png(rgb16, color_type=2),
-        _np_png(
-            rgb16,
-            color_type=2,
-            trns=_struct.pack(">HHH", *(int(v) for v in rgb16[0, 1])),
-        ),
-    ]
-    for payload in lossless:
-        a, b = pure(payload), mm._decode_pil(image_mod, payload)
-        assert (a["width"], a["height"], a["n_channels"]) == (
-            b["width"], b["height"], b["n_channels"],
-        )
-        assert a["pixels"] == b["pixels"]
-
-    import numpy as _np
-
-    rgb = _np.random.default_rng(3).integers(0, 256, (10, 20, 3))
-    jpg = _hand_jpeg(
-        [(_pad8(p), (1, 1)) for p in _jpeg_planes_from_rgb(rgb)], 20, 10
-    )
-    a, b = pure(jpg), mm._decode_pil(image_mod, jpg)
-    assert (a["width"], a["height"], a["n_channels"]) == (
-        b["width"], b["height"], b["n_channels"],
-    )
-    pa = np.frombuffer(a["pixels"], np.uint8).astype(int)
-    pb = np.frombuffer(b["pixels"], np.uint8).astype(int)
-    assert np.abs(pa - pb).max() <= 8  # IDCT implementation tolerance
-
-
 def test_decode_image_header_only_parse():
     """with_pixels=False returns geometry without materializing the
     pixel buffer, but keeps FULL validation — a payload whose pixel
@@ -815,6 +387,7 @@ def test_catalog_replaced_after_in_place_table_rewrite(spark, tmp_path):
     generation would be served to a brand-new read of the same path; the
     scale dir's name has a space, which Spark percent-encodes in file
     URIs, so the stamp must come from the plain paths."""
+    import os
     import shutil
 
     import pyarrow.parquet as pq
@@ -833,7 +406,14 @@ def test_catalog_replaced_after_in_place_table_rewrite(spark, tmp_path):
         )
 
     old = views(spark, sf)
-    old.prime(("customer",))
+    old.prime(("customer", "orders"))
+    # a table above the 128 KiB split size is cut into one cached
+    # partition per split, capped at the context's default parallelism
+    orders_size = os.path.getsize(d / "orders.parquet")
+    assert orders_size > 128 * 1024
+    assert old.table("orders").rdd.getNumPartitions() == min(
+        spark.sparkContext.defaultParallelism, orders_size // (128 * 1024)
+    )
     primed = old.table("customer")
     n_old = primed.count()
     assert customer_keys(old).count() == n_old
@@ -1444,10 +1024,10 @@ def test_decode_png_adam7_interlaced():
 
 
 def test_decode_png_16bit_high_byte_and_trns_precision():
-    """16-bit PNGs downconvert by HIGH byte (libpng strip_16), and a
-    tRNS color key must compare at SOURCE precision: two samples that
-    share a high byte but differ in the low byte must get different
-    alpha."""
+    """16-bit PNGs, RGB and gray, downconvert by HIGH byte (libpng
+    strip_16), and a tRNS color key must compare at SOURCE precision:
+    two samples that share a high byte but differ in the low byte must
+    get different alpha."""
     import struct
 
     import numpy as np
@@ -1467,6 +1047,19 @@ def test_decode_png_16bit_high_byte_and_trns_precision():
     # only the exact-16-bit match is transparent, not the high-byte twin
     assert keyed["pixels"] == bytes(
         [0x12, 0x00, 0xFF, 0, 0x12, 0x00, 0xFF, 255]
+    )
+    # 16-bit gray: high byte replicated to RGB; the gray key compares at
+    # source precision too (0x0102 and 0x0103 share a high byte)
+    gray = np.array([[[0x0102], [0x0103]], [[0x7FFF], [0xFFFF]]], np.uint16)
+    img = decode_image(_np_png(gray, color_type=0))
+    assert img["n_channels"] == 3
+    assert img["pixels"] == bytes([1] * 6 + [0x7F] * 3 + [0xFF] * 3)
+    keyed = decode_image(
+        _np_png(gray, color_type=0, trns=struct.pack(">H", 0x0102))
+    )
+    assert keyed["n_channels"] == 4
+    assert keyed["pixels"] == bytes(
+        [1, 1, 1, 0, 1, 1, 1, 255, 0x7F, 0x7F, 0x7F, 255, 0xFF, 0xFF, 0xFF, 255]
     )
     # 16-bit + Adam7 compose
     rng = np.random.default_rng(5)

@@ -314,56 +314,3 @@ def test_bm25_ranks_term_dense_docs_first(spark):
         .text
     )
     assert any(t in top_doc.split() for t in _BM25_TERMS)
-
-
-def test_dedup_near_rejoin_verification_parity(spark, monkeypatch):
-    """The 100 TB verification switch (round-11): with
-    spark.graft.dedupVerify=rejoin, ext-dedup-near verifies candidates
-    by a shingle-level equi-join + partial-aggregated count instead of
-    carrying each side's full shingle-set array onto every pair. The
-    two paths must produce IDENTICAL (doc_a, doc_b, jaccard) rows —
-    same candidate universe (shared memoized signature artifact), same
-    capped shingle universe (the rejoin table explodes from the same
-    per-doc artifact), so any divergence is a bug, not sampling. Also
-    pins that the rejoin plan actually verifies at shingle level (a
-    second join on the exploded shingle column, no array_intersect)."""
-    from dbtwiz_spark.ops.ext_llm import ext_dedup_near
-
-    # the env var outranks the conf for BOTH calls: if it leaked in from
-    # the test environment, the 'carry' baseline would silently run the
-    # rejoin path and the parity assertion would compare rejoin to itself
-    monkeypatch.delenv("SPARK_GRAFT_DEDUP_VERIFY", raising=False)
-    sf = "/root/testdata/sf0.001"
-    carry = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 12))
-        for r in ext_dedup_near(spark, sf).collect()
-    }
-    spark.conf.set("spark.graft.dedupVerify", "rejoin")
-    try:
-        rejoin_df = ext_dedup_near(spark, sf)
-        plan = rejoin_df._jdf.queryExecution().optimizedPlan().toString()
-        assert "array_intersect" not in plan, (
-            "rejoin mode must not carry set arrays into verification"
-        )
-        rejoin = {
-            (r.doc_a, r.doc_b, round(r.jaccard, 12))
-            for r in rejoin_df.collect()
-        }
-    finally:
-        spark.conf.unset("spark.graft.dedupVerify")
-    assert rejoin == carry, (
-        f"verification paths diverge: only-carry={carry - rejoin} "
-        f"only-rejoin={rejoin - carry}"
-    )
-    assert carry, "parity is vacuous if no near-dup pairs exist at sf0.001"
-
-    # unrecognized modes fail loudly — a silent carry fallback would run
-    # the wide-array verification on exactly the job that switched it off
-    import pytest as _pytest
-
-    spark.conf.set("spark.graft.dedupVerify", "re-join")
-    try:
-        with _pytest.raises(ValueError, match="carry.*rejoin"):
-            ext_dedup_near(spark, sf)
-    finally:
-        spark.conf.unset("spark.graft.dedupVerify")

@@ -116,3 +116,45 @@ def test_ops_modules_define_no_memo_store():
             if name == "register_memo_store":
                 hits.append(f"{f.name}:{node.lineno}: register_memo_store")
     assert not hits, "module-level memo store under ops:\n" + "\n".join(hits)
+
+
+# Engine settings that are deployment inputs, by (module, name). Any
+# other SPARK_GRAFT_* env var or session conf under the spark.graft
+# prefix is a private switch selecting a second code path, which the
+# engine does not keep: one path per operator, configured through
+# Spark's own settings.
+_SETTINGS_ALLOWED = {
+    ("session.py", "CPUS"),
+    ("session.py", "SHUFFLE"),
+    ("session.py", "DRIVER_MEM"),
+    ("catalog.py", "SF_DIR"),
+}
+_SETTING_NAME = re.compile(r"SPARK_GRAFT_(\w*)|spark\.graft\.(\S*)")
+
+
+def test_engine_reads_no_private_switch():
+    """No engine module imports PIL (decoded pixels must not depend on
+    which imaging libraries a host has), and none reads a SPARK_GRAFT_*
+    env var or spark.graft-prefixed conf outside the allowlist. A
+    setting can only be read through its name, so every string literal
+    that IS a setting name counts as a read — including one bound to a
+    module constant and read through it."""
+    import ast
+
+    hits: list[str] = []
+    for f in sorted((REPO / "dbtwiz_spark").rglob("*.py")):
+        rel = f.relative_to(REPO)
+        for node in ast.walk(ast.parse(f.read_text())):
+            mods = []
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                mods = [node.module]
+            for m in mods:
+                if m == "PIL" or m.startswith("PIL."):
+                    hits.append(f"{rel}:{node.lineno}: imports {m}")
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                m = _SETTING_NAME.fullmatch(node.value)
+                if m and (f.name, m.group(1)) not in _SETTINGS_ALLOWED:
+                    hits.append(f"{rel}:{node.lineno}: reads {node.value}")
+    assert not hits, "private engine switch:\n" + "\n".join(hits)
