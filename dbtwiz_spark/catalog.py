@@ -154,18 +154,10 @@ class Catalog:
         they are bounded by the table count and managed by `prime`.
 
         A LAZY DataFrame built before the clear stays correct if executed
-        after it, only slower. The sharp edge is parallel_rank /
-        parallel_prefix_sum, whose offset join needs both consuming
-        branches to see the same physical range boundaries: with the
-        persist gone, Spark's ReuseExchange dedupes the two identical
-        range-partitioning subtrees into one shuffle, so the boundaries
-        still agree. That holds only while spark.sql.exchange.reuse is
-        on, so eviction re-pins it on this catalog's session (sessions
-        not created by get_spark never had it pinned)."""
-        try:
-            self.spark.conf.set("spark.sql.exchange.reuse", "true")
-        except Exception:
-            pass  # stopped session — nothing left to protect
+        after it: a persisted artifact recomputes from its plan, and a
+        truncated one (``_truncate``: graph, pipeline and rank/prefix
+        artifacts) keeps its stored RDD until Spark's ContextCleaner frees
+        it with the last reference, so the consumer reads the same rows."""
         dropped = len(self._artifacts)
         for val in self._artifacts.values():
             # unpersist EVERY element of tuple artifacts (the IVF index is
@@ -195,11 +187,3 @@ class Catalog:
                     pass  # stopped session — nothing to free
         self._cache.clear()
         self._primed = False
-
-    def tables(self) -> dict[str, DataFrame]:
-        return {name: self.table(name) for name in TABLES}
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: load all standard tables from ``sf_dir``."""
-    return Catalog(spark, sf_dir).tables()

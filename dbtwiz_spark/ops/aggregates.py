@@ -1831,7 +1831,7 @@ def agg_gini_concentration(spark, sf_dir):
 
     Scale: the global rank is the shared ``common.parallel_rank`` device
     (also backing win-percent) -- range-partition on the order key,
-    per-partition row_number, tiny broadcast offsets --
+    per-partition row_number, driver-side partition offsets --
     so no corpus-sized single-partition window exists; the customer-level
     revenue table is dimension-sized, not fact-sized."""
     cat = views(spark, sf_dir)
@@ -2283,13 +2283,13 @@ def agg_ks_test(spark, sf_dir):
     arithmetic: group by value (one shuffle, the only corpus-sized one),
     then global prefix counts of each sample in value order via the
     ``common.parallel_prefix_sum`` device (range partition + local
-    running sums + broadcast offsets -- no single-partition window), and
-    D's numerator is max |cum1*n2 - cum2*n1| over BIGINTs; the one double
-    division happens on the final 1-row result.
+    running sums + driver-side partition offsets -- no single-partition
+    window), and D's numerator is max |cum1*n2 - cum2*n1| over BIGINTs;
+    the one double division happens on the final 1-row result.
 
     Scale: distinct-value cardinality bounds the prefix stage; the
-    device's only serial work is the O(P^2) offset fold on #partitions
-    elements. The same shape handles any two-cohort CDF comparison."""
+    device's only serial work is folding #partitions totals on the
+    driver. The same shape handles any two-cohort CDF comparison."""
     from dbtwiz_spark.ops.common import parallel_prefix_sum
 
     cat = views(spark, sf_dir)
@@ -2313,7 +2313,7 @@ def agg_ks_test(spark, sf_dir):
     )
     # sample sizes = the FINAL prefix values (prefix sums of nonnegative
     # counts are nondecreasing, so max = last = total): one tiny agg over
-    # the persisted prefix table instead of a second full events-scan +
+    # the memoized prefix table instead of a second full events-scan +
     # groupBy per execution (round-16 optimization; exact BIGINTs, values
     # identical to SUM over g by construction)
     totals = ps.agg(
@@ -2450,13 +2450,13 @@ def agg_survival_km(spark, sf_dir):
     bounded table, never on the corpus.
 
     Round-16 optimization (plan shape only, values unchanged): the total
-    row count is the FINAL prefix value of the persisted prefix table
+    row count is the FINAL prefix value of the memoized prefix table
     (max(_cum_a) -- a >= 1 per row makes the prefix strictly increasing),
     replacing a second full run of the orders->lifetime pipeline per
     execution; and the death-time rank k is an array_position lookup in
     the same sorted factor array the survival fold already collects,
-    replacing the parallel_rank device (range partition + persist +
-    offset join), which earns its machinery on corpus-sized inputs, not
+    replacing the parallel_rank device (range partition + truncated
+    stage + partition offsets), which earns its machinery on corpus-sized inputs, not
     on the calendar-bounded death-time table the plan collapses to one
     broadcast row anyway."""
     from dbtwiz_spark.ops.common import parallel_prefix_sum
@@ -3313,8 +3313,8 @@ def agg_rfm_segmentation(spark, sf_dir):
 
     Scale: one partial-aggregated per-customer groupBy, then THREE
     ``common.parallel_rank`` passes over the bounded customer aggregate
-    (range-partition + local row_number + broadcast offsets -- no
-    single-partition window even at 10^9 customers); the cell reduce is
+    (range-partition + local row_number + driver-side partition offsets
+    -- no single-partition window even at 10^9 customers); the cell reduce is
     partial-aggregated on a <=125-key space."""
     from dbtwiz_spark.ops.common import parallel_rank
 
@@ -3624,8 +3624,8 @@ def agg_pareto_share(spark, sf_dir):
     the integral; these are the named points procurement actually asks
     for). Customers rank by exact cents revenue DESC with a unique
     custkey tiebreak via ``common.parallel_rank`` (range partition +
-    local row_number + broadcast offsets -- no single-partition window
-    over the customer table); each threshold's head size is exact
+    local row_number + driver-side partition offsets -- no
+    single-partition window over the customer table); each threshold's head size is exact
     integer ceiling division, and the share is one correctly-rounded
     BIGINT/BIGINT double divide, shipped unrounded.
 

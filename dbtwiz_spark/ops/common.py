@@ -63,8 +63,8 @@ def views(spark: SparkSession, sf_dir: str) -> Catalog:
 
 
 def clear_session_memos() -> int:
-    """Evict every live catalog's artifacts (`Catalog.clear_memos`, which
-    also re-pins spark.sql.exchange.reuse); returns the number dropped.
+    """Evict every live catalog's artifacts (`Catalog.clear_memos`);
+    returns the number dropped.
     testing.run_all calls it after each sweep so a long-lived session
     sweeping many scales holds one sweep's working set, not all of them
     (a 54-entry single-session sweep OOM'd a 1 GiB-driver session)."""
@@ -147,7 +147,8 @@ def _truncate(df):
     doubles its LOGICAL plan per round, and persist() does not help —
     cache substitution happens after analysis, and InMemoryRelation
     embeds the full build subtree (measured on connected components:
-    46 s of driver-side planning → 3.2 s truncated, at sf0.1).
+    46 s of driver-side planning → 3.2 s truncated, at sf0.1). The
+    result is immutable: every consumer reads the same stored rows.
 
     One rule picks the form. With no SparkContext checkpoint dir (local
     and test sessions) it is ``localCheckpoint`` — eager, zero I/O, but
@@ -156,36 +157,67 @@ def _truncate(df):
     ``spark.checkpoint.dir`` (or call ``sc.setCheckpointDir``) to a
     shared-filesystem path, and the same call becomes a RELIABLE eager
     ``checkpoint()`` there — identical results (pinned by
-    test_truncate_reliable_matches_local), executor-loss-safe."""
+    test_truncate_reliable_matches_local), executor-loss-safe. Either
+    way the stored RDD lives until the last DataFrame over it is garbage
+    collected: Spark's ContextCleaner then drops the blocks, and (with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``, set by
+    get_spark) deletes the reliable checkpoint files — found under the
+    context's checkpoint dir at that time, so files written under a dir
+    since replaced stay."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint()
     return df.checkpoint(eager=True)
 
 
-# Range partitions of the rank/prefix devices: the offset fold is O(P^2)
-# on P elements in one tiny task, and every input is ranked with the
+# Range partitions of the rank/prefix devices: one offset literal per
+# partition in the output projection, and every input is ranked with the
 # same P.
 N_PARTS = 8
 
 
-def _materialize_and_release_local(out, local) -> None:
-    """Fill the ranked/prefixed OUTPUT's cache eagerly and release the
-    range-partitioned ``local`` stage's storage: keeping BOTH persisted
-    doubled the steady-state executor storage of every rank/prefix
-    consumer — the local stage is only needed to pin one physical
-    boundary sample while the output is CONSTRUCTED. Ordering is
-    load-bearing: the count() materializes the output's InMemoryRelation
-    (all columns) while local is still cached, so the output's cached
-    child plan bakes local's single boundary sample; only then is local's
-    storage freed. Recomputation of lost output partitions replays the
-    output's OWN executed physical plan (boundaries live in its shuffle
-    dependencies, they are never re-sampled), so releasing local does not
-    reopen the independently-sampled-exchange hazard."""
-    out.count()
-    try:
-        local.unpersist(False)
-    except Exception:
-        pass  # stopped session — nothing to free
+def _range_stage(df, keys, running):
+    """The rank/prefix devices' shared stage: ``df`` range-partitioned on
+    ``keys`` plus ``_pid`` and, per ``(name, fn, total)`` in ``running``,
+    ``name = fn`` over the partition-local window in key order, truncated
+    (``_truncate``) so every consumer reads ONE range-boundary sample.
+    Returns the stage, ``offset(i)`` — a BIGINT Column: total ``i``
+    summed over the partitions before the row's own, a literal looked up
+    by ``_pid`` — and the grand totals. Per-partition totals come from
+    one tiny ``groupBy("_pid")`` collect of at most N_PARTS rows and are
+    folded in Python, so no offset table, join or persist exists."""
+    from pyspark.sql.window import Window
+
+    w = (
+        Window.partitionBy("_pid")
+        .orderBy(*keys)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    stage = df.repartitionByRange(N_PARTS, *keys).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    stage = _truncate(stage.withColumns({n: fn.over(w) for n, fn, _ in running}))
+    per_pid = {
+        r[0]: r[1:]
+        for r in stage.groupBy("_pid").agg(*[t for _, _, t in running]).collect()
+    }
+    offsets, acc = [], [0] * len(running)
+    for pid in range(N_PARTS):
+        offsets.append(acc)
+        # a NULL total (all-NULL sum) makes every later offset NULL,
+        # as SQL addition would
+        acc = [
+            None if a is None or t is None else a + t
+            for a, t in zip(acc, per_pid.get(pid, [0] * len(running)))
+        ]
+
+    def _sql(v):
+        return "CAST(NULL AS BIGINT)" if v is None else f"{v}L"
+
+    def offset(i):
+        lits = ", ".join(_sql(o[i]) for o in offsets)
+        return F.expr(f"element_at(array({lits}), _pid + 1)")
+
+    return stage, offset, acc
 
 
 def parallel_rank(df, keys):
@@ -195,59 +227,23 @@ def parallel_rank(df, keys):
     this device gets identical ranks fully in parallel:
 
     1. range-partition + local sort on the order key,
-    2. local row_number per physical partition,
-    3. tiny per-partition counts -> cumulative offsets (broadcast),
-    4. global rank = offset + local row_number.
+    2. local row_number per physical partition, truncated once,
+    3. tiny per-partition counts -> exclusive offsets on the driver,
+    4. global rank = offset literal for the row's partition + local
+       row_number.
 
-    Returns ``df`` plus ``_rank`` (global row number) and ``_n`` (total
-    rows), persisted and materialized. The key chain MUST be a unique
-    total order or ranks are partition-placement-dependent. The
-    range-partitioned+locally-ranked ``local`` stage is persisted while
-    the output is built: both the counts and the offset join consume it,
-    and its CACHE IDENTITY is what pins one physical boundary sample for
-    both consumers (with only plan-level sharing, column pruning
-    specializes each branch's projection below the exchange into two
-    DIFFERENT range exchanges that sample boundaries independently —
-    measured duplicate/missing ranks at sf0.1). The WHOLE ranked output
-    (offset join included) is persisted, so a consumer execution is one
-    cached scan instead of re-running the counts/offsets chain (3
-    adaptive stages); then local's storage is released
-    (_materialize_and_release_local), leaving one corpus-sized table per
-    input. Callers memoize it with ``Catalog.artifact``. The offset fold
-    is O(P^2) on a handful of elements in one tiny task, never a windowed
-    cumsum (that would be a single-partition WindowExec); the offset
-    expressions are ONE parsed SQL string (per-lambda Column construction
-    cost ~300 driver py4j round trips per invocation)."""
-    from pyspark.sql.window import Window
-
-    local = (
-        df.repartitionByRange(N_PARTS, *keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy("_pid").orderBy(*keys)),
-        )
-        .persist()
+    Returns ``df`` plus ``_n`` (total rows) and ``_rank`` (global row
+    number): a lazy projection over the truncated stage, holding one
+    stored RDD per input (freed by Spark's ContextCleaner with the last
+    reference). The key chain MUST be a unique total order or ranks are
+    partition-placement-dependent. Callers memoize it with
+    ``Catalog.artifact``."""
+    stage, offset, (n,) = _range_stage(
+        df, keys, [("_rn", F.row_number(), F.count("*"))]
     )
-    counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
-    carr = counts.agg(
-        F.expr("array_sort(collect_list(struct(_pid, _cnt))) AS arr")
-    )
-    offsets = carr.selectExpr(
-        "inline(transform(arr, (s, i) -> named_struct("
-        "'_pid', s._pid, "
-        "'_off', aggregate(slice(arr, 1, i), CAST(0 AS BIGINT), "
-        "(a, x) -> a + x._cnt))))",
-        "aggregate(arr, CAST(0 AS BIGINT), (a, x) -> a + x._cnt) AS _n",
-    )
-    out = (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn("_rank", F.col("_off") + F.col("_rn"))
-        .drop("_pid", "_rn", "_off")
-        .persist()
-    )
-    _materialize_and_release_local(out, local)
-    return out
+    return stage.withColumns(
+        {"_n": F.expr(f"{n}L"), "_rank": offset(0) + F.col("_rn")}
+    ).drop("_pid", "_rn")
 
 
 def parallel_prefix_sum(df, keys, cols):
@@ -255,76 +251,24 @@ def parallel_prefix_sum(df, keys, cols):
     scale-safe — the prefix-sum generalization of ``parallel_rank``:
 
     1. range-partition + local sort on the order key,
-    2. per-partition running sums (partition-local window),
-    3. tiny per-partition totals -> cumulative offsets (broadcast),
-    4. global prefix = offset + local running sum.
+    2. per-partition running sums (partition-local window), truncated,
+    3. tiny per-partition totals -> exclusive offsets on the driver,
+    4. global prefix = offset literal for the row's partition + local
+       running sum.
 
-    Returns ``df`` plus one ``_cum_<col>`` column per input col. The key
+    Returns ``df`` plus one ``_cum_<col>`` column per input col, a lazy
+    projection over the truncated stage like ``parallel_rank``'s. The key
     chain must be a unique total order. No global single-partition window
-    anywhere; the offset fold is O(P^2) on #partitions elements in one
-    tiny task. Backs agg-ks-test (two-sample CDF comparison).
-
-    Persistence and construction mirror ``parallel_rank``: the persisted
-    range-partitioned ``local`` stage pins ONE physical boundary sample
-    for both the totals and output branches (plan-level sharing alone
-    lets column pruning split them into two independently-sampled range
-    exchanges — measured wrong prefixes at sf0.1), the WHOLE prefixed
-    output is persisted and materialized, and local's storage is then
-    released. Callers memoize it with ``Catalog.artifact``."""
-    from pyspark.sql.window import Window
-
-    # The offset expressions interpolate each col name into parsed SQL
-    # (struct field names and x._t_<c> references) — a name with spaces,
-    # dots or backticks would parse wrong or not at all, silently or
-    # loudly. Fail loudly up front instead: every internal consumer uses
-    # plain identifiers; callers with exotic names alias them first.
-    import re as _re
-
-    for c in cols:
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", str(c)):
-            raise ValueError(
-                f"parallel_prefix_sum: column name {c!r} is not a plain "
-                "identifier ([A-Za-z_][A-Za-z0-9_]*) — alias it before "
-                "calling (names are interpolated into SQL offset "
-                "expressions)"
-            )
-
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*keys)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    anywhere. Backs agg-ks-test (two-sample CDF comparison); callers
+    memoize it with ``Catalog.artifact``."""
+    stage, offset, _ = _range_stage(
+        df,
+        keys,
+        [(f"_cum_{c}", F.sum(c), F.sum(c).cast("long")) for c in cols],
     )
-    local = df.repartitionByRange(N_PARTS, *keys).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    for c in cols:
-        local = local.withColumn(f"_cum_{c}", F.sum(c).over(w))
-    local = local.persist()
-
-    totals = local.groupBy("_pid").agg(
-        *[F.sum(c).cast("long").alias(f"_t_{c}") for c in cols]
-    )
-    struct_cols = ", ".join(["_pid"] + [f"_t_{c}" for c in cols])
-    carr = totals.agg(
-        F.expr(f"array_sort(collect_list(struct({struct_cols}))) AS arr")
-    )
-    fields = ", ".join(
-        ["'_pid', s._pid"]
-        + [
-            f"'_off_{c}', aggregate(slice(arr, 1, i), "
-            f"CAST(0 AS BIGINT), (a, x) -> a + x._t_{c})"
-            for c in cols
-        ]
-    )
-    offsets = carr.selectExpr(
-        f"inline(transform(arr, (s, i) -> named_struct({fields})))"
-    )
-    out = local.join(F.broadcast(offsets), "_pid")
-    for c in cols:
-        out = out.withColumn(f"_cum_{c}", F.col(f"_off_{c}") + F.col(f"_cum_{c}"))
-    out = out.drop("_pid", *[f"_off_{c}" for c in cols]).persist()
-    _materialize_and_release_local(out, local)
-    return out
+    return stage.withColumns(
+        {f"_cum_{c}": offset(i) + F.col(f"_cum_{c}") for i, c in enumerate(cols)}
+    ).drop("_pid")
 
 
 def dsum_scaled(col: Column | str, alias: str | None = None) -> Column:
@@ -338,13 +282,6 @@ def dsum_scaled(col: Column | str, alias: str | None = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     out = (F.sum(c.cast(DEC)) * 1000000).cast("bigint").cast("double") / 1000000
     return out.alias(alias) if alias else out
-
-
-def dsum_scaled_sql(expr: str) -> str:
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS {DEC_SQL})) * 1000000 AS BIGINT) "
-        "AS DOUBLE) / 1000000"
-    )
 
 
 def dsum_q4(col: Column | str, alias: str | None = None) -> Column:

@@ -1794,8 +1794,8 @@ def ext_contrastive_pairs(spark, sf_dir):
 
     Scale: positives ride the shingle equi-join (no cross join); the
     hash ordering comes from ``common.parallel_rank`` (range partition +
-    broadcast offsets, no global window); the successor lookup is an
-    equi-join on rank."""
+    driver-side partition offsets, no global window); the successor
+    lookup is an equi-join on rank."""
     from dbtwiz_spark.ops.common import hkey, parallel_rank
 
     cat = views(spark, sf_dir)

@@ -914,10 +914,8 @@ def ext_dedup_cluster(spark, sf_dir):
         return labels
 
     # memoize the CONVERGED label table as a catalog artifact — the CC
-    # label-table pattern: repeat sweeps pay only the keep rollup, and
-    # under spark.checkpoint.dir the per-call checkpoint files
-    # (Spark never deletes them) stop accumulating across repeat
-    # invocations in one session (round-10 review find)
+    # label-table pattern: repeat sweeps pay only the keep rollup instead
+    # of re-running the propagation rounds' checkpoints on every call
     labels = views(spark, sf_dir).artifact(
         "dedup_cluster_labels", _build_converged_labels
     )
@@ -2377,9 +2375,9 @@ def ext_length_decile_mix(spark, sf_dir):
     identically on both sides, shipped unrounded).
 
     Scale: the rank uses ``common.parallel_rank`` (range-partition +
-    local row_number + broadcast offsets), never a single-partition
-    global window; everything after runs on the bounded (decile, lang)
-    grid."""
+    local row_number + driver-side partition offsets), never a
+    single-partition global window; everything after runs on the
+    bounded (decile, lang) grid."""
     from dbtwiz_spark.ops.common import parallel_rank
 
     cat = views(spark, sf_dir)

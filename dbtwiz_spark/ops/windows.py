@@ -196,14 +196,14 @@ def win_percent(spark, sf_dir):
 
     1. range-partition + local sort on the (unique) order key,
     2. local row_number per physical partition,
-    3. tiny per-partition row counts → cumulative offsets (broadcast),
+    3. tiny per-partition row counts → cumulative offsets on the driver,
     4. global rank = offset + local row_number.
 
     The order key (c_acctbal, c_custkey) is a unique total order, so
     rank == row_number, percent_rank == (rank-1)/(N-1) and
     cume_dist == rank/N — exactly DuckDB's values, with every step parallel
-    (the only single-task work is the cumsum over #partitions rows). The
-    rank machinery is the shared ``common.parallel_rank`` device (also
+    (the only serial work is the driver's cumsum of #partitions counts).
+    The rank machinery is the shared ``common.parallel_rank`` device (also
     backing agg-gini-concentration).
     """
     from dbtwiz_spark.ops.common import parallel_rank

@@ -24,12 +24,6 @@ class MissingPartitionFilter(Exception):
     predicate on the partition column."""
 
 
-def plan_filters(df: DataFrame) -> list[str]:
-    """Extract the Filter node condition strings from the analyzed plan."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return re.findall(r"Filter \((.*)\)", plan) + re.findall(r"Filter (\S+#\d+.*)", plan)
-
-
 def _alias_edges(plan: str) -> dict[str, set[str]]:
     """Map each aliased attribute id -> the attribute ids its defining
     expression references, by parsing ``<expr> AS <name>#<id>`` items inside

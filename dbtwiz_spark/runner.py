@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from dbtwiz_spark.macros import render
 from dbtwiz_spark.manifest import Manifest, Model
@@ -457,7 +457,3 @@ class Runner:
         # after map-side combine) carry tiny streams; the harmful case
         # (unpartitioned window) is caught above.
         return sql, plan, notes
-
-
-def read_model(spark: SparkSession, warehouse: Warehouse, name: str) -> DataFrame:
-    return warehouse.read(name)

@@ -83,6 +83,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
         master = f"local[{cpus if cpus and cpus != '0' else '*'}]"
 
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -104,6 +105,16 @@ def get_spark(
         # STATIC, like dataFrameDebugging: read once when the JVM's codegen
         # cache is created, so only the builder can size it
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # a SparkContext setting, so builder-only as well (a runtime set
+        # raises CANNOT_MODIFY_CONFIG): Spark's ContextCleaner deletes a
+        # reliable checkpoint's files once its RDD is garbage collected only
+        # with this on, so _truncate under spark.checkpoint.dir does not
+        # leave every artifact's files behind for the life of the directory
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Python workers import the engine (UDFs, mapInPandas); they start
+        # in the driver's working directory, so without this only a driver
+        # run from the repo root could find the package
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -162,16 +173,6 @@ def _apply_runtime_confs(spark: SparkSession, shuffle_partitions: int | None) ->
     # outside get_spark keeps Spark's 100-class cache (and recompiles a warm
     # working set on every pass) unless its own builder sets
     # CODEGEN_CACHE_ENTRIES.
-    # Exchange reuse is a CORRECTNESS pin, not a tuning choice: once
-    # Catalog.clear_memos() (or a catalog replaced after a file rewrite)
-    # unpersists a parallel_rank/parallel_prefix_sum output, a lazy
-    # DataFrame built on it recomputes the offset join, which is valid only
-    # because ReuseExchange dedupes its two identical repartitionByRange
-    # subtrees into ONE shuffle (same physical range boundaries for both
-    # consumers). With reuse disabled, two independent boundary samplings
-    # could silently produce duplicate/missing ranks. clear_memos re-pins
-    # it for sessions that did not come from this factory.
-    spark.conf.set("spark.sql.exchange.reuse", "true")
     # Partition columns keep their written type on read-back: a model that
     # writes partitiondate as STRING must not see it come back as DATE after
     # an incremental append (schema drift breaks unionByName at scale).

@@ -10,6 +10,23 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def gc_until(spark, done, timeout=120.0) -> bool:
+    """Run Python and JVM garbage collection until ``done()`` holds or
+    ``timeout`` seconds pass, and return ``done()``. Spark's
+    ContextCleaner frees a stored RDD (and deletes its reliable
+    checkpoint files) only after the JVM has collected the RDD; in a
+    busy test session that took 3-30 s (4 cores), hence the margin."""
+    import gc
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not done() and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    return done()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dbtwiz_spark.session import get_spark

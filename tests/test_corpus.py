@@ -8,7 +8,7 @@ import pytest
 
 from dbtwiz_spark.ops.registry import CORPUS
 from dbtwiz_spark.testing import compare_entry, duckdb_con
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, gc_until
 
 
 @pytest.fixture(scope="module")
@@ -1052,7 +1052,10 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
     own checkpoint dir is set (the executor-loss-safe cluster form). Run
     _cc_propagate both ways on the same graph and compare the full label
     tables; also pin that the reliable form actually WRITES checkpoint
-    data and that, with the dir cleared again, nothing more is written.
+    data, that with the dir cleared again nothing more is written, and
+    that Spark's ContextCleaner deletes the reliable files once the
+    frames over them are gone (get_spark turns on cleanCheckpoints; left
+    off, every artifact's files would stay for the life of the dir).
     The context's dir is restored afterwards: left set, it would turn
     every later iterative op in the session into reliable checkpoints."""
     from dbtwiz_spark.ops import graphs as G
@@ -1084,17 +1087,60 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
             (r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()
         }
         assert reliable == local
-        files = written()
-        assert files, "reliable mode must write checkpoint blocks to the dir"
+        assert written(), "reliable mode must write checkpoint blocks to the dir"
+        # the cleaner finds the files under the context's CURRENT dir, so
+        # wait for it before clearing the dir
+        assert gc_until(spark, lambda: not written()), (
+            "reliable checkpoint files outlived their frames"
+        )
 
         set_checkpoint_dir(None)
         again = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
         assert again == local
-        assert written() == files, (
+        assert not written(), (
             "with no checkpoint dir set, _truncate must write no checkpoints"
         )
     finally:
         set_checkpoint_dir(prior)
+
+
+def test_multimodal_entry_runs_outside_repo_root(tmp_path):
+    """The multimodal entries run Python on the executors (mapInPandas),
+    whose workers import the engine. They start in the driver's working
+    directory, so a driver started anywhere but the repo root must still
+    hand them the package's location (get_spark's executor PYTHONPATH).
+    Runs one entry in a fresh process from an empty directory, with no
+    PYTHONPATH inherited."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    repo = Path(__file__).resolve().parent.parent
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from dbtwiz_spark.ops import CORPUS\n"
+        "from dbtwiz_spark.session import get_spark\n"
+        "spark = get_spark(shuffle_partitions=2)\n"
+        f"df = CORPUS['ext-multimodal-column'].fn(spark, {SF_DIR!r})\n"
+        "print(df.count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    n_docs = pq.read_metadata(os.path.join(SF_DIR, "documents.parquet")).num_rows
+    assert out.stdout.split()[-1] == str(n_docs)
 
 
 def test_round10_invariants(spark):

@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, gc_until
 
 
 def test_catalog_loads_all_tables(catalog):
@@ -249,12 +249,19 @@ def _cached(df) -> bool:
     return df.storageLevel.useMemory or df.storageLevel.useDisk
 
 
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_parallel_rank_memoizes_persisted_input(spark):
     """A parallel_rank output memoized with ``Catalog.artifact`` is built
-    once and then served as the SAME persisted DataFrame — corpus sweeps
-    and bench passes call win-percent / agg-gini-concentration dozens of
-    times per session, and a rebuild per call would persist a fresh copy
-    each time."""
+    once and then served as the SAME DataFrame — corpus sweeps and bench
+    passes call win-percent / agg-gini-concentration dozens of times per
+    session, and a rebuild per call would store a fresh copy each time.
+    One artifact stores exactly one table (the truncated range stage),
+    its plan is a projection over that table with no offset join and no
+    cache, and the table is freed once the memo and every other
+    reference to the artifact are gone."""
     from dbtwiz_spark.catalog import Catalog
     from dbtwiz_spark.ops.common import parallel_rank
 
@@ -266,14 +273,20 @@ def test_parallel_rank_memoizes_persisted_input(spark):
         df = spark.range(100).withColumn("k", F.col("id") % 7)
         return parallel_rank(df, [F.col("k"), F.col("id")])
 
+    before = _persistent_rdds(spark)
     r1 = cat.artifact("test-rank:k,id", build)
+    (stored,) = _persistent_rdds(spark) - before
     r2 = cat.artifact("test-rank:k,id", build)
     assert r2 is r1 and len(builds) == 1, "second call must hit the memo"
-    assert _cached(r1)
+    assert _persistent_rdds(spark) - before == {stored}
+    plan = r1._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "InMemoryRelation" not in plan, plan
     # ranks are a unique total order 1..n
     assert sorted(row._rank for row in r2.collect()) == list(range(1, 101))
     assert cat.clear_memos() == 1
-    assert not _cached(r1)
+    assert not cat._artifacts
+    del r1, r2
+    assert gc_until(spark, lambda: stored not in _persistent_rdds(spark))
 
 
 def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
@@ -442,35 +455,6 @@ def test_catalog_replaced_after_in_place_table_rewrite(spark, tmp_path):
     new.release()
 
 
-def test_rank_local_stage_released_after_output_artifact(spark, monkeypatch):
-    """The rank/prefix device used to hold TWO corpus-sized persisted
-    tables per input — the range-partitioned local stage and the full
-    output — doubling every consumer's steady-state executor storage.
-    The local stage is only needed to pin one boundary sample while the
-    output is built; after the output is materialized, local's storage
-    must be released while the output stays cached (and ranks stay
-    correct)."""
-    from dbtwiz_spark.ops import common
-
-    stages = []
-    release = common._materialize_and_release_local
-
-    def spy(out, local):
-        stages.append((out, local))
-        release(out, local)
-
-    monkeypatch.setattr(common, "_materialize_and_release_local", spy)
-    df = spark.range(100).selectExpr("id", "id % 7 AS k")
-    ranked = common.parallel_rank(df, [F.col("k"), F.col("id")])
-    rows = ranked.select("_rank").collect()
-    assert sorted(r["_rank"] for r in rows) == list(range(1, 101))
-    ((out, local),) = stages
-    assert out is ranked
-    assert not _cached(local)
-    assert _cached(out)
-    out.unpersist()
-
-
 def test_clear_session_memos_evicts_every_registered_store(spark):
     """The eviction hook: one call unpersists and drops every artifact of
     every live catalog — rank tables, graph edge artifacts, ANN indexes,
@@ -481,9 +465,11 @@ def test_clear_session_memos_evicts_every_registered_store(spark):
     small = views(spark, SF_DIR)
     other = views(spark, "/root/testdata/sf0.01")
     df = spark.range(50).withColumn("k", F.col("id") % 3)
+    before = _persistent_rdds(spark)
     ranked = small.artifact(
         "test-rank:k,id", lambda: parallel_rank(df, [F.col("k"), F.col("id")])
     )
+    (stored,) = _persistent_rdds(spark) - before
     assert ranked.count() == 50
 
     def edges():
@@ -491,11 +477,13 @@ def test_clear_session_memos_evicts_every_registered_store(spark):
 
     built = other.artifact("test-edges", edges)
     assert built.count() == 5
-    assert _cached(built) and _cached(ranked)
+    assert _cached(built)
 
     assert clear_session_memos() >= 2
     assert not small._artifacts and not other._artifacts
-    assert not _cached(built) and not _cached(ranked)
+    assert not _cached(built)
+    del ranked
+    assert gc_until(spark, lambda: stored not in _persistent_rdds(spark))
     # next call transparently rebuilds
     assert other.artifact("test-edges", edges).count() == 5
     # the catalog surface returns the drop count too
@@ -525,38 +513,61 @@ def test_clear_session_memos_unpersists_every_tuple_element(spark):
 
 
 def test_rank_output_correct_after_memo_eviction(spark):
-    """A lazy DataFrame built on a parallel_rank artifact and retained
-    across clear_session_memos() must stay CORRECT when executed
-    afterwards. The offset join is only valid if the counts branch and
-    the output branch see identical physical range boundaries — the
-    persist guaranteed that; post-eviction, ReuseExchange dedupes the two
-    identical rangepartitioning subtrees into one shuffle, so the
-    boundaries still agree. Pinned as the output invariant (dense,
-    unique 1..n) rather than the plan detail."""
-    from dbtwiz_spark.ops.common import clear_session_memos, parallel_rank, views
+    """A lazy DataFrame built on a parallel_rank or parallel_prefix_sum
+    artifact and retained across clear_session_memos() must stay CORRECT
+    when executed afterwards, whatever the session's exchange reuse says:
+    the consumer reads the device's truncated stage, whose one stored
+    boundary sample outlives the memo entry. Pinned as the output
+    invariant (dense, unique 1..n ranks; a running count of ones equal
+    to them) with spark.sql.exchange.reuse off."""
+    from dbtwiz_spark.ops.common import (
+        clear_session_memos,
+        parallel_prefix_sum,
+        parallel_rank,
+        views,
+    )
 
     cat = views(spark, SF_DIR)
-    for trial in range(3):
-        df = spark.range(50_000).withColumn(
-            "k", (F.col("id") * 2654435761 + trial) % 999983
-        )
-        ranked = cat.artifact(
-            f"test-rank-evict{trial}:k,id",
-            lambda df=df: parallel_rank(df, [F.col("k"), F.col("id")]),
-        )
-        got = ranked.agg(
-            F.count("*").alias("n"),
-            F.min("_rank").alias("lo"),
-            F.max("_rank").alias("hi"),
-            F.countDistinct("_rank").alias("d"),
-            F.max("_n").alias("ntot"),
-        )
-        clear_session_memos()  # evict BEFORE the consumer executes
-        assert not _cached(ranked)
-        got = got.first()
-        assert (got.n, got.lo, got.hi, got.d, got.ntot) == (
-            50_000, 1, 50_000, 50_000, 50_000,
-        ), got
+    prior = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        for trial in range(3):
+            df = spark.range(50_000).withColumn(
+                "k", (F.col("id") * 2654435761 + trial) % 999983
+            ).withColumn("one", F.lit(1))
+            keys = [F.col("k"), F.col("id")]
+            ranked = cat.artifact(
+                f"test-rank-evict{trial}:k,id",
+                lambda df=df: parallel_rank(df, keys),
+            )
+            summed = cat.artifact(
+                f"test-prefix-evict{trial}:k,id",
+                lambda df=df: parallel_prefix_sum(df, keys, ["one"]),
+            )
+            got = ranked.agg(
+                F.count("*").alias("n"),
+                F.min("_rank").alias("lo"),
+                F.max("_rank").alias("hi"),
+                F.countDistinct("_rank").alias("d"),
+                F.max("_n").alias("ntot"),
+            )
+            cum = summed.agg(
+                F.count("*").alias("n"),
+                F.min("_cum_one").alias("lo"),
+                F.max("_cum_one").alias("hi"),
+                F.countDistinct("_cum_one").alias("d"),
+            )
+            clear_session_memos()  # evict BEFORE the consumers execute
+            assert not cat._artifacts
+            got, cum = got.first(), cum.first()
+            assert (got.n, got.lo, got.hi, got.d, got.ntot) == (
+                50_000, 1, 50_000, 50_000, 50_000,
+            ), got
+            assert (cum.n, cum.lo, cum.hi, cum.d) == (
+                50_000, 1, 50_000, 50_000,
+            ), cum
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prior)
 
 
 def _make_wav(ms: int, frame_rate: int = 8000, channels: int = 1) -> bytes:
