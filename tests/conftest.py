@@ -14,8 +14,11 @@ def gc_until(spark, done, timeout=120.0) -> bool:
     """Run Python and JVM garbage collection until ``done()`` holds or
     ``timeout`` seconds pass, and return ``done()``. Spark's
     ContextCleaner frees a stored RDD (and deletes its reliable
-    checkpoint files) only after the JVM has collected the RDD; in a
-    busy test session that took 3-30 s (4 cores), hence the margin."""
+    checkpoint files) only after the JVM has collected the RDD, and
+    PySpark releases the JVM objects behind dropped DataFrames on a
+    background thread, so ``done()`` must not hand Python a new reference
+    to the RDD it waits for. The rank eviction probe then takes 1-2 s
+    (4 cores); the timeout is margin for a loaded host."""
     import gc
     import time
 

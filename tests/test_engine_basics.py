@@ -250,7 +250,13 @@ def _cached(df) -> bool:
 
 
 def _persistent_rdds(spark) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    """Ids of the RDDs holding stored blocks. Read through RDDInfo, which
+    carries no RDD reference: ``getPersistentRDDs()`` hands Python a map
+    of the RDDs themselves, and PySpark releases that JVM object
+    asynchronously, so each probe kept the RDD it looked for alive
+    through the next JVM GC and the eviction tests waited 5-30 s (past
+    two minutes on a loaded host)."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def test_parallel_rank_memoizes_persisted_input(spark):
