@@ -148,16 +148,23 @@ class Catalog:
 
     def clear_memos(self) -> int:
         """Unpersist and drop every artifact, returning how many there
-        were. Call between sweeps in a long-lived service to bound
-        executor storage at one sweep's working set; the next query
-        rebuilds what it needs. Primed base tables are NOT touched —
-        they are bounded by the table count and managed by `prime`.
+        were; the next query rebuilds what it needs. Primed base tables
+        are NOT touched — they are bounded by the table count and managed
+        by `prime`.
 
-        A LAZY DataFrame built before the clear stays correct if executed
-        after it: a persisted artifact recomputes from its plan, and a
-        truncated one (``_truncate``: graph, pipeline and rank/prefix
-        artifacts) keeps its stored RDD until Spark's ContextCleaner frees
-        it with the last reference, so the consumer reads the same rows."""
+        Storage is freed at two speeds. A persisted artifact's blocks go
+        at once. A truncated one's (``_truncate``: graph, pipeline and
+        rank/prefix artifacts) go only when Spark's ContextCleaner sees
+        the stored RDD collected by the driver JVM's garbage collector,
+        which with no other GC pressure is Spark's periodic GC
+        (``spark.cleaner.periodicGC.interval``, 30 min by default). So
+        clearing between sweeps bounds the persisted share of executor
+        storage, not the truncated share.
+
+        That delay is what keeps a LAZY DataFrame built before the clear
+        correct if executed after it: a persisted artifact recomputes
+        from its plan, and a truncated one keeps its stored RDD while any
+        reference remains, so the consumer reads the same rows."""
         dropped = len(self._artifacts)
         for val in self._artifacts.values():
             # unpersist EVERY element of tuple artifacts (the IVF index is

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dbtwiz_spark.ops.common import (
-    _truncate,
+    _min_propagate,
+    _mirror,
     davg,
     davg_sql,
     dsum_q4,
@@ -817,6 +818,18 @@ _CLUSTER_PAIRS_SQL = """
 """
 
 
+def _cluster_edges(spark, sf_dir):
+    """The >=0.5 n-gram-Jaccard pair graph as mirrored ``(src, dst)``
+    doc-id edges."""
+    from dbtwiz_spark.ops.ext_llm import ext_ngram_jaccard
+
+    return _mirror(
+        ext_ngram_jaccard(spark, sf_dir)
+        .filter(F.col("jaccard") >= 0.5)
+        .select("doc_a", "doc_b")
+    )
+
+
 @register(
     "ext-dedup-cluster",
     oracle=f"""
@@ -840,82 +853,31 @@ def ext_dedup_cluster(spark, sf_dir):
     (A~B, B~C but A!~C leaves two of the three); the component view keeps
     exactly one doc per transitive cluster — the ``keep`` flag.
 
-    Algorithm: iterative min-label propagation to a fixpoint — per round,
-    every node takes the min of its own label and its neighbours' labels
-    (one equi-join + one aggregation per round, both key-partitioned, no
-    driver data). Rounds needed = graph diameter, logarithmic for the
-    short near-dup chains dedup produces; capped at 20 with a convergence
-    check (the per-round ``count`` is an aggregate action, not a
-    driver-side collect). The oracle computes the same fixpoint as a
-    recursive min-reachability CTE — both sides converge to the unique
-    transitive answer, so the hash match is exact.
+    Algorithm: min-label propagation to a fixpoint — per round, every
+    node takes the min of its own label and its neighbours' labels (one
+    equi-join + one aggregation per round, both key-partitioned, no
+    driver data): ``common._min_propagate``, the graph-connected-components
+    loop, which stops at the fixpoint without a convergence job. Rounds
+    needed = graph diameter, logarithmic for the short near-dup chains
+    dedup produces; capped at 20. The oracle computes the same fixpoint
+    as a recursive min-reachability CTE — both sides converge to the
+    unique transitive answer, so the hash match is exact.
 
     At 100 TB the pair graph (post-LSH) is orders of magnitude smaller
     than the corpus; each round shuffles only (node, label) pairs, and the
-    converged labels persist for the keep-join back to documents.
+    converged labels are a catalog artifact, so repeat sweeps pay only
+    the keep projection.
     """
-    from dbtwiz_spark.ops.ext_llm import ext_ngram_jaccard
 
     def _build_converged_labels():
-        # materialize the DIRECTED pair table once (_truncate), THEN
-        # mirror it: a union whose two branches each embed the pair query
-        # executes the whole upstream shingle similarity join TWICE (the
-        # branches' projections differ, so no exchange reuse) — measured
-        # ~1 extra upstream execution per sweep. The mirrored union over
-        # the truncated table is two local scans, and every propagation
-        # round joins it without recomputing the upstream join.
-        pairs = _truncate(
-            ext_ngram_jaccard(spark, sf_dir)
-            .filter(F.col("jaccard") >= 0.5)
-            .select("doc_a", "doc_b")
+        edges = _cluster_edges(spark, sf_dir)
+        return _min_propagate(
+            edges,
+            edges.selectExpr("src AS doc_id", "src AS lbl").distinct(),
+            F.col("lbl"),
+            20,
         )
-        edges = pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        # per-round lineage truncation (_truncate: localCheckpoint
-        # locally, reliable checkpoint() under spark.checkpoint.dir):
-        # the label table feeds TWO branches of every round (the least()
-        # update and the convergence-count join), so a persist-only loop
-        # doubles the LOGICAL plan per round and the driver's analyzer
-        # cost grows with the diameter — the CC/HITS plan-growth device
-        # applied to the dedup twin. Eager materialization also replaces
-        # the persist+count+unpersist bookkeeping.
-        labels = _truncate(
-            edges.select(F.col("a").alias("doc_id"))
-            .distinct()
-            .withColumn("lbl", F.col("doc_id"))
-        )
-        for _ in range(20):
-            neigh = (
-                edges.join(labels, edges.b == labels.doc_id)
-                .groupBy("a")
-                .agg(F.min("lbl").alias("nl"))
-            )
-            nxt = _truncate(
-                labels.join(neigh, labels.doc_id == neigh.a, "left")
-                .select(
-                    labels.doc_id,
-                    F.least(
-                        labels.lbl, F.coalesce(neigh.nl, labels.lbl)
-                    ).alias("lbl"),
-                )
-            )
-            changed = (
-                nxt.alias("n")
-                .join(labels.alias("o"), F.col("n.doc_id") == F.col("o.doc_id"))
-                .filter(F.col("n.lbl") != F.col("o.lbl"))
-                .count()
-            )
-            labels = nxt
-            if changed == 0:
-                break
-        return labels
 
-    # memoize the CONVERGED label table as a catalog artifact — the CC
-    # label-table pattern: repeat sweeps pay only the keep rollup instead
-    # of re-running the propagation rounds' checkpoints on every call
     labels = views(spark, sf_dir).artifact(
         "dedup_cluster_labels", _build_converged_labels
     )

@@ -5,8 +5,11 @@ join (ranks × edges) plus a key-partitioned aggregation, repeated. The
 implementation is pure DataFrame — Catalyst plans every iteration's join
 and partial aggregation, and at cluster scale the edge table's hash
 partitioning on ``src``/``dst`` is reused across iterations (AQE coalesces
-the post-shuffle sides). Related: connected components / label propagation
-lives in ext_pipeline.py (ext-dedup-cluster).
+the post-shuffle sides). Every edge list is built pairs-first by
+``common._mirror``; BFS, min-plus, connected components and
+ext-dedup-cluster (ext_pipeline.py) run the one min-propagation loop
+``common._min_propagate``; PageRank and personalized PageRank share
+``_rank_hops``.
 
 Determinism device: fixed-point integer arithmetic. Ranks are scaled to
 10^15 and every operation is BIGINT add / multiply / integer-divide, so
@@ -20,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbtwiz_spark.ops.common import _truncate, views
+from dbtwiz_spark.ops.common import _min_propagate, _mirror, _truncate, views
 from dbtwiz_spark.ops.registry import register
 
 _SCALE = 1_000_000_000_000_000  # 10^15 fixed-point scale
@@ -33,8 +36,26 @@ _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 # lineage references edges once per hop), which measured 13 s for 3-hop
 # PageRank at sf0.1 vs ~2 s with the edge artifact cached. On a cluster
 # the same role is played by a checkpointed/materialized edge table.
-# Builders that end in `_truncate` store the checkpoint as is: stacking
-# persist() on checkpoint blocks would store every table twice.
+# Builders that end in `_truncate` (or `_mirror`) store the checkpoint as
+# is: stacking persist() on checkpoint blocks would store every table
+# twice.
+
+
+def _purchases(cat):
+    o, li = cat.table("orders"), cat.table("lineitem")
+    return o.join(li, o.o_orderkey == li.l_orderkey)
+
+
+def _cs():
+    """The 'c<custkey>' / 's<suppkey>' node names the oracles use."""
+    return (
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
+    )
+
+
+# the bounded demo subgraph of BFS, min-plus and connected components
+_BOUNDED = "l_suppkey <= 50 AND o_custkey <= 500"
 
 
 def _pagerank_oracle() -> str:
@@ -75,33 +96,13 @@ def _pagerank_oracle() -> str:
 
 
 def _pr_edges(cat):
-    """Undirected customer-supplier edge list (both directions), the
-    shared base graph of graph-pagerank, graph-personalized-pagerank and
-    graph-degree-assortativity -- one artifact, built once per
-    (session, sf_dir). Pairs-first: the DIRECTED pair table is
-    materialized once (``_truncate``) and THEN mirrored — a union whose
-    branches each embed the pair query executes the orders x lineitem
-    join twice (exchange reuse does not fire across union branches; the
-    cc_edges builder verified 0 ReusedExchange on the executed plan).
-    The mirrored union over the truncated table is two local scans, so
-    the artifact is not persisted again (the checkpoint blocks ARE the
-    storage; stacking persist would double-store)."""
-
-    def _build_edges():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        pairs = _truncate(
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-            )
-            .distinct()
-        )
-        return pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst")
-        ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-
-    return cat.artifact("pr_edges", _build_edges)
+    """Undirected customer-supplier edge list (both directions), the one
+    graph of graph-pagerank, -personalized-pagerank,
+    -degree-assortativity and -hits: one artifact over one truncated
+    distinct-pair table, built once per (session, sf_dir)."""
+    return cat.artifact(
+        "pr_edges", lambda: _mirror(_purchases(cat).select(*_cs()).distinct())
+    )
 
 
 def _pr_deg(cat, edges):
@@ -112,6 +113,26 @@ def _pr_deg(cat, edges):
         .withColumnRenamed("src", "node")
         .persist(),
     )
+
+
+def _rank_hops(edges, deg, ranks, teleport):
+    """``_ITER`` PageRank hops from ``ranks`` (node, degree, rank): a
+    node's next rank is ``teleport + (85 * Σ(rank div degree)) div 100``
+    over its in-edges, ``teleport`` being a Column over the node's
+    ``deg`` row. Exact BIGINT arithmetic, so any reduction order gives
+    the same ranks."""
+    for _ in range(_ITER):
+        contrib = (
+            edges.join(ranks, edges.src == ranks.node)
+            .groupBy("dst")
+            .agg(F.sum(F.expr("rank div degree")).alias("s"))
+        )
+        ranks = contrib.join(deg, contrib.dst == deg.node).select(
+            "node",
+            "degree",
+            (teleport + F.expr(f"({_DAMP_NUM} * s) div {_DAMP_DEN}")).alias("rank"),
+        )
+    return ranks
 
 
 @register("graph-pagerank", oracle=_pagerank_oracle())
@@ -152,32 +173,12 @@ def graph_pagerank(spark, sf_dir):
     deg = _pr_deg(cat, edges)
 
     def _build_final_ranks():
-        nn = deg.agg(F.count("*").alias("n"))
-        base_expr = f"CAST({_SCALE * 15 // 100} AS BIGINT) div n"
-        ranks = deg.crossJoin(F.broadcast(nn)).select(
-            "node",
-            "degree",
-            F.expr(f"CAST({_SCALE} AS BIGINT) div n").alias("rank"),
+        deg_n = deg.crossJoin(F.broadcast(deg.agg(F.count("*").alias("n"))))
+        ranks = deg_n.select(
+            "node", "degree", F.expr(f"CAST({_SCALE} AS BIGINT) div n").alias("rank")
         )
-        for _ in range(_ITER):
-            contrib = edges.join(ranks, edges.src == ranks.node).select(
-                F.col("dst"), F.expr("rank div degree").alias("contrib")
-            )
-            ranks = (
-                contrib.groupBy("dst")
-                .agg(F.sum("contrib").alias("s"))
-                .join(deg, contrib.dst == deg.node)
-                .crossJoin(F.broadcast(nn))
-                .select(
-                    "node",
-                    "degree",
-                    (
-                        F.expr(base_expr)
-                        + F.expr(f"({_DAMP_NUM} * s) div {_DAMP_DEN}")
-                    ).alias("rank"),
-                )
-            )
-        return _truncate(ranks)
+        teleport = F.expr(f"CAST({_SCALE * 15 // 100} AS BIGINT) div n")
+        return _truncate(_rank_hops(edges, deg_n, ranks, teleport))
 
     final = cat.artifact("pr_ranks_final", _build_final_ranks)
     return (
@@ -193,9 +194,8 @@ def _copurchase_cs(cat):
     """Distinct (customer, supplier) purchase pairs for the bounded
     (supplier key <= 100) co-purchase graph — shared by triangle count
     and neighbourhood Jaccard, persisted once per catalog."""
-    o, li = cat.table("orders"), cat.table("lineitem")
     return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
+        _purchases(cat)
         .filter(F.col("l_suppkey") <= 100)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
@@ -338,6 +338,22 @@ def graph_jaccard_neighbors(spark, sf_dir):
 _BFS_HOPS = 3
 
 
+def _bounded_edges(cat):
+    """Weighted edges of the bounded subgraph, ``w`` = MIN line quantity
+    of the pair: graph-minplus-distance's graph, and graph-bfs-hops'
+    (one pair per (customer, supplier), so its edge set is the distinct
+    pairs')."""
+    return cat.artifact(
+        "bounded_edges",
+        lambda: _mirror(
+            _purchases(cat)
+            .filter(_BOUNDED)
+            .groupBy(*_cs())
+            .agg(F.min("l_quantity").cast("long").alias("w"))
+        ),
+    )
+
+
 def _bfs_oracle() -> str:
     sql = """
     WITH pairs AS (
@@ -385,52 +401,20 @@ def graph_bfs_hops(spark, sf_dir):
     Scale: each hop is one equi-join (edges hash-partitioned on src,
     reused every round) plus a partial-aggregated MIN -- identical
     mechanics to graph-pagerank but with a growing-then-stable frontier;
-    production BFS checkpoints the distance table per ~5 hops."""
+    the distance table is truncated every hop (``_min_propagate``). The
+    edges are graph-minplus-distance's weighted artifact (its pair set is
+    this graph's; the weights go unused), and the distance table is an
+    artifact too, so repeat sweeps pay only the summary rollup."""
     cat = views(spark, sf_dir)
-
-    def _build_bfs_edges():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        # pairs-first (the cc_edges device): materialize the directed
-        # pair table once, then mirror — union branches embedding the
-        # pair query would execute the orders x lineitem join twice
-        pairs = _truncate(
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .filter((F.col("l_suppkey") <= 50) & (F.col("o_custkey") <= 500))
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-            )
-            .distinct()
-        )
-        return pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst")
-        ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-
-    # referenced once per hop by the distance lineage; the mirrored
-    # union over the truncated pair table is two local scans, so the
-    # artifact is not persisted on top of the checkpoint blocks
-    edges = cat.artifact("bfs_edges", _build_bfs_edges)
-
-    def _build_dist():
-        dist = spark.createDataFrame([("s1", 0)], "node STRING, dist INT")
-        for _ in range(_BFS_HOPS):
-            expanded = edges.join(dist, edges.src == dist.node).select(
-                F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-            )
-            # dist feeds TWO branches of the next round (the union AND
-            # the expansion join), so untruncated logical plans double
-            # per hop — the CC shape; truncate per round to keep
-            # planning O(hops)
-            dist = _truncate(
-                dist.unionAll(expanded)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-        return dist
-
-    # converged distance table as an artifact — the CC label-table
-    # pattern; repeat sweeps pay only the summary rollup
-    dist = cat.artifact("bfs_dist", _build_dist)
+    dist = cat.artifact(
+        "bfs_dist",
+        lambda: _min_propagate(
+            _bounded_edges(cat),
+            spark.createDataFrame([("s1", 0)], "node STRING, dist INT"),
+            F.col("dist") + 1,
+            _BFS_HOPS,
+        ),
+    )
     return (
         dist.groupBy("dist")
         .agg(
@@ -488,51 +472,22 @@ def graph_minplus_distance(spark, sf_dir):
     customer-supplier relation, exact BIGINT end-to-end, so the result
     is bit-identical under any partitioning or relaxation order.
 
-    Scale: per round one equi-join (weighted edges materialized once —
-    a mirrored union over the checkpointed pair table, memoized per
-    session via the shared graph-artifact store) + one
-    partial-aggregated MIN; distances stay node-granular (bounded by the
-    vertex set, not the corpus)."""
+    Scale: per round one equi-join against the weighted edge artifact
+    (one mirrored union over a truncated pair table per catalog, shared
+    with graph-bfs-hops) + one partial-aggregated MIN
+    (``_min_propagate``); distances stay node-granular (bounded by the
+    vertex set, not the corpus). The distance table is an artifact, so
+    repeat sweeps return the flat scan directly."""
     cat = views(spark, sf_dir)
-
-    def _build_weighted_edges():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        # pairs-first (the cc_edges device): materialize the directed
-        # weighted pair table once, then mirror it as two local scans
-        pairs = _truncate(
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .filter((F.col("l_suppkey") <= 50) & (F.col("o_custkey") <= 500))
-            .groupBy(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-            )
-            .agg(F.min("l_quantity").cast("long").alias("w"))
-        )
-        return pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-        ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
-
-    edges = cat.artifact("minplus_edges", _build_weighted_edges)
-
-    def _build_dist():
-        dist = spark.createDataFrame([("s1", 0)], "node STRING, dist LONG")
-        for _ in range(_MINPLUS_HOPS):
-            expanded = edges.join(dist, edges.src == dist.node).select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            # two-branch round state (union + expansion join) — truncate
-            # per round so the logical plan stays O(hops), the CC device
-            dist = _truncate(
-                dist.unionAll(expanded)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-        return dist
-
-    # converged distance table as an artifact — the CC label-table
-    # pattern; repeat sweeps return the flat scan directly
-    return cat.artifact("minplus_dist", _build_dist)
+    return cat.artifact(
+        "minplus_dist",
+        lambda: _min_propagate(
+            _bounded_edges(cat),
+            spark.createDataFrame([("s1", 0)], "node STRING, dist LONG"),
+            F.col("dist") + F.col("w"),
+            _MINPLUS_HOPS,
+        ),
+    )
 
 
 _CC_ROUNDS = 8
@@ -574,42 +529,6 @@ def _cc_oracle() -> str:
     return sql
 
 
-def _cc_propagate(edges, rounds: int):
-    """Hash-min label propagation: every node starts as its own label,
-    each round adopts the minimum label in its closed neighbourhood.
-    Shared by the corpus entry and the convergence test (which runs one
-    extra round and asserts a fixpoint), so the two can never verify
-    different algorithms.
-
-    Each round ends in ``localCheckpoint`` (eager): the label table
-    appears TWICE in the next round's plan (union branch + join branch),
-    so without lineage truncation the LOGICAL plan doubles per round —
-    2^rounds copies of round 1 for the analyzer/optimizer to chew, and
-    the driver spends its time PLANNING, not executing (measured 46 s →
-    3.2 s at sf0.1 for the 8-round entry; persist alone does NOT help,
-    because cache substitution happens after analysis and
-    InMemoryRelation still embeds the full build subtree). The
-    truncation is ``common._truncate``: localCheckpoint by default
-    (zero I/O — right for a per-session derived table that is cheap to
-    rebuild), reliable ``checkpoint()`` when Spark's
-    ``spark.checkpoint.dir`` points at shared storage (executor-loss-
-    safe, the cluster-grade form; both paths pinned identical by
-    test_truncate_reliable_matches_local)."""
-    lbl = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(rounds):
-        propagated = edges.join(lbl, edges.src == lbl.node).select(
-            F.col("dst").alias("node"), "lbl"
-        )
-        lbl = _truncate(
-            lbl.unionAll(propagated)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-    return lbl
-
-
 @register("graph-connected-components", oracle=_cc_oracle())
 def graph_connected_components(spark, sf_dir):
     """Connected components of a sparse purchase graph by hash-min label
@@ -623,54 +542,43 @@ def graph_connected_components(spark, sf_dir):
     tests); node ids are disjoint integers (customer 2k, supplier 2k+1)
     and everything is exact BIGINT, so the fixed unrolled round count is
     bit-identical across engines whether or not it has converged --
-    convergence itself (round R-1 == round R) is pinned as a semantic
-    test, not assumed.
+    convergence itself (one more round changes nothing) is pinned as a
+    semantic test, not assumed.
 
-    Scale: per round one equi-join against the persisted edge artifact
+    Scale: per round one equi-join against the mirrored edge artifact
     (hash-partitioned on src, reused every round) plus a
-    partial-aggregated MIN keyed on node -- the label table never
-    exceeds the vertex set, and every round TRUNCATES lineage
-    (localCheckpoint inside _cc_propagate; the label table feeds two
-    branches of the next round, so untruncated logical plans double per
-    round -- measured 46 s of driver-side planning vs 3.2 s truncated
-    at sf0.1). The converged label table is itself memoized
-    (session x scale artifact), so repeat sweeps pay only the final
-    component rollup. Production CC alternates large-star/
+    partial-aggregated MIN keyed on node (``_min_propagate``, which
+    truncates every round and stops at the fixpoint) -- the label table
+    never exceeds the vertex set. The converged label table is itself
+    memoized (session x scale artifact), so repeat sweeps pay only the
+    final component rollup. Production CC alternates large-star/
     small-star to cut round count to O(log d); the unrolled min-label
     form is the oracle-checkable core with identical per-round
     mechanics."""
     cat = views(spark, sf_dir)
-
-    def _build_cc_edges():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        # materialize the DIRECTED pair table once (_truncate), THEN
-        # mirror it: a union whose branches each embed the pair query
-        # executes the orders x lineitem join TWICE — the branches'
-        # projections differ and Spark's exchange reuse does not fire
-        # (verified on the executed plan: 0 ReusedExchange, 2 joins).
-        # The mirrored union over the truncated table is two local
-        # scans, so the artifact (no extra persist — the checkpoint
-        # blocks ARE the storage) holds a flat cheap plan.
-        pairs = _truncate(
-            o.join(li, o.o_orderkey == li.l_orderkey)
+    edges = cat.artifact(
+        "cc_edges",
+        lambda: _mirror(
+            _purchases(cat)
             .filter(
-                (F.col("l_suppkey") <= 50)
-                & (F.col("o_custkey") <= 500)
-                & (F.col("o_orderpriority") == "1-URGENT")
-                & (F.col("l_quantity") <= 5)
+                f"{_BOUNDED} AND o_orderpriority = '1-URGENT' AND l_quantity <= 5"
             )
             .select(
                 (F.col("o_custkey") * 2).alias("c"),
                 (F.col("l_suppkey") * 2 + 1).alias("s"),
             )
             .distinct()
-        )
-        return pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst")
-        ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-
-    edges = cat.artifact("cc_edges", _build_cc_edges)
-    lbl = cat.artifact("cc_labels", lambda: _cc_propagate(edges, _CC_ROUNDS))
+        ),
+    )
+    lbl = cat.artifact(
+        "cc_labels",
+        lambda: _min_propagate(
+            edges,
+            edges.selectExpr("src AS node", "src AS lbl").distinct(),
+            F.col("lbl"),
+            _CC_ROUNDS,
+        ),
+    )
     return lbl.groupBy(F.col("lbl").alias("component")).agg(
         F.count("*").alias("n_nodes"),
         F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0))
@@ -724,8 +632,8 @@ def graph_degree_assortativity(spark, sf_dir):
     Newman's mixing coefficient, THE one-number summary of whether hubs
     attach to hubs (positive) or to leaves (negative; bipartite
     commerce graphs are typically disassortative). Shares the SAME
-    memoized edge/degree artifacts as graph-pagerank (one build serves
-    both; edges checkpoint-backed, degrees persisted), and the
+    memoized edge/degree artifacts as graph-pagerank (edges a mirror of
+    the one truncated pair table, degrees persisted), and the
     numerics are the agg-spearman-corr device verbatim:
     degrees are exact BIGINTs, all five moments accumulate in
     DECIMAL(38,0) (int64 products would overflow past ~2e9 edges), and
@@ -834,38 +742,22 @@ def graph_k_core(spark, sf_dir):
 
     Scale: each round is one degree aggregation plus two equi-joins of
     the edge list against the shrinking survivor set -- the same
-    shuffle shape as graph-pagerank's hop, over its own persisted edge
-    artifact (built once per catalog). Rounds are a Python
-    loop over lazy plans: 4 fixed iterations keep the lineage shallow;
-    production-depth peeling would checkpoint every ~5 rounds like the
-    pagerank docstring notes. The survivor join is a broadcast when the
-    core shrinks below the threshold -- AQE decides per round."""
+    shuffle shape as graph-pagerank's hop, over its own mirrored edge
+    artifact (built once per catalog). Every round's survivor edges are
+    a truncated artifact, so the plan stays flat at any round count.
+    The survivor join is a broadcast when the core shrinks below the
+    threshold -- AQE decides per round."""
     cat = views(spark, sf_dir)
-
-    def _build_edges():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        # pairs truncated BEFORE the mirror union — same double-execution
-        # fix as the cc_edges builder (no exchange reuse across the union
-        # branches), memoized without an extra persist on top
-        pairs = _truncate(
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .groupBy(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "c"
-                ),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                    "s"
-                ),
-            )
+    edges = cat.artifact(
+        "kcore_edges",
+        lambda: _mirror(
+            _purchases(cat)
+            .groupBy(*_cs())
             .agg(F.countDistinct("o_orderkey").alias("no"))
             .filter(F.col("no") >= _KCORE_MIN_ORDERS)
             .select("c", "s")
-        )
-        return pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst")
-        ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-
-    edges = cat.artifact("kcore_edges", _build_edges)
+        ),
+    )
     per_round = []
     # Per-round frames are (re)constructed on EVERY invocation (the
     # edge artifacts are memoized, the count frames are not) — round 17
@@ -973,47 +865,26 @@ def graph_personalized_pagerank(spark, sf_dir):
     concentrates in the seeds' neighbourhood, and distant nodes decay
     toward zero instead of sharing a uniform floor.
 
-    Scale: identical join/agg shape per hop as graph-pagerank over the
-    SAME memoized edge/degree artifacts (one build serves all graph
-    entries; edges checkpoint-backed, degrees persisted); the seed
-    test is a broadcast-literal IN over 5 keys. A
-    1000-seed production restart vector would join a broadcast seed
-    table instead of inlining literals."""
+    Scale: the same hop as graph-pagerank (``_rank_hops``) over the
+    SAME memoized edge/degree artifacts (edges a mirror of the one
+    truncated pair table, degrees persisted); the seed test is a
+    broadcast-literal IN over 5 keys. A 1000-seed production restart
+    vector would join a broadcast seed table instead of inlining
+    literals."""
     cat = views(spark, sf_dir)
     edges = _pr_edges(cat)
     deg = _pr_deg(cat, edges)
     seeds = list(_PPR_SEEDS)
-    seed_init = _SCALE // len(seeds)
-    seed_base = (_SCALE * 15 // 100) // len(seeds)
-    ranks = deg.select(
-        "node",
-        "degree",
-        F.when(F.col("node").isin(seeds), F.lit(seed_init))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(_ITER):
-        contrib = edges.join(ranks, edges.src == ranks.node).select(
-            F.col("dst"), F.expr("rank div degree").alias("contrib")
-        )
-        base = (
-            F.when(F.col("node").isin(seeds), F.lit(seed_base))
+
+    def seeded(mass):
+        return (
+            F.when(F.col("node").isin(seeds), F.lit(mass // len(seeds)))
             .otherwise(F.lit(0))
             .cast("long")
         )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-            .join(deg, contrib.dst == deg.node)
-            .select(
-                "node",
-                "degree",
-                (base + F.expr(f"({_DAMP_NUM} * s) div {_DAMP_DEN}")).alias(
-                    "rank"
-                ),
-            )
-        )
+
+    ranks = deg.select("node", "degree", seeded(_SCALE).alias("rank"))
+    ranks = _rank_hops(edges, deg, ranks, seeded(_SCALE * 15 // 100))
     return (
         ranks.select("node", F.col("rank").alias("ppr_fp"))
         .orderBy(F.desc("ppr_fp"), "node")
@@ -1081,37 +952,22 @@ def graph_hits(spark, sf_dir):
     ~10^9 pairs -- wider graphs shard the normalizer, noted
     deliberately). Top-10 per side with a node tiebreak.
 
-    Scale: each half-step is ONE equi-join of the pair list against the
-    current score vector plus a partial-aggregated groupBy -- the
-    pagerank hop shape on the SAME persisted distinct-pair artifact;
-    the normalizer is a broadcast 1-row aggregate. Deeper iteration
-    counts checkpoint like the pagerank docstring notes."""
+    Scale: each half-step is ONE equi-join of graph-pagerank's mirrored
+    edge artifact against the current score vector plus a
+    partial-aggregated groupBy(dst) -- the pagerank hop shape. Hub
+    scores are keyed by customers and authority scores by suppliers, so
+    joining on ``src`` picks the customer->supplier edges for the
+    authority step and the reverse edges for the hub step. The
+    normalizer is a broadcast 1-row aggregate."""
     cat = views(spark, sf_dir)
-
-    def _build_pairs():
-        o, li = cat.table("orders"), cat.table("lineitem")
-        return (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "c"
-                ),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                    "s"
-                ),
-            )
-            .distinct()
-        )
-
-    pairs = cat.artifact("hits_pairs", lambda: _build_pairs().persist())
+    edges = _pr_edges(cat)
     # Plan construction from parsed SQL strings (round 17, the
     # parallel_rank precedent): these frames are rebuilt on every
     # invocation while the half-step artifacts are memoized, so the
     # Column-chain py4j round trips were pure per-call driver overhead.
     # Expressions and plans are identical.
-    h = pairs.selectExpr("c AS node").distinct().selectExpr(
-        "node", f"CAST({_HSCALE} AS BIGINT) AS h"
-    )
+    h = edges.selectExpr("src AS node").where("startswith(node, 'c')").distinct()
+    h = h.selectExpr("node", f"CAST({_HSCALE} AS BIGINT) AS h")
     a_norm = None
     for i in range(1, _ITER + 1):
         # memoize each half-step's raw scores AND truncate their lineage
@@ -1127,9 +983,9 @@ def graph_hits(spark, sf_dir):
         # the same plan-growth bound.
         ar = cat.artifact(
             f"hits_ar{i}",
-            lambda p=pairs, hh=h: _truncate(
-                p.join(hh, p.c == hh.node)
-                .groupBy(F.col("s").alias("anode"))
+            lambda hh=h: _truncate(
+                edges.join(hh, edges.src == hh.node)
+                .groupBy(F.col("dst").alias("anode"))
                 .agg(F.sum("h").alias("a"))
             ),
         )
@@ -1139,9 +995,9 @@ def graph_hits(spark, sf_dir):
         )
         hr = cat.artifact(
             f"hits_hr{i}",
-            lambda p=pairs, an=a_norm: _truncate(
-                p.join(an, p.s == an.node)
-                .groupBy(F.col("c").alias("hnode"))
+            lambda an=a_norm: _truncate(
+                edges.join(an, edges.src == an.node)
+                .groupBy(F.col("dst").alias("hnode"))
                 .agg(F.sum("a").alias("hh"))
             ),
         )

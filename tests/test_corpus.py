@@ -4,6 +4,8 @@ engine's golden-output test suite)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from dbtwiz_spark.ops.registry import CORPUS
@@ -11,10 +13,44 @@ from dbtwiz_spark.testing import compare_entry, duckdb_con
 from tests.conftest import SF_DIR, gc_until
 
 
+# the iterative graph family: edge lists built by common._mirror, state
+# iterated by common._min_propagate or graphs._rank_hops
+GRAPH_FAMILY = (
+    "graph-pagerank",
+    "graph-personalized-pagerank",
+    "graph-degree-assortativity",
+    "graph-hits",
+    "graph-bfs-hops",
+    "graph-minplus-distance",
+    "graph-connected-components",
+    "graph-k-core",
+    "ext-dedup-cluster",
+)
+
+
+class _OracleMemo:
+    """A DuckDB connection that keeps the result of each GRAPH_FAMILY
+    oracle, so re-checking an entry under another Spark config does not
+    run its oracle again: the recursive CC, HITS and k-core oracles take
+    52, 22 and 7 s at sf0.001 (4 cores), and their results do not depend
+    on Spark."""
+
+    def __init__(self, con):
+        self.con, self.results = con, {}
+        self.keep = {CORPUS[n].oracle for n in GRAPH_FAMILY}
+
+    def execute(self, sql):
+        if sql not in self.keep:
+            return self.con.execute(sql)
+        if sql not in self.results:
+            self.results[sql] = SimpleNamespace(df=self.con.execute(sql).df().copy)
+        return self.results[sql]
+
+
 @pytest.fixture(scope="module")
 def con():
     c = duckdb_con(SF_DIR)
-    yield c
+    yield _OracleMemo(c)
     c.close()
 
 
@@ -22,6 +58,43 @@ def con():
 def test_entry_matches_oracle(spark, con, name):
     res = compare_entry(spark, name, SF_DIR, con)
     assert res.ok, f"{name}: {res.detail}"
+
+
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {"spark.sql.shuffle.partitions": "1", "spark.sql.adaptive.enabled": "false"},
+        {
+            "spark.sql.shuffle.partitions": "7",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ],
+    ids=["one-partition-no-aqe", "seven-partitions-no-broadcast"],
+)
+def test_graph_family_config_invariant(spark, con, confs):
+    """The graph family's results must not depend on physical
+    configuration: every entry still matches its oracle with one shuffle
+    partition and AQE off, and with seven partitions and no broadcast
+    joins. Memos are cleared first, so every artifact is rebuilt under the
+    config (a memo built under the default config would prove nothing),
+    and again afterwards, so none built under it outlives the test."""
+    from dbtwiz_spark.ops.common import clear_session_memos
+
+    prior = {k: spark.conf.get(k) for k in confs}
+    clear_session_memos()
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        failed = []
+        for name in GRAPH_FAMILY:
+            res = compare_entry(spark, name, SF_DIR, con)
+            if not res.ok:
+                failed.append(f"{name}: {res.detail}")
+        assert not failed, failed
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+        clear_session_memos()
 
 
 def test_entry_smoke(spark):
@@ -294,21 +367,15 @@ def test_round7_block2_invariants(spark):
         assert r.n_customers >= 1 and r.n_suppliers >= 1, (
             "every component of a bipartite edge set touches both sides"
         )
-    # one extra propagation round must not change the summary (converged)
-    # — same _cc_propagate the entry runs, so the test can never verify
-    # a different algorithm
-    from dbtwiz_spark.ops import graphs as G
-    from dbtwiz_spark.ops.common import views
+    # one extra propagation round must not change the labels (converged)
+    # — the same _min_propagate the entry runs, so the test can never
+    # verify a different algorithm
+    from dbtwiz_spark.ops.common import _min_propagate, views
 
-    edges = views(spark, SF_DIR)._artifacts["cc_edges"]
-    lbl = G._cc_propagate(edges, G._CC_ROUNDS + 1)
-    extra = {
-        (r.component, r.n_nodes)
-        for r in lbl.groupBy(F.col("lbl").alias("component"))
-        .agg(F.count("*").alias("n_nodes"))
-        .collect()
-    }
-    assert {(r.component, r.n_nodes) for r in cc} == extra
+    cat = views(spark, SF_DIR)
+    edges, lbl = cat._artifacts["cc_edges"], cat._artifacts["cc_labels"]
+    extra = _min_propagate(edges, lbl, F.col("lbl"), 1)
+    assert {tuple(r) for r in extra.collect()} == {tuple(r) for r in lbl.collect()}
     assert sum(r.n_nodes for r in cc) == edges.select("src").distinct().count()
 
     # --- Kendall tau: pair accounting + range
@@ -1050,15 +1117,17 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
     forms: localCheckpoint when the SparkContext has no checkpoint dir
     (the zero-I/O local default) and a reliable checkpoint() when Spark's
     own checkpoint dir is set (the executor-loss-safe cluster form). Run
-    _cc_propagate both ways on the same graph and compare the full label
-    tables; also pin that the reliable form actually WRITES checkpoint
+    the shared min-propagation loop (components labelling) both ways on
+    the same graph and compare the full label tables; also pin that the reliable form actually WRITES checkpoint
     data, that with the dir cleared again nothing more is written, and
     that Spark's ContextCleaner deletes the reliable files once the
     frames over them are gone (get_spark turns on cleanCheckpoints; left
     off, every artifact's files would stay for the life of the dir).
     The context's dir is restored afterwards: left set, it would turn
     every later iterative op in the session into reliable checkpoints."""
-    from dbtwiz_spark.ops import graphs as G
+    from pyspark.sql import functions as F
+
+    from dbtwiz_spark.ops.common import _min_propagate
 
     sc = spark.sparkContext
     prior = sc.getCheckpointDir()
@@ -1074,18 +1143,23 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
     )
     ckdir = tmp_path / "ck"
 
+    def labels():
+        init = edges.selectExpr("src AS node", "src AS lbl").distinct()
+        return {
+            (r.node, r.lbl)
+            for r in _min_propagate(edges, init, F.col("lbl"), 3).collect()
+        }
+
     def written():
         return {p for p in ckdir.rglob("*") if p.is_file()}
 
     try:
         set_checkpoint_dir(None)
-        local = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
+        local = labels()
         assert local == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 12)}
 
         sc.setCheckpointDir(str(ckdir))
-        reliable = {
-            (r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()
-        }
+        reliable = labels()
         assert reliable == local
         assert written(), "reliable mode must write checkpoint blocks to the dir"
         # the cleaner finds the files under the context's CURRENT dir, so
@@ -1095,7 +1169,7 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
         )
 
         set_checkpoint_dir(None)
-        again = {(r.node, r.lbl) for r in G._cc_propagate(edges, 3).collect()}
+        again = labels()
         assert again == local
         assert not written(), (
             "with no checkpoint dir set, _truncate must write no checkpoints"
@@ -1171,8 +1245,17 @@ def test_round10_invariants(spark):
     # --- dedup-cluster: fixpoint (labels are stable under one more
     # propagation round over the SAME mirrored edges) + validity (every
     # cluster keeps exactly one representative, the minimum doc_id)
+    from pyspark.sql import functions as F
+
+    from dbtwiz_spark.ops.common import _min_propagate
+    from dbtwiz_spark.ops.ext_pipeline import _cluster_edges
+
     out = CORPUS["ext-dedup-cluster"].fn(spark, SF_DIR)
     rows = out.collect()
+    labels = views(spark, SF_DIR)._artifacts["dedup_cluster_labels"]
+    extra = _min_propagate(_cluster_edges(spark, SF_DIR), labels, F.col("lbl"), 1)
+    assert {tuple(r) for r in extra.collect()} == {tuple(r) for r in labels.collect()}
+    assert len({r.cluster_id for r in rows}) < len(rows), "no multi-doc cluster"
     by_cluster: dict = {}
     for r in rows:
         by_cluster.setdefault(r.cluster_id, []).append(r)

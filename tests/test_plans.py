@@ -834,40 +834,77 @@ def test_every_corpus_plan_is_scale_clean(spark):
     )
 
 
-def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
+def test_round11_bfs_minplus_truncated_and_pairs_first(spark, monkeypatch):
     """Round-11 (VERDICT r10 item 4): the BFS / min-plus round state and
     the shared mirror-union edge builders route through common._truncate.
 
     Pins three properties the oracle hash can't see:
-    1. pairs-first edge builders — pr_edges / bfs_edges / minplus_edges
-       memoize a mirror over a TRUNCATED pair table, so the artifact's
-       plan is a union of two flat scans with NO join (a union whose
+    1. pairs-first edge builders — every mirrored artifact (pr_edges,
+       bounded_edges, cc_edges, kcore_edges) and the dedup-cluster edges
+       are a mirror over a TRUNCATED pair table (``common._mirror``), so
+       the plan is a union of two flat scans with NO join (a union whose
        branches each embed the pair query executes the orders x
        lineitem join twice; exchange reuse does not fire across union
        branches).
-    2. per-round truncation — the converged distance tables are flat
-       memoized scans (no join, no iteration tower in the plan), and the
-       loop source itself routes each round through _truncate (the
-       two-branch plan-doubling CC had).
+    2. per-round truncation — both entries build their distance tables
+       with ``common._min_propagate``, which truncates once per round
+       (the two-branch plan-doubling CC had) and stops one round after
+       the fixpoint; the converged tables are flat memoized scans (no
+       join, no iteration tower in the plan).
     3. memoization — a second invocation returns the same artifact
        object and identical rows (the CC label-table pattern)."""
-    import inspect
-
+    from dbtwiz_spark.ops import common
     from dbtwiz_spark.ops import graphs as G
     from dbtwiz_spark.ops.common import views
+    from dbtwiz_spark.ops.ext_pipeline import _cluster_edges
     from dbtwiz_spark.ops.registry import CORPUS
 
-    for fn in (G.graph_bfs_hops, G.graph_minplus_distance):
-        src = inspect.getsource(fn)
-        loop = src[src.index("for _ in range") :]
-        assert "_truncate(" in loop, f"{fn.__name__} round state untruncated"
+    real_truncate, real_propagate = common._truncate, common._min_propagate
+    truncated, propagated = [], []
 
+    def spy_truncate(df):
+        truncated.append(df)
+        return real_truncate(df)
+
+    def spy_propagate(edges, state, step, rounds):
+        propagated.append(rounds)
+        return real_propagate(edges, state, step, rounds)
+
+    # the path 0-1-...-6 from seed 0: hop k reaches node k
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(i + 1, i) for i in range(6)],
+        "src LONG, dst LONG",
+    )
+    seed = spark.createDataFrame([(0, 0)], "node LONG, dist LONG")
+    monkeypatch.setattr(common, "_truncate", spy_truncate)
+    three = common._min_propagate(path, seed, F.col("dist") + 1, 3)
+    assert {tuple(r) for r in three.collect()} == {(i, i) for i in range(4)}
+    assert len(truncated) == 3, "one truncation per round"
+    truncated.clear()
+    full = common._min_propagate(path, seed, F.col("dist") + 1, 20)
+    assert {tuple(r) for r in full.collect()} == {(i, i) for i in range(7)}
+    assert len(truncated) == 7, "six rounds move, the seventh stops the loop"
+    monkeypatch.undo()
+
+    cat = views(spark, SF_DIR)
+    for kind in ("bfs_dist", "minplus_dist"):
+        cat._artifacts.pop(kind, None)
+    monkeypatch.setattr(G, "_min_propagate", spy_propagate)
     bfs = CORPUS["graph-bfs-hops"].fn(spark, SF_DIR)
     mp = CORPUS["graph-minplus-distance"].fn(spark, SF_DIR)
-    cat = views(spark, SF_DIR)
+    monkeypatch.undo()
+    assert propagated == [G._BFS_HOPS, G._MINPLUS_HOPS]
+
+    CORPUS["graph-connected-components"].fn(spark, SF_DIR)
+    CORPUS["graph-k-core"].fn(spark, SF_DIR)
     G._pr_edges(cat)
-    for kind in ("bfs_edges", "minplus_edges", "pr_edges"):
-        eplan = _formatted(cat._artifacts[kind])
+    mirrored = {
+        kind: cat._artifacts[kind]
+        for kind in ("pr_edges", "bounded_edges", "cc_edges", "kcore_edges")
+    }
+    mirrored["dedup-cluster"] = _cluster_edges(spark, SF_DIR)
+    for kind, edges in mirrored.items():
+        eplan = _formatted(edges)
         assert "Join" not in eplan, f"{kind} re-embeds the pair join"
         assert "Union" in eplan, f"{kind} lost the mirror union"
 
