@@ -1118,8 +1118,9 @@ def test_truncate_reliable_matches_local(spark, tmp_path):
     (the zero-I/O local default) and a reliable checkpoint() when Spark's
     own checkpoint dir is set (the executor-loss-safe cluster form). Run
     the shared min-propagation loop (components labelling) both ways on
-    the same graph and compare the full label tables; also pin that the reliable form actually WRITES checkpoint
-    data, that with the dir cleared again nothing more is written, and
+    the same graph and compare the full label tables; also pin that the
+    reliable form actually WRITES checkpoint data, that with the dir
+    cleared again nothing more is written, and
     that Spark's ContextCleaner deletes the reliable files once the
     frames over them are gone (get_spark turns on cleanCheckpoints; left
     off, every artifact's files would stay for the life of the dir).
