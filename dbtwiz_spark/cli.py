@@ -1301,6 +1301,14 @@ def cmd_config(args) -> int:
     return 0
 
 
+def _positive_int(text: str) -> int:
+    """argparse type of a count that must be at least 1."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="dbtwiz_spark")
     sub = p.add_subparsers(dest="command", required=True)
@@ -1329,8 +1337,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "untouched parents from prod)")
     b.add_argument("--last", action="store_true",
                    help="replay the previous --select/--exclude")
-    b.add_argument("--threads", type=int, default=1,
-                   help="run independent models concurrently (dbt --threads)")
+    b.add_argument("--threads", type=_positive_int, default=1,
+                   help="run up to this many independent models at once "
+                        "(dbt --threads)")
     b.add_argument("--full-refresh", "-f", action="store_true",
                    dest="full_refresh",
                    help="drop and recreate incremental tables from this "

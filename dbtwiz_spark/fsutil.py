@@ -10,7 +10,7 @@ import time
 from pathlib import Path
 
 # Per-call staging-name uniqueness: pid alone is NOT unique within a
-# process — Runner._run_parallel materializes models from a thread pool,
+# process — Runner.run materializes models from a thread pool,
 # and two threads staging the same target under one `.tmp.<pid>` name
 # interleave their bytes, publishing a torn file through the very
 # machinery meant to prevent tearing (round-9 judge find). pid +

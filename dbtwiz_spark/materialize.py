@@ -181,8 +181,8 @@ class Warehouse:
         self._pending_views: dict[str, str] = dict(self.views)
         self._dropped_views: set[str] = set()
         # Registry mutation+persist is a read-modify-write of shared
-        # state: Runner._run_parallel materializes independent models
-        # from a thread pool, and two unlocked concurrent
+        # state: Runner.run materializes independent models from a
+        # thread pool, and two unlocked concurrent
         # create_view/_unview calls interleave at every step — pending
         # edits applied against a stale disk read, or (pre-fix) torn
         # staging files. RLock, not Lock: _unview persists while already

@@ -1074,20 +1074,17 @@ def ext_ann_lsh_bucket(spark, sf_dir):
     )
 
 
-def _arr_dot(a, b):
-    """Map-side double dot product of two array columns (zip_with+aggregate:
-    one JVM pass, no explode)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _centroid_scores_sql(vec_col: str, cents_col: str) -> str:
-    """SQL text of the per-row (score, neg_cell) struct array vs every
-    centroid — see _centroid_scores. Exposed as a string so the probe
-    selectors can compose it into ONE parsed expression."""
+    """SQL text of the per-row array of (score, neg_cell) structs vs every
+    centroid — entirely map-side (nested higher-order functions, no
+    explode). Centroids arrive unit-normalized (`_centroids_as_array`), so
+    score is a plain dot.
+
+    neg_cell makes struct ordering encode the tie-break: max/descending on
+    the struct means highest score first, then smallest cell. A string, so
+    the assignment and the probe selector each parse ONE expression (the
+    nested two-level Column lambdas were the most py4j-expensive
+    expression in the ANN family)."""
     return (
         f"transform({cents_col}, c -> named_struct("
         f"'score', aggregate(zip_with({vec_col}, c.centroid, "
@@ -1095,20 +1092,6 @@ def _centroid_scores_sql(vec_col: str, cents_col: str) -> str:
         f"0.0D, (acc, x) -> acc + x), "
         f"'neg_cell', -c.cell))"
     )
-
-
-def _centroid_scores(vec_col: str, cents_col: str):
-    """Per-row array of (score, neg_cell) structs vs every centroid —
-    entirely map-side (nested higher-order functions, no explode). Centroids
-    arrive unit-normalized (`_centroids_as_array`), so score is a plain dot.
-
-    neg_cell makes struct ordering encode the tie-break: max/descending on
-    the struct means highest score first, then smallest cell.
-
-    One parsed SQL string since round 17 (the nested two-level Column
-    lambdas were the most py4j-expensive expression in the ANN family);
-    identical operators and field names, outputs verified bit-identical."""
-    return F.expr(_centroid_scores_sql(vec_col, cents_col))
 
 
 def _centroids_as_array(centroids: DataFrame) -> DataFrame:
@@ -1121,7 +1104,7 @@ def _centroids_as_array(centroids: DataFrame) -> DataFrame:
     with_norm = centroids.select(
         "cell",
         "centroid",
-        F.sqrt(_arr_dot(F.col("centroid"), F.col("centroid"))).alias("nrm"),
+        _norm_expr("centroid").alias("nrm"),
     )
     unit = with_norm.select(
         "cell",
@@ -1140,7 +1123,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     centroids ride along as one broadcast array row: the assignment is a
     map-side argmax (array_max over (score, neg_cell) structs) — no window,
     no shuffle, no K× row blowup."""
-    best = F.array_max(_centroid_scores("embedding", "cents"))
+    best = F.expr(f"array_max({_centroid_scores_sql('embedding', 'cents')})")
     return (
         emb.crossJoin(F.broadcast(_centroids_as_array(centroids)))
         .withColumn("best", best)
@@ -1151,7 +1134,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
             "embedding",
             # candidate norm computed once here, carried in the index so the
             # search never recomputes it per (query, candidate) pair
-            F.sqrt(_arr_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+            _norm_expr("embedding").alias("nrm"),
         )
     )
 
@@ -1202,6 +1185,41 @@ def ivf_index(emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 1):
     return (ivf_assign(emb, centroids).persist(), centroids, cents_row)
 
 
+def _ivf_probe(queries: DataFrame, cents_row: DataFrame, nprobe: int) -> DataFrame:
+    """One row per (query, probed cell), carrying the query's norm. Probe
+    selection is map-side: sort the per-query (score, neg_cell) array
+    descending (ascending sort + reverse ⇒ score desc, cell asc on ties)
+    and slice the first nprobe cells — no window, no shuffle. The query
+    norm is computed once per query row, not per (query, candidate) pair;
+    candidate norms come precomputed from the index (nrm)."""
+    probe_cells = F.expr(
+        f"transform(slice(reverse(array_sort("
+        f"{_centroid_scores_sql('q_embedding', 'cents')})), 1, {nprobe}), "
+        f"s -> -s.neg_cell)"
+    )
+    return queries.crossJoin(F.broadcast(cents_row)).select(
+        "q_vec_id",
+        "q_embedding",
+        _norm_expr("q_embedding").alias("qn"),
+        F.explode(probe_cells).alias("cell"),
+    )
+
+
+def _ivf_score_topk(probed: DataFrame, index: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of every query against its probed cells' members, and
+    each query's top k. The (sampled, small) probed query set is broadcast:
+    the cell join is a broadcast hash join against the index, and the
+    16-value cell key never becomes a shuffle key."""
+    cosine = _dot_expr("q_embedding", "embedding") / (F.col("qn") * F.col("nrm"))
+    pairs = (
+        F.broadcast(probed).join(index, "cell")
+        .filter(F.col("q_vec_id") != F.col("vec_id"))
+        .select("q_vec_id", F.col("vec_id").alias("c_vec_id"), cosine.alias("cosine"))
+    )
+    wk = Window.partitionBy("q_vec_id").orderBy(F.col("cosine").desc(), F.col("c_vec_id"))
+    return pairs.withColumn("rnk", F.row_number().over(wk)).filter(F.col("rnk") <= k)
+
+
 def ivf_topk(
     ivf: tuple, queries: DataFrame, k: int = 10, nprobe: int = 4
 ) -> DataFrame:
@@ -1211,48 +1229,7 @@ def ivf_topk(
     by cell; a query touches nprobe/n_cells of the corpus instead of all
     of it."""
     index, _centroids, cents_row = ivf
-    # probe selection is map-side too: sort the per-query (score, neg_cell)
-    # array descending (ascending sort + reverse ⇒ score desc, cell asc on
-    # ties) and slice the first nprobe cells — no window, no shuffle; ONE
-    # parsed SQL expression (round 17, plan identical)
-    probe_cells = F.expr(
-        f"transform(slice(reverse(array_sort("
-        f"{_centroid_scores_sql('q_embedding', 'cents')})), 1, {nprobe}), "
-        f"s -> -s.neg_cell)"
-    )
-    # the query norm is computed ONCE PER QUERY ROW here (round-16: the
-    # previous form re-folded it per (query, candidate) PAIR — same fold,
-    # same operands, same IEEE result, ~nprobe/n_cells x corpus fewer
-    # evaluations); candidate norms come precomputed from the index (nrm)
-    nq = F.expr(
-        "sqrt(aggregate(zip_with(q_embedding, q_embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, x) -> acc + x))"
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(cents_row))
-        .select(
-            "q_vec_id",
-            "q_embedding",
-            nq.alias("qn"),
-            F.explode(probe_cells).alias("cell"),
-        )
-    )
-    dot = _dot_expr("q_embedding", "embedding")
-    # broadcast the (sampled, small) probed query set: the cell join is a
-    # broadcast hash join against the persisted index — the 16-value cell key
-    # never becomes a shuffle key.
-    pairs = (
-        F.broadcast(probed).join(index, "cell")
-        .filter(F.col("q_vec_id") != F.col("vec_id"))
-        .select(
-            "q_vec_id",
-            F.col("vec_id").alias("c_vec_id"),
-            (dot / (F.col("qn") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("q_vec_id").orderBy(F.col("cosine").desc(), F.col("c_vec_id"))
-    return pairs.withColumn("rnk", F.row_number().over(wk)).filter(F.col("rnk") <= k)
+    return _ivf_score_topk(_ivf_probe(queries, cents_row, nprobe), index, k)
 
 
 def ivf_index_write(wh, name: str, emb: DataFrame, n_cells: int = 16) -> None:
@@ -1285,39 +1262,13 @@ def ivf_topk_from_table(
     probed-cell set, which triggers Spark's dynamic partition pruning — only
     probed cells' files are scanned, no driver-side collect needed
     (asserted in tests/test_plans.py)."""
-    centroids = wh.read(f"{name}__centroids")
-    probe_cells = F.expr(
-        f"transform(slice(reverse(array_sort("
-        f"{_centroid_scores_sql('q_embedding', 'cents')})), 1, {nprobe}), "
-        f"s -> -s.neg_cell)"
-    )
-    # query norm once per query row, not per pair (the ivf_topk rationale)
-    nq = F.expr(
-        "sqrt(aggregate(zip_with(q_embedding, q_embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, x) -> acc + x))"
-    )
-    probed = queries.crossJoin(F.broadcast(_centroids_as_array(centroids))).select(
-        "q_vec_id", "q_embedding", nq.alias("qn"), F.explode(probe_cells).alias("cell")
-    )
-    index = wh.read(name)
+    cents_row = _centroids_as_array(wh.read(f"{name}__centroids"))
+    probed = _ivf_probe(queries, cents_row, nprobe)
     # partition filter: only probed cells are scanned. The IN-list predicate
     # is pushed to the partitioned scan (asserted in tests/test_plans.py).
     distinct_cells = probed.select("cell").distinct()
-    pruned = index.join(F.broadcast(distinct_cells), "cell", "left_semi")
-    dot = _dot_expr("q_embedding", "embedding")
-    pairs = (
-        F.broadcast(probed)
-        .join(pruned, "cell")
-        .filter(F.col("q_vec_id") != F.col("vec_id"))
-        .select(
-            "q_vec_id",
-            F.col("vec_id").alias("c_vec_id"),
-            (dot / (F.col("qn") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("q_vec_id").orderBy(F.col("cosine").desc(), F.col("c_vec_id"))
-    return pairs.withColumn("rnk", F.row_number().over(wk)).filter(F.col("rnk") <= k)
+    pruned = wh.read(name).join(F.broadcast(distinct_cells), "cell", "left_semi")
+    return _ivf_score_topk(probed, pruned, k)
 
 
 @register("ext-ann-ivf", oracle=None)

@@ -10,8 +10,10 @@ materializer according to the model config, in topological order.
 
 from __future__ import annotations
 
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 from dbtwiz_spark.macros import render
@@ -172,134 +174,62 @@ class Runner:
         full_refresh: bool = False,
         fail_fast: bool = False,
     ) -> list[RunResult]:
+        """Build the selected models in topological order, at most
+        ``threads`` at a time (dbt's --threads): each pass over the order
+        starts the first ready model while a slot is free, so width 1 runs
+        the serial order. A failed model's downstream is SKIPPED (dbt
+        semantics), not built on a missing table; an ephemeral model's own
+        ``skipped`` does not cascade. Under ``fail_fast`` no model starts
+        after the first error: in-flight models finish and the rest report
+        skipped. Every model runs on a pool worker with a copy of the
+        caller's local properties (job group, scheduler pool) and tags, so
+        its jobs are attributed to the caller at every width."""
         order = self.manifest.select(selector, state=state, exclude=exclude)
         self._resolve_cache = self._resolve_map(order)
         self._register_unbuilt(order)
-        if threads > 1:
-            return self._run_parallel(order, threads, full_refresh=full_refresh,
-                                      fail_fast=fail_fast)
-        results = []
         selected = set(order)
-        failed_or_skipped: set[str] = set()
-        for name in order:
-            model = self.manifest.models[name]
-            if any(
-                p in failed_or_skipped
-                for p in self.manifest.parent_map.get(name, ())
-                if p in selected
-            ):
-                # dbt semantics, same as the parallel scheduler: a failed
-                # model's downstream is SKIPPED, not attempted against a
-                # missing table (which would surface as a confusing
-                # unresolved-relation error). Pinned equal to the parallel
-                # path by the random-DAG property test.
-                failed_or_skipped.add(name)
-                results.append(RunResult(name, "skipped", error="upstream failed"))
-                continue
-            try:
-                results.append(self._run_model(model, full_refresh=full_refresh))
-            except Exception as e:  # noqa: BLE001 — per-model isolation, like dbt
-                failed_or_skipped.add(name)
-                results.append(RunResult(name, "error", error=f"{type(e).__name__}: {e}"))
-                if fail_fast:
-                    # dbt --fail-fast: stop scheduling after the first
-                    # error; everything not yet attempted reports skipped
-                    done = {r.model for r in results}
-                    results.extend(
-                        RunResult(rest, "skipped", error="fail-fast")
-                        for rest in order if rest not in done
-                    )
-                    break
-        return results
-
-    def _run_parallel(
-        self, order: list[str], threads: int, full_refresh: bool = False,
-        fail_fast: bool = False,
-    ) -> list[RunResult]:
-        """Dependency-aware thread-pooled execution (dbt's --threads):
-        independent models run concurrently — on a cluster that is the
-        difference between one job at a time and a saturated scheduler.
-        Spark sessions are thread-safe for concurrent job submission; the
-        FAIR-vs-FIFO choice stays a Spark conf. A failed model SKIPS its
-        downstream models (dbt semantics) rather than building on top of a
-        missing table."""
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-        selected = set(order)
-        pending = {
-            n: {p for p in self.manifest.parent_map.get(n, ()) if p in selected}
+        parents = {
+            n: [p for p in self.manifest.parent_map.get(n, ()) if p in selected]
             for n in order
         }
         results: dict[str, RunResult] = {}
-        failed_or_skipped: set[str] = set()
-
-        submitted: set[str] = set()
-
-        def runnable() -> list[str]:
-            return [
-                n for n, deps in pending.items()
-                if not deps and n not in results and n not in submitted
-            ]
-
-        def finish(name: str, res: RunResult) -> None:
-            results[name] = res
-            if res.status == "error":
-                failed_or_skipped.add(name)
-            for n, deps in pending.items():
-                deps.discard(name)
-
-        running: dict = {}
+        failed: set[str] = set()  # errored, or skipped below an error
+        running: dict = {}  # future -> model name
         halted = False
         with ThreadPoolExecutor(max_workers=threads) as pool:
-            while len(results) < len(order):
-                if halted and not running:
-                    # fail-fast drain complete: everything unfinished skips
-                    for n in order:
-                        if n not in results:
-                            finish(n, RunResult(n, "skipped",
-                                                error="fail-fast"))
-                    break
-                # cascade skips: a model whose parent failed/was skipped
-                for n in list(pending):
-                    if n in results or n in submitted:
+            while True:
+                for name in order if not halted else ():
+                    if name in results or name in running.values():
                         continue
-                    parents = {
-                        p
-                        for p in self.manifest.parent_map.get(n, ())
-                        if p in selected
-                    }
-                    if parents & failed_or_skipped:
-                        failed_or_skipped.add(n)
-                        finish(n, RunResult(n, "skipped",
-                                            error="upstream failed"))
-                for n in ([] if halted else runnable()):
-                    submitted.add(n)
-                    model = self.manifest.models[n]
-
-                    def job(m=model):
-                        try:
-                            return self._run_model(m, full_refresh=full_refresh)
-                        except Exception as e:  # noqa: BLE001
-                            return RunResult(
-                                m.name, "error", error=f"{type(e).__name__}: {e}"
-                            )
-
-                    running[pool.submit(job)] = n
+                    if any(p in failed for p in parents[name]):
+                        failed.add(name)
+                        results[name] = RunResult(name, "skipped", error="upstream failed")
+                    elif len(running) < threads and all(p in results for p in parents[name]):
+                        # one inheritable_thread_target call per model: each
+                        # call clones the caller's properties once, and a
+                        # clone shared by concurrent models would let one
+                        # model's job group or execution id leak into another
+                        target = inheritable_thread_target(self.spark)(self._attempt)
+                        running[pool.submit(target, name, full_refresh)] = name
                 if not running:
-                    if len(results) < len(order) and not runnable():
-                        # acyclic selections always progress; guard anyway
-                        for n in order:
-                            if n not in results:
-                                finish(n, RunResult(n, "error",
-                                                    error="unschedulable"))
-                    continue
+                    break
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    res = fut.result()
-                    finish(running.pop(fut), res)
-                    if fail_fast and res.status == "error":
-                        halted = True  # in-flight models drain, no new starts
-        return [results[n] for n in order]
+                    name = running.pop(fut)
+                    results[name] = fut.result()
+                    if results[name].status == "error":
+                        failed.add(name)
+                        halted = halted or fail_fast
+        return [results.get(n) or RunResult(n, "skipped", error="fail-fast") for n in order]
+
+    def _attempt(self, name: str, full_refresh: bool) -> RunResult:
+        """One model's run; its exception becomes an error result, so one
+        model's failure never stops the others (per-model isolation, like
+        dbt)."""
+        try:
+            return self._run_model(self.manifest.models[name], full_refresh=full_refresh)
+        except Exception as e:  # noqa: BLE001
+            return RunResult(name, "error", error=f"{type(e).__name__}: {e}")
 
     def _run_model(self, model: Model, full_refresh: bool = False) -> RunResult:
         if model.materialized == "ephemeral":

@@ -851,10 +851,14 @@ def test_parallel_scheduler_matches_serial_on_random_dags(spark, tmp_path):
             assert ser[m] == want, f"trial {trial} {m}: {ser[m]} != {want}"
 
 
-def test_fail_fast_stops_scheduling_in_both_modes(spark, tmp_path):
+def test_fail_fast_stops_scheduling_in_both_modes(spark, tmp_path, monkeypatch):
     """dbt --fail-fast: after the first error, nothing new is attempted —
     remaining models report skipped ('fail-fast') in serial AND parallel
-    runs; without the flag, independent models still build."""
+    runs, while a model already in flight finishes; without the flag,
+    independent models still build."""
+    import threading
+    import time
+
     def make() -> Manifest:
         man = Manifest()
         man.add_model(Model("ff_a", "SELECT 1 AS x", materialized="table"))
@@ -879,14 +883,30 @@ def test_fail_fast_stops_scheduling_in_both_modes(spark, tmp_path):
     after = [m for m, _ in res[[m for m, _ in res].index("ff_bad") + 1:]]
     assert all(statuses[m] == "skipped" for m in after) and after
 
-    # parallel fail-fast: error present, no model left unaccounted, and
-    # at least the scheduling stopped (skipped or already-running success)
-    res = {r.model: r.status for r in Runner(
+    # parallel fail-fast, made deterministic: ff_a holds its slot until
+    # well after ff_bad has failed, so ff_c and ff_d are still waiting for
+    # a slot when the error arrives and must never start
+    failed = threading.Event()
+    real = Runner._run_model
+
+    def run_model(self, model, full_refresh=False):
+        if model.name == "ff_a":
+            assert failed.wait(60)
+            time.sleep(1.0)
+        try:
+            return real(self, model, full_refresh=full_refresh)
+        except Exception:
+            failed.set()
+            raise
+
+    monkeypatch.setattr(Runner, "_run_model", run_model)
+    res = {r.model: r for r in Runner(
         spark, make(), Warehouse(spark, str(tmp_path / "w2"))
     ).run("*", threads=2, fail_fast=True)}
-    assert res["ff_bad"] == "error"
-    assert set(res) == {"ff_a", "ff_bad", "ff_c", "ff_d"}
-    assert all(s in ("success", "error", "skipped") for s in res.values())
+    assert {m: r.status for m, r in res.items()} == {
+        "ff_a": "success", "ff_bad": "error",
+        "ff_c": "skipped", "ff_d": "skipped"}
+    assert res["ff_c"].error == res["ff_d"].error == "fail-fast"
 
 
 def test_atomic_write_text_crash_leaves_old_state(tmp_path, fs_faults):

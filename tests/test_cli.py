@@ -225,6 +225,10 @@ def test_exclude_last_and_save_state(spark, tmp_path, capsys):
             yaml.safe_dump({"materialized": "table", "tags": tags})
         )
     wh = str(tmp_path / "wh5")
+    # --threads counts the models in flight: below 1 is a usage error
+    with pytest.raises(SystemExit):
+        main(["build", "--project", str(proj), "--warehouse", wh, "--threads", "0"])
+    assert "must be at least 1" in capsys.readouterr().err
     # --exclude subtracts the tagged model (reference: exclude tag:no_backfill)
     assert main(["build", "--project", str(proj), "--warehouse", wh,
                  "--exclude", "tag:no_backfill"]) == 0

@@ -4,8 +4,6 @@ engine's golden-output test suite)."""
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 import pytest
 
 from dbtwiz_spark.ops.registry import CORPUS
@@ -28,29 +26,10 @@ GRAPH_FAMILY = (
 )
 
 
-class _OracleMemo:
-    """A DuckDB connection that keeps the result of each GRAPH_FAMILY
-    oracle, so re-checking an entry under another Spark config does not
-    run its oracle again: the recursive CC, HITS and k-core oracles take
-    52, 22 and 7 s at sf0.001 (4 cores), and their results do not depend
-    on Spark."""
-
-    def __init__(self, con):
-        self.con, self.results = con, {}
-        self.keep = {CORPUS[n].oracle for n in GRAPH_FAMILY}
-
-    def execute(self, sql):
-        if sql not in self.keep:
-            return self.con.execute(sql)
-        if sql not in self.results:
-            self.results[sql] = SimpleNamespace(df=self.con.execute(sql).df().copy)
-        return self.results[sql]
-
-
 @pytest.fixture(scope="module")
 def con():
     c = duckdb_con(SF_DIR)
-    yield _OracleMemo(c)
+    yield c
     c.close()
 
 

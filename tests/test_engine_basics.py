@@ -328,7 +328,7 @@ def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
         assert c.clear_memos() == 1
 
 
-def test_plan_sig_changes_on_in_place_file_overwrite(spark, tmp_path):
+def test_generation_stamp_changes_on_in_place_file_overwrite(spark, tmp_path):
     """A backing file OVERWRITTEN IN PLACE — same path, new rows, the
     standard re-run-writer rewrite — keeps the path set identical, so a
     path-only key would keep serving the superseded artifact. The
@@ -368,7 +368,7 @@ def test_plan_sig_changes_on_in_place_file_overwrite(spark, tmp_path):
     new.release()
 
 
-def test_plan_sig_stats_survive_percent_encoded_paths(spark, tmp_path):
+def test_generation_stamp_survives_percent_encoded_paths(spark, tmp_path):
     """Spark percent-encodes spaces and specials in file URIs; a stamp
     taken from those URIs fails to stat and degrades every such file to
     "missing", so two GENERATIONS of a table in a space-named scale dir

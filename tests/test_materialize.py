@@ -587,12 +587,14 @@ class _JobTags:
         self.sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_table_model_run_job_budget(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("threads", [1, 2])
+def test_table_model_run_job_budget(spark, tmp_path, monkeypatch, threads):
     """A table model's run pays for its own source's schema inference and
     its write plus the audit's count, nothing more: the audit reads with the
     sidecar's schema (no inference job), the published table is never
     counted again, and sources outside the selection's closure are never
-    read."""
+    read. At every width the model runs on a pool worker, and its jobs stay
+    in the caller's job group."""
     from dbtwiz_spark.manifest import Manifest, Model, Source
     from dbtwiz_spark.runner import Runner
 
@@ -614,12 +616,17 @@ def test_table_model_run_job_budget(spark, tmp_path, monkeypatch):
         tags.set("published")
 
     monkeypatch.setattr(Warehouse, "_store_schema", store_then_tag)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     try:
         tags.set("run")
-        (res,) = Runner(spark, man, wh).run("t_a")
+        (res,) = Runner(spark, man, wh).run("t_a", threads=threads)
     finally:
         tags.clear()
     assert (res.status, res.rows) == ("success", 20)
+    # the model's write ran under the caller's group: no job of the run,
+    # the pool worker's included, escaped into the ungrouped jobs
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     # the tagging sees an inference job: the source the model reads has one
     assert tags.jobs(f"read:{paths['a']}")
     assert tags.jobs(f"read:{paths['b']}") == tags.jobs(f"read:{paths['c']}") == []
@@ -1542,8 +1549,8 @@ def test_corrupt_view_registry_parked_not_bricked(spark, tmp_path, capsys):
 
 
 def test_view_registry_thread_stress(spark, tmp_path):
-    """The round-9 judge find: Runner._run_parallel materializes models
-    from a thread pool, and two concurrent view materializations used to
+    """A --threads build materializes models from Runner.run's thread
+    pool, and two concurrent view materializations used to
     stage the registry under ONE '.tmp.<pid>' name — interleaved bytes,
     torn registry, SQL lost to a .corrupt parking file. Under the
     Warehouse view lock + per-call staging names, N threads creating
