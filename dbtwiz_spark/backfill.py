@@ -276,39 +276,72 @@ def run_backfill(
     parallelism=1 mode; chunks always run in date order so self-dependent
     models see their own past data.
 
-    ``task_index``/``task_count`` shard the chunk list across parallel
-    workers (reference: Cloud Run task fan-out, commands/build.py:81-92 —
-    each task builds its own date range): worker i runs chunks
-    i, i+count, i+2*count, ... Intended for independent-partition models
-    (insert_overwrite); self-dependent models must keep the single-worker
-    date order.
+    Two fan-outs shard the chunks across parallel workers (reference:
+    Cloud Run task fan-out, commands/build.py:81-92 — each task builds its
+    own dates), under ONE rule: worker ``task_index`` (default: the
+    Cloud Run task index from the environment) runs the chunks it owns,
+    and a chunk's owner depends only on the chunk, so every worker of a
+    ``--retry`` pass computes the same partition of the failures however
+    many of them the other workers have already cleared.
 
-    ``task_ranges`` is the reference's EXPLICIT fan-out
-    (commands/build.py:83-91 + parse_task_ranges): instead of slicing a
-    computed chunk list, each worker owns a caller-chosen date range —
-    worker ``task_index`` backfills exactly ``task_ranges[task_index]``
-    (chunked by batch_size within it). Mutually exclusive with
-    ``task_count`` — the two dispatch the index differently, and
-    combining them would silently drop ranges. Retries re-run only the
-    failed chunks that fall inside this worker's range."""
+    - ``task_count``: the owner is the chunk's batch slot from ``first``
+      modulo ``task_count`` — on a first run worker i runs chunks
+      i, i+count, i+2*count, ...
+    - ``task_ranges`` (the reference's EXPLICIT fan-out,
+      commands/build.py:83-91 + parse_task_ranges): the owner is the
+      range containing the chunk's START date; on a first run worker i
+      backfills ``task_ranges[i]``, chunked by batch_size within it.
+
+    The two are mutually exclusive (they dispatch the index differently).
+    Intended for independent-partition models (insert_overwrite);
+    self-dependent models must keep the single-worker date order."""
     if batch_size is None:
         batch_size = (
             batch_size_from_bytes(bytes_per_day) if bytes_per_day else DEFAULT_BATCH_SIZE
         )
-    if task_ranges is not None:
-        if task_count is not None:
-            raise ValueError("task_ranges and task_count are mutually exclusive")
+    if task_ranges is not None and task_count is not None:
+        raise ValueError("task_ranges and task_count are mutually exclusive")
+    n_tasks = len(task_ranges) if task_ranges is not None else task_count
+    if n_tasks is None and task_index is not None:
+        # silently running the FULL chunk list when the caller believes it
+        # runs one shard means N workers each backfill everything — N×
+        # cost and concurrent writes to the same partitions
+        raise ValueError("task_index given without task_count")
+    if n_tasks is not None:
         idx = task_index
         if idx is None:
             import os
 
             idx = int(os.environ.get("CLOUD_RUN_TASK_INDEX", "0"))
-        if not (0 <= idx < len(task_ranges)):
-            raise ValueError(
-                f"task_index {idx} out of bounds for {len(task_ranges)} task ranges"
-            )
+        if not (0 <= idx < n_tasks):
+            raise ValueError(f"task_index {idx} out of bounds for {n_tasks} tasks")
+    if task_ranges is not None:
+        ordered = sorted(task_ranges)
+        for (a1, b1), (a2, b2) in zip(ordered, ordered[1:]):
+            if a2 <= b1:
+                # a date in two ranges has no single owner: the later
+                # worker would drop its chunks starting there, and the
+                # dates those chunks reach past the earlier range would
+                # never be built
+                raise ValueError(
+                    f"task ranges {a1}..{b1} and {a2}..{b2} overlap"
+                )
+
+        def owner(c):
+            # start-date containment, so a failed chunk that straddles a
+            # range boundary (recorded by an earlier run with different
+            # sharding) belongs to exactly ONE worker
+            for i, (a, b) in enumerate(task_ranges):
+                if a <= c[0] <= b:
+                    return i
+            return None
+
         first, last = task_ranges[idx]
-        ranges_idx = idx
+    else:
+
+        def owner(c):
+            return ((c[0] - first).days // batch_size) % task_count
+
     def gathered_failures() -> list[tuple[date, date]]:
         """Failed chunks merged across the base journal AND every per-task
         sibling (``<stem>.taskN.json``): a retry must see failures no
@@ -349,22 +382,9 @@ def run_backfill(
         if (retry_failed_only and journal)
         else chunk_date_range(first, last, batch_size)
     )
-    if task_ranges is not None:
+    if n_tasks is not None:
         if retry_failed_only:
-            # a range-owning worker retries only failures it OWNS — the
-            # failure union spans every worker's journal, and re-running
-            # another worker's chunks would double-write its partitions.
-            # Ownership is by START-date containment, not full containment:
-            # a failed chunk that straddles a range boundary (recorded by
-            # an earlier run with different sharding) must belong to
-            # exactly ONE worker, not be dropped by all of them.
-            def _owner(c):
-                for i, (a, b) in enumerate(task_ranges):
-                    if a <= c[0] <= b:
-                        return i
-                return None
-
-            orphans = [c for c in chunks if _owner(c) is None]
+            orphans = [c for c in chunks if owner(c) is None]
             if orphans:
                 # every worker sees the same orphan set and fails loudly —
                 # exiting 0 with the failure still in the journal would
@@ -375,56 +395,29 @@ def run_backfill(
                     f"{[f'{a}..{b}' for a, b in orphans]}"
                 )
             # differently-owned chunks that OVERLAP in dates (possible when
-            # the journal holds failures from runs with different sharding)
-            # would be retried by two workers concurrently — a double-write
-            # of the overlapping partitions. Every worker sees the same
-            # global failure set, so all fail loudly; retry unsharded.
-            owned = [(c, _owner(c)) for c in chunks]
+            # the journal holds failures from runs with different sharding
+            # or batch sizes) would be retried by two workers concurrently —
+            # a double-write of the overlapping partitions. Every worker
+            # sees the same global failure set, so all fail loudly.
+            owned = [(c, owner(c)) for c in chunks]
             for i, (c1, o1) in enumerate(owned):
                 for c2, o2 in owned[i + 1:]:
                     if o1 != o2 and c1[0] <= c2[1] and c2[0] <= c1[1]:
                         raise ValueError(
                             f"failed chunks {c1[0]}..{c1[1]} and "
                             f"{c2[0]}..{c2[1]} overlap but belong to "
-                            f"different task ranges — concurrent retries "
-                            f"would double-write the overlap; retry without "
-                            f"--task-ranges"
+                            f"different workers — concurrent retries "
+                            f"would double-write the overlap; retry "
+                            f"unsharded"
                         )
-            chunks = [c for c in chunks if _owner(c) == ranges_idx]
-        if journal is not None:
-            # per-worker journal isolation, as in task_count sharding (the
-            # journal rewrite is whole-file read-modify-write). Suffixed
-            # only AFTER gathered_failures ran: that closure globs sibling
-            # task journals off the BASE path — suffixing first would make
-            # a retry see only this worker's own journal.
-            journal = BackfillJournal(
-                journal.path.with_name(
-                    f"{journal.path.stem}.task{ranges_idx}{journal.path.suffix}"
-                )
-            )
-    if task_index is not None and task_count is None and task_ranges is None:
-        # silently running the FULL chunk list when the caller believes it
-        # runs one shard means N workers each backfill everything — N×
-        # cost and concurrent writes to the same partitions
-        raise ValueError("task_index given without task_count")
-    if task_count is not None:
-        idx = task_index
-        if idx is None:
-            import os
-
-            idx = int(os.environ.get("CLOUD_RUN_TASK_INDEX", "0"))
-        if not (0 <= idx < task_count):
-            raise ValueError(
-                f"task_index {idx} out of bounds for task_count {task_count}"
-            )
-        chunks = chunks[idx::task_count]
+        chunks = [c for c in chunks if owner(c) == idx]
         if journal is not None:
             # one journal PER worker for RECORDING: the journal rewrite is
-            # read-modify-write of the whole file, so N parallel workers
-            # sharing one path would interleave and clobber each other's
-            # status rows. Retries read the union of base + all task
-            # journals (gathered_failures above) and re-shard it, so the
-            # retry topology is free to differ from the failing run's.
+            # read-modify-write of the whole file, so parallel workers
+            # sharing one path would clobber each other's status rows.
+            # Suffixed only AFTER gathered_failures ran: that closure globs
+            # sibling task journals off the BASE path — suffixing first
+            # would make a retry see only this worker's own journal.
             journal = BackfillJournal(
                 journal.path.with_name(
                     f"{journal.path.stem}.task{idx}{journal.path.suffix}"

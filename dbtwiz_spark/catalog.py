@@ -16,6 +16,7 @@ same way DuckDB's ``CAST(ts_ns AS TIMESTAMP)`` does).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,13 +52,24 @@ class Catalog:
     def _stat_tables(self) -> tuple:
         """Each table file's (size, mtime_ns), None where it is missing:
         the input GENERATION every cached table and artifact derives from.
-        A parquet table that is a directory is stamped by the directory's
-        own stat, which sees files added or removed, not rewritten."""
+        A parquet table that is a directory is stamped by every file under
+        it (hive ``key=value/`` levels included): the directory's own stat
+        sees files added or removed, not a part file rewritten in place."""
         stamps = []
         for name in TABLES:
+            path = os.path.join(self.sf_dir, f"{name}.parquet")
             try:
-                st = os.stat(os.path.join(self.sf_dir, f"{name}.parquet"))
-                stamps.append((st.st_size, st.st_mtime_ns))
+                st = os.stat(path)
+                if not stat.S_ISDIR(st.st_mode):
+                    stamps.append((st.st_size, st.st_mtime_ns))
+                    continue
+                files = []
+                for root, dirs, names in os.walk(path):
+                    dirs.sort()
+                    for f in sorted(names):
+                        fst = os.stat(os.path.join(root, f))
+                        files.append((root, f, fst.st_size, fst.st_mtime_ns))
+                stamps.append(tuple(files))
             except OSError:
                 stamps.append(None)
         return tuple(stamps)

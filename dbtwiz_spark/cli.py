@@ -1393,13 +1393,18 @@ def build_parser() -> argparse.ArgumentParser:
     bf.add_argument("--batch-days", type=int, default=None)
     bf.add_argument("--task-index", type=int, default=None,
                     help="this worker's shard (defaults to "
-                         "$CLOUD_RUN_TASK_INDEX when --task-count is set)")
+                         "$CLOUD_RUN_TASK_INDEX when --task-count or "
+                         "--task-ranges is set)")
     bf.add_argument("--task-count", type=int, default=None,
-                    help="shard the chunk list across N parallel workers")
+                    help="shard the chunks across N parallel workers: "
+                         "worker i owns the chunks whose batch slot from "
+                         "--first is i modulo N, so a --retry pass reruns "
+                         "each failed chunk on exactly one worker")
     bf.add_argument("--task-ranges", default=None,
                     help="explicit per-task ranges "
                          "'YYYY-MM-DD:YYYY-MM-DD,...'; worker --task-index "
-                         "(or $CLOUD_RUN_TASK_INDEX) runs the N-th range "
+                         "(or $CLOUD_RUN_TASK_INDEX) runs the N-th range, "
+                         "and retries the failed chunks that start in it "
                          "(mutually exclusive with --first/--last)")
     bf.add_argument("--journal", help="journal file; enables retry bookkeeping")
     bf.add_argument("--retry", action="store_true", help="re-run failed chunks only")

@@ -361,7 +361,7 @@ class Warehouse:
     # older slots are crash artifacts and are reclaimed. Activity is the
     # newest DIRECTORY mtime inside the slot tree (plus the marker, which
     # populate loops re-touch per item) — NOT the marker's claim-time
-    # mtime alone: snapshot() copytrees O(data), so a legitimate
+    # mtime alone: snapshot() links O(files), so a legitimate
     # in-progress snapshot of a large table can outlive any fixed claim
     # age, but every file it lands keeps refreshing its parent dir's
     # mtime (round-9 ADVICE: the claim-age heuristic let a >1h populate
@@ -464,12 +464,11 @@ class Warehouse:
           ADVICE showed disjointness-vs-the-newest-``__old`` misfiles
           the slot when an UNRELATED newer ``__old`` coexists with the
           true crash sibling.
-        - copy/hardlink snapshot crash (``snapshot()`` /
-          ``_snapshot_via_links``): the marker records ``copy`` — the
-          slot is a PARTIAL COPY of a table state that still lives
-          elsewhere (the live dir — those paths never mutate the
-          source). Safe to delete once the live table is verified
-          present.
+        - hardlink snapshot crash (``snapshot()``): the marker records
+          ``copy`` — the slot is a PARTIAL link tree of a table state
+          that still lives elsewhere (the live dir — that path never
+          mutates the source). Safe to delete once the live table is
+          verified present.
         - legacy empty marker (pre-signature claims): ambiguous. Deleted
           only when NO ``__old`` sibling exists (then it cannot be a
           publish-move half) and the live table is present; otherwise
@@ -875,7 +874,7 @@ class Warehouse:
         if not self.exists(name):
             return self.write_table(name, df, partition_by, cluster_by, snapshot=False)
         if snapshot:
-            self._snapshot_via_links(name)
+            self.snapshot(name)
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # on_schema_change: append_new_columns (dbtwiz/model/create.py:466):
         # columns the live table has but df lacks are appended as nulls so
@@ -1238,7 +1237,7 @@ class Warehouse:
         """Allocate a snapshot id: wall-clock ms, bumped past the newest
         existing id. Two snapshots of the same table within one
         millisecond would otherwise collide — ``mkdir`` raises on the
-        copy paths, and ``shutil.move`` on the write_table publish path
+        hardlink path, and ``shutil.move`` on the write_table publish path
         silently folds the outgoing table INSIDE the existing snapshot
         directory instead of beside it, corrupting both states."""
         ts = int(time.time() * 1000)
@@ -1308,43 +1307,28 @@ class Warehouse:
         crash leaves it behind."""
         (dst / "_INCOMPLETE").unlink()
 
-    def _snapshot_via_links(self, name: str) -> int:
-        """Zero-copy snapshot of the current table state via hardlinks
-        (see insert_overwrite). Returns the snapshot epoch-ms id."""
+    def snapshot(self, name: str) -> int:
+        """Write a timestamped snapshot of the current table state as a
+        HARDLINK tree (parquet files are never changed in place: writes
+        publish new files and deletes unlink, so the links keep the old
+        state; O(files) metadata, zero data copy). Returns the snapshot
+        epoch-ms id (the ``@ms`` decorator analog)."""
         ts, dst = self._claim_snapshot_dir(name)
         src = self.path(name)
         linked = 0
         for root, dirs, files in os.walk(src):
-            rel = Path(root).relative_to(src)
-            if SNAPSHOT_DIRNAME in rel.parts:
-                continue
             dirs[:] = [d for d in dirs if d != SNAPSHOT_DIRNAME]
+            rel = Path(root).relative_to(src)
             for f in files:
                 out = dst / rel / f
                 out.parent.mkdir(parents=True, exist_ok=True)
                 os.link(Path(root) / f, out)
                 linked += 1
-                if linked % 256 == 0:
-                    self._touch_marker(dst)
-        self._commit_snapshot_dir(dst)
-        return ts
-
-    def snapshot(self, name: str) -> int:
-        """Write a timestamped snapshot of the current table state; returns
-        the snapshot epoch-ms id (the ``@ms`` decorator analog)."""
-        ts, dst = self._claim_snapshot_dir(name)
-        src = self.path(name)
-        for p in src.iterdir():
-            if p.name != SNAPSHOT_DIRNAME:
-                if p.is_dir():
-                    shutil.copytree(p, dst / p.name)
-                else:
-                    shutil.copy2(p, dst / p.name)
                 # keep the in-progress claim visibly alive for concurrent
                 # recover passes (the marker mtime joins directory mtimes
-                # in _slot_activity_mtime; within one huge copytree item
-                # the tree's own dir mtimes carry the signal)
-                self._touch_marker(dst)
+                # in _slot_activity_mtime)
+                if linked % 256 == 0:
+                    self._touch_marker(dst)
         self._commit_snapshot_dir(dst)
         return ts
 

@@ -14,11 +14,6 @@ Design constraints carried over from the precedents:
   the experiment shows up as a sign flip between pairs instead of
   silently biasing whichever tree ran last (the r15 experiment measured
   extras rising ~6% per run in wall-clock order regardless of tree).
-* **Companion probes** for old trees whose bench.py predates a probe
-  (calibration_spark landed r12, calibration_io r15): the probes touch
-  no repo code by design, so running them from THIS tree's bench.py in
-  a separate process adjacent to the old bench is equivalent — the
-  missing keys are filled in and marked.
 * **Per-query quotes**: pass --queries to put named queries in the
   table; the r14 verdict's lesson is that aggregate normalizations can
   adjudicate while the actual watch queries go unquoted.
@@ -83,73 +78,16 @@ def _bench_once(tree: Path, sf_dir: str, cpus: str) -> dict:
     raise RuntimeError(f"no JSON line in bench output from {tree}")
 
 
-_COMPANION = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from bench import _calibrate, _calibrate_spark, _calibrate_io
-from dbtwiz_spark.session import get_spark
-spark = get_spark("ab-bench-probe-companion")
-print(json.dumps({{
-    "calibration": _calibrate(spark),
-    "calibration_spark": _calibrate_spark(spark),
-    "calibration_io": _calibrate_io(),
-}}))
-"""
-
-
-def _companion_probes() -> dict:
-    """All three probes from THIS tree's bench.py in a fresh process —
-    they touch no repo code, so readings are tree-independent and can
-    back-fill keys an old tree's bench.py predates."""
-    out = _run(
-        [sys.executable, "-c", _COMPANION.format(repo=str(REPO))], REPO
-    )
-    for line in reversed(out.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError("no JSON line from probe companion")
-
-
-def _fill_missing_probes(result: dict) -> dict:
-    missing = [
-        k
-        for k in ("calibration", "calibration_spark", "calibration_io")
-        if k not in result
-    ]
-    if missing:
-        companion = _companion_probes()
-        for k in missing:
-            result[k] = companion[k]
-            result[f"{k}_from_companion"] = True
-    # derive any ratio the tree's own bench didn't emit, even when no
-    # probe was missing: an r15 tree has all three probes but predates
-    # extras_per_calibration_io
-    for total_key, prefix in (("value", "headline"), ("extras_total", "extras")):
-        if total_key not in result:
-            continue
-        for probe in ("calibration", "calibration_spark", "calibration_io"):
-            key = f"{prefix}_per_{probe}"
-            if key not in result and result.get(probe):
-                result[key] = round(result[total_key] / result[probe], 2)
-    return result
-
-
 def _cell(result: dict, key: str) -> str:
     v = result.get(key)
     if v is None:
         return "—"
-    mark = "†" if result.get(f"{key}_from_companion") else ""
-    if "_per_" in key:
-        # a ratio derived from a companion-sourced probe inherits its mark
-        probe = key.split("_per_", 1)[1]
-        mark = "†" if result.get(f"{probe}_from_companion") else ""
     if not isinstance(v, float):
-        return f"{v}{mark}"
+        return str(v)
     # seconds rows get 3 decimals, normalization ratios 2 (the BENCHLOG
     # table convention)
     digits = 2 if "_per_" in key else 3
-    return f"{v:.{digits}f}{mark}"
+    return f"{v:.{digits}f}"
 
 
 def table(
@@ -178,17 +116,6 @@ def table(
 
         lines.append(
             f"| {q} (s) | " + " | ".join(_q(r) for r in cols) + " |"
-        )
-    if any(
-        r.get(f"{k}_from_companion")
-        for r in cols
-        for k in ("calibration", "calibration_spark", "calibration_io")
-    ):
-        lines.append(
-            "\n† probe back-filled by a companion process running this "
-            "tree's bench.py probes adjacent to that bench run (the old "
-            "tree's bench.py predates the probe; probes touch no repo "
-            "code)."
         )
     return "\n".join(lines)
 
@@ -236,17 +163,9 @@ def main() -> None:
         olds, news = [], []
         for pair in range(1, args.pairs + 1):
             print(f"== pair {pair}: {args.old} ==", file=sys.stderr)
-            olds.append(
-                _fill_missing_probes(
-                    _bench_once(trees[args.old], args.sf_dir, args.cpus)
-                )
-            )
+            olds.append(_bench_once(trees[args.old], args.sf_dir, args.cpus))
             print(f"== pair {pair}: {args.new} ==", file=sys.stderr)
-            news.append(
-                _fill_missing_probes(
-                    _bench_once(trees[args.new], args.sf_dir, args.cpus)
-                )
-            )
+            news.append(_bench_once(trees[args.new], args.sf_dir, args.cpus))
         print(table(olds, news, args.old, args.new, queries))
         print(
             json.dumps(

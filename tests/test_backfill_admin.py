@@ -536,40 +536,40 @@ def test_backfill_sharded_journal_is_per_task(engine, tmp_path):
 def test_sharded_retry_sees_unsharded_failures_and_vice_versa(engine, tmp_path, monkeypatch):
     """Review fix: retries merge failures across the base journal and all
     per-task siblings (success anywhere wins), so the retry topology may
-    differ from the failing run's without orphaning chunks."""
-    base = tmp_path / "xj.json"
-    # simulate an earlier unsharded run that left two failures + a success
-    j = BackfillJournal(base)
-    j.record((date(2024, 1, 1), date(2024, 1, 2)), "error: boom")
-    j.record((date(2024, 1, 3), date(2024, 1, 4)), "error: boom")
-    j.record((date(2024, 1, 5), date(2024, 1, 6)), "success")
-    # sharded retry workers see the unsharded run's failures (sequential
-    # workers may observe a shrinking set — concurrent workers slice the
-    # same snapshot — so retries CONVERGE across passes rather than being
-    # guaranteed complete in one; nothing is ever permanently orphaned)
-    retried = []
-    for _pass in range(3):
-        for i in range(2):
+    differ from the failing run's without orphaning chunks. A chunk's
+    owner depends only on the chunk, so ONE pass of sequential workers
+    retries every failure exactly once in either start order, although
+    each later worker reads a failure list the earlier ones have shrunk."""
+    failed = [
+        (date(2024, 1, 1), date(2024, 1, 2)),
+        (date(2024, 1, 3), date(2024, 1, 4)),
+        (date(2024, 1, 7), date(2024, 1, 8)),
+        (date(2024, 1, 9), date(2024, 1, 10)),
+    ]
+    for order in ((0, 1), (1, 0)):
+        base = tmp_path / f"xj{order[0]}.json"
+        # simulate an earlier unsharded run that left failures + a success
+        j = BackfillJournal(base)
+        for c in failed:
+            j.record(c, "error: boom")
+        j.record((date(2024, 1, 5), date(2024, 1, 6)), "success")
+        retried = []
+        for i in order:
             retried += [
                 c for c, s in run_backfill(
                     engine, "daily_values", date(2024, 1, 1),
-                    date(2024, 1, 6), batch_size=2, task_index=i,
+                    date(2024, 1, 10), batch_size=2, task_index=i,
                     task_count=2, journal=BackfillJournal(base),
                     retry_failed_only=True)
             ]
-    assert sorted(set(retried)) == [
-        (date(2024, 1, 1), date(2024, 1, 2)),
-        (date(2024, 1, 3), date(2024, 1, 4)),
-    ]
-    # the successfully-retried chunk was never re-run a second time
-    assert len(retried) == 2
-    # successes were recorded in per-task files; an unsharded retry now
-    # sees success-anywhere-wins and has nothing left to do
-    again = run_backfill(engine, "daily_values", date(2024, 1, 1),
-                         date(2024, 1, 6), batch_size=2,
-                         journal=BackfillJournal(base),
-                         retry_failed_only=True)
-    assert again == []
+        assert sorted(retried) == failed, order
+        # successes were recorded in per-task files; an unsharded retry
+        # now sees success-anywhere-wins and has nothing left to do
+        again = run_backfill(engine, "daily_values", date(2024, 1, 1),
+                             date(2024, 1, 10), batch_size=2,
+                             journal=BackfillJournal(base),
+                             retry_failed_only=True)
+        assert again == [], order
 
 
 def test_retry_newer_failure_beats_stale_success(engine, tmp_path):
@@ -770,6 +770,29 @@ def test_task_ranges_retry_rejects_cross_owner_overlap(engine, tmp_path):
             engine, "daily_values", date(2000, 1, 1), date(2000, 1, 2),
             batch_size=2, task_index=0, task_ranges=ranges,
             journal=j, retry_failed_only=True)
+    # overlapping ranges give a date two owners: rejected up front
+    with pytest.raises(ValueError, match="overlap"):
+        run_backfill(
+            engine, "daily_values", date(2000, 1, 1), date(2000, 1, 2),
+            batch_size=2, task_index=0,
+            task_ranges=parse_task_ranges("2024-01-01:2024-01-05,"
+                                          "2024-01-05:2024-01-08"))
+
+
+def test_task_count_retry_rejects_cross_owner_overlap(engine, tmp_path):
+    """The task_count fan-out runs the same guard: failures from runs with
+    different batch sizes can overlap while starting in different batch
+    slots, and the two owning workers would double-write the overlap."""
+    j = BackfillJournal(tmp_path / "count_overlap_journal.json")
+    # batch_size=2 from 01-01: 01-01 is slot 0 (worker 0), 01-03 slot 1
+    j.record((date(2024, 1, 1), date(2024, 1, 3)), "error: a")
+    j.record((date(2024, 1, 3), date(2024, 1, 4)), "error: b")
+    for i in range(2):
+        with pytest.raises(ValueError, match="double-write the overlap"):
+            run_backfill(
+                engine, "daily_values", date(2024, 1, 1), date(2024, 1, 4),
+                batch_size=2, task_index=i, task_count=2,
+                journal=j, retry_failed_only=True)
 
 
 def test_runner_defer_registration_not_pinned(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Tests for the bench instrumentation: the I/O calibration probe and
-the A/B harness's probe back-fill + table rendering (pure logic — the
+the A/B harness's table rendering (pure logic — the
 worktree/bench plumbing is exercised by actually running experiments,
 whose results live in BENCHLOG.md)."""
 
@@ -39,50 +39,7 @@ def test_calibrate_io_probe_null_on_unwritable_cwd(monkeypatch):
     assert bench._calibrate_io(runs=1) is None
 
 
-def test_ab_fill_missing_probes_backfills_and_marks(monkeypatch):
-    """An old tree's result lacking the newer probes gains them from the
-    companion, marked, with the derived normalizations computed; a
-    result that already has all three spawns no companion process (its
-    own probe readings are kept, though missing RATIO keys still
-    derive — an r15 tree has every probe but no
-    extras_per_calibration_io)."""
-    from scripts import ab_bench
-
-    monkeypatch.setattr(
-        ab_bench,
-        "_companion_probes",
-        lambda: {
-            "calibration": 0.3,
-            "calibration_spark": 0.5,
-            "calibration_io": 0.2,
-        },
-    )
-    old = {"value": 8.0, "calibration": 0.25, "queries": {}}
-    filled = ab_bench._fill_missing_probes(dict(old))
-    assert filled["calibration"] == 0.25  # own reading kept
-    assert filled["calibration_spark"] == 0.5
-    assert filled["calibration_spark_from_companion"] is True
-    assert filled["headline_per_calibration_spark"] == 16.0
-    assert filled["headline_per_calibration_io"] == 40.0
-
-    def boom():  # pragma: no cover - the failure mode
-        raise AssertionError("companion spawned for a complete result")
-
-    monkeypatch.setattr(ab_bench, "_companion_probes", boom)
-    complete = {
-        "value": 6.0,
-        "calibration": 0.3,
-        "calibration_spark": 0.4,
-        "calibration_io": 0.2,
-        "queries": {},
-    }
-    filled = ab_bench._fill_missing_probes(dict(complete))
-    assert all(filled[k] == v for k, v in complete.items())
-    assert not any(k.endswith("_from_companion") for k in filled)
-    assert filled["headline_per_calibration_io"] == 30.0  # derived, unmarked
-
-
-def test_ab_table_renders_pairs_queries_and_companion_note():
+def test_ab_table_renders_pairs_and_queries():
     from scripts.ab_bench import table
 
     a = {
@@ -90,7 +47,6 @@ def test_ab_table_renders_pairs_queries_and_companion_note():
         "extras_total": 7.44,
         "calibration": 0.221,
         "calibration_spark": 0.555,
-        "calibration_spark_from_companion": True,
         "headline_per_calibration": 36.3,
         "headline_per_calibration_spark": 14.45,
         "queries": {"q_set_except": 0.151},
@@ -110,31 +66,9 @@ def test_ab_table_renders_pairs_queries_and_companion_note():
     assert "| metric | r10 p1 | HEAD p1 |" in md
     assert "| q_set_except (s) | 0.151 | 0.117 |" in md
     assert "| q_missing (s) | — | — |" in md  # absent query renders as —
-    assert "0.555†" in md  # companion-sourced probe is marked
-    assert "14.45†" in md  # ...and so is its derived normalization
-    assert "† probe back-filled" in md
-    assert "| calibration_io | — | 0.175 |" in md  # old tree lacks it
-
-
-def test_ab_backfill_derives_extras_ratios():
-    """The back-fill derives the extras normalizations alongside the
-    headline ones (the r13/r14 precedent experiments adjudicated on
-    extras ratios; a back-fill that only derived headline ratios left
-    the extras side to hand math on old trees)."""
-    from scripts import ab_bench
-
-    old = {
-        "value": 8.0,
-        "extras_total": 6.0,
-        "calibration": 0.25,
-        "calibration_spark": 0.5,
-        "calibration_io": 0.2,
-        "queries": {},
-    }
-    filled = ab_bench._fill_missing_probes(dict(old))
-    assert filled["extras_per_calibration"] == 24.0
-    assert filled["extras_per_calibration_spark"] == 12.0
-    assert filled["extras_per_calibration_io"] == 30.0
+    assert "| calibration_spark | 0.555 | 0.484 |" in md
+    assert "| headline_per_calibration_spark | 14.45 | 12.74 |" in md
+    assert "| calibration_io | — | 0.175 |" in md  # a missing key renders as —
 
 
 def test_ab_table_quotes_extras_queries():

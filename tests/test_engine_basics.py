@@ -328,21 +328,14 @@ def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
         assert c.clear_memos() == 1
 
 
-def test_generation_stamp_changes_on_in_place_file_overwrite(spark, tmp_path):
-    """A backing file OVERWRITTEN IN PLACE — same path, new rows, the
-    standard re-run-writer rewrite — keeps the path set identical, so a
-    path-only key would keep serving the superseded artifact. The
-    catalog's generation stamp folds in (size, mtime_ns) per table file:
-    the rewrite must flip it, and a catalog built on the new generation
-    must serve the NEW rows, not the old catalog's memoized ranks."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def _check_in_place_rewrite_flips_stamp(spark, tmp_path, write):
+    """Build a rank artifact on ``write(5)``'s customer table, rewrite the
+    same backing file(s) in place with ``write(9)``, and check the stamp
+    flips and a fresh catalog serves the NEW rows."""
     from dbtwiz_spark.catalog import Catalog
     from dbtwiz_spark.ops.common import parallel_rank
 
-    path = str(tmp_path / "customer.parquet")
-    pq.write_table(pa.table({"c_custkey": list(range(5))}), path)
+    write(5)
     keys = [F.col("c_custkey")]
 
     def ranked(cat):
@@ -354,8 +347,7 @@ def test_generation_stamp_changes_on_in_place_file_overwrite(spark, tmp_path):
     old = Catalog(spark, str(tmp_path))
     assert ranked(old).count() == 5
     assert old.is_current()
-    # rewrite IN PLACE: same filename, different contents
-    pq.write_table(pa.table({"c_custkey": list(range(9))}), path)
+    write(9)
     assert not old.is_current(), "in-place rewrite must flip the stamp"
     old.release()
     assert old.clear_memos() == 0
@@ -366,6 +358,45 @@ def test_generation_stamp_changes_on_in_place_file_overwrite(spark, tmp_path):
     assert got.count() == 9
     assert sorted(r._rank for r in got.collect()) == list(range(1, 10))
     new.release()
+
+
+def test_generation_stamp_changes_on_in_place_file_overwrite(spark, tmp_path):
+    """A backing file OVERWRITTEN IN PLACE — same path, new rows, the
+    standard re-run-writer rewrite — keeps the path set identical, so a
+    path-only key would keep serving the superseded artifact. The
+    catalog's generation stamp folds in (size, mtime_ns) per table file:
+    the rewrite must flip it, and a catalog built on the new generation
+    must serve the NEW rows, not the old catalog's memoized ranks."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "customer.parquet")
+    _check_in_place_rewrite_flips_stamp(
+        spark, tmp_path,
+        lambda n: pq.write_table(pa.table({"c_custkey": list(range(n))}), path),
+    )
+
+
+def test_generation_stamp_changes_on_in_place_partition_overwrite(spark, tmp_path):
+    """The same for a hive-partitioned DIRECTORY table: rewriting one part
+    file inside a ``key=value/`` subdirectory changes neither the table
+    directory's nor the subdirectory's own stat, so the stamp must cover
+    every file under the table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "customer.parquet" / "c_region=b"
+    part.mkdir(parents=True)
+    (part.parent / "c_region=a").mkdir()
+    pq.write_table(pa.table({"c_custkey": [0]}),
+                   str(part.parent / "c_region=a" / "part-0.parquet"))
+
+    def write(n):
+        # rows 1..n-1 live in the c_region=b part file, rewritten in place
+        pq.write_table(pa.table({"c_custkey": list(range(1, n))}),
+                       str(part / "part-0.parquet"))
+
+    _check_in_place_rewrite_flips_stamp(spark, tmp_path, write)
 
 
 def test_generation_stamp_survives_percent_encoded_paths(spark, tmp_path):

@@ -858,7 +858,7 @@ class _FrozenTime:
 
 def test_snapshot_ids_unique_within_same_millisecond(spark, wh, monkeypatch):
     """Two snapshots of one table in the same ms must get distinct,
-    increasing ids — not FileExistsError (copy/hardlink paths) or a
+    increasing ids — not FileExistsError (hardlink path) or a
     silent move-into-dir merge (write_table publish path)."""
     import dbtwiz_spark.materialize as mat
 
@@ -867,7 +867,7 @@ def test_snapshot_ids_unique_within_same_millisecond(spark, wh, monkeypatch):
     monkeypatch.setattr(mat, "time", frozen)
     s1 = wh.snapshot("tsnap")
     s2 = wh.snapshot("tsnap")
-    s3 = wh._snapshot_via_links("tsnap")
+    s3 = wh.snapshot("tsnap")
     assert s1 < s2 < s3
     assert wh.snapshots("tsnap") == [s1, s2, s3]
 

@@ -815,8 +815,7 @@ def test_compact_after_fragmenting_merges_preserves_content(spark, tmp_path):
 
 def test_time_travel_history_matches_recorded_states(spark, tmp_path):
     """Randomized (seeded) mixed write ops (overwrite / merge /
-    insert_overwrite) with a snapshot after each — alternating the copy
-    and hardlink snapshot paths. Every recorded snapshot id must
+    insert_overwrite) with a hardlink snapshot after each. Every recorded snapshot id must
     reproduce exactly the state at its moment (history survives later
     overwrites, which MOVE the snapshot dir), and restore() to a
     mid-history id must reproduce it live."""
@@ -880,11 +879,7 @@ def test_time_travel_history_matches_recorded_states(spark, tmp_path):
             state.update(rows)
             wh.insert_overwrite("t", df_of(rows), "partitiondate")
         if op != "overwrite_snap":
-            sid = (
-                wh.snapshot("t")
-                if round_i % 2 == 0
-                else wh._snapshot_via_links("t")
-            )
+            sid = wh.snapshot("t")
             history[sid] = dict(state)
         assert live() == state, f"live state diverged after {op} round {round_i}"
     assert sorted(history) == list(history), "snapshot ids must be increasing"
