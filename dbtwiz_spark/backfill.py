@@ -247,12 +247,38 @@ class BackfillJournal:
         atomic_write_text(self.path, json.dumps(j, indent=1))
 
     def failed_chunks(self) -> list[tuple[date, date]]:
+        """Failed chunks, sorted, merged across this journal AND every
+        per-task sibling (``<stem>.taskN<suffix>``): a retry must see
+        failures no matter how (or whether) the earlier run was sharded —
+        a re-sharded or un-sharded retry otherwise silently orphans other
+        workers' failures. Rows merge LAST WRITER WINS per CHUNK, by each
+        row's own write timestamp: a retried chunk's success (written to
+        the retrying worker's own file) clears the original failure row,
+        a NEW failure from a later run overrides a stale success — and
+        an untouched stale row carried along by a later file REWRITE
+        keeps its original timestamp, so it can never shadow a genuinely
+        newer row in another file (per-FILE mtime would). Legacy string
+        rows fall back to file mtime, ties broken in favor of success.
+        Every file is read with ``load(strict=True)``: a torn journal
+        raises rather than reading as "nothing failed"."""
+        paths = [self.path] + sorted(
+            self.path.parent.glob(f"{self.path.stem}.task*{self.path.suffix}")
+        )
+        best: dict[str, tuple[float, bool]] = {}
+        for p in paths:
+            if not p.exists():
+                continue
+            mtime = p.stat().st_mtime
+            for k, v in BackfillJournal(p).load(strict=True).items():
+                rank = (_row_ts(v, mtime), _row_status(v) == "success")
+                if k not in best or rank >= best[k]:
+                    best[k] = rank
         out = []
-        for k, v in self.load().items():
-            if _row_status(v) != "success":
+        for k, (_ts, ok) in best.items():
+            if not ok:
                 a, b = k.split("..")
                 out.append((date.fromisoformat(a), date.fromisoformat(b)))
-        return out
+        return sorted(out)
 
 
 def run_backfill(
@@ -342,43 +368,8 @@ def run_backfill(
         def owner(c):
             return ((c[0] - first).days // batch_size) % task_count
 
-    def gathered_failures() -> list[tuple[date, date]]:
-        """Failed chunks merged across the base journal AND every per-task
-        sibling (``<stem>.taskN.json``): a retry must see failures no
-        matter how (or whether) the earlier run was sharded — a
-        re-sharded or un-sharded retry otherwise silently orphans other
-        workers' failures. Rows merge LAST WRITER WINS per CHUNK, by each
-        row's own write timestamp: a retried chunk's success (written to
-        the retrying worker's own file) clears the original failure row,
-        a NEW failure from a later run overrides a stale success — and
-        an untouched stale row carried along by a later file REWRITE
-        keeps its original timestamp, so it can never shadow a genuinely
-        newer row in another file (per-FILE mtime would). Legacy string
-        rows fall back to file mtime, ties broken in favor of success."""
-        paths = [journal.path] + sorted(
-            journal.path.parent.glob(
-                f"{journal.path.stem}.task*{journal.path.suffix}"
-            )
-        )
-        best: dict[str, tuple[float, bool, str]] = {}
-        for p in paths:
-            if not p.exists():
-                continue
-            mtime = p.stat().st_mtime
-            for k, v in BackfillJournal(p).load(strict=True).items():
-                s = _row_status(v)
-                rank = (_row_ts(v, mtime), s == "success")
-                if k not in best or rank >= (best[k][0], best[k][1]):
-                    best[k] = (rank[0], rank[1], s)
-        out = []
-        for k, (_ts, _ok, s) in best.items():
-            if s != "success":
-                a, b = k.split("..")
-                out.append((date.fromisoformat(a), date.fromisoformat(b)))
-        return sorted(out)
-
     chunks = (
-        gathered_failures()
+        journal.failed_chunks()
         if (retry_failed_only and journal)
         else chunk_date_range(first, last, batch_size)
     )
@@ -415,9 +406,9 @@ def run_backfill(
             # one journal PER worker for RECORDING: the journal rewrite is
             # read-modify-write of the whole file, so parallel workers
             # sharing one path would clobber each other's status rows.
-            # Suffixed only AFTER gathered_failures ran: that closure globs
-            # sibling task journals off the BASE path — suffixing first
-            # would make a retry see only this worker's own journal.
+            # Suffixed only AFTER failed_chunks() ran: it globs sibling
+            # task journals off the BASE path — suffixing first would make
+            # a retry see only this worker's own journal.
             journal = BackfillJournal(
                 journal.path.with_name(
                     f"{journal.path.stem}.task{idx}{journal.path.suffix}"

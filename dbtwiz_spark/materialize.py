@@ -354,18 +354,17 @@ class Warehouse:
                 f"[warehouse] stale publish artifacts for {table!r}: "
                 f"{leftovers} — inspect and remove manually"
             )
-        self._reclaim_incomplete_snapshots(table, olds)
+        self._reclaim_incomplete_snapshots(table)
 
     # A slot still showing WRITE ACTIVITY younger than this is treated as
     # a populate-in-progress by a concurrent writer and only surfaced;
     # older slots are crash artifacts and are reclaimed. Activity is the
-    # newest DIRECTORY mtime inside the slot tree (plus the marker, which
-    # populate loops re-touch per item) — NOT the marker's claim-time
-    # mtime alone: snapshot() links O(files), so a legitimate
-    # in-progress snapshot of a large table can outlive any fixed claim
-    # age, but every file it lands keeps refreshing its parent dir's
-    # mtime (round-9 ADVICE: the claim-age heuristic let a >1h populate
-    # be rmtree'd out from under the copier).
+    # newest mtime of the marker or of any DIRECTORY inside the slot tree,
+    # not the marker's claim-time mtime alone: snapshot() links O(files),
+    # so a legitimate in-progress snapshot of a large table can outlive any
+    # fixed claim age, but every os.link moves its parent dir's mtime
+    # (round-9 ADVICE: the claim-age heuristic let a >1h populate be
+    # rmtree'd out from under the populating writer).
     INCOMPLETE_RECLAIM_AGE_S = 3600
 
     @staticmethod
@@ -373,48 +372,36 @@ class Warehouse:
         slot: Path, marker: Path, fresh_after: float = float("inf")
     ) -> float:
         """Newest write-activity timestamp for a claimed snapshot slot:
-        max of mtime AND ctime over the marker and every entry in the
-        slot tree (os.walk yields the slot dir itself as its first
-        root). Three signals cover every populate shape:
+        the max mtime of the marker and of every directory in the slot
+        tree (os.walk yields the slot dir itself as its first root).
+        Every populate is a hardlink walk and every expiry deletes
+        entries, and both move the parent directory's mtime, so file
+        mtimes (which links share with their year-old sources) add
+        nothing.
 
-        - directory mtimes move on every entry creation/rename into them
-          (file mtimes alone mislead: copy2/copytree/rename PRESERVE the
-          source's year-old mtimes);
-        - an in-flight write to ONE huge file keeps that file's mtime
-          fresh for the whole copy, so even a single multi-hour copy2
-          never looks stale (review find: per-entry granularity alone
-          re-opened the >1h-populate hole one level down);
-        - ctimes are bumped by the very copystat() that resets mtimes
-          old at the end of each copytree subtree, so 'recently touched'
-          survives attribute restoration; on a genuinely crashed slot
-          every ctime dates from the crash and goes stale together.
-
-        O(entries), and only runs when an _INCOMPLETE marker is present
-        at all. ``fresh_after`` short-circuits the walk: the caller only
-        needs the fresh/stale verdict, and the fresh verdict is decided
-        by the FIRST timestamp at or past the threshold — without the
-        early exit, a large snapshot parked as 'inspect manually' (never
-        removed) taxes every exists()/read() with O(files) stat calls
-        indefinitely (round-9 ADVICE). The stale verdict still needs the
-        true maximum, so a stale slot walks everything — that is the
+        O(directories), and only runs when an _INCOMPLETE marker is
+        present at all. ``fresh_after`` short-circuits the walk: the
+        caller only needs the fresh/stale verdict, and the fresh verdict
+        is decided by the FIRST timestamp at or past the threshold —
+        without the early exit, a large snapshot parked as 'inspect
+        manually' (never removed) taxes every exists()/read() with a full
+        walk indefinitely (round-9 ADVICE). The stale verdict still needs
+        the true maximum, so a stale slot walks everything — that is the
         rare, about-to-be-reclaimed case."""
         newest = 0.0
         try:
-            st = marker.stat()
-            newest = max(newest, st.st_mtime, st.st_ctime)
+            newest = marker.stat().st_mtime
         except OSError:
             pass
         if newest >= fresh_after:
             return newest
-        for root, _dirs, files in os.walk(slot):
-            for name in ("", *files):
-                try:
-                    st = os.stat(os.path.join(root, name) if name else root)
-                except OSError:
-                    continue
-                newest = max(newest, st.st_mtime, st.st_ctime)
-                if newest >= fresh_after:
-                    return newest
+        for root, _dirs, _files in os.walk(slot):
+            try:
+                newest = max(newest, os.stat(root).st_mtime)
+            except OSError:
+                continue
+            if newest >= fresh_after:
+                return newest
         return newest
 
     @staticmethod
@@ -436,50 +423,29 @@ class Warehouse:
         marker.unlink()
         slot.rmdir()
 
-    @staticmethod
-    def _touch_marker(dst: Path) -> None:
-        """Refresh the _INCOMPLETE marker's mtime mid-populate (utime, not
-        touch — the marker's CONTENT records the claim's crash signature
-        and must survive). Best-effort: a failed utime only narrows the
-        staleness margin, never the populate itself."""
-        try:
-            os.utime(dst / "_INCOMPLETE")
-        except OSError:
-            pass
-
-    def _reclaim_incomplete_snapshots(self, table: str, olds: list) -> None:
+    def _reclaim_incomplete_snapshots(self, table: str) -> None:
         """Crash recovery for snapshot slots (round-8 ADVICE): a crash
         mid-populate leaves a slot with its ``_INCOMPLETE`` marker —
         correctly invisible to ``snapshots()``/``read_snapshot`` but
         otherwise orphaned: it consumes a slot id and disk forever and
-        nothing ever surfaced it. Two crash shapes, two remedies:
+        nothing ever surfaced it. The marker's signature picks the
+        remedy:
 
-        - publish-move crash (``write_table`` snapshot branch): the slot
-          holds PART of the outgoing table state, the remainder sits in
-          the sibling ``<table>__old_*`` dir. The marker RECORDS that
-          sibling's name at claim time (``publish-move:<name>``), so
-          reclaim reunites the slot's contents with exactly that dir
-          (the two halves are disjoint by construction — item-by-item
-          rename from one dir) and never guesses by position: round-9
-          ADVICE showed disjointness-vs-the-newest-``__old`` misfiles
-          the slot when an UNRELATED newer ``__old`` coexists with the
-          true crash sibling.
-        - hardlink snapshot crash (``snapshot()``): the marker records
-          ``copy`` — the slot is a PARTIAL link tree of a table state
-          that still lives elsewhere (the live dir — that path never
-          mutates the source). Safe to delete once the live table is
-          verified present.
-        - legacy empty marker (pre-signature claims): ambiguous. Deleted
-          only when NO ``__old`` sibling exists (then it cannot be a
-          publish-move half) and the live table is present; otherwise
-          surfaced for manual inspection.
+        - ``copy`` (a crashed ``snapshot()`` hardlink walk, including the
+          one ``write_table`` runs before its swap): the slot is a PARTIAL
+          link tree of a state that still lives in the live dir, so it is
+          deleted once the live table is verified present.
+        - ``expire`` (a crashed ``expire_snapshots`` teardown): the
+          expiry is finished.
+        - anything else (the ``publish-move:`` or empty markers older
+          trees wrote, a torn signature) is reported and left in place.
 
         Slots whose write activity (``_slot_activity_mtime``) is younger
         than ``INCOMPLETE_RECLAIM_AGE_S`` are only surfaced, never
         touched — the marker also means
         'populate in progress' for a concurrent writer. Reclamation is
         strictly best-effort: any slot whose shape doesn't match a known
-        crash signature (or whose filesystem moves fail) is surfaced for
+        crash signature (or whose filesystem deletes fail) is surfaced for
         manual inspection, never raised out of ``_recover`` — recovery
         running on every ``exists()``/``read()`` must not brick the
         table over an unreclaimable artifact."""
@@ -543,7 +509,7 @@ class Warehouse:
                 )
                 continue
             try:
-                self._reclaim_one_slot(table, slot, marker, olds)
+                self._reclaim_one_slot(table, slot, marker)
             except OSError as e:
                 # a half-reclaimed slot keeps its _INCOMPLETE marker, so
                 # it stays invisible to snapshots() and this pass retries/
@@ -564,64 +530,11 @@ class Warehouse:
             or any(p.glob("*=*"))
         )
 
-    def _reclaim_one_slot(self, table, slot, marker, olds: list) -> None:
-        # `_INCOMPLETE*` prefix, not equality: a crashed atomic marker
-        # write can leave a `_INCOMPLETE.tmp.*` staging sibling, which is
-        # claim machinery, never table payload — moving it into an __old
-        # sibling during publish-move reunification would pollute the
-        # restored state
-        items = [
-            p
-            for p in sorted(slot.iterdir())
-            if not p.name.startswith("_INCOMPLETE")
-        ]
+    def _reclaim_one_slot(self, table, slot, marker) -> None:
         try:
             signature = marker.read_text().strip()
         except OSError:
             signature = ""
-        if signature.startswith("publish-move:"):
-            # the claim recorded EXACTLY which __old sibling holds the
-            # remainder of the outgoing state — reunite with that dir and
-            # no other (round-9 ADVICE: positional newest-__old guessing
-            # misfiles the slot when unrelated __old dirs coexist). The
-            # two halves are disjoint by construction (item-by-item
-            # rename out of one dir); a collision means the slot is not
-            # what its marker claims, so surface instead of moving.
-            origin = signature.split(":", 1)[1]
-            dest = next((o for o in olds if o.name == origin), None)
-            if dest is None:
-                print(
-                    f"[warehouse] snapshot slot {table}/{slot.name} is a "
-                    f"stale publish-move crash half but its recorded "
-                    f"sibling {origin!r} is gone — inspect manually"
-                )
-                return
-            if any((dest / p.name).exists() for p in items):
-                print(
-                    f"[warehouse] snapshot slot {table}/{slot.name} "
-                    f"collides with its recorded sibling {dest.name} — "
-                    "inspect manually"
-                )
-                return
-            for item in items:
-                os.rename(item, dest / item.name)
-            # remove claim machinery marker-LAST, strays first: a stray
-            # `_INCOMPLETE.tmp.*` left behind would fail the rmdir AFTER
-            # the marker unlink, leaving an unmarked non-empty slot that
-            # neither the husk branch (not empty) nor this branch (no
-            # marker) ever touches again — a zombie slot id with zero
-            # surfacing (round-10 review find)
-            for stray in slot.iterdir():
-                if stray != marker and stray.name.startswith("_INCOMPLETE"):
-                    stray.unlink()
-            marker.unlink()
-            slot.rmdir()
-            print(
-                f"[warehouse] reclaimed incomplete snapshot slot "
-                f"{table}/{slot.name}: contents reunited with "
-                f"{dest.name} for inspection"
-            )
-            return
         if signature == "expire":
             # a GC delete that crashed mid-teardown: the expire decision
             # was already taken, finish it — no live-data precondition
@@ -631,44 +544,22 @@ class Warehouse:
                 f"[warehouse] finished interrupted snapshot expiry "
                 f"{table}/{slot.name}"
             )
-            return
-        if signature == "copy":
-            # copy/hardlink snapshot crash: the slot is a partial copy of
+        elif signature == "copy" and self._has_live_data(table):
+            # hardlink snapshot crash: the slot is a partial link tree of
             # a state that still lives in the live dir — safe to delete
-            # once the live table is verified present, regardless of any
-            # unrelated __old siblings.
-            if self._has_live_data(table):
-                self._rmtree_slot(slot, marker)
-                print(
-                    f"[warehouse] reclaimed incomplete snapshot slot "
-                    f"{table}/{slot.name}: partial copy of the live "
-                    "table, deleted"
-                )
-            else:
-                print(
-                    f"[warehouse] snapshot slot {table}/{slot.name} is a "
-                    "stale partial copy but no live table exists — "
-                    "inspect manually"
-                )
-            return
-        # legacy empty marker (claims made before the signature was
-        # recorded): a publish-move half and a copy-crash slot are
-        # indistinguishable, so delete only when no __old sibling exists
-        # at all (then it CANNOT be a publish-move half — write_table
-        # crashes always leave the sibling) and the live table is present.
-        if not olds and self._has_live_data(table):
+            # regardless of any unrelated __old siblings
             self._rmtree_slot(slot, marker)
             print(
                 f"[warehouse] reclaimed incomplete snapshot slot "
-                f"{table}/{slot.name}: unsigned partial copy of the live "
-                "table (no __old siblings), deleted"
+                f"{table}/{slot.name}: partial copy of the live "
+                "table, deleted"
             )
         else:
             print(
                 f"[warehouse] snapshot slot {table}/{slot.name} is "
-                "_INCOMPLETE and stale but its crash shape is ambiguous "
-                "(unsigned marker with __old siblings, or no live table) "
-                "— inspect manually"
+                f"_INCOMPLETE and stale with marker {signature!r}, which "
+                "this warehouse does not reclaim (or a copy slot with no "
+                "live table) — left in place, inspect manually"
             )
 
     def exists(self, table: str) -> bool:
@@ -751,10 +642,12 @@ class Warehouse:
         snapshot: bool = True,
     ) -> int:
         """Full-table materialization with write-audit-publish. When
-        overwriting, the previous table state becomes a snapshot by MOVING
-        its files at publish time — zero-copy, unlike a pre-write copy which
-        would double-handle the whole table on every overwrite. Returns the
-        row count observed during the write (and audited before publish)."""
+        overwriting with ``snapshot=True``, the previous table state
+        becomes a snapshot through ``snapshot()`` after the audit and
+        before the publish swap: a hardlink tree, O(files) metadata and
+        zero data copy (the same requirement ``insert_overwrite`` has).
+        Returns the row count observed during the write (and audited
+        before publish)."""
         self._recover(name)
         target = self.path(name)
         tmp = target.with_name(f"{name}__tmp_{int(time.time() * 1000)}")
@@ -793,15 +686,18 @@ class Warehouse:
         if written != expected:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(f"audit failed for {name}: {written} != {expected}")
+        # snapshot first, while the outgoing state is still live: a crash
+        # mid-snapshot leaves a `copy` slot the reclaim pass deletes and
+        # the live table untouched
+        if snapshot and target.exists():
+            self.snapshot(name)
         # publish: crash-safe swap. The outgoing table is RENAMED aside (one
-        # atomic dir rename), the new data renamed into place, and only then
-        # is the old state folded into the snapshot dir (zero-copy move) or
-        # deleted. A crash at any point leaves every row on disk under either
-        # the live path or the __old path — never the delete-then-move hole
-        # where no live table exists.
-        # monotonic id for the __old suffix (collision-safe for the
-        # recover scan); the SNAPSHOT id is allocated separately at move
-        # time below, after the carried-forward history is in place
+        # atomic dir rename), the new data renamed into place, its snapshot
+        # history carried over, and only then is the old dir deleted. A
+        # crash at any point leaves every row on disk under either the live
+        # path or the __old path -- never the delete-then-move hole where
+        # no live table exists. The monotonic id keeps __old suffixes
+        # collision-free for the recover scan.
         ts = self._next_snapshot_ts(name)
         old = target.with_name(f"{name}__old_{ts}")
         if target.exists():
@@ -819,31 +715,7 @@ class Warehouse:
                 # snapshot history survives overwrites: move it (not copy)
                 # under the new table state
                 shutil.move(str(old_snaps), str(target / SNAPSHOT_DIRNAME))
-            if snapshot:
-                # zero-copy snapshot: the outgoing table state moves (not
-                # copies) into the snapshot dir that ships with the new
-                # table. The slot comes from _claim_snapshot_dir (mkdir is
-                # the claim — atomic, and unlike os.rename(old, dst) it
-                # also refuses an existing EMPTY dst: POSIX rename
-                # silently replaces empty dirs, which would overwrite a
-                # slot a concurrent snapshot() claimed but not yet
-                # populated). Contents move item-by-item into the owned
-                # slot; the slot stays marked _INCOMPLETE — invisible to
-                # snapshots()/read_snapshot — until the final commit
-                # unlink, so a crash mid-move can never serve a partial
-                # snapshot (the remainder stays in the __old dir, which
-                # _recover surfaces; the live table is already in place,
-                # so no data is unreachable).
-                _ts_snap, dst = self._claim_snapshot_dir(
-                    name, origin=old.name
-                )
-                for item in sorted(old.iterdir()):
-                    os.rename(item, dst / item.name)
-                    self._touch_marker(dst)
-                self._commit_snapshot_dir(dst)
-                os.rmdir(old)
-            else:
-                shutil.rmtree(old)
+            shutil.rmtree(old)
         # the name stops being a view only once its replacement table is
         # live — retiring the registry entry first would destroy the only
         # copy of the view SQL on a failed write
@@ -865,11 +737,12 @@ class Warehouse:
         the number of rows written, observed during the write.
 
         ``snapshot=True`` gives incremental tables the same time-travel
-        window full overwrites get — as a HARDLINK tree of the current
-        state (parquet files are immutable and dynamic overwrite deletes
-        rather than mutates, so links stay valid after the write; cost is
-        O(files) metadata, zero data copy). On storage without hardlinks
-        the manifest-based table formats own this job."""
+        window full overwrites get, through the same ``snapshot()``
+        HARDLINK tree of the current state (parquet files are immutable
+        and dynamic overwrite deletes rather than mutates, so links stay
+        valid after the write; cost is O(files) metadata, zero data copy).
+        On storage without hardlinks the manifest-based table formats own
+        this job."""
         target = self.path(name)
         if not self.exists(name):
             return self.write_table(name, df, partition_by, cluster_by, snapshot=False)
@@ -1236,19 +1109,16 @@ class Warehouse:
     def _next_snapshot_ts(self, name: str) -> int:
         """Allocate a snapshot id: wall-clock ms, bumped past the newest
         existing id. Two snapshots of the same table within one
-        millisecond would otherwise collide — ``mkdir`` raises on the
-        hardlink path, and ``shutil.move`` on the write_table publish path
-        silently folds the outgoing table INSIDE the existing snapshot
-        directory instead of beside it, corrupting both states."""
+        millisecond would otherwise collide (``_claim_snapshot_dir`` then
+        bumps past the taken slot; starting past the newest id keeps that
+        loop short)."""
         ts = int(time.time() * 1000)
         existing = self.snapshots(name)
         if existing and ts <= existing[-1]:
             ts = existing[-1] + 1
         return ts
 
-    def _claim_snapshot_dir(
-        self, name: str, origin: str | None = None
-    ) -> tuple[int, Path]:
+    def _claim_snapshot_dir(self, name: str) -> tuple[int, Path]:
         """Atomically claim a fresh snapshot slot: ``mkdir`` is the claim
         (atomic on POSIX), and a lost race bumps the id instead of
         corrupting the neighbour — the read-then-act allocation in
@@ -1257,18 +1127,15 @@ class Warehouse:
 
         The claimed dir carries an ``_INCOMPLETE`` marker until the caller
         finishes populating it and calls ``_commit_snapshot_dir``:
-        populating a directory is never atomic (hardlink walk, file copy,
-        item-by-item publish move), and without the marker a crash or a
-        concurrent reader mid-populate would make ``snapshots()`` serve a
+        populating a directory is never atomic (the hardlink walk in
+        ``snapshot()``), and without the marker a crash or a concurrent
+        reader mid-populate would make ``snapshots()`` serve a
         half-written state as a valid snapshot.
 
-        The marker's CONTENT records the claim's crash signature for
-        ``_reclaim_one_slot``: ``publish-move:<__old dir name>`` when the
-        slot will be populated by moving an outgoing table state out of
-        that exact sibling (``origin``), ``copy`` when it will be
-        populated by copying/hardlinking a state that keeps living in the
-        live dir — so recovery reunites a crashed move with the RIGHT
-        sibling and can safely delete a crashed copy (round-9 ADVICE)."""
+        The marker's CONTENT is the claim's crash signature for
+        ``_reclaim_one_slot``: always ``copy``, because every populate
+        links a state that keeps living in the live dir, so a crashed
+        slot is safe to delete once the live table is present."""
         ts = self._next_snapshot_ts(name)
         root = self.path(name) / SNAPSHOT_DIRNAME
         root.mkdir(parents=True, exist_ok=True)
@@ -1279,10 +1146,9 @@ class Warehouse:
             try:
                 dst.mkdir()
                 # atomic (tmp+replace): a plain write_text torn mid-crash
-                # leaves a partial signature ('publish-mo') that
-                # _reclaim_one_slot routes to the ambiguous legacy branch,
-                # stranding the slot as 'inspect manually' forever instead
-                # of self-healing (round-9 ADVICE). The staging file is
+                # leaves a partial signature ('co') that _reclaim_one_slot
+                # only reports, stranding the slot as 'inspect manually'
+                # instead of self-healing (round-9 ADVICE). The staging file is
                 # parked ONE LEVEL UP among the slots, never inside one: a
                 # slot's own content is the commit protocol (marked =
                 # in-flight, empty = husk, unmarked+payload = committed),
@@ -1290,11 +1156,7 @@ class Warehouse:
                 # corrupt that state machine — in the snapshots root it is
                 # an ignorable non-dir stray that snapshots() already
                 # skips and the next marker write sweeps once stale.
-                atomic_write_text(
-                    dst / "_INCOMPLETE",
-                    f"publish-move:{origin}" if origin else "copy",
-                    staging_dir=root,
-                )
+                atomic_write_text(dst / "_INCOMPLETE", "copy", staging_dir=root)
                 return ts, dst
             except FileExistsError:
                 ts += 1
@@ -1315,7 +1177,9 @@ class Warehouse:
         epoch-ms id (the ``@ms`` decorator analog)."""
         ts, dst = self._claim_snapshot_dir(name)
         src = self.path(name)
-        linked = 0
+        # every link moves its parent dir's mtime, which is what keeps an
+        # in-progress populate fresh for concurrent recover passes
+        # (_slot_activity_mtime)
         for root, dirs, files in os.walk(src):
             dirs[:] = [d for d in dirs if d != SNAPSHOT_DIRNAME]
             rel = Path(root).relative_to(src)
@@ -1323,12 +1187,6 @@ class Warehouse:
                 out = dst / rel / f
                 out.parent.mkdir(parents=True, exist_ok=True)
                 os.link(Path(root) / f, out)
-                linked += 1
-                # keep the in-progress claim visibly alive for concurrent
-                # recover passes (the marker mtime joins directory mtimes
-                # in _slot_activity_mtime)
-                if linked % 256 == 0:
-                    self._touch_marker(dst)
         self._commit_snapshot_dir(dst)
         return ts
 
@@ -1431,7 +1289,7 @@ class Warehouse:
                 try:
                     # atomic for the same reason as the claim-time write:
                     # a torn 'exp' signature would strand the slot in the
-                    # ambiguous legacy branch instead of letting recovery
+                    # report-only branch instead of letting recovery
                     # finish the expiry. Staged in the snapshots root —
                     # a crash-orphaned staging file INSIDE this committed
                     # slot would make snapshots() hide it forever (it

@@ -560,9 +560,59 @@ def _gif_lzw(min_code_size: int, data: bytes, max_out: int | None = None) -> byt
 _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+def _gif_images(payload: bytes):
+    """Lazy GIF block walk shared by decode and demux: skip the header
+    and global color table, step over every extension's sub-blocks, and
+    yield ``(gce, start, end)`` per image. ``gce`` is the first sub-block
+    of the Graphic Control Extension preceding that image (None without
+    one; a GCE governs exactly one following image), and
+    ``payload[start:end]`` is the image's encoded span from its
+    descriptor through its data terminator (descriptor + local color
+    table + LZW sub-blocks). Stops at the trailer or the end of the
+    payload; a malformed stream raises ValueError/IndexError, which each
+    caller words itself."""
+    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("bad GIF signature")
+    flags = payload[10]
+    pos = 13
+    if flags & 0x80:
+        pos += 3 * (2 << (flags & 7))  # global color table
+    gce = None
+    while pos < len(payload):
+        block = payload[pos]
+        if block == 0x3B:  # trailer
+            return
+        if block == 0x21:  # extension: label, then sub-blocks
+            label = payload[pos + 1]
+            pos += 2
+            first_sub = None
+            while (size := payload[pos]) != 0:
+                if first_sub is None:
+                    first_sub = payload[pos + 1 : pos + 1 + size]
+                pos += 1 + size
+            pos += 1
+            if label == 0xF9:
+                gce = first_sub
+            continue
+        if block != 0x2C:
+            raise ValueError(f"unknown block 0x{block:02x}")
+        start = pos
+        iflags = payload[pos + 9]
+        pos += 10
+        if iflags & 0x80:
+            pos += 3 * (2 << (iflags & 7))  # local color table
+        pos += 1  # LZW min code size
+        while (size := payload[pos]) != 0:
+            pos += 1 + size
+        pos += 1
+        yield gce, start, pos
+        gce = None
+
+
 def _decode_gif(payload: bytes, with_pixels: bool = True) -> dict:
     """GIF decode without codec libraries (round 12): LZW is ~50 lines
-    of table reconstruction (_gif_lzw) and the rest is block walking.
+    of table reconstruction (_gif_lzw) and the block walking is
+    _gif_images, shared with the demux.
     Decodes the FIRST image frame against its own rectangle (no
     multi-frame background composition — a training-data pipeline wants
     one representative raster, and the frame geometry is what it
@@ -576,37 +626,18 @@ def _decode_gif(payload: bytes, with_pixels: bool = True) -> dict:
     import numpy as np
 
     try:
-        if payload[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("bad GIF signature")
+        image = next(_gif_images(payload), None)
+        if image is None:
+            raise ValueError("no image descriptor")
+        gce, pos, _end = image
         flags = payload[10]
-        pos = 13
         palette = None
         if flags & 0x80:
             n = 2 << (flags & 7)
-            palette = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(
+            palette = np.frombuffer(payload, np.uint8, 3 * n, 13).reshape(
                 -1, 3
             )
-            pos += 3 * n
-        transparent = None
-        while True:
-            block = payload[pos]
-            if block == 0x3B:  # trailer before any image
-                raise ValueError("no image descriptor")
-            if block == 0x21:  # extension: label, then sub-blocks
-                label = payload[pos + 1]
-                pos += 2
-                first_sub = None
-                while (size := payload[pos]) != 0:
-                    if first_sub is None:
-                        first_sub = payload[pos + 1 : pos + 1 + size]
-                    pos += 1 + size
-                pos += 1
-                if label == 0xF9 and first_sub and first_sub[0] & 1:
-                    transparent = first_sub[3]
-                continue
-            if block != 0x2C:
-                raise ValueError(f"unknown block 0x{block:02x}")
-            break
+        transparent = gce[3] if gce and gce[0] & 1 else None
         _, _, width, height = struct.unpack_from("<HHHH", payload, pos + 1)
         iflags = payload[pos + 9]
         pos += 10
@@ -1565,45 +1596,15 @@ def _gif_frames(payload: bytes) -> list:
     duration, all in pure byte math. Malformed streams raise
     NotImplementedError like the codec guards."""
     try:
-        if payload[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("bad GIF signature")
-        flags = payload[10]
-        pos = 13
-        if flags & 0x80:
-            pos += 3 * (2 << (flags & 7))  # global color table
-        frames: list = []
-        delay_ms = 0
-        while pos < len(payload):
-            block = payload[pos]
-            if block == 0x3B:  # trailer
-                break
-            if block == 0x21:  # extension
-                label = payload[pos + 1]
-                pos += 2
-                first_sub = None
-                while (size := payload[pos]) != 0:
-                    if first_sub is None:
-                        first_sub = payload[pos + 1 : pos + 1 + size]
-                    pos += 1 + size
-                pos += 1
-                if label == 0xF9 and first_sub and len(first_sub) >= 3:
-                    delay_ms = (
-                        int.from_bytes(first_sub[1:3], "little") * 10
-                    )
-                continue
-            if block != 0x2C:
-                raise ValueError(f"unknown block 0x{block:02x}")
-            start = pos
-            iflags = payload[pos + 9]
-            pos += 10
-            if iflags & 0x80:
-                pos += 3 * (2 << (iflags & 7))  # local color table
-            pos += 1  # LZW min code size
-            while (size := payload[pos]) != 0:
-                pos += 1 + size
-            pos += 1
-            frames.append((delay_ms, pos - start))
-            delay_ms = 0  # a GCE governs exactly one following frame
+        frames = [
+            (
+                int.from_bytes(gce[1:3], "little") * 10
+                if gce and len(gce) >= 3
+                else 0,
+                end - start,
+            )
+            for gce, start, end in _gif_images(payload)
+        ]
         if not frames:
             raise ValueError("no image frames")
         return frames

@@ -196,6 +196,18 @@ def test_journal_accepts_str_path(tmp_path):
     assert j.failed_chunks() == [(date(2024, 1, 1), date(2024, 1, 2))]
 
 
+def test_failed_chunks_reads_task_journals(tmp_path):
+    """failed_chunks() is the one failure reader: a failure a sharded
+    worker recorded only in its own ``journal.task1.json`` is returned by
+    the BASE journal, the same work list ``--retry`` runs."""
+    c1 = (date(2024, 1, 1), date(2024, 1, 2))
+    c2 = (date(2024, 1, 3), date(2024, 1, 4))
+    base = BackfillJournal(tmp_path / "journal.json")
+    base.record(c1, "success")
+    BackfillJournal(tmp_path / "journal.task1.json").record(c2, "error: boom")
+    assert base.failed_chunks() == [c2]
+
+
 def test_chunk_date_range_rejects_nonpositive_batch():
     with pytest.raises(ValueError, match="batch_size"):
         chunk_date_range(date(2024, 1, 1), date(2024, 1, 5), 0)

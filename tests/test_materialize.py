@@ -263,14 +263,18 @@ def test_scd2_update_restating_existing_date_wins(spark, wh):
 def test_publish_swap_preserves_data_on_disk(spark, wh):
     """Crash-safe publish: at no point between writes is the table's data
     deleted-without-replacement; after an overwrite the old state lives in
-    the snapshot dir (moved, not copied)."""
+    the snapshot dir on the SAME inodes (zero data copy)."""
     from dbtwiz_spark.materialize import SNAPSHOT_DIRNAME
 
     wh.write_table("cs", _df(spark, [(1, "v1", "d")]))
+    inodes = {p.name: p.stat().st_ino for p in wh.path("cs").glob("part-*")}
+    assert inodes
     wh.write_table("cs", _df(spark, [(2, "v2", "d")]))  # snapshot=True default
     assert wh.read("cs").first().v == "v2"
     snaps = wh.snapshots("cs")
     assert len(snaps) == 1
+    snap_dir = wh.path("cs") / SNAPSHOT_DIRNAME / str(snaps[0])
+    assert {n: (snap_dir / n).stat().st_ino for n in inodes} == inodes
     snap_df = spark.read.parquet(str(wh.path("cs") / SNAPSHOT_DIRNAME / str(snaps[0])))
     assert snap_df.first().v == "v1"
     # no orphaned __tmp / __old dirs left behind
@@ -891,8 +895,9 @@ def test_same_ms_overwrites_keep_all_snapshot_states(spark, wh, monkeypatch):
 
 def test_snapshot_claim_skips_preexisting_slot(spark, wh, monkeypatch):
     """A slot already claimed by a concurrent writer (simulated by
-    pre-creating the directory) must bump the id, not raise -- and the
-    publish path's os.rename must refuse a NON-EMPTY stolen slot and land
+    pre-creating the directory) must bump the id, not raise -- both for a
+    direct snapshot() and for the snapshot write_table takes before its
+    publish swap: the mkdir claim skips a NON-EMPTY stolen slot and lands
     the outgoing state in the next one, intact."""
     import dbtwiz_spark.materialize as mat
 
@@ -914,11 +919,9 @@ def test_snapshot_claim_skips_preexisting_slot(spark, wh, monkeypatch):
     assert wh.read_snapshot("trace", stolen2 + 1).first().v == "v1"
     assert wh.read("trace").first().v == "v2"
     # publish path: steal with an EMPTY slot — a slot claimed via mkdir by
-    # a concurrent snapshot() that has not populated it yet. POSIX
-    # os.rename silently REPLACES an empty directory, so the old
-    # rename-with-retry would overwrite the claim and the claimer would
-    # then pour its files into the outgoing-table snapshot. The mkdir
-    # claim must skip it.
+    # a concurrent snapshot() that has not populated it yet. Two populates
+    # sharing one slot would mix two table states, so the mkdir claim
+    # must skip it.
     stolen3 = wh._next_snapshot_ts("trace")
     empty = snap_root / str(stolen3)
     empty.mkdir()
@@ -984,6 +987,84 @@ def test_publish_crash_at_every_swap_point_loses_no_state(spark, tmp_path):
         assert crashed, f"injection at point {point} did not fire"
 
 
+def test_snapshot_publish_crash_at_every_fs_point(spark, tmp_path, capsys, fs_faults):
+    """Fault injection over write_table(snapshot=True) on a populated,
+    partitioned table: every link, rename, replace, unlink and rmdir of
+    the hardlink snapshot, the publish swap and the __old teardown is
+    crashed once, at each call index. After each crash a fresh
+    Warehouse's _recover must leave:
+
+    - the table reading exactly the old or exactly the new state;
+    - snapshots() listing only complete slots (the committed one, or a
+      byte-complete link tree of the outgoing state);
+    - the committed snapshot intact, live or under the reported __old;
+    - with a zero reclaim age, no partial slot after a second pass."""
+    import shutil
+
+    from dbtwiz_spark.materialize import SNAPSHOT_DIRNAME, Warehouse
+
+    fns = ("link", "rename", "replace", "unlink", "rmdir")
+    rows = {
+        v: [(k, v, f"2024-01-0{k}") for k in (1, 2)] for v in ("v1", "v2", "v3")
+    }
+
+    def tree(root):
+        return {
+            str(p.relative_to(root)): p.read_bytes()
+            for p in sorted(root.rglob("*"))
+            if p.is_file() and SNAPSHOT_DIRNAME not in p.relative_to(root).parts
+        }
+
+    seed = tmp_path / "seed"
+    wh = Warehouse(spark, str(seed))
+    for v in ("v1", "v2"):  # the second write commits a snapshot of v1
+        wh.write_table("t", _df(spark, rows[v]), partition_by="partitiondate")
+    (committed,) = wh.snapshots("t")
+    committed_tree = tree(wh.path("t") / SNAPSHOT_DIRNAME / str(committed))
+    outgoing_tree = tree(wh.path("t"))
+    new_df = _df(spark, rows["v3"])
+
+    def run(point):
+        root = tmp_path / f"p{point}"
+        shutil.copytree(seed, root)
+        wh = Warehouse(spark, str(root))
+        inj = fs_faults(fn_names=fns)
+        inj.point = point
+        crashed = False
+        with inj:
+            try:
+                wh.write_table("t", new_df, partition_by="partitiondate")
+            except fs_faults.Killed:
+                crashed = True
+        capsys.readouterr()
+        wh2 = Warehouse(spark, str(root))
+        wh2._recover("t")
+        out = capsys.readouterr().out
+        got = sorted((r.k, r.v, r.partitiondate) for r in wh2.read("t").collect())
+        assert got in (rows["v2"], rows["v3"]), f"point {point}: {got}"
+        snap_root = wh2.path("t") / SNAPSHOT_DIRNAME
+        for s in wh2.snapshots("t"):
+            want = committed_tree if s == committed else outgoing_tree
+            assert tree(snap_root / str(s)) == want, f"point {point}: slot {s}"
+        homes = [snap_root] + [
+            o / SNAPSHOT_DIRNAME for o in sorted(root.glob("t__old_*"))
+        ]
+        home = next(h for h in homes if (h / str(committed)).is_dir())
+        assert tree(home / str(committed)) == committed_tree, f"point {point}"
+        assert home == snap_root or home.parent.name in out, f"point {point}"
+        wh2.INCOMPLETE_RECLAIM_AGE_S = 0
+        wh2._recover("t")
+        partial = [p.name for p in snap_root.glob("*/_INCOMPLETE")]
+        assert not partial, f"point {point}: partial slots {partial}"
+        return inj.calls, crashed
+
+    total, crashed = run(None)
+    assert not crashed and total >= 10, total
+    for point in range(1, total + 1):
+        _, crashed = run(point)
+        assert crashed, f"injection at point {point} did not fire"
+
+
 def test_incomplete_snapshot_slot_is_invisible(spark, wh):
     """A snapshot slot still carrying its _INCOMPLETE marker (crash or
     concurrent writer mid-populate) must not be served by snapshots()/
@@ -1031,40 +1112,14 @@ def test_stale_incomplete_copy_slot_is_deleted(spark, wh, capsys):
     assert wh.read("tst").count() == 1
 
 
-def test_stale_incomplete_publish_slot_reunites_with_old_dir(spark, wh, capsys):
-    """Crash artifact of the write_table publish-move: half the outgoing
-    state sits in the slot, half in the sibling __old dir. Reclamation
-    moves the slot's contents back into __old (the complete outgoing
-    state, where the stale-artifact message already points) and removes
-    the orphaned slot — no snapshot id or disk is consumed forever."""
-    wh.write_table("tpu", _df(spark, [(1, "v1", "d")]))
-    # simulate the crash: claimed slot (recording its origin sibling, as
-    # write_table's publish branch does) holds one moved item, the
-    # remainder stays in <table>__old_<ts>
-    ts, dst = wh._claim_snapshot_dir("tpu", origin="tpu__old_99")
-    (dst / "part-moved.parquet").write_text("half in slot")
-    old = wh.path("tpu").parent / "tpu__old_99"
-    old.mkdir()
-    (old / "part-left.parquet").write_text("half in old")
-    wh.INCOMPLETE_RECLAIM_AGE_S = 0
-    assert wh.exists("tpu")
-    assert not dst.exists(), "orphaned publish slot must be reclaimed"
-    assert (old / "part-left.parquet").exists()
-    assert (old / "part-moved.parquet").exists(), "halves must be reunited"
-    out = capsys.readouterr().out
-    assert "reunited" in out
-    # the committed live table still reads fine
-    assert wh.read("tpu").count() == 1
-
-
 def test_reclaim_collision_with_unrelated_old_dir_never_raises(spark, wh, capsys):
-    """Review fix: a stale copy-crash slot next to an UNRELATED leftover
-    __old dir shares item names with it (both mirror the live table's
-    layout). The reunite branch must detect the collision — renaming a
+    """A stale copy-crash slot next to an UNRELATED leftover __old dir
+    shares item names with it (both mirror the live table's layout).
+    Reclaim must never move anything into the __old dir (renaming a
     directory onto an existing non-empty one raises ENOTEMPTY, and that
     exception escaping _recover would brick exists()/read() for the
-    table forever. With a live table verified present, the colliding
-    slot is classified as a partial copy and deleted instead."""
+    table forever): with a live table verified present, the slot is a
+    partial copy and is deleted."""
     import os
 
     wh.write_table("tcol", _df(spark, [(1, "v", "2024-01-01")]),
@@ -1090,81 +1145,47 @@ def test_reclaim_collision_with_unrelated_old_dir_never_raises(spark, wh, capsys
     os.rename(old, wh.path("tcol").parent / "inspected")  # tidy
 
 
-def test_reclaim_reunites_with_recorded_origin_not_newest_old(spark, wh, capsys):
-    """Round-9 ADVICE scenario: a publish-move crash slot coexists with a
-    NEWER unrelated __old dir. Positional newest-__old matching would
-    either mingle the slot into the wrong inspection dir (disjoint
-    names) or misclassify it as a partial copy and delete half the
-    outgoing state (colliding names). The marker's recorded origin must
-    route the contents to the true, OLDER sibling."""
-    wh.write_table("tor", _df(spark, [(1, "v1", "d")]))
-    ts, dst = wh._claim_snapshot_dir("tor", origin="tor__old_100")
-    (dst / "part-moved.parquet").write_text("half in slot")
-    origin = wh.path("tor").parent / "tor__old_100"
-    origin.mkdir()
-    (origin / "part-left.parquet").write_text("half in origin")
-    # NEWER unrelated __old with disjoint names — the trap dir
-    trap = wh.path("tor").parent / "tor__old_999"
-    trap.mkdir()
-    (trap / "unrelated.parquet").write_text("unrelated state")
-    wh.INCOMPLETE_RECLAIM_AGE_S = 0
-    assert wh.exists("tor")
-    assert not dst.exists(), "slot must be reclaimed"
-    assert (origin / "part-moved.parquet").exists(), (
-        "contents must reunite with the RECORDED origin, not the newest __old"
-    )
-    assert (origin / "part-left.parquet").exists()
-    assert list(trap.iterdir()) == [trap / "unrelated.parquet"], (
-        "the unrelated newer __old must be untouched"
-    )
-    assert "reunited with tor__old_100" in capsys.readouterr().out
-
-
-def test_reclaim_surfaces_slot_when_recorded_origin_gone(spark, wh, capsys):
-    """A publish-move slot whose recorded sibling no longer exists matches
-    no safe remedy — surfaced for manual inspection, never moved into an
-    unrelated dir and never deleted."""
-    wh.write_table("tgo", _df(spark, [(1, "v1", "d")]))
-    ts, dst = wh._claim_snapshot_dir("tgo", origin="tgo__old_5")
-    (dst / "part-moved.parquet").write_text("orphaned half")
-    other = wh.path("tgo").parent / "tgo__old_777"
-    other.mkdir()
-    (other / "x.parquet").write_text("unrelated")
-    wh.INCOMPLETE_RECLAIM_AGE_S = 0
-    assert wh.exists("tgo")
-    assert dst.exists() and (dst / "part-moved.parquet").exists()
-    assert list(other.iterdir()) == [other / "x.parquet"]
-    assert "recorded sibling" in capsys.readouterr().out
-
-
-def test_reclaim_surfaces_legacy_slot_next_to_old_dirs(spark, wh, capsys):
-    """A pre-signature (empty-marker) slot next to ANY __old sibling is
-    ambiguous — publish-move half and copy crash are indistinguishable —
-    so it is surfaced, never moved or deleted (the conservative close of
-    the round-9 ADVICE hole). Without siblings and with live data it is
-    provably a partial copy and is deleted."""
-    wh.write_table("tlg", _df(spark, [(1, "v1", "d")]))
-    ts, dst = wh._claim_snapshot_dir("tlg")
-    (dst / "_INCOMPLETE").write_text("")  # legacy claim: no signature
-    (dst / "part.parquet").write_text("ambiguous half")
-    old = wh.path("tlg").parent / "tlg__old_42"
+@pytest.mark.parametrize("signature", ["publish-move:tfm__old_7", "", "garbage"])
+def test_reclaim_reports_foreign_marker_untouched(
+    spark, wh, capsys, fs_faults, signature
+):
+    """Reclaim has two remedies, ``copy`` and ``expire``. Any other marker
+    (the ``publish-move:`` and empty markers older trees wrote, or
+    garbage) is reported and left in place, even on a stale slot next to
+    an __old sibling: _recover makes zero filesystem mutations, the slot
+    payload and the sibling stay byte for byte, and snapshots() does not
+    list the slot."""
+    wh.write_table("tfm", _df(spark, [(1, "v1", "d")]))
+    ts, dst = wh._claim_snapshot_dir("tfm")
+    (dst / "_INCOMPLETE").write_text(signature)
+    (dst / "part.parquet").write_text("slot payload")
+    old = wh.path("tfm").parent / "tfm__old_7"
     old.mkdir()
-    (old / "y.parquet").write_text("maybe the remainder")
+    (old / "part.parquet").write_text("sibling payload")
     wh.INCOMPLETE_RECLAIM_AGE_S = 0
-    assert wh.exists("tlg")
-    assert dst.exists() and (dst / "part.parquet").exists()
-    assert list(old.iterdir()) == [old / "y.parquet"]
-    assert "ambiguous" in capsys.readouterr().out
-    # remove the sibling: now provably a partial copy -> deleted
-    (old / "y.parquet").unlink()
-    old.rmdir()
-    assert wh.exists("tlg")
-    assert not dst.exists()
+
+    def tree(root):
+        return {
+            str(p.relative_to(root)): p.read_bytes()
+            for p in sorted(root.rglob("*"))
+            if p.is_file()
+        }
+
+    before = (tree(dst), tree(old))
+    capsys.readouterr()
+    inj = fs_faults(fn_names=("link", "rename", "replace", "unlink", "rmdir", "mkdir"))
+    with inj:
+        wh._recover("tfm")
+    assert inj.calls == 0, f"marker {signature!r}: {inj.calls} fs mutations"
+    assert (tree(dst), tree(old)) == before
+    assert ts not in wh.snapshots("tfm")
+    out = capsys.readouterr().out
+    assert f"marker {signature!r}" in out and "inspect manually" in out
 
 
 def test_active_populate_not_reclaimed_by_stale_marker(spark, wh, capsys):
     """Round-9 ADVICE: staleness must track slot WRITE ACTIVITY, not the
-    marker's claim-time mtime — a >1h copytree of a big table keeps
+    marker's claim-time mtime — a >1h link walk of a big table keeps
     landing files (fresh parent-dir mtimes) while its marker mtime never
     moves. A slot whose marker is ancient but whose tree shows fresh
     activity must survive the reclaim pass."""
@@ -1174,7 +1195,7 @@ def test_active_populate_not_reclaimed_by_stale_marker(spark, wh, capsys):
     ts, dst = wh._claim_snapshot_dir("tact")
     ancient = 1_000_000.0
     _os.utime(dst / "_INCOMPLETE", (ancient, ancient))
-    # in-flight copy: a fresh directory entry just landed
+    # in-flight link walk: a fresh directory entry just landed
     sub = dst / "partitiondate=d"
     sub.mkdir()
     (sub / "part-0.parquet").write_text("still copying")
@@ -1668,8 +1689,8 @@ def test_slot_activity_freshness_early_exit(spark, wh, tmp_path):
     """The fresh/stale verdict must not walk the whole slot tree once ANY
     timestamp at/past the threshold is seen — a large slot parked as
     'inspect manually' would otherwise tax every exists()/read() with
-    O(files) stats forever (round-9 ADVICE). A fresh MARKER alone must
-    decide without touching os.walk at all."""
+    O(directories) stats forever (round-9 ADVICE). A fresh MARKER alone
+    must decide without touching os.walk at all."""
     import os as _os
 
     slot = tmp_path / "slotx"
@@ -1694,13 +1715,14 @@ def test_slot_activity_freshness_early_exit(spark, wh, tmp_path):
     assert got >= time.time() - 60
 
     # with no threshold (the default, fresh_after=inf) nothing can
-    # early-exit: the walk must still visit everything and return the
-    # TRUE maximum across marker + tree (mtime and ctime both count —
-    # utime bumps ctime, so the freshest signal here is ctime-now)
-    expected = 0.0
-    for p in [marker, slot, *slot.iterdir()]:
-        st = p.stat()
-        expected = max(expected, st.st_mtime, st.st_ctime)
+    # early-exit: the walk must still visit every directory and return
+    # the TRUE maximum across the marker and the slot's directories
+    sub = slot / "partitiondate=d"
+    sub.mkdir()
+    (sub / "f").write_text("x")
+    _os.utime(slot, (0, 0))
+    expected = max(p.stat().st_mtime for p in (marker, slot, sub))
+    assert expected == sub.stat().st_mtime
     got = Warehouse._slot_activity_mtime(slot, marker)
     assert got == pytest.approx(expected), (
         "default call must walk the full tree for the true maximum"
@@ -1768,29 +1790,6 @@ def test_expire_marker_write_never_resurrects_deleted_slot(spark, wh):
     assert not list(
         (wh.path("tex") / SNAPSHOT_DIRNAME).glob("_INCOMPLETE.tmp.*")
     ), "failed replace must clean its own staging file"
-
-
-def test_publish_move_reclaim_clears_stray_staging(spark, wh):
-    """A stray `_INCOMPLETE.tmp.*` inside a stale publish-move slot
-    (defense-in-depth case) must not zombie the slot: reclaim deletes
-    claim machinery marker-last and the rmdir succeeds."""
-    import os as _os
-
-    wh.write_table("tzm", _df(spark, [(1, "a", "d")]))
-    wh.INCOMPLETE_RECLAIM_AGE_S = 0
-    parent = wh.path("tzm").parent
-    ts, dst = wh._claim_snapshot_dir("tzm", origin="tzm__old_7")
-    (dst / "half.parquet").write_text("half")
-    (dst / "_INCOMPLETE.tmp.9.9.9").write_text("stray")
-    origin = parent / "tzm__old_7"
-    origin.mkdir()
-    ancient = 0
-    for p in (dst / "_INCOMPLETE", dst / "half.parquet",
-              dst / "_INCOMPLETE.tmp.9.9.9", dst):
-        _os.utime(p, (ancient, ancient))
-    wh._recover("tzm")
-    assert not dst.exists(), "slot with stray staging must still reclaim"
-    assert (origin / "half.parquet").exists(), "payload reunited"
 
 
 def test_concurrent_expiry_stress_counts_each_slot_at_most_once(spark, wh):

@@ -1001,18 +1001,16 @@ def test_scd2_invalidate_interleaved_matches_model(spark, tmp_path):
 
 def test_reclaim_crash_at_every_fs_point_loses_no_state(spark, tmp_path, fs_faults):
     """Fault injection over _reclaim_one_slot (round-9 ADVICE hardening):
-    every filesystem mutation in a reclaim pass (os.rename item moves,
-    the marker unlink inside Path.unlink, the slot/husk rmdir, and the
-    unlinks/rmdirs inside shutil.rmtree) is crashed once at each call
-    index, for every slot signature (publish-move with a decoy newer
-    __old, copy crash, legacy unsigned, empty husk). After a second,
-    uninjected recovery pass the invariants of the r5 merge-bug method
-    hold against a dict model of the payload:
+    every filesystem mutation in a reclaim pass (the marker unlink inside
+    Path.unlink, the slot/husk rmdir, and the unlinks/rmdirs inside
+    shutil.rmtree) is crashed once at each call index, for every slot
+    shape (copy crash, a foreign marker next to an __old sibling, empty
+    husk). After a second, uninjected recovery pass the invariants of
+    the r5 merge-bug method hold:
 
-    - publish-move payloads are CONSERVED: every half ends up in the
-      recorded origin dir (never the decoy), or is still awaiting a
-      retry inside the still-marked slot;
-    - inspection copies (__old dirs) and the live table are byte-stable;
+    - a foreign-marker slot and its __old sibling are byte-stable (the
+      pass reports them and mutates nothing);
+    - the live table is byte-stable;
     - snapshots() NEVER serves a crashed slot (marker present or empty);
     - committed snapshot history survives verbatim.
     """
@@ -1029,24 +1027,13 @@ def test_reclaim_crash_at_every_fs_point_loses_no_state(spark, tmp_path, fs_faul
         committed = wh.snapshots("t")
         assert len(committed) == 1
         parent = wh.path("t").parent
-        payload = {}  # relative location -> content, per the dict model
-        if scenario == "publish-move":
-            ts, dst = wh._claim_snapshot_dir("t", origin="t__old_100")
-            (dst / "half_a.parquet").write_text("half_a")
-            origin = parent / "t__old_100"
-            origin.mkdir()
-            (origin / "half_b.parquet").write_text("half_b")
-            decoy = parent / "t__old_900"
-            decoy.mkdir()
-            (decoy / "decoy.parquet").write_text("decoy")
-            payload = {"half_a": "half_a", "half_b": "half_b"}
-        elif scenario == "copy":
+        if scenario == "copy":
             ts, dst = wh._claim_snapshot_dir("t")
             (dst / "partial.parquet").write_text("partial")
-        elif scenario == "legacy-sibling":
+        elif scenario == "foreign-marker":
             ts, dst = wh._claim_snapshot_dir("t")
-            (dst / "_INCOMPLETE").write_text("")
-            (dst / "amb.parquet").write_text("amb")
+            (dst / "_INCOMPLETE").write_text("publish-move:t__old_300")
+            (dst / "half.parquet").write_text("half")
             sib = parent / "t__old_300"
             sib.mkdir()
             (sib / "sib.parquet").write_text("sib")
@@ -1064,31 +1051,19 @@ def test_reclaim_crash_at_every_fs_point_loses_no_state(spark, tmp_path, fs_faul
         assert {(r.k, r.v) for r in wh.read("t").collect()} == {(1, "live")}
         # committed history survives and nothing crashed got served
         assert wh.snapshots("t") == committed, scenario
-        if scenario == "publish-move":
-            origin = parent / "t__old_100"
-            decoy = parent / "t__old_900"
-            assert [p.name for p in sorted(decoy.iterdir())] == [
-                "decoy.parquet"
-            ], "decoy __old must never gain or lose items"
-            # payload conservation: each half is in the origin, or still
-            # in a slot that KEPT its marker (retry-able), never lost
-            located = {}
-            for name in ("half_a.parquet", "half_b.parquet"):
-                if (origin / name).exists():
-                    located[name] = "origin"
-            for slot in (wh.path("t") / "_snapshots").iterdir():
-                if (slot / "_INCOMPLETE").exists():
-                    for name in ("half_a.parquet", "half_b.parquet"):
-                        if (slot / name).exists():
-                            located.setdefault(name, "slot")
-            assert set(located) == {"half_a.parquet", "half_b.parquet"}, (
-                f"publish-move payload lost: {located}"
-            )
-        elif scenario == "legacy-sibling":
+        if scenario == "foreign-marker":
             sib = parent / "t__old_300"
+            assert [p.name for p in sib.iterdir()] == ["sib.parquet"]
             assert (sib / "sib.parquet").read_text() == "sib"
+            (slot,) = [
+                p
+                for p in (wh.path("t") / "_snapshots").iterdir()
+                if (p / "_INCOMPLETE").exists()
+            ]
+            assert (slot / "_INCOMPLETE").read_text() == "publish-move:t__old_300"
+            assert (slot / "half.parquet").read_text() == "half"
 
-    for scenario in ("publish-move", "copy", "legacy-sibling", "husk"):
+    for scenario in ("copy", "foreign-marker", "husk"):
         # dry run counts the fs-mutation call points of one reclaim pass
         # (shared conftest harness — one implementation of the
         # patch/count/inject machinery across the crash tests)
@@ -1098,11 +1073,11 @@ def test_reclaim_crash_at_every_fs_point_loses_no_state(spark, tmp_path, fs_faul
         with inj:
             wh._recover("t")
         total = inj.calls
-        if scenario == "legacy-sibling":
-            # ambiguous slots are surfaced, never touched — zero fs
+        if scenario == "foreign-marker":
+            # foreign markers are reported, never touched — zero fs
             # mutations IS the property being pinned
             assert total == 0, (
-                f"legacy-sibling must be surfaced untouched, saw {total} "
+                f"foreign-marker must be reported untouched, saw {total} "
                 "fs mutations"
             )
         else:
