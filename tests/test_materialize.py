@@ -1145,23 +1145,22 @@ def test_reclaim_collision_with_unrelated_old_dir_never_raises(spark, wh, capsys
     os.rename(old, wh.path("tcol").parent / "inspected")  # tidy
 
 
-@pytest.mark.parametrize("signature", ["publish-move:tfm__old_7", "", "garbage"])
-def test_reclaim_reports_foreign_marker_untouched(
-    spark, wh, capsys, fs_faults, signature
-):
-    """Reclaim has two remedies, ``copy`` and ``expire``. Any other marker
-    (the ``publish-move:`` and empty markers older trees wrote, or
-    garbage) is reported and left in place, even on a stale slot next to
-    an __old sibling: _recover makes zero filesystem mutations, the slot
-    payload and the sibling stay byte for byte, and snapshots() does not
+def _assert_foreign_marker_untouched(wh, capsys, fs_faults, table, signature,
+                                     siblings):
+    """Leave a stale slot of ``table`` whose marker reads ``signature``
+    next to the given ``__old`` ``siblings`` ({name suffix: payload}) and
+    check that _recover reports it and makes zero filesystem mutations:
+    slot payload and siblings stay byte for byte and snapshots() does not
     list the slot."""
-    wh.write_table("tfm", _df(spark, [(1, "v1", "d")]))
-    ts, dst = wh._claim_snapshot_dir("tfm")
+    ts, dst = wh._claim_snapshot_dir(table)
     (dst / "_INCOMPLETE").write_text(signature)
     (dst / "part.parquet").write_text("slot payload")
-    old = wh.path("tfm").parent / "tfm__old_7"
-    old.mkdir()
-    (old / "part.parquet").write_text("sibling payload")
+    olds = []
+    for suffix, payload in siblings.items():
+        old = wh.path(table).parent / f"{table}__old_{suffix}"
+        old.mkdir()
+        (old / "part.parquet").write_text(payload)
+        olds.append(old)
     wh.INCOMPLETE_RECLAIM_AGE_S = 0
 
     def tree(root):
@@ -1171,16 +1170,70 @@ def test_reclaim_reports_foreign_marker_untouched(
             if p.is_file()
         }
 
-    before = (tree(dst), tree(old))
+    before = [tree(d) for d in (dst, *olds)]
     capsys.readouterr()
     inj = fs_faults(fn_names=("link", "rename", "replace", "unlink", "rmdir", "mkdir"))
     with inj:
-        wh._recover("tfm")
+        wh._recover(table)
     assert inj.calls == 0, f"marker {signature!r}: {inj.calls} fs mutations"
-    assert (tree(dst), tree(old)) == before
-    assert ts not in wh.snapshots("tfm")
+    assert [tree(d) for d in (dst, *olds)] == before
+    assert ts not in wh.snapshots(table)
     out = capsys.readouterr().out
     assert f"marker {signature!r}" in out and "inspect manually" in out
+
+
+@pytest.mark.parametrize("signature", ["", "garbage"])
+def test_reclaim_reports_foreign_marker_untouched(
+    spark, wh, capsys, fs_faults, signature
+):
+    """Reclaim has two remedies, ``copy`` and ``expire``. Any other marker
+    (the empty marker older trees wrote, or garbage) is reported and left
+    in place, even on a stale slot next to an __old sibling."""
+    wh.write_table("tfm", _df(spark, [(1, "v1", "d")]))
+    _assert_foreign_marker_untouched(
+        wh, capsys, fs_faults, "tfm", signature, {"7": "sibling payload"}
+    )
+
+
+def test_stale_incomplete_publish_slot_reunites_with_old_dir(
+    spark, wh, capsys, fs_faults
+):
+    """A stale ``publish-move:`` slot (written by older trees' item-by-item
+    publish) next to the __old sibling its marker records is no longer
+    reunited with it: write_table snapshots through the hardlink walk and
+    reclaim only reports the foreign marker, moving nothing."""
+    wh.write_table("tpu", _df(spark, [(1, "v1", "d")]))
+    _assert_foreign_marker_untouched(
+        wh, capsys, fs_faults, "tpu", "publish-move:tpu__old_99",
+        {"99": "half in old"},
+    )
+    assert wh.read("tpu").count() == 1
+
+
+def test_reclaim_reunites_with_recorded_origin_not_newest_old(
+    spark, wh, capsys, fs_faults
+):
+    """A stale ``publish-move:`` slot whose recorded origin coexists with a
+    NEWER unrelated __old dir: neither sibling is touched and the slot is
+    reported, not routed into either."""
+    wh.write_table("tor", _df(spark, [(1, "v1", "d")]))
+    _assert_foreign_marker_untouched(
+        wh, capsys, fs_faults, "tor", "publish-move:tor__old_100",
+        {"100": "half in origin", "999": "unrelated state"},
+    )
+
+
+def test_reclaim_surfaces_slot_when_recorded_origin_gone(
+    spark, wh, capsys, fs_faults
+):
+    """A stale ``publish-move:`` slot whose recorded sibling no longer
+    exists is surfaced for manual inspection: never moved into an
+    unrelated __old dir and never deleted."""
+    wh.write_table("tgo", _df(spark, [(1, "v1", "d")]))
+    _assert_foreign_marker_untouched(
+        wh, capsys, fs_faults, "tgo", "publish-move:tgo__old_5",
+        {"777": "unrelated"},
+    )
 
 
 def test_active_populate_not_reclaimed_by_stale_marker(spark, wh, capsys):
