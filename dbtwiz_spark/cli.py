@@ -292,14 +292,6 @@ def cmd_test(args) -> int:
     check; every check is a single Spark job over the built table."""
     from pyspark.sql import functions as F
 
-    if getattr(args, "date", None):
-        from datetime import date as _date
-
-        try:
-            _date.fromisoformat(args.date)
-        except ValueError:
-            print(f"error: --date must be YYYY-MM-DD, got {args.date!r}")
-            return 1
     runner, manifest, wh = _load(args)
     failures = 0
 
@@ -366,7 +358,7 @@ def cmd_test(args) -> int:
             # reference `test --date`: check only that date's partition —
             # at scale the difference between testing today's increment and
             # re-scanning the whole history on every run
-            df = df.filter(F.col(m.partition_by) == args.date)
+            df = df.filter(F.col(m.partition_by) == args.date.isoformat())
             if df.isEmpty():
                 # vacuous green is worse than noise: a typo'd or unbuilt
                 # date would otherwise "pass" every check on zero rows
@@ -556,7 +548,7 @@ def cmd_backfill(args) -> int:
               "is given")
         return 1
     else:
-        first, last = date.fromisoformat(args.first), date.fromisoformat(args.last)
+        first, last = args.first, args.last
     try:
         results = run_backfill(
             runner,
@@ -1309,6 +1301,17 @@ def _positive_int(text: str) -> int:
     return n
 
 
+def _iso_date(text: str) -> date:
+    """argparse type of a calendar date (YYYY-MM-DD): a bad date is a
+    usage error before any session starts, not a traceback after."""
+    try:
+        return date.fromisoformat(text)
+    except ValueError as e:
+        raise argparse.ArgumentTypeError(
+            f"must be a YYYY-MM-DD date, got {text!r} ({e})"
+        ) from None
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="dbtwiz_spark")
     sub = p.add_subparsers(dest="command", required=True)
@@ -1372,7 +1375,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     t = sub.add_parser("test", help="model checks (pk uniqueness)")
     common(t)
-    t.add_argument("--date", default=None,
+    t.add_argument("--date", type=_iso_date, default=None,
                    help="check only this date's partition (YYYY-MM-DD)")
     t.set_defaults(fn=cmd_test)
 
@@ -1386,9 +1389,9 @@ def build_parser() -> argparse.ArgumentParser:
 
     bf = sub.add_parser("backfill", help="date-chunked re-run of a model range")
     common(bf)
-    bf.add_argument("--first", default=None,
+    bf.add_argument("--first", type=_iso_date, default=None,
                     help="range start (required unless --task-ranges)")
-    bf.add_argument("--last", default=None,
+    bf.add_argument("--last", type=_iso_date, default=None,
                     help="range end (required unless --task-ranges)")
     bf.add_argument("--batch-days", type=int, default=None)
     bf.add_argument("--task-index", type=int, default=None,

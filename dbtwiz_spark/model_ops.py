@@ -258,6 +258,42 @@ def fix_sql(sql: str) -> str:
     return "\n".join(cleaned).rstrip("\n") + "\n"
 
 
+def _git_model_records(project_root: str | Path, *git_args: str):
+    r"""Run ``git -C <project_root> <git_args> -z`` for the model selectors
+    and return ``(records, model_file)``: the NUL-separated output records
+    and a resolver mapping a path git printed to its model .sql file under
+    ``models/``, or None when it is not one. ``([], None)`` outside a git
+    work tree (new projects are usable before ``git init``).
+
+    -z: NUL-separated records with NO C-style quoting — plain output
+    octal-escapes non-ASCII paths ("caf\303\251.sql"), which would fail
+    the exists() check and silently drop the model. Git prints paths
+    relative to the repo top-level, which may sit above project_root, so
+    they resolve against the top-level and nested projects work."""
+    import subprocess
+
+    root = Path(project_root)
+    proc = subprocess.run(
+        ["git", "-C", str(root), *git_args, "-z"], capture_output=True, text=True
+    )
+    if proc.returncode != 0:
+        return [], None
+    top = subprocess.run(
+        ["git", "-C", str(root), "rev-parse", "--show-toplevel"],
+        capture_output=True, text=True,
+    ).stdout.strip()
+    base = Path(top) if top else root
+    models_dir = root.joinpath("models").resolve()
+
+    def model_file(path: str) -> Path | None:
+        p = (base / path).resolve()
+        if p.suffix == ".sql" and p.exists() and p.is_relative_to(models_dir):
+            return p
+        return None
+
+    return proc.stdout.split("\0"), model_file
+
+
 def staged_model_files(project_root: str | Path) -> list[Path]:
     """Git-staged (added/modified) model .sql files under ``models/``.
 
@@ -266,31 +302,12 @@ def staged_model_files(project_root: str | Path) -> list[Path]:
     ``get_staged_files``): the reference parses ``git status --short``;
     here ``git diff --cached --name-only --diff-filter=AM`` gives the same
     staged add/modify set directly. Returns [] when the project is not a
-    git work tree (new projects are usable before ``git init``)."""
-    import subprocess
-
-    root = Path(project_root)
-    proc = subprocess.run(
-        ["git", "-C", str(root), "diff", "--cached", "--name-only",
-         "--diff-filter=AM"],
-        capture_output=True, text=True,
+    git work tree."""
+    records, model_file = _git_model_records(
+        project_root, "diff", "--cached", "--name-only", "--diff-filter=AM"
     )
-    if proc.returncode != 0:
-        return []
-    # git prints paths relative to the repo top-level, which may sit above
-    # project_root; resolve against the top-level so nested projects work.
-    top = subprocess.run(
-        ["git", "-C", str(root), "rev-parse", "--show-toplevel"],
-        capture_output=True, text=True,
-    ).stdout.strip()
-    base = Path(top) if top else root
-    models_dir = root.joinpath("models").resolve()
-    out = []
-    for line in proc.stdout.splitlines():
-        p = (base / line.strip()).resolve()
-        if p.suffix == ".sql" and p.exists() and p.is_relative_to(models_dir):
-            out.append(p)
-    return sorted(out)
+    found = (model_file(r) for r in records if r)
+    return sorted(p for p in found if p is not None)
 
 
 def _select_model_files(
@@ -461,26 +478,8 @@ def locally_changed_model_files(project_root: str | Path) -> list[Path]:
     select the NEW name, and a .yml-sidecar-only change selects its
     model (config changes need a rebuild too). Returns [] outside a git
     work tree."""
-    import subprocess
-
-    root = Path(project_root)
-    # -z: NUL-separated records with NO C-style quoting — plain-text
-    # porcelain octal-escapes non-ASCII paths ("caf\303\251.sql"), which
-    # would fail the exists() check and silently drop the model
-    proc = subprocess.run(
-        ["git", "-C", str(root), "status", "--porcelain", "-z"],
-        capture_output=True, text=True,
-    )
-    if proc.returncode != 0:
-        return []
-    top = subprocess.run(
-        ["git", "-C", str(root), "rev-parse", "--show-toplevel"],
-        capture_output=True, text=True,
-    ).stdout.strip()
-    base = Path(top) if top else root
-    models_dir = root.joinpath("models").resolve()
+    tokens, model_file = _git_model_records(project_root, "status", "--porcelain")
     out = []
-    tokens = proc.stdout.split("\0")
     i = 0
     while i < len(tokens):
         rec = tokens[i]
@@ -495,11 +494,11 @@ def locally_changed_model_files(project_root: str | Path) -> list[Path]:
             i += 1
         elif not (set(status) & set("AM?")):
             continue  # deletes/unmerged are not buildable changes
-        p = (base / path).resolve()
-        if p.suffix == ".yml":
+        if path.endswith(".yml"):
             # a sidecar-only change (materialization, partitioning,
             # tests) re-selects its model: map to the sibling .sql
-            p = p.with_suffix(".sql")
-        if p.suffix == ".sql" and p.exists() and p.is_relative_to(models_dir):
+            path = path[: -len(".yml")] + ".sql"
+        p = model_file(path)
+        if p is not None:
             out.append(p)
     return sorted(set(out))

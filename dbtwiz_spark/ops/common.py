@@ -65,9 +65,10 @@ def views(spark: SparkSession, sf_dir: str) -> Catalog:
 def clear_session_memos() -> int:
     """Evict every live catalog's artifacts (`Catalog.clear_memos`);
     returns the number dropped.
-    testing.run_all calls it after each sweep so a long-lived session
-    sweeping many scales holds one sweep's working set, not all of them
-    (a 54-entry single-session sweep OOM'd a 1 GiB-driver session)."""
+    scripts/full_sweep.py calls it after its sweep so a long-lived
+    session sweeping many scales holds one sweep's working set, not all
+    of them (a 54-entry single-session sweep OOM'd a 1 GiB-driver
+    session)."""
     return sum(cat.clear_memos() for cat in list(_CATALOGS.values()))
 
 

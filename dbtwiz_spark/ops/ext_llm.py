@@ -20,7 +20,7 @@ BPE-ish regex tokenizer is its own entry (ext-token-count).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from dbtwiz_spark.ops.common import (
@@ -396,27 +396,35 @@ NUM_PERM = 32
 BANDS = 8  # 8 bands x 4 rows: catches jaccard >~0.5 candidates w.h.p.
 
 
-def minhash_signatures(sh: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, mh_0..mh_{n-1}): min of seeded xxhash64 per permutation.
+def _minhash_columns() -> list[Column]:
+    """The MinHash scheme, one aggregate per permutation: ``mh_i`` is the
+    min over a doc's shingles of xxhash64 seeded with ``i``. The one
+    definition behind the batch per-doc record (ext_dedup_near) and
+    ``minhash_signatures`` (the streaming paths), so a retune moves
+    both."""
+    return [
+        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh_{i}")
+        for i in range(NUM_PERM)
+    ]
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_{NUM_PERM-1}): min of seeded xxhash64 per
+    permutation.
 
     One shuffle (groupBy doc_id); signature width is a constant column count,
-    so cost is O(shingles × num_perm) map-side work — the 100 TB-safe shape.
+    so cost is O(shingles × NUM_PERM) map-side work — the 100 TB-safe shape.
     """
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh_{i}")
-            for i in range(num_perm)
-        ]
-    )
+    return sh.groupBy("doc_id").agg(*_minhash_columns())
 
 
-def band_stack(per_doc: DataFrame, num_perm: int = NUM_PERM, bands: int = BANDS) -> DataFrame:
+def band_stack(per_doc: DataFrame) -> DataFrame:
     """(doc_id, band, sig): hash each band's minhash rows into one band
     signature and explode to the LSH bucket key. Shared by the batch
     near-dup path (ext_dedup_near) and the streaming signature store
     (streaming/jobs.band_signatures) so the banding scheme can never
     silently diverge between them."""
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // BANDS
     return per_doc.select(
         "doc_id",
         F.explode(
@@ -431,7 +439,7 @@ def band_stack(per_doc: DataFrame, num_perm: int = NUM_PERM, bands: int = BANDS)
                             ]
                         ).alias("sig"),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("bs"),
@@ -480,13 +488,7 @@ def ext_dedup_near(spark, sf_dir):
         sh = cap_shingle_df(shingles(d, 3), d)
         return (
             sh.groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh_{i}")
-                    for i in range(NUM_PERM)
-                ],
-                F.collect_set("shingle").alias("shset"),
-            )
+            .agg(*_minhash_columns(), F.collect_set("shingle").alias("shset"))
             .persist()
         )
 

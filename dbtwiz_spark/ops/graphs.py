@@ -30,15 +30,21 @@ _SCALE = 1_000_000_000_000_000  # 10^15 fixed-point scale
 _ITER = 3
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 
-# Derived graph tables (edge lists, degree tables, converged state) are
-# catalog artifacts (`Catalog.artifact`). Without them every iteration of
-# an iterative op RE-DERIVES the edge list from the base tables (the rank
+# One memo rule (`Catalog.artifact`): a memo is an input two entries
+# share (`pr_edges`, `pr_deg`, `bounded_edges`, `cs100`) or one entry's
+# result (its converged or final table). Without the shared edge memos
+# every iteration RE-DERIVES the edge list from the base tables (the rank
 # lineage references edges once per hop), which measured 13 s for 3-hop
-# PageRank at sf0.1 vs ~2 s with the edge artifact cached. On a cluster
-# the same role is played by a checkpointed/materialized edge table.
-# Builders that end in `_truncate` (or `_mirror`) store the checkpoint as
-# is: stacking persist() on checkpoint blocks would store every table
-# twice.
+# PageRank at sf0.1 vs ~2 s with the edge artifact cached. An edge list
+# one entry alone reads (`_cc_edges`, `_kcore_edges`) is a plain builder
+# called inside that entry's result build, and the rounds of an iterative
+# build are truncated but memoized nowhere: once the build returns,
+# Spark's ContextCleaner frees the per-round tables. `tri_edges` is the
+# one memo outside the rule (graph-triangle-count's thresholded edge
+# set, which its final query reads four times). On a cluster the same
+# role is played by a checkpointed/materialized table. Builders that end
+# in `_truncate` (or `_mirror`) store the checkpoint as is: stacking
+# persist() on checkpoint blocks would store every table twice.
 
 
 def _purchases(cat):
@@ -532,6 +538,21 @@ def _cc_oracle() -> str:
     return sql
 
 
+def _cc_edges(cat):
+    """The sparse URGENT-priority, quantity<=5 edge list of
+    graph-connected-components (customer 2k, supplier 2k+1), mirrored over
+    one truncated pair table."""
+    return _mirror(
+        _purchases(cat)
+        .filter(f"{_BOUNDED} AND o_orderpriority = '1-URGENT' AND l_quantity <= 5")
+        .select(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
+        )
+        .distinct()
+    )
+
+
 @register("graph-connected-components", oracle=_cc_oracle())
 def graph_connected_components(spark, sf_dir):
     """Connected components of a sparse purchase graph by hash-min label
@@ -548,40 +569,29 @@ def graph_connected_components(spark, sf_dir):
     convergence itself (one more round changes nothing) is pinned as a
     semantic test, not assumed.
 
-    Scale: per round one equi-join against the mirrored edge artifact
-    (hash-partitioned on src, reused every round) plus a
+    Scale: per round one equi-join against the mirrored edge list
+    (``_cc_edges``, hash-partitioned on src, reused every round) plus a
     partial-aggregated MIN keyed on node (``_min_propagate``, which
     truncates every round and stops at the fixpoint) -- the label table
-    never exceeds the vertex set. The converged label table is itself
-    memoized (session x scale artifact), so repeat sweeps pay only the
-    final component rollup. Production CC alternates large-star/
-    small-star to cut round count to O(log d); the unrolled min-label
-    form is the oracle-checkable core with identical per-round
-    mechanics."""
+    never exceeds the vertex set. The converged label table is the
+    entry's one memo (session x scale artifact); the edge list and the
+    round tables are built inside it and freed after, so repeat sweeps
+    pay only the final component rollup. Production CC alternates
+    large-star/small-star to cut round count to O(log d); the unrolled
+    min-label form is the oracle-checkable core with identical
+    per-round mechanics."""
     cat = views(spark, sf_dir)
-    edges = cat.artifact(
-        "cc_edges",
-        lambda: _mirror(
-            _purchases(cat)
-            .filter(
-                f"{_BOUNDED} AND o_orderpriority = '1-URGENT' AND l_quantity <= 5"
-            )
-            .select(
-                (F.col("o_custkey") * 2).alias("c"),
-                (F.col("l_suppkey") * 2 + 1).alias("s"),
-            )
-            .distinct()
-        ),
-    )
-    lbl = cat.artifact(
-        "cc_labels",
-        lambda: _min_propagate(
+
+    def _build_labels():
+        edges = _cc_edges(cat)
+        return _min_propagate(
             edges,
             edges.selectExpr("src AS node", "src AS lbl").distinct(),
             F.col("lbl"),
             _CC_ROUNDS,
-        ),
-    )
+        )
+
+    lbl = cat.artifact("cc_labels", _build_labels)
     return lbl.groupBy(F.col("lbl").alias("component")).agg(
         F.count("*").alias("n_nodes"),
         F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0))
@@ -723,6 +733,19 @@ def _kcore_oracle() -> str:
     return sql + "\n" + "\nUNION ALL\n".join(rounds)
 
 
+def _kcore_edges(cat):
+    """The repeat-purchase edge list of graph-k-core (a pair needs
+    ``_KCORE_MIN_ORDERS`` distinct orders), mirrored over one truncated
+    pair table."""
+    return _mirror(
+        _purchases(cat)
+        .groupBy(*_cs())
+        .agg(F.countDistinct("o_orderkey").alias("no"))
+        .filter(F.col("no") >= _KCORE_MIN_ORDERS)
+        .select("c", "s")
+    )
+
+
 @register("graph-k-core", oracle=_kcore_oracle())
 def graph_k_core(spark, sf_dir):
     """k-core decomposition by iterative peeling (k = 13, 4 rounds):
@@ -746,67 +769,48 @@ def graph_k_core(spark, sf_dir):
     Scale: each round is one degree aggregation plus two equi-joins of
     the edge list against the shrinking survivor set -- the same
     shuffle shape as graph-pagerank's hop, over its own mirrored edge
-    artifact (built once per catalog). Every round's survivor edges are
-    a truncated artifact, so the plan stays flat at any round count.
-    The survivor join is a broadcast when the core shrinks below the
-    threshold -- AQE decides per round."""
+    list (``_kcore_edges``). The whole peel runs inside one memo build
+    that returns the truncated per-round count table: every round's
+    survivor edges are truncated, so the plan stays flat at any round
+    count, and no round is a memo, so repeat sweeps scan four rows and
+    the round tables are freed after the build. The survivor join is a
+    broadcast when the core shrinks below the threshold -- AQE decides
+    per round."""
     cat = views(spark, sf_dir)
-    edges = cat.artifact(
-        "kcore_edges",
-        lambda: _mirror(
-            _purchases(cat)
-            .groupBy(*_cs())
-            .agg(F.countDistinct("o_orderkey").alias("no"))
-            .filter(F.col("no") >= _KCORE_MIN_ORDERS)
-            .select("c", "s")
-        ),
-    )
-    per_round = []
-    # Per-round frames are (re)constructed on EVERY invocation (the
-    # edge artifacts are memoized, the count frames are not) — round 17
-    # builds them from parsed SQL strings instead of Column chains
-    # (the parallel_rank precedent, ~half the py4j round trips per
-    # build); expressions and plans are identical.
-    for i in range(1, _KCORE_ROUNDS + 1):
-        deg = edges.groupBy("src").agg(F.expr("count(*) AS dg"))
-        keep = deg.where(f"dg >= {_KCORE_K}").selectExpr("src AS node")
 
-        def _peel(e=edges, k=keep):
-            return (
-                e.join(k.withColumnRenamed("node", "src"), "src")
-                .join(k.select(F.col("node").alias("dst")), "dst")
+    def _build_rounds():
+        edges = _kcore_edges(cat)
+        per_round = []
+        for i in range(1, _KCORE_ROUNDS + 1):
+            deg = edges.groupBy("src").agg(F.expr("count(*) AS dg"))
+            keep = deg.where(f"dg >= {_KCORE_K}").selectExpr("src AS node")
+            nodes_row = keep.selectExpr(
+                "sum(CAST(startswith(node, 'c') AS BIGINT)) AS n_customers",
+                "sum(CAST(startswith(node, 's') AS BIGINT)) AS n_suppliers",
+            )
+            # each round's survivors feed the next round's degree agg and
+            # this round's count row: truncated, so no round re-derives
+            # the rounds before it and the plan stays flat
+            edges = _truncate(
+                edges.join(keep.withColumnRenamed("node", "src"), "src")
+                .join(keep.select(F.col("node").alias("dst")), "dst")
                 .select("src", "dst")
             )
-
-        # memoize each round's survivor edge set: the per-round count
-        # frames are all consumed in one union, and without this each
-        # round's rows re-derive every PRIOR round's degree-agg + joins
-        # (O(rounds^2) duplicate shuffles); the memo also serves repeat
-        # sweeps. _truncate (not persist): each round's edges feed BOTH
-        # the next round's degree agg and its own count row, and
-        # InMemoryRelation embeds every prior round's subtree in the
-        # plan — truncation measured 2.3-4.9 s → 1.2-1.4 s at sf0.1
-        # (and switches to reliable checkpoint() under
-        # spark.checkpoint.dir). Bind loop state via defaults — a
-        # bare closure would capture the final round's variables.
-        edges = cat.artifact(f"kcore_e{i}", lambda p=_peel: _truncate(p()))
-        nodes_row = keep.selectExpr(
-            "sum(CAST(startswith(node, 'c') AS BIGINT)) AS n_customers",
-            "sum(CAST(startswith(node, 's') AS BIGINT)) AS n_suppliers",
-        )
-        edges_row = edges.selectExpr("count(*) AS n_edges")
-        per_round.append(
-            nodes_row.crossJoin(edges_row).selectExpr(
-                f"CAST({i} AS BIGINT) AS round",
-                "coalesce(n_customers, CAST(0 AS BIGINT)) AS n_customers",
-                "coalesce(n_suppliers, CAST(0 AS BIGINT)) AS n_suppliers",
-                "n_edges",
+            edges_row = edges.selectExpr("count(*) AS n_edges")
+            per_round.append(
+                nodes_row.crossJoin(edges_row).selectExpr(
+                    f"CAST({i} AS BIGINT) AS round",
+                    "coalesce(n_customers, CAST(0 AS BIGINT)) AS n_customers",
+                    "coalesce(n_suppliers, CAST(0 AS BIGINT)) AS n_suppliers",
+                    "n_edges",
+                )
             )
-        )
-    out = per_round[0]
-    for df in per_round[1:]:
-        out = out.unionAll(df)
-    return out
+        out = per_round[0]
+        for df in per_round[1:]:
+            out = out.unionAll(df)
+        return _truncate(out)
+
+    return cat.artifact("kcore_rounds", _build_rounds)
 
 
 _PPR_SEEDS = ("s1", "s2", "s3", "s4", "s5")
@@ -937,6 +941,23 @@ def _hits_oracle() -> str:
     """
 
 
+def _hits_half_step(edges, scores):
+    """One HITS half-step: every edge sends its source's ``score`` to its
+    ``dst``, and the per-node sums are l1-normalized to ``_HSCALE`` by
+    the two-step integer divide. The raw sums are truncated: the
+    normalizer reads them twice (directly and through the 1-row total),
+    so untruncated the logical plan would double every half-step."""
+    raw = _truncate(
+        edges.join(scores, edges.src == scores.node)
+        .groupBy(F.col("dst").alias("raw_node"))
+        .agg(F.sum("score").alias("raw"))
+    )
+    total = raw.selectExpr("sum(raw) AS t")
+    return raw.crossJoin(F.broadcast(total)).selectExpr(
+        "raw_node AS node", f"raw div (t div {_HSCALE}) AS score"
+    )
+
+
 @register("graph-hits", oracle=_hits_oracle())
 def graph_hits(spark, sf_dir):
     """HITS hubs-and-authorities (3 iterations) over the directed
@@ -961,61 +982,34 @@ def graph_hits(spark, sf_dir):
     scores are keyed by customers and authority scores by suppliers, so
     joining on ``src`` picks the customer->supplier edges for the
     authority step and the reverse edges for the hub step. The
-    normalizer is a broadcast 1-row aggregate."""
+    normalizer is a broadcast 1-row aggregate. All three iterations run
+    inside one memo build that returns the truncated final
+    ``(side, node, score_fp)`` table of every hub and authority score;
+    each half-step's raw sums are truncated there (``_hits_half_step``)
+    and memoized nowhere. The per-side top 10 is taken at query time, as
+    graph-pagerank does over its final rank table."""
     cat = views(spark, sf_dir)
-    edges = _pr_edges(cat)
-    # Plan construction from parsed SQL strings (round 17, the
-    # parallel_rank precedent): these frames are rebuilt on every
-    # invocation while the half-step artifacts are memoized, so the
-    # Column-chain py4j round trips were pure per-call driver overhead.
-    # Expressions and plans are identical.
-    h = edges.selectExpr("src AS node").where("startswith(node, 'c')").distinct()
-    h = h.selectExpr("node", f"CAST({_HSCALE} AS BIGINT) AS h")
-    a_norm = None
-    for i in range(1, _ITER + 1):
-        # memoize each half-step's raw scores AND truncate their lineage
-        # (localCheckpoint): the normalizer consumes ar/hr TWICE
-        # (directly and through the 1-row total), so the logical plan
-        # doubles every half-step (~4^iters copies for the analyzer to
-        # chew). Persist alone does NOT stop that — cache substitution
-        # happens after analysis, and InMemoryRelation embeds the full
-        # build subtree, so the driver still spent ~16 s/run PLANNING a
-        # 163 MB physical plan at sf0.1; truncation cut the warm run to
-        # ~1 s. _truncate switches to reliable checkpoint() when
-        # spark.checkpoint.dir is set — the cluster-grade form of
-        # the same plan-growth bound.
-        ar = cat.artifact(
-            f"hits_ar{i}",
-            lambda hh=h: _truncate(
-                edges.join(hh, edges.src == hh.node)
-                .groupBy(F.col("dst").alias("anode"))
-                .agg(F.sum("h").alias("a"))
-            ),
+
+    def _build_scores():
+        edges = _pr_edges(cat)
+        h = edges.selectExpr("src AS node").where("startswith(node, 'c')").distinct()
+        h = h.selectExpr("node", f"CAST({_HSCALE} AS BIGINT) AS score")
+        for _ in range(_ITER):
+            a = _hits_half_step(edges, h)
+            h = _hits_half_step(edges, a)
+        return _truncate(
+            h.selectExpr("'hub' AS side", "node", "score AS score_fp").unionAll(
+                a.selectExpr("'authority' AS side", "node", "score AS score_fp")
+            )
         )
-        asum = ar.selectExpr("sum(a) AS t")
-        a_norm = ar.crossJoin(F.broadcast(asum)).selectExpr(
-            "anode AS node", f"a div (t div {_HSCALE}) AS a"
+
+    scores = cat.artifact("hits_scores", _build_scores)
+
+    def top(side):
+        return (
+            scores.where(F.col("side") == side)
+            .orderBy(F.desc("score_fp"), "node")
+            .limit(10)
         )
-        hr = cat.artifact(
-            f"hits_hr{i}",
-            lambda an=a_norm: _truncate(
-                edges.join(an, edges.src == an.node)
-                .groupBy(F.col("dst").alias("hnode"))
-                .agg(F.sum("a").alias("hh"))
-            ),
-        )
-        hsum = hr.selectExpr("sum(hh) AS t")
-        h = hr.crossJoin(F.broadcast(hsum)).selectExpr(
-            "hnode AS node", f"hh div (t div {_HSCALE}) AS h"
-        )
-    hubs = (
-        h.orderBy(F.desc("h"), "node")
-        .limit(10)
-        .selectExpr("'hub' AS side", "node", "h AS score_fp")
-    )
-    auths = (
-        a_norm.orderBy(F.desc("a"), "node")
-        .limit(10)
-        .selectExpr("'authority' AS side", "node", "a AS score_fp")
-    )
-    return hubs.unionAll(auths)
+
+    return top("hub").unionAll(top("authority"))

@@ -299,8 +299,9 @@ def foreach_batch_apply_changes(
 def band_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, band, sig) MinHash band signatures for a document batch —
     the SAME signature + banding code the batch near-dup path runs
-    (ops/ext_llm.py minhash_signatures + band_stack, so the schemes can
-    never silently diverge). DF-capped semantics excluded: a micro-batch
+    (ops/ext_llm.py: minhash_signatures aggregates the batch path's
+    ``_minhash_columns``, band_stack is shared, so the schemes can never
+    silently diverge). DF-capped semantics excluded: a micro-batch
     cannot know global document frequencies, so streaming works on raw
     shingles (the cap is a batch-compaction concern)."""
     from dbtwiz_spark.ops.ext_llm import band_stack, minhash_signatures, shingles

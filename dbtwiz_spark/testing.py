@@ -2,8 +2,9 @@
 
 Runs a corpus entry's Spark query and its DuckDB oracle on the same sf_dir,
 then compares row count, column names, and values order-insensitively
-(columns sorted by name, rows sorted by all columns). ``tests/test_corpus.py``
-applies it to every entry at sf0.001; ``scripts/full_sweep.py`` at any scale.
+(columns sorted by name, rows sorted by all columns). ``compare_entry`` is
+the one entry point: ``tests/test_corpus.py`` applies it to every entry at
+sf0.001, ``scripts/full_sweep.py`` to the whole corpus at any scale.
 """
 
 from __future__ import annotations
@@ -150,25 +151,3 @@ def _cell_eq(a, b) -> bool:
         if isinstance(a, (int, float)) and isinstance(b, (int, float)):
             return False
     return a == b
-
-
-def run_all(
-    spark, sf_dir: str, names: list[str] | None = None
-) -> list[CompareResult]:
-    con = duckdb_con(sf_dir)
-    out = []
-    for name in names or list(CORPUS):
-        try:
-            out.append(compare_entry(spark, name, sf_dir, con))
-        except Exception as e:  # noqa: BLE001 — harness reports, caller decides
-            out.append(CompareResult(name, False, f"EXCEPTION: {type(e).__name__}: {e}"))
-    con.close()
-    # evict the catalogs' artifacts (rank tables, graph edge lists, ANN
-    # indexes) built during the sweep: a multi-scale or repeated sweep in
-    # ONE session otherwise accumulates persisted copies without bound.
-    # Within-sweep reuse is unaffected — eviction happens after the last
-    # entry.
-    from dbtwiz_spark.ops.common import clear_session_memos
-
-    clear_session_memos()
-    return out

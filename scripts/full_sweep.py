@@ -2,8 +2,8 @@
 
 Runs ``dbtwiz_spark.testing.compare_entry`` over every corpus entry at
 the given sf_dir, in registration order, in one session: the same
-comparison as ``testing.run_all`` and the in-suite oracle gate
-(``tests/test_corpus.py``), at a larger scale. Last-ulp float
+comparison as the in-suite oracle gate (``tests/test_corpus.py``), at a
+larger scale, and the way to sweep the whole corpus from code. Last-ulp float
 divergences between the JVM and DuckDB only surface at volume, so run
 it at sf0.1 after engine changes.
 
@@ -66,7 +66,9 @@ def main() -> None:
     wall_s = time.time() - t_start
     compiles = codegen_compile_count(spark) - compiles_start
     con.close()
-    # bound session storage like testing.run_all does
+    # evict the artifacts built during the sweep (rank tables, graph
+    # results, ANN indexes): a multi-scale or repeated sweep in ONE
+    # session otherwise accumulates stored copies without bound
     clear_session_memos()
 
     print("slowest 15:")

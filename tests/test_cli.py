@@ -375,6 +375,29 @@ def test_model_lint_selection(tmp_path, capsys):
     assert staged_model_files(tmp_path / "no_git_here") == []
 
 
+def test_staged_model_files_keep_non_ascii_names(tmp_path):
+    """Git quotes a non-ASCII path in plain output
+    (``"models/caf\\303\\251.sql"``), which no longer names the file on
+    disk: ``model lint/fix --staged`` must still select such a model, the
+    same set ``build --work`` sees."""
+    import subprocess
+
+    from dbtwiz_spark.model_ops import (
+        locally_changed_model_files,
+        staged_model_files,
+    )
+
+    proj = tmp_path / "projutf"
+    (proj / "models").mkdir(parents=True)
+    for name in ("plain.sql", "café.sql"):
+        (proj / "models" / name).write_text("select 1 as x\n")
+    subprocess.run(["git", "init", "-q", str(proj)], check=True)
+    subprocess.run(["git", "-C", str(proj), "add", "models"], check=True)
+    want = sorted((proj / "models" / n).resolve() for n in ("café.sql", "plain.sql"))
+    assert staged_model_files(proj) == want
+    assert locally_changed_model_files(proj) == want
+
+
 def test_model_inspect(project, capsys):
     """model inspect: per-model config + ancestor/descendant closures
     (dbtwiz/model/__init__.py:210, model/inspect.py)."""
@@ -2344,3 +2367,29 @@ def test_full_loop_work_modified_backfill_kill_retry(spark, tmp_path, capsys):
     assert days[0].startswith("1995-01-0") and days[-1] >= "1995-01-21"
     assert all("success" in str(v)
                for v in BackfillJournal(journal).load().values())
+
+
+@pytest.mark.parametrize(
+    "argv, flag",
+    [
+        (["backfill", "--first", "2024-13-01", "--last", "2024-12-31"], "--first"),
+        (["backfill", "--first", "2024-01-01", "--last", "2024-02-30"], "--last"),
+        (["test", "--date", "24-01-01"], "--date"),
+    ],
+    ids=["backfill-first", "backfill-last", "test-date"],
+)
+def test_cli_dates_rejected_before_session(project, monkeypatch, capsys, argv, flag):
+    """A malformed date is an argparse usage error naming its option,
+    raised before any project load or Spark session — not a ValueError
+    traceback from inside the command."""
+    import dbtwiz_spark.cli as cli
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session started for a malformed date")
+
+    monkeypatch.setattr(cli, "_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main([*argv, "--project", str(project), "--warehouse", "unused"])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert f"argument {flag}: must be a YYYY-MM-DD date" in err

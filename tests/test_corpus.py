@@ -149,8 +149,6 @@ def test_cohort_ltv_agrees_on_multi_month_cohorts(spark, tmp_path):
     import os
     import shutil
 
-    from dbtwiz_spark.testing import run_all
-
     d = tmp_path / "sf_multi"
     shutil.copytree("/root/testdata/sf0.001", d)
     rows = [
@@ -170,8 +168,8 @@ def test_cohort_ltv_agrees_on_multi_month_cohorts(spark, tmp_path):
     ev.coalesce(1).write.mode("overwrite").parquet(tmp_ev)
     os.remove(d / "events.parquet")
     shutil.copy(glob.glob(os.path.join(tmp_ev, "*.parquet"))[0], d / "events.parquet")
-    res = run_all(spark, str(d), names=["agg-cohort-ltv"])
-    assert res[0].ok, res[0].detail
+    res = compare_entry(spark, "agg-cohort-ltv", str(d))
+    assert res.ok, res.detail
 
 
 def test_round7_statistics_invariants(spark):
@@ -349,10 +347,11 @@ def test_round7_block2_invariants(spark):
     # one extra propagation round must not change the labels (converged)
     # — the same _min_propagate the entry runs, so the test can never
     # verify a different algorithm
+    from dbtwiz_spark.ops import graphs as G
     from dbtwiz_spark.ops.common import _min_propagate, views
 
     cat = views(spark, SF_DIR)
-    edges, lbl = cat._artifacts["cc_edges"], cat._artifacts["cc_labels"]
+    edges, lbl = G._cc_edges(cat), cat._artifacts["cc_labels"]
     extra = _min_propagate(edges, lbl, F.col("lbl"), 1)
     assert {tuple(r) for r in extra.collect()} == {tuple(r) for r in lbl.collect()}
     assert sum(r.n_nodes for r in cc) == edges.select("src").distinct().count()

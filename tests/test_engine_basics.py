@@ -295,6 +295,46 @@ def test_parallel_rank_memoizes_persisted_input(spark):
     assert gc_until(spark, lambda: stored not in _persistent_rdds(spark))
 
 
+def test_iterative_graph_entries_memoize_their_result(spark, monkeypatch):
+    """HITS, k-core and connected components each keep ONE memo, their
+    result: the edge lists only they read and every half-step or round
+    are built and truncated inside that one build, and Spark frees them
+    once it returns. On a fresh catalog (the shared ``pr_edges`` input
+    built first) each entry adds exactly one memo key, none named by a
+    round; a second call serves the same memo object with identical
+    rows; and after a JVM GC the stored RDDs the entries added are one
+    per memo."""
+    from dbtwiz_spark.catalog import Catalog
+    from dbtwiz_spark.ops import common
+    from dbtwiz_spark.ops import graphs as G
+    from dbtwiz_spark.ops.registry import CORPUS
+
+    cat = Catalog(spark, SF_DIR)
+    monkeypatch.setitem(common._CATALOGS, (spark, SF_DIR), cat)
+    try:
+        G._pr_edges(cat)
+        before = _persistent_rdds(spark)
+        keys = set(cat._artifacts)
+        for name in ("graph-hits", "graph-k-core", "graph-connected-components"):
+            rows = sorted(map(tuple, CORPUS[name].fn(spark, SF_DIR).collect()))
+            added = set(cat._artifacts) - keys
+            assert len(added) == 1, f"{name} added memos {sorted(added)}"
+            (key,) = added
+            assert not any(ch.isdigit() for ch in key), key
+            keys.add(key)
+            memo = cat._artifacts[key]
+            again = sorted(map(tuple, CORPUS[name].fn(spark, SF_DIR).collect()))
+            assert set(cat._artifacts) == keys, f"{name} second call added memos"
+            assert cat._artifacts[key] is memo, f"{name} rebuilt its memo"
+            assert again == rows
+        del memo
+        assert gc_until(spark, lambda: len(_persistent_rdds(spark) - before) == 3), (
+            f"stored RDDs added: {len(_persistent_rdds(spark) - before)}, memos: 3"
+        )
+    finally:
+        cat.clear_memos()
+
+
 def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
     """Two scale dirs running the same entry must NOT share a memo slot —
     a cross-scale sweep would otherwise serve the wrong scale's cached

@@ -839,9 +839,10 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark, monkeypatch):
     the shared mirror-union edge builders route through common._truncate.
 
     Pins three properties the oracle hash can't see:
-    1. pairs-first edge builders — every mirrored artifact (pr_edges,
-       bounded_edges, cc_edges, kcore_edges) and the dedup-cluster edges
-       are a mirror over a TRUNCATED pair table (``common._mirror``), so
+    1. pairs-first edge builders — every mirrored edge list (the
+       pr_edges and bounded_edges artifacts, the ``_cc_edges`` and
+       ``_kcore_edges`` builders) and the dedup-cluster edges are a
+       mirror over a TRUNCATED pair table (``common._mirror``), so
        the plan is a union of two flat scans with NO join (a union whose
        branches each embed the pair query executes the orders x
        lineitem join twice; exchange reuse does not fire across union
@@ -895,13 +896,10 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark, monkeypatch):
     monkeypatch.undo()
     assert propagated == [G._BFS_HOPS, G._MINPLUS_HOPS]
 
-    CORPUS["graph-connected-components"].fn(spark, SF_DIR)
-    CORPUS["graph-k-core"].fn(spark, SF_DIR)
     G._pr_edges(cat)
-    mirrored = {
-        kind: cat._artifacts[kind]
-        for kind in ("pr_edges", "bounded_edges", "cc_edges", "kcore_edges")
-    }
+    mirrored = {kind: cat._artifacts[kind] for kind in ("pr_edges", "bounded_edges")}
+    mirrored["cc_edges"] = G._cc_edges(cat)
+    mirrored["kcore_edges"] = G._kcore_edges(cat)
     mirrored["dedup-cluster"] = _cluster_edges(spark, SF_DIR)
     for kind, edges in mirrored.items():
         eplan = _formatted(edges)
